@@ -41,9 +41,6 @@ object ProfileBuild {
         val d = Option(js.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .filter(_.nonEmpty)
-          .orElse(Option(js.properties)
-            .flatMap(p => Option(p.getProperty("callSite.short")))
-            .filter(_.nonEmpty))
           .orElse(graftFrames.headOption.map { f =>
             graftFrames.take(3).mkString(" <- ")
           })

@@ -188,7 +188,7 @@ object Curation {
     val dir = s"$ledgerDir.ids"
     if (!guardedExists(spark, dir, Seq(""), "id registry")) return
     val ps = StoreLayout.partsOf(ids, col("doc_id"))
-    val clash = spark.read.parquet(dir)
+    val clash = StoreLayout.read(spark, dir, IdsTable, Some(ps))
       .filter(col("idp").isin(ps: _*))
       .filter(col("tranche") =!= trancheId)
       .join(ids, Seq("doc_id"), "left_semi")
@@ -225,6 +225,13 @@ object Curation {
     }
 
   private def tombstonesDir(stores: Stores) = s"${stores.ledger}.tombstones"
+
+  // the id registry's and the tombstone table's read shapes
+  // (StoreLayoutSpec pins each against its writer)
+  private[ext] val IdsTable =
+    StoreLayout.Table("doc_id BIGINT, tranche BIGINT, idp INT", "idp")
+  private[ext] val TombstonesTable =
+    StoreLayout.Table("doc_id BIGINT, epoch BIGINT, idp INT", "idp")
 
   private def lockPath(stores: Stores) = s"${stores.ledger}.lock"
 
@@ -470,7 +477,9 @@ object Curation {
                                 stores: Stores): Option[DataFrame] = {
     val dir = tombstonesDir(stores)
     if (guardedExists(spark, dir, Seq(""), "tombstone registry")) {
-      val raw = spark.read.parquet(dir)
+      // a pre-epoch (v1) table is flat and reads through Spark's own
+      // discovery; the epoch layout reads as declared
+      val raw = StoreLayout.read(spark, dir, TombstonesTable)
       Some(
         if (raw.schema.fieldNames.contains("epoch"))
           // keep the id-bucket partition column when present so a
@@ -541,44 +550,46 @@ object Curation {
     // trained yet (PQ.writeIndex bootstraps a codebook from the corpus
     // — a commit cannot), so the append is skipped; initialized but
     // missing → refused like every standing store
-    val pqUp =
-      if (stores.pqIndex.isEmpty) false
+    val pqLive =
+      if (stores.pqIndex.isEmpty) None else Some(PQ.liveDir(spark, stores.pqIndex))
+    val pqUp = pqLive.exists { live =>
+      if (live == stores.pqIndex)
+        // flat pre-generational layout (or nothing yet): the shared
+        // marker/partial-store/foreign-dir guard applies as-is
+        guardedExists(spark, stores.pqIndex,
+          Seq("params", "centroids", "codes"), "pq serving index")
       else {
-        val live = PQ.liveDir(spark, stores.pqIndex)
-        if (live == stores.pqIndex)
-          // flat pre-generational layout (or nothing yet): the shared
-          // marker/partial-store/foreign-dir guard applies as-is
-          guardedExists(spark, stores.pqIndex,
-            Seq("params", "centroids", "codes"), "pq serving index")
-        else {
-          // generational: the pointer resolved to a complete live
-          // generation (liveDir only returns one whose params exist);
-          // verify its full table set, marker semantics unchanged
-          val missing = Seq("params", "centroids", "codes")
-            .filterNot(p => exists(spark, s"$live/$p"))
-          if (missing.nonEmpty)
-            throw new IllegalStateException(
-              s"pq serving index at ${stores.pqIndex} resolved its live " +
-                s"generation to $live but it is missing " +
-                s"${missing.mkString(", ")} — a crashed re-release; run " +
-                "Curation.fsck/repair before committing")
-          markInit(spark, stores.pqIndex)
-          true
-        }
+        // generational: the pointer resolved to a complete live
+        // generation (liveDir only returns one whose params exist);
+        // verify its full table set, marker semantics unchanged
+        val missing = Seq("params", "centroids", "codes")
+          .filterNot(p => exists(spark, s"$live/$p"))
+        if (missing.nonEmpty)
+          throw new IllegalStateException(
+            s"pq serving index at ${stores.pqIndex} resolved its live " +
+              s"generation to $live but it is missing " +
+              s"${missing.mkString(", ")} — a crashed re-release; run " +
+              "Curation.fsck/repair before committing")
+        markInit(spark, stores.pqIndex)
+        true
       }
+    }
+    // the PQ feed's code layout and frozen geometry, resolved once (in
+    // the concurrent guard phase below): a flat code table refuses
+    // before any write
+    lazy val pqSubWidth = pqLive.filter(_ => pqUp && embeddings.nonEmpty).map { live =>
+      PQ.requirePrunedCodes(spark, live)
+      PQ.paramsAt(spark, live)._4
+    }
     guardedExists(spark, stores.ledger, Seq(""), "ledger")
     // geometry guards: a standing index built under different shingle/
     // band params must refuse the commit before any verdict is derived
-    // or any write lands (read-only here; bootstrap params are written
-    // at append time). The hash geometry is validated even against a
-    // fresh store so an exactness-voiding (hashBands, hashMaxDist)
-    // never reaches the probes.
-    if (textUp) {
-      val p = Dedup.readNearDupIndexParams(spark, stores.textIndex)
-      require(p == ((k, bands, rows)),
-        s"near-dup index at ${stores.textIndex} was built with " +
-          s"(k, bands, rows) = $p; refusing a commit with ($k, $bands, $rows)")
-    }
+    // or any write lands (read-only, in the concurrent guard phase below;
+    // bootstrap params are written at append time). The hash geometry
+    // is validated even against a fresh store so an exactness-voiding
+    // (hashBands, hashMaxDist) never reaches the probes. Each params
+    // table is read once per commit; the probes and appends below take
+    // the validated values instead of re-reading them.
     if (imgHashes.nonEmpty || audHashes.nonEmpty)
       ImageHash.requireGeometry(hashBands, hashMaxDist, maxBucket = 4096)
     def hashGeomGuard(dir: String, what: String): Unit = {
@@ -587,8 +598,6 @@ object Curation {
         s"$what hash index at $dir was built with bands = $p; " +
           s"refusing a commit with hashBands = $hashBands")
     }
-    if (imgUp && imgHashes.nonEmpty) hashGeomGuard(stores.image, "image")
-    if (audUp && audHashes.nonEmpty) hashGeomGuard(stores.audio, "audio")
     val ids = docs.select(col("doc_id")).localCheckpoint()
     val tombRows = readTombstoneRows(spark, stores)
     // round-18 (guide §2.6): the guard phase and the tranche-side
@@ -609,6 +618,17 @@ object Curation {
       else probed.map(u => appliedEpoch(spark, u.root)).min
     }
     val guardAndMat: Seq[() => AnyRef] = Seq[() => Unit](
+      // listed first: settled-failure rethrow surfaces the first listed
+      // failure, and a geometry mismatch is the refusal to report
+      () => if (textUp) {
+        val p = Dedup.readNearDupIndexParams(spark, stores.textIndex)
+        require(p == ((k, bands, rows)),
+          s"near-dup index at ${stores.textIndex} was built with " +
+            s"(k, bands, rows) = $p; refusing a commit with ($k, $bands, $rows)")
+      },
+      () => if (imgUp && imgHashes.nonEmpty) hashGeomGuard(stores.image, "image"),
+      () => if (audUp && audHashes.nonEmpty) hashGeomGuard(stores.audio, "audio"),
+      () => pqSubWidth.foreach(_ => ()), // forces the PQ feed's resolution
       () => requireIdSubset(imgHashes, "doc_id", ids, "imgHashes"),
       () => requireIdSubset(audHashes, "doc_id", ids, "audHashes"),
       () => requireIdSubset(vidFrames, "doc_id", ids, "vidFrames"),
@@ -718,7 +738,8 @@ object Curation {
         img = Some(h)
         "image" -> (
           if (imgUp) ImageHash.ledgerProbeIndexed(spark, stores.image, h,
-            "doc_id", "hash", maxDist = hashMaxDist, exclude = Some(excl))
+            "doc_id", "hash", maxDist = hashMaxDist, exclude = Some(excl),
+            storeBands = Some(hashBands))
           else ImageHash.ledgerProbe(h.filter(lit(false)), h, "doc_id",
             "hash", bands = hashBands, maxDist = hashMaxDist))
           .localCheckpoint()
@@ -730,7 +751,8 @@ object Curation {
         aud = Some(h)
         "audio" -> (
           if (audUp) ImageHash.ledgerProbeIndexed(spark, stores.audio, h,
-            "doc_id", "hash", maxDist = hashMaxDist, exclude = Some(excl))
+            "doc_id", "hash", maxDist = hashMaxDist, exclude = Some(excl),
+            storeBands = Some(hashBands))
           else ImageHash.ledgerProbe(h.filter(lit(false)), h, "doc_id",
             "hash", bands = hashBands, maxDist = hashMaxDist))
           .localCheckpoint()
@@ -799,10 +821,10 @@ object Curation {
         checkLayout = false)) ++
       img.map(h => () =>
         ImageHash.appendHashIndex(h, "doc_id", "hash", stores.image,
-          hashBands)) ++
+          hashBands, paramsChecked = imgUp)) ++
       aud.map(h => () =>
         ImageHash.appendHashIndex(h, "doc_id", "hash", stores.audio,
-          hashBands)) ++
+          hashBands, paramsChecked = audUp)) ++
       vid.map(f => () => VideoHash.appendSeqIndex(f, stores.video)) ++
       emb.map(e => () =>
         if (embIvf) IvfIndex.append(e.drop("label"), stores.embedding,
@@ -814,13 +836,14 @@ object Curation {
       // frozen persisted codebook; re-runs are idempotent via the
       // bucket-pruned (vec_id, sub) probe (ADC sums per candidate, so
       // a doubled code row would corrupt its ranking)
-      emb.filter(_ => pqUp).map(e => () =>
-        PQ.appendIndexOnce(
+      emb.zip(pqSubWidth).map { case (e, subWidth) => () =>
+        PQ.appendIndexOnceAt(
           e.select("vec_id", "embedding").join(
             verdictsC("embedding").filter(col("decision") === "kept")
               .select(col("doc_id").as("vec_id")),
             Seq("vec_id"), "left_semi"),
-          stores.pqIndex)) ++
+          pqLive.get, subWidth)
+      } ++
       Seq(() => idRegistryAppend(spark, ids, trancheId, stores.ledger)): _*)
     (Seq(stores.textIndex, stores.ledger, s"${stores.ledger}.ids") ++
       img.map(_ => stores.image) ++ aud.map(_ => stores.audio) ++

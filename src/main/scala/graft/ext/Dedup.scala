@@ -844,20 +844,29 @@ object Dedup {
     */
   private[ext] def requirePrunedLayout(
       spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    if (storeExists(spark, s"$dir/bands") &&
-      !spark.read.parquet(s"$dir/bands").columns.contains("bkp"))
+    if (StoreLayout.isFlat(spark, s"$dir/bands"))
       throw new IllegalStateException(
         s"near-dup index at $dir has the pre-probe-pruned FLAT layout; " +
           "appending partitioned tranches into it would corrupt partition " +
           s"discovery — run Dedup.compactNearDupIndex(spark, \"$dir\") " +
           "once to upgrade it, then retry")
 
+  // the persisted tables' read shapes (what the writers above produce;
+  // StoreLayoutSpec pins each against its writer)
+  private[ext] val ParamsTable = StoreLayout.Table("k INT, bands INT, rows INT")
+  private[ext] val BandsTable =
+    StoreLayout.Table("ch STRING, bk STRING, bkp INT", "bkp")
+  private[ext] val SetsTable =
+    StoreLayout.Table("ch STRING, sh ARRAY<BIGINT>, chp INT", "chp")
+  private[ext] val MembersTable =
+    StoreLayout.Table("id BIGINT, ch STRING, chp INT", "chp")
+
   /** The persisted shingle/band geometry: (k, bands, rows). Probes of a
     * persisted index must run with exactly these.
     */
   def readNearDupIndexParams(spark: org.apache.spark.sql.SparkSession,
                              dir: String): (Int, Int, Int) = {
-    val p = spark.read.parquet(s"$dir/params").collect()(0)
+    val p = StoreLayout.read(spark, s"$dir/params", ParamsTable).collect()(0)
     (p.getInt(0), p.getInt(1), p.getInt(2))
   }
 
@@ -931,13 +940,11 @@ object Dedup {
     // filters on the SAME builder code the production path runs.
     def ckpt(df: DataFrame): DataFrame =
       if (materialize) df.localCheckpoint(false) else df
-    val bandsRaw = spark.read.parquet(s"$dir/bands")
-    val pruned = bandsRaw.columns.contains("bkp")
     // ONE driver job collects both tranche-side touched-bucket sets
     // (band-key buckets + content buckets — each ≤ StoreLayout.Parts
     // by construction); the only other pre-probe job is the pruned
     // bands materialization, whose collect doubles as partner-bucket
-    // discovery
+    // discovery. The store reads list only those buckets, on the driver
     val trancheParts =
       idxN.bands.select(lit(0).as("t"), StoreLayout.part(col("bk")).as("p"))
         .unionByName(idxN.sets.select(lit(1).as("t"),
@@ -945,25 +952,31 @@ object Dedup {
         .distinct().collect()
     val bkps = trancheParts.filter(_.getInt(0) == 0).map(_.getLong(1)).toSeq
     val chpsT = trancheParts.filter(_.getInt(0) == 1).map(_.getLong(1)).toSeq
+    val bandsRaw = StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
+    val pruned = bandsRaw.columns.contains("bkp")
     val bands0 = ckpt(
       if (!pruned) bandsRaw.dropDuplicates("ch", "bk")
       else bandsRaw.filter(col("bkp").isin(bkps: _*)).drop("bkp")
         .dropDuplicates("ch", "bk"))
-    val membersRaw = spark.read.parquet(s"$dir/members")
-    val setsRaw = spark.read.parquet(s"$dir/sets")
-    val (members0, sets0) =
-      if (!membersRaw.columns.contains("chp"))
-        (membersRaw, setsRaw.dropDuplicates("ch"))
-      else {
-        // contents this probe can touch: the tranche's own (exact-dup
-        // lookups) plus any content colliding in the pruned bands
-        // (candidate partners) — both bounded, collected as literals
-        // (the partsOf(bands0) job doubles as bands0's materialization)
-        val chps = (chpsT ++ StoreLayout.partsOf(bands0, col("ch"))).distinct
-        (membersRaw.filter(col("chp").isin(chps: _*)).drop("chp"),
-          setsRaw.filter(col("chp").isin(chps: _*)).drop("chp")
+    // contents this probe can touch: the tranche's own (exact-dup
+    // lookups) plus any content colliding in the pruned bands (candidate
+    // partners) — both bounded, collected as literals (the
+    // partsOf(bands0) job doubles as bands0's materialization). A flat
+    // store (its bands flat too — appends into one are refused) reads
+    // whole
+    val chps =
+      if (pruned) Some((chpsT ++ StoreLayout.partsOf(bands0, col("ch"))).distinct)
+      else None
+    val membersRaw = StoreLayout.read(spark, s"$dir/members", MembersTable, chps)
+    val setsRaw = StoreLayout.read(spark, s"$dir/sets", SetsTable, chps)
+    val (members0, sets0) = chps match {
+      case Some(ps) if membersRaw.columns.contains("chp") =>
+        (membersRaw.filter(col("chp").isin(ps: _*)).drop("chp"),
+          setsRaw.filter(col("chp").isin(ps: _*)).drop("chp")
             .dropDuplicates("ch"))
-      }
+      case _ =>
+        (dropPart(membersRaw, "chp"), dropPart(setsRaw, "chp").dropDuplicates("ch"))
+    }
     val members = ckpt(excludeIds.fold(members0)(ids =>
       members0.join(ids.select(col(ids.columns.head).as("id")),
         Seq("id"), "left_anti")))
@@ -1079,8 +1092,7 @@ object Dedup {
     */
   def removeIdsNearDup(spark: org.apache.spark.sql.SparkSession,
                        dir: String, ids: DataFrame): Unit = {
-    if (storeExists(spark, s"$dir/bands") &&
-      !spark.read.parquet(s"$dir/bands").columns.contains("bkp")) {
+    if (StoreLayout.isFlat(spark, s"$dir/bands")) {
       // pre-r11 flat layout: no partitions to bound the rewrite —
       // degrade to the store-wide pass, which also upgrades the layout
       compactNearDupIndex(spark, dir, removeIds = Some(ids))

@@ -335,15 +335,27 @@ object ImageHash {
   /** The persisted banding geometry; probes adapt to it on read. */
   def readHashIndexParams(spark: org.apache.spark.sql.SparkSession,
                           dir: String): Int =
-    spark.read.parquet(s"$dir/params").collect()(0).getInt(0)
+    StoreLayout.read(spark, s"$dir/params", ParamsTable).collect()(0).getInt(0)
+
+  // the persisted tables' read shapes (StoreLayoutSpec pins each
+  // against its writer)
+  private[ext] val ParamsTable = StoreLayout.Table("bands INT")
+  private[ext] val BandsTable =
+    StoreLayout.Table("hsh BIGINT, bk STRING, bkp INT", "bkp")
+  private[ext] val MembersTable =
+    StoreLayout.Table("id BIGINT, hsh BIGINT, hp INT", "hp")
 
   /** Append one tranche's (id, hash) rows to the persisted index under
     * `dir` (bootstraps the store, params included, on first call).
+    * `paramsChecked`: the caller already validated `bands` against the
+    * standing store's params this pass ([[Curation.commitTranche]]'s
+    * guard phase), so the append skips re-reading them.
     */
   def appendHashIndex(hashes: DataFrame, idCol: String, hashCol: String,
-                      dir: String, bands: Int = 8): Unit = {
+                      dir: String, bands: Int = 8,
+                      paramsChecked: Boolean = false): Unit = {
     val spark = hashes.sparkSession
-    val b = ensureHashIndexParams(spark, dir, bands)
+    val b = if (paramsChecked) bands else ensureHashIndexParams(spark, dir, bands)
     val mem = hashes.select(col(idCol).as("id"), col(hashCol).as("hsh"))
     StoreSwap.concurrently(
       () => banded(mem, b).withColumn("bkp", StoreLayout.part(col("bk")))
@@ -368,14 +380,18 @@ object ImageHash {
     * appended; a hash standing ONLY via excluded members leaves the
     * census and the candidate pool entirely (the re-run reproduces the
     * first attempt bit-for-bit, cap boundary included).
+    *
+    * `storeBands`: the store's banding geometry when the caller already
+    * read it this pass (the commit's guard phase); read here otherwise.
     */
   def ledgerProbeIndexed(spark: org.apache.spark.sql.SparkSession,
                          dir: String, incoming: DataFrame,
                          idCol: String, hashCol: String,
                          maxDist: Int = 6, maxBucket: Int = 4096,
                          exclude: Option[DataFrame] = None,
-                         materialize: Boolean = true): DataFrame = {
-    val bands = readHashIndexParams(spark, dir)
+                         materialize: Boolean = true,
+                         storeBands: Option[Int] = None): DataFrame = {
+    val bands = storeBands.getOrElse(readHashIndexParams(spark, dir))
     // the tranche side is checkpointed FIRST: its fingerprints may be
     // expensive to derive (decode + hash per doc), and the probe's
     // bounded collects plus the verdict plan would otherwise recompute
@@ -393,12 +409,12 @@ object ImageHash {
     // (Dedup.probeView has the full rationale)
     def ckpt(df: DataFrame): DataFrame =
       if (materialize) df.localCheckpoint(false) else df
-    val bands0 = ckpt(spark.read.parquet(s"$dir/bands")
+    val bands0 = ckpt(StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
       .filter(col("bkp").isin(bkps: _*)).drop("bkp")
       .dropDuplicates("hsh", "bk"))
     val hps = (StoreLayout.partsOf(memN, col("hsh")) ++
       StoreLayout.partsOf(bands0, col("hsh"))).distinct
-    val members0 = spark.read.parquet(s"$dir/members")
+    val members0 = StoreLayout.read(spark, s"$dir/members", MembersTable, Some(hps))
       .filter(col("hp").isin(hps: _*)).drop("hp")
     val members = exclude.fold(members0)(ids =>
       members0.join(ids.select(col(ids.columns.head).as("id")),

@@ -71,7 +71,15 @@ object IvfIndex {
 
   private def routeCells(emb: DataFrame, dir: String): DataFrame =
     routeCellsWith(emb,
-      emb.sparkSession.read.parquet(s"$dir/centroids_q"))
+      StoreLayout.read(emb.sparkSession, s"$dir/centroids_q", CentroidsQTable))
+
+  // the persisted tables' read shapes (StoreLayoutSpec pins each
+  // against its writer); `vectors` keeps every column of the indexed
+  // frame, so its data columns come from a file footer
+  private[ext] val CentroidsTable =
+    StoreLayout.Table("cell BIGINT, ce ARRAY<DOUBLE>")
+  private[ext] val CentroidsQTable = StoreLayout.Table("cid BIGINT, i INT, v BIGINT")
+  private[ext] val VectorsTable = StoreLayout.Table("", "cell")
 
   /** The (vec_id, cell) routing of a batch under the persisted integer
     * codebook — exposed so a caller running probe AND append on the
@@ -228,7 +236,7 @@ object IvfIndex {
       .join(memN.withColumnRenamed("id", "vec_id"), "vec_id")
       .groupBy("e").agg(min(struct(col("vec_id"), col("cell"))).as("m"))
       .select(col("e"), col("m.cell").as("cell"))
-    val cent = spark.read.parquet(s"$dir/centroids")
+    val cent = StoreLayout.read(spark, s"$dir/centroids", CentroidsTable)
     val ranked = qu.crossJoin(broadcast(cent))
       .select(col("e"), col("cell"),
         Similarity.l2sq(col("e"), col("ce")).as("d"))
@@ -243,7 +251,8 @@ object IvfIndex {
     // exclude: standing rows whose ids a re-run of a failed commit
     // already appended — the tranche must never judge itself duplicate
     // (same contract as Curation.commitTranche's other standing sides)
-    val standing0 = spark.read.parquet(s"$dir/vectors")
+    val standing0 = StoreLayout.read(spark, s"$dir/vectors", VectorsTable,
+        Some(cells.toSeq))
       .filter(col("cell").isin(cells: _*))
     val standing = exclude.fold(standing0)(ids =>
         standing0.join(broadcast(ids.select(col(ids.columns.head)

@@ -422,15 +422,24 @@ object PQ {
   // raw accessors over an ALREADY-RESOLVED generation root — every
   // multi-table operation resolves liveDir once and reads through
   // these, so no operation can span a concurrent re-release
-  private def paramsAt(spark: org.apache.spark.sql.SparkSession,
-                       root: String): (Int, Int, Int, Int) = {
-    val p = spark.read.parquet(s"$root/params").collect()(0)
+  private[ext] def paramsAt(spark: org.apache.spark.sql.SparkSession,
+                            root: String): (Int, Int, Int, Int) = {
+    val p = StoreLayout.read(spark, s"$root/params", ParamsTable).collect()(0)
     (p.getInt(0), p.getInt(1), p.getInt(2), p.getInt(3))
   }
 
   private def centroidsAt(spark: org.apache.spark.sql.SparkSession,
                           root: String): DataFrame =
-    spark.read.parquet(s"$root/centroids")
+    StoreLayout.read(spark, s"$root/centroids", CentroidsTable)
+
+  // the persisted tables' read shapes (StoreLayoutSpec pins each
+  // against its writer)
+  private[ext] val ParamsTable =
+    StoreLayout.Table("m INT, k INT, iters INT, sub_width INT")
+  private[ext] val CentroidsTable =
+    StoreLayout.Table("sub INT, cid BIGINT, i INT, v BIGINT")
+  private[ext] val CodesTable =
+    StoreLayout.Table("vec_id BIGINT, sub INT, cell BIGINT, idp INT", "idp")
 
   private def codesAt(spark: org.apache.spark.sql.SparkSession,
                       root: String): DataFrame = {
@@ -461,10 +470,9 @@ object PQ {
     * wedges partition discovery for every later reader. Flat stores
     * stay fully readable; one [[compactCodesIndex]] upgrades them.
     */
-  private def requirePrunedCodes(
+  private[ext] def requirePrunedCodes(
       spark: org.apache.spark.sql.SparkSession, root: String): Unit =
-    if (graft.ext.Dedup.storeExists(spark, s"$root/codes") &&
-      !spark.read.parquet(s"$root/codes").columns.contains("idp"))
+    if (StoreLayout.isFlat(spark, s"$root/codes"))
       throw new IllegalStateException(
         s"PQ index at $root has the pre-id-bucketed FLAT code layout; " +
           "appending partitioned tranches into it would corrupt " +
@@ -508,12 +516,22 @@ object PQ {
     val spark = newEmb.sparkSession
     val live = liveDir(spark, dir)
     requirePrunedCodes(spark, live)
-    val subWidth = paramsAt(spark, live)._4
+    appendIndexOnceAt(newEmb, live, paramsAt(spark, live)._4)
+  }
+
+  /** [[appendIndexOnce]] into an already-resolved live generation
+    * `live` whose code layout the caller checked
+    * ([[requirePrunedCodes]]) and whose `subWidth` it read — the commit
+    * resolves all three once, in its guard phase.
+    */
+  private[ext] def appendIndexOnceAt(newEmb: DataFrame, live: String,
+                                     subWidth: Int): Unit = {
+    val spark = newEmb.sparkSession
     val centE = centroidsAt(spark, live).localCheckpoint()
     val ids = newEmb.select("vec_id").dropDuplicates("vec_id")
       .localCheckpoint()
     val ps = StoreLayout.partsOf(ids, col("vec_id"))
-    val existing = spark.read.parquet(s"$live/codes")
+    val existing = StoreLayout.read(spark, s"$live/codes", CodesTable, Some(ps))
       .filter(col("idp").isin(ps: _*))
       .join(broadcast(ids), Seq("vec_id"), "left_semi")
       .select("vec_id", "sub")

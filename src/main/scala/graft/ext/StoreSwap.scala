@@ -56,39 +56,10 @@ private[ext] object StoreSwap {
     import scala.concurrent.{Await, Future, blocking}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    // jobs submitted from pool threads lose the caller's callsite (the
-    // pool thread's stack has no graft frames), which makes the Spark
-    // UI / listener attribution useless for exactly the concurrent
-    // phases that dominate commit wall-clock (guide §1.5). Carry the
-    // submitting caller's deepest graft frame into each thunk's jobs
-    // via the callSite local properties SparkContext already honors.
-    val caller = Thread.currentThread.getStackTrace
-      .map(_.toString)
-      .find(s => s.startsWith("graft.") &&
-        !s.contains("StoreSwap") && !s.contains("concurrently"))
-      .getOrElse("graft")
-    val sc = org.apache.spark.sql.SparkSession.getActiveSession
-      .orElse(org.apache.spark.sql.SparkSession.getDefaultSession)
-      .map(_.sparkContext)
-    val fs = thunks.zipWithIndex.map { case (t, i) =>
-      Future(blocking {
-        // restore the PRIOR values, not null (ADVICE r17): nested
-        // concurrently calls must not wipe the outer thunk's
-        // attribution, and a reused pool thread must not leak a stale
-        // callsite into unrelated later tasks
-        val prev = sc.map(c => (c.getLocalProperty("callSite.short"),
-          c.getLocalProperty("callSite.long")))
-        sc.foreach { c =>
-          c.setLocalProperty("callSite.short", s"$caller [$i]")
-          c.setLocalProperty("callSite.long", s"$caller [thunk $i]")
-        }
-        try t()
-        finally sc.zip(prev).foreach { case (c, (s, l)) =>
-          c.setLocalProperty("callSite.short", s)
-          c.setLocalProperty("callSite.long", l)
-        }
-      })
-    }
+    // each thunk's jobs carry the thunk's own call site: its body is
+    // graft code, so the pool thread's stack names the module doing the
+    // work (Dedup.probeView, PQ.appendIndexOnceAt, ...)
+    val fs = thunks.map(t => Future(blocking(t())))
     val results = fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     results.collectFirst { case scala.util.Failure(e) => throw e }
     results.map(_.get)
@@ -399,8 +370,33 @@ private[ext] object StoreSwap {
   * value is a FUNCTION of the probe key, a key's whole bucket lives in
   * exactly one partition: per-key census counts (the oversized-bucket
   * caps) computed on a pruned slice are exact, never clipped.
+  *
+  * Read-path cost model. At commit sizes the data a probe reads is
+  * small (a tranche's touched buckets, a one-row params table); what
+  * costs is planning. `spark.read.parquet(table)` starts up to two
+  * Spark jobs before the read runs: a parallel listing job once the
+  * table has more than `spark.sql.sources.parallelPartitionDiscovery
+  * .threshold` (32) leaf directories — every 64-bucket table — and a
+  * schema-inference job that reads a footer. Each job pays the
+  * scheduler's fixed cost (0.6–1.2 s of wall for tasks of at most
+  * 0.12 s on a 4-core VM), and on the commit path most of them sit
+  * serially on a probe's critical path. [[read]] plans the same scan
+  * with no job at all: it lists the table root and only the touched
+  * bucket directories on the driver, through the store's own Hadoop
+  * FileSystem (≤ 1 + Parts `listStatus` calls — the bound
+  * [[partsOf]] already relies on), and hands Spark a file index seeded
+  * with exactly those leaf files plus the table's declared
+  * [[Table.ddl]] schema. The seeded index lives with the one
+  * DataFrame, never in the session's shared `FileStatusCache`, so
+  * nothing accumulates across commits, and no session configuration
+  * is touched.
   */
 private[ext] object StoreLayout {
+  import org.apache.hadoop.fs.{FileStatus, FileSystem}
+  import org.apache.spark.sql.DataFrame
+  import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
+    MapType, StructField, StructType}
+
   /** Partition fan-out. Every append writes ~one file per touched
     * partition, so Parts trades probe selectivity against per-commit
     * file count: 64 keeps a small probe (t keys) reading ≤ min(t, 64)
@@ -426,4 +422,133 @@ private[ext] object StoreLayout {
               key: org.apache.spark.sql.Column): Seq[Long] =
     df.select(part(key).as("p")).distinct()
       .limit(Parts + 1).collect().map(_.getLong(0)).toSeq
+
+  /** One store table's read shape: `ddl` is its full schema exactly as
+    * `spark.read.parquet` returns it (data columns, then the INT
+    * partition column `partCol`, if any — every store partition value
+    * is a small integer, which Spark's discovery types as INT). An empty
+    * `ddl` marks a table whose data columns follow the frames callers
+    * indexed (IVF vectors keep every column of the embedding frame);
+    * its data schema comes from one file footer, read on the driver.
+    */
+  final case class Table(ddl: String, partCol: String = "") {
+    val schema: Option[StructType] =
+      Option(ddl).filter(_.nonEmpty).map(StructType.fromDDL)
+    require(partCol.isEmpty || schema.forall(_(partCol).dataType == IntegerType),
+      s"store table partition column $partCol must be declared INT")
+  }
+
+  // Spark's own hidden-path rule (HadoopFSUtils.shouldFilterOutPathName):
+  // `_SUCCESS`, `.crc`, `_temporary`, StoreSwap's `.compact_*`/`.old_*`/
+  // `.batchrw_*` siblings and in-flight copies are never table data
+  private def hidden(name: String): Boolean =
+    (name.startsWith("_") && !name.contains("=")) || name.startsWith(".") ||
+      name.endsWith("._COPYING_")
+
+  // every column of a parquet read is nullable, whatever the writer said
+  private def nullable(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.map(x =>
+      x.copy(dataType = nullable(x.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), true)
+    case m: MapType => MapType(nullable(m.keyType), nullable(m.valueType), true)
+    case o => o
+  }
+
+  private def visible(fs: FileSystem, p: Path): Seq[FileStatus] =
+    fs.listStatus(p).toSeq.filterNot(s => hidden(s.getPath.getName))
+
+  /** True iff `dir` holds data files at its root: the pre-partitioned
+    * flat layout of a table now written partitioned, which appends must
+    * refuse. Driver-side listing only (hidden entries aside).
+    */
+  def isFlat(spark: SparkSession, dir: String): Boolean = {
+    val p = new Path(dir)
+    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
+    f.exists(p) && visible(f, p).exists(_.isFile)
+  }
+
+  /** Read the store table at `dir` as `spark.read.parquet(dir)` would —
+    * same rows, same columns, same `PartitionFilters` in the executed
+    * plan — without starting a Spark job to plan it (the cost model in
+    * the object doc). `parts` restricts a partitioned table to those
+    * partition values' buckets: the caller still filters on the
+    * partition column (that filter is what prunes and what the plan
+    * shows); the restriction only keeps the driver from listing
+    * buckets the filter would drop.
+    *
+    * Layouts the declaration does not describe — a missing or empty
+    * directory, a pre-partitioned flat table, nested or foreign
+    * directories — fall back to `spark.read.parquet(dir)`, so legacy
+    * stores keep reading (and failing) exactly as before.
+    */
+  def read(spark: SparkSession, dir: String, table: Table,
+           parts: Option[Iterable[Any]] = None): DataFrame = {
+    import org.apache.spark.sql.catalyst.InternalRow
+    import org.apache.spark.sql.execution.datasources.{FileStatusCache,
+      HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
+    import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+    val conf = spark.sessionState.newHadoopConf()
+    val root0 = new Path(dir)
+    val f = root0.getFileSystem(conf)
+    val root = f.makeQualified(root0)
+    def fallback = spark.read.parquet(dir)
+    val top = try visible(f, root) catch {
+      case _: java.io.FileNotFoundException => Nil
+    }
+    val pc = table.partCol
+    val (dirs, files) = top.partition(_.isDirectory)
+    val layoutOk =
+      if (pc.isEmpty) dirs.isEmpty && files.nonEmpty
+      else files.isEmpty && dirs.nonEmpty &&
+        dirs.forall(_.getPath.getName.startsWith(s"$pc="))
+    if (!layoutOk) return fallback
+    // every bucket name must be a canonical INT (what partitionBy
+    // writes): anything else is a layout this reader does not describe
+    def value(d: FileStatus): Option[Int] = {
+      val v = d.getPath.getName.drop(pc.length + 1)
+      scala.util.Try(v.toInt).toOption.filter(_.toString == v)
+    }
+    if (dirs.exists(value(_).isEmpty)) return fallback
+    // the bucket directories `parts` touches, with their files
+    val wanted = parts.map(_.map(v => s"$pc=$v").toSet)
+    val buckets = dirs.filter(d => wanted.forall(_(d.getPath.getName)))
+      .map(d => d -> visible(f, d.getPath))
+    if (buckets.exists(_._2.exists(_.isDirectory))) return fallback
+    val leafFiles = files ++ buckets.flatMap(_._2)
+    // a caller-shaped table's data columns: the schema Spark recorded in
+    // the footer of any one leaf file, read on the driver (a touched set
+    // with no files borrows a file from any other bucket)
+    def footerSchema: Option[StructType] =
+      leafFiles.headOption.orElse(dirs.iterator
+        .map(d => visible(f, d.getPath).find(_.isFile))
+        .collectFirst { case Some(s) => s })
+        .flatMap { s =>
+          val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+            org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(s, conf))
+          try Option(r.getFooter.getFileMetaData.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+          finally r.close()
+        }
+        .map(j => nullable(DataType.fromJson(j)).asInstanceOf[StructType])
+    val full = table.schema.orElse(footerSchema).getOrElse(return fallback)
+    val partSchema = StructType(
+      Option(pc).filter(_.nonEmpty).map(StructField(_, IntegerType)).toSeq)
+    val dataSchema = StructType(full.filterNot(x => x.name == pc))
+    // an explicit partition spec: no discovery, and a touched set with
+    // no existing bucket still reads as the (empty) partitioned table
+    val spec = if (pc.isEmpty) None else Some(PartitionSpec(partSchema,
+      buckets.map { case (d, _) =>
+        PartitionPath(InternalRow(value(d).get), d.getPath) }))
+    // the per-read cache IS the listing: every root lookup hits it
+    val seeded = new FileStatusCache {
+      override def getLeafFiles(p: Path): Option[Array[FileStatus]] =
+        if (p == root) Some(leafFiles.toArray) else None
+      def putLeafFiles(p: Path, fs: Array[FileStatus]): Unit = ()
+      def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty,
+      Some(StructType(dataSchema ++ partSchema)), seeded, spec, None)
+    spark.baseRelationToDataFrame(HadoopFsRelation(index, partSchema,
+      dataSchema, None, new ParquetFileFormat, Map.empty)(spark))
+  }
 }

@@ -276,6 +276,13 @@ object VideoHash {
         .write.mode("append").partitionBy("sqp").parquet(s"$dir/seqs"))
   }
 
+  // the persisted tables' read shapes (StoreLayoutSpec pins each
+  // against its writer)
+  private[ext] val ShinglesTable =
+    StoreLayout.Table("doc_id BIGINT, k STRING, n BIGINT, kp INT", "kp")
+  private[ext] val SeqsTable =
+    StoreLayout.Table("doc_id BIGINT, sq STRING, sqp INT", "sqp")
+
   /** [[ledgerProbe]] against the PERSISTED index — the commit-time
     * access path of [[Curation.commitTranche]]: standing sequence ids
     * are read through literal partition filters on the tranche's
@@ -312,14 +319,15 @@ object VideoHash {
     val sqN = ckpt(sequenceIds(inFrames))
     val firstOcc = ckpt(sqN.groupBy("sq").agg(min(col("doc_id")).as("fid")))
     val sqps = StoreLayout.partsOf(sqN, col("sq"))
-    val standingSq = excl(spark.read.parquet(s"$dir/seqs")
+    val standingSq = excl(StoreLayout.read(spark, s"$dir/seqs", SeqsTable, Some(sqps))
         .filter(col("sqp").isin(sqps: _*)).drop("sqp"))
       .select("sq").distinct()
     val probeN = inFrames.join(
       firstOcc.select(col("fid").as("doc_id")), Seq("doc_id"), "left_semi")
     val shN = ckpt(shingles(probeN))
     val kps = StoreLayout.partsOf(shN, col("k"))
-    val shS = ckpt(excl(spark.read.parquet(s"$dir/shingles")
+    val shS = ckpt(excl(StoreLayout.read(spark, s"$dir/shingles", ShinglesTable,
+          Some(kps))
         .filter(col("kp").isin(kps: _*)).drop("kp")
         .dropDuplicates("doc_id", "k")))
     ledgerVerdicts(standingSq, sequenceProbeFrom(shS, shN, maxBucket),

@@ -139,6 +139,35 @@ class CurationSpec extends SparkSpec {
     assert(!new java.io.File(stores.ledger).exists())
   }
 
+  test("a steady-state commit plans its store reads without discovery or inference jobs") {
+    val d = StoreLayoutSpec.deployment(spark, sf())
+    val st = d.stores
+    // premise: every 64-bucket table the commit probes has every bucket
+    // populated — well past Spark's 32-path parallel-listing threshold
+    Seq(s"${st.textIndex}/bands", s"${st.textIndex}/sets",
+      s"${st.textIndex}/members", s"${st.image}/bands", s"${st.image}/members",
+      s"${st.video}/shingles", s"${st.video}/seqs", s"${st.ledger}.ids",
+      s"${PQ.liveDir(spark, st.pqIndex)}/codes")
+      .foreach { t =>
+        val buckets = new java.io.File(t).listFiles.count(_.getName.contains("="))
+        assert(buckets == StoreLayout.Parts, s"$t has $buckets buckets")
+      }
+    // the classifier sees both kinds of planning job on a plain read
+    val (_, control) = graft.JobLog.during(spark)(
+      spark.read.parquet(s"${st.image}/members"))
+    assert(control.exists(_.listing) && control.exists(j => j.planning && !j.listing),
+      s"control read: $control")
+    val (verdicts, jobs) = graft.JobLog.during(spark)(
+      Curation.commitTranche(d.tranche, 1L, st, imgHashes = Some(d.imgs),
+        vidFrames = Some(d.vids), embeddings = Some(d.embs)))
+    assert(verdicts.count() == 4 * d.tranche.count())
+    val planning = jobs.filter(_.planning)
+    assert(planning.isEmpty, s"${planning.size} of ${jobs.size} commit jobs " +
+      "planned a read:\n" + planning.map(j =>
+        s"${j.desc.take(60)} @ ${j.site.split('\n').take(3).mkString(" <- ")}")
+        .mkString("\n"))
+  }
+
   test("an IVF embedding store routes the semantic layer through the index, re-run safe", graft.Slow) {
     // the 100 TB semantic shape: the caller pre-trains the IVF store on
     // the initial corpus; commitTranche detects it (centroids table),
