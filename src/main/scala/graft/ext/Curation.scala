@@ -175,54 +175,78 @@ object Curation {
     ()
   }
 
-  /** Fail the commit if any id of this tranche was committed by a
-    * DIFFERENT tranche before (partition-pruned probe of the id
-    * registry; re-runs of the same trancheId pass). An INITIALIZED
-    * registry gone missing (mid-compaction swap, accidental loss) is
-    * refused like any other standing store — silently re-bootstrapping
-    * it would permanently disable uniqueness enforcement for every
-    * prior tranche's ids.
+  /** The commit's id guards, as ONE tranche-bounded query over the
+    * tranche's ids (refusals in this order, the first that holds is
+    * reported):
+    *  - every provided modality frame's ids must be doc_ids of this
+    *    tranche — the key the re-run self-exclusion (and the id
+    *    registry) is keyed on;
+    *  - a retracted id is burned: recommitting it would resurrect
+    *    content under an id whose history the ledger already recorded.
+    *    The check sees every retracted id EVER, but never the whole
+    *    table: the epoch layout is partitioned by id bucket, so the
+    *    tranche's touched buckets `idParts` prune the scan;
+    *  - no id may have been committed by a DIFFERENT tranche before
+    *    (partition-pruned probe of the id registry; re-runs of the same
+    *    trancheId pass). An INITIALIZED registry gone missing
+    *    (mid-compaction swap, accidental loss) is refused like any
+    *    other standing store — silently re-bootstrapping it would
+    *    permanently disable uniqueness enforcement for every prior
+    *    tranche's ids.
+    * A retracted id also trips the registry's re-use check (it stays
+    * registered forever), but the operator must hear "retracted", not
+    * "re-used" — hence the order.
     */
-  private def idRegistryGuard(spark: SparkSession, ids: DataFrame,
-                              trancheId: Long, ledgerDir: String): Unit = {
-    val dir = s"$ledgerDir.ids"
-    if (!guardedExists(spark, dir, Seq(""), "id registry")) return
-    val ps = StoreLayout.partsOf(ids, col("doc_id"))
-    val clash = StoreLayout.read(spark, dir, IdsTable, Some(ps))
-      .filter(col("idp").isin(ps: _*))
-      .filter(col("tranche") =!= trancheId)
-      .join(ids, Seq("doc_id"), "left_semi")
-      .limit(1).collect()
-    if (clash.nonEmpty)
+  private def idGuards(spark: SparkSession, ids: DataFrame, idParts: Seq[Long],
+                       trancheId: Long, ledgerDir: String,
+                       frames: Seq[(Option[DataFrame], String, String)],
+                       tombRows: Option[DataFrame]): Unit = {
+    val reg = s"$ledgerDir.ids"
+    val none = lit(null).cast("long")
+    val orphans = frames.zipWithIndex.flatMap { case ((f, idCol, _), i) =>
+      f.map(_.select(lit(i).as("check"), col(idCol).cast("long").as("doc_id"),
+        none.as("tranche")).join(broadcast(ids), Seq("doc_id"), "left_anti"))
+    }
+    val retracted = tombRows.map { t =>
+      (if (t.columns.contains("idp")) t.filter(col("idp").isin(idParts: _*)) else t)
+        .select(lit(frames.size).as("check"), col("doc_id"), none.as("tranche"))
+        .join(broadcast(ids), Seq("doc_id"), "left_semi")
+    }
+    val reused =
+      if (!guardedExists(spark, reg, Seq(""), "id registry")) None
+      else Some(StoreLayout.read(spark, reg, IdsTable, Some(idParts))
+        .filter(col("idp").isin(idParts: _*))
+        .filter(col("tranche") =!= trancheId)
+        .select(lit(frames.size + 1).as("check"), col("doc_id"), col("tranche"))
+        .join(broadcast(ids), Seq("doc_id"), "left_semi"))
+    val checks = orphans ++ retracted ++ reused
+    if (checks.isEmpty) return
+    val failed = checks.reduce(_ unionByName _)
+      .groupBy("check").agg(min(struct(col("doc_id"), col("tranche"))).as("m"))
+      .limit(frames.size + 2).collect()
+    if (failed.isEmpty) return
+    val f = failed.minBy(_.getInt(0))
+    val (check, id) = (f.getInt(0), f.getStruct(1).getLong(0))
+    if (check < frames.size)
       throw new IllegalArgumentException(
-        s"tranche $trancheId re-uses doc_id ${clash(0).getAs[Long]("doc_id")} " +
-          s"already committed by tranche ${clash(0).getAs[Long]("tranche")} — " +
-          "ids must be unique across tranches (the first-seen verdict " +
-          "contract); refusing before any write")
+        s"${frames(check)._3} frame carries id $id absent from this " +
+          "tranche's docs — every modality id must be a doc_id of the " +
+          "same tranche (the re-run self-exclusion contract)")
+    if (check == frames.size)
+      throw new IllegalArgumentException(
+        s"tranche $trancheId carries retracted doc_id $id — a retracted " +
+          "id cannot be recommitted; refusing before any write")
+    throw new IllegalArgumentException(
+      s"tranche $trancheId re-uses doc_id $id already committed by tranche " +
+        s"${f.getStruct(1).getLong(1)} — ids must be unique across tranches " +
+        "(the first-seen verdict contract); refusing before any write")
   }
 
   private def idRegistryAppend(spark: SparkSession, ids: DataFrame,
                                trancheId: Long, ledgerDir: String): Unit =
-    ids.withColumn("tranche", lit(trancheId))
-      .withColumn("idp", StoreLayout.part(col("doc_id")))
-      .repartition(col("idp"))
-      .write.mode("append").partitionBy("idp").parquet(s"$ledgerDir.ids")
-
-  /** Every provided modality frame's ids must be a subset of this
-    * tranche's doc_ids — the key the re-run self-exclusion (and the id
-    * registry) is keyed on. One tranche-bounded anti-join per modality.
-    */
-  private def requireIdSubset(frame: Option[DataFrame], idCol: String,
-                              ids: DataFrame, what: String): Unit =
-    frame.foreach { f =>
-      val orphan = f.select(col(idCol).as("doc_id"))
-        .join(ids, Seq("doc_id"), "left_anti").limit(1).collect()
-      if (orphan.nonEmpty)
-        throw new IllegalArgumentException(
-          s"$what frame carries id ${orphan(0).get(0)} absent from this " +
-            "tranche's docs — every modality id must be a doc_id of the " +
-            "same tranche (the re-run self-exclusion contract)")
-    }
+    StoreLayout.appendBuckets(ids.withColumn("tranche", lit(trancheId))
+      .withColumn("idp", StoreLayout.part(col("doc_id"))), "idp",
+      s"$ledgerDir.ids")
 
   private def tombstonesDir(stores: Stores) = s"${stores.ledger}.tombstones"
 
@@ -598,90 +622,64 @@ object Curation {
         s"$what hash index at $dir was built with bands = $p; " +
           s"refusing a commit with hashBands = $hashBands")
     }
-    val ids = docs.select(col("doc_id")).localCheckpoint()
     val tombRows = readTombstoneRows(spark, stores)
-    // round-18 (guide §2.6): the guard phase and the tranche-side
-    // READ-ONLY materializations — the tranche MinHash index frames and
-    // the standing-exclusion set the probes anti-join — are independent
-    // jobs, so they run in ONE concurrent phase. Guards still settle
-    // before ANY write (the first write is the ledger append, two
-    // phases later); a failing guard wastes the tranche derivation but
-    // refuses exactly as before. The index frames were previously
-    // materialized AFTER the guards and the exclusion set between the
-    // two, each a serial driver wait on the commit path.
-    val trancheIdx0 =
-      Dedup.nearDupIndex(docs, "doc_id", "text", k, bands, rows)
     val exclApplied = {
       val probed = maintenanceUnits(spark, stores)
         .filter(u => u.erasable && u.name != "ledger")
       if (probed.isEmpty) 0L
       else probed.map(u => appliedEpoch(spark, u.root)).min
     }
-    val guardAndMat: Seq[() => AnyRef] = Seq[() => Unit](
+    // Every Spark job of the commit runs under a phase label (its job
+    // description, restored afterwards): `commitTranche(<id>)/<phase>`.
+    def phase[A](name: String)(body: => A): A =
+      StoreSwap.withJobDescription(s"commitTranche($trancheId)/$name")(body)
+    def inPhase[A](name: String)(t: () => A): () => A = () => phase(name)(t())
+    // ---- guards and tranche materialization --------------------------
+    // Guards settle before ANY write (the first write is the ledger
+    // append); a failing guard wastes the tranche derivation but
+    // refuses exactly as before.
+    //  1. the tranche's input frames materialize once (the probes, the
+    //     bucket collect and the appends all read them) while the
+    //     store-only guards run;
+    //  2. ONE bounded job collects every tranche-side bucket set the
+    //     guards, probes and PQ feed prune by, plus the tranche size;
+    //  3. the id guards run beside the verdict derivation.
+    val hashStep = (what: String, frame: Option[DataFrame]) =>
+      frame.toSeq.map(h0 => inPhase(s"materialize:$what") { () =>
+        val h = h0.localCheckpoint()
+        Seq(h, ImageHash.banded(h.select(col("doc_id").as("id"),
+          col("hash").as("hsh")), hashBands).localCheckpoint())
+      })
+    val step1: Seq[() => Seq[DataFrame]] = Seq[() => Unit](
       // listed first: settled-failure rethrow surfaces the first listed
       // failure, and a geometry mismatch is the refusal to report
-      () => if (textUp) {
+      inPhase("guard:text.params") { () => if (textUp) {
         val p = Dedup.readNearDupIndexParams(spark, stores.textIndex)
         require(p == ((k, bands, rows)),
           s"near-dup index at ${stores.textIndex} was built with " +
             s"(k, bands, rows) = $p; refusing a commit with ($k, $bands, $rows)")
-      },
-      () => if (imgUp && imgHashes.nonEmpty) hashGeomGuard(stores.image, "image"),
-      () => if (audUp && audHashes.nonEmpty) hashGeomGuard(stores.audio, "audio"),
-      () => pqSubWidth.foreach(_ => ()), // forces the PQ feed's resolution
-      () => requireIdSubset(imgHashes, "doc_id", ids, "imgHashes"),
-      () => requireIdSubset(audHashes, "doc_id", ids, "audHashes"),
-      () => requireIdSubset(vidFrames, "doc_id", ids, "vidFrames"),
-      () => requireIdSubset(embeddings, "vec_id", ids, "embeddings"),
-      // listed BEFORE the registry guard: a retracted id also trips the
-      // registry's re-use check (it stays registered forever), but the
-      // operator must hear "retracted", not "re-used" — settled-failure
-      // rethrow surfaces the first listed failure
-      // the flat embedding store is the documented sub-million-vector
-      // option — its standing side is read WHOLE per commit, so a
-      // deployment that outgrows it degrades O(corpus) silently
-      // (VERDICT r11 missing #3). The boundary is enforced here: past
-      // `maxFlatVectors` the commit refuses, naming the upgrade. The
-      // count is parquet-footer metadata, not a data scan.
-      () => if (embeddings.nonEmpty && embUp && !embIvf) {
-        val n = spark.read.parquet(stores.embedding).count()
-        if (n > maxFlatVectors)
-          throw new IllegalStateException(
-            s"flat embedding store at ${stores.embedding} holds $n " +
-              s"vectors, past the documented sub-million commit bound " +
-              s"($maxFlatVectors) — per-commit probe cost is O(store) " +
-              "on the flat layout; train an IVF index once with " +
-              "IvfIndex.write(spark, embeddings, dir) and commit " +
-              "against that (cell-pruned probes), or raise " +
-              "maxFlatVectors explicitly to accept the cost")
-      },
-      () => tombRows.foreach { t =>
-        // a retracted id is burned: recommitting it would resurrect
-        // content under an id whose history the ledger already
-        // recorded. This guard must see every retracted id EVER, but
-        // never the whole table: the v2 layout is partitioned by id
-        // bucket, so the tranche's touched buckets (≤ StoreLayout
-        // .Parts literals) prune the scan
-        val side =
-          if (t.columns.contains("idp"))
-            t.filter(col("idp")
-              .isin(StoreLayout.partsOf(ids, col("doc_id")): _*))
-          else t
-        val hit = side.join(ids, Seq("doc_id"), "left_semi")
-          .limit(1).collect()
-        if (hit.nonEmpty)
-          throw new IllegalArgumentException(
-            s"tranche $trancheId carries retracted doc_id " +
-              s"${hit(0).getLong(0)} — a retracted id cannot be " +
-              "recommitted; refusing before any write")
-      },
-      () => idRegistryGuard(spark, ids, trancheId, stores.ledger)
-    ).map(t => () => { t(); null: AnyRef }) ++ Seq[() => AnyRef](
-      // tranche MinHash index frames: the verdict plan references them
-      // several times and the text append ships them — materialize once
-      () => trancheIdx0.bands.localCheckpoint(),
-      () => trancheIdx0.sets.localCheckpoint(),
-      () => trancheIdx0.members.localCheckpoint(),
+      }},
+      inPhase("guard:image.params") { () =>
+        if (imgUp && imgHashes.nonEmpty) hashGeomGuard(stores.image, "image") },
+      inPhase("guard:audio.params") { () =>
+        if (audUp && audHashes.nonEmpty) hashGeomGuard(stores.audio, "audio") },
+      // forces the PQ feed's resolution
+      inPhase("guard:pq.params") { () => pqSubWidth.foreach(_ => ()) }
+    ).map(t => () => { t(); Seq.empty[DataFrame] }) ++ Seq(
+      inPhase("materialize:ids") { () =>
+        Seq(docs.select(col("doc_id")).localCheckpoint()) },
+      // the tranche MinHash index: the verdict plan references its
+      // frames several times and the text append ships them; bands and
+      // sets are narrow projections of the one signatures checkpoint
+      inPhase("materialize:text") { () => Seq(Dedup.contentSignatures(docs,
+        "doc_id", "text", k, bands * rows).localCheckpoint()) },
+      inPhase("materialize:text") { () => Seq(Dedup.contentMembers(docs,
+        "doc_id", "text", k).localCheckpoint()) }) ++
+      hashStep("image", imgHashes) ++ hashStep("audio", audHashes) ++
+      vidFrames.toSeq.map(f0 => inPhase("materialize:video") { () =>
+        Seq(f0.localCheckpoint()) }) ++
+      embeddings.toSeq.map(e0 => inPhase("materialize:embedding") { () =>
+        Seq(e0.localCheckpoint()) }) ++
       // the standing-side exclusion set: the tranche's own ids (the
       // failed-commit re-run self-exclusion) ∪ the UNAPPLIED tombstone
       // slice — retracted ids whose rows may remain physical in SOME
@@ -691,91 +689,123 @@ object Curation {
       // physical rewrite), so the slice is bounded by takedown traffic
       // since the last maintenance, not by lifetime takedowns; its read
       // prunes applied files at the parquet footer (each retraction
-      // batch lands as fresh constant-epoch files).
-      () => tombRows.fold(ids)(t =>
-        ids.unionByName(
+      // batch lands as fresh constant-epoch files). Without tombstones
+      // it is the ids themselves
+      tombRows.toSeq.map(t => inPhase("materialize:exclusion") { () =>
+        Seq(docs.select(col("doc_id")).unionByName(
           t.filter(col("epoch") > exclApplied)
             .select("doc_id").dropDuplicates("doc_id"))
-          .localCheckpoint()))
-    val matRes = StoreSwap.concurrentlyAll(guardAndMat).takeRight(4)
-    val trancheIdx = Dedup.NearDupIndexFrames(
-      matRes(0).asInstanceOf[DataFrame], matRes(1).asInstanceOf[DataFrame],
-      matRes(2).asInstanceOf[DataFrame])
-    val excl = matRes(3).asInstanceOf[DataFrame]
+          .localCheckpoint()) })
+    val mat = StoreSwap.concurrentlyAll(step1).filter(_.nonEmpty).iterator
+    val ids = mat.next().head
+    val trancheIdx = Dedup.indexOf(mat.next().head, mat.next().head, bands, rows)
+    val img = imgHashes.map(_ => mat.next())
+    val aud = audHashes.map(_ => mat.next())
+    val vid = vidFrames.map(_ => mat.next().head)
+    val emb = embeddings.map(_ => mat.next().head)
+    val excl = tombRows.fold(ids)(_ => mat.next().head)
+    // step 2: (set, bucket, rows) for every tranche-side bucket set —
+    // each set ≤ StoreLayout.Parts buckets by construction
+    val bucketSets: Seq[(String, DataFrame, String)] =
+      Seq(("ids", ids, "doc_id"), ("text.bk", trancheIdx.bands, "bk"),
+        ("text.ch", trancheIdx.sets, "ch")) ++
+      img.toSeq.flatMap(h => Seq(("image.bk", h(1), "bk"), ("image.hsh", h(0), "hash"))) ++
+      aud.toSeq.flatMap(h => Seq(("audio.bk", h(1), "bk"), ("audio.hsh", h(0), "hash"))) ++
+      emb.map(e => ("embedding", e, "vec_id"))
+    val bucketRows = phase("buckets") {
+      bucketSets.map { case (set, df, key) =>
+        df.select(lit(set).as("set"), StoreLayout.part(col(key)).as("p"))
+      }.reduce(_ unionByName _)
+        .groupBy("set", "p").agg(count(lit(1)).as("n"))
+        .limit(bucketSets.size * StoreLayout.Parts).collect()
+    }
+    def buckets(set: String): Seq[Long] =
+      bucketRows.filter(_.getString(0) == set).map(_.getLong(1)).toSeq
+    def bucketPair(a: String, b: String) = Some((buckets(a), buckets(b)))
+    val idParts = buckets("ids")
+    val embRows = bucketRows.filter(_.getString(0) == "embedding").map(_.getLong(2)).sum
+    // step 3: the guards that probe standing stores by the tranche's
+    // ids run beside the verdict derivation below (read-only) and
+    // settle with it, before the ledger write. Listed first, in refusal
+    // order: settled-failure rethrow surfaces the first listed failure
+    val idGuardThunks: Seq[() => Unit] = Seq(
+      inPhase("guard:ids") { () =>
+        idGuards(spark, ids, idParts, trancheId, stores.ledger,
+          Seq((imgHashes, "doc_id", "imgHashes"), (audHashes, "doc_id", "audHashes"),
+            (vidFrames, "doc_id", "vidFrames"), (embeddings, "vec_id", "embeddings")),
+          tombRows) },
+      // the flat embedding store is the documented sub-million-vector
+      // option — its standing side is read WHOLE per commit, so a
+      // deployment that outgrows it degrades O(corpus) silently
+      // (VERDICT r11 missing #3). The boundary is enforced here: past
+      // `maxFlatVectors` the commit refuses, naming the upgrade. The
+      // count is parquet-footer metadata, not a data scan.
+      inPhase("guard:flat-embedding") { () =>
+        if (embeddings.nonEmpty && embUp && !embIvf) {
+          val n = spark.read.parquet(stores.embedding).count()
+          if (n > maxFlatVectors)
+            throw new IllegalStateException(
+              s"flat embedding store at ${stores.embedding} holds $n " +
+                s"vectors, past the documented sub-million commit bound " +
+                s"($maxFlatVectors) — per-commit probe cost is O(store) " +
+                "on the flat layout; train an IVF index once with " +
+                "IvfIndex.write(spark, embeddings, dir) and commit " +
+                "against that (cell-pruned probes), or raise " +
+                "maxFlatVectors explicitly to accept the cost")
+        }})
     // ---- verdict derivation ------------------------------------------
     // round-18 (guide §2.6): each modality's verdict is CONSTRUCTED and
     // MATERIALIZED inside its own concurrent thunk. Construction is not
     // free — the indexed probes (probeView / ledgerProbeIndexed /
-    // ledgerProbe) run bounded partsOf collects and tranche-frame
-    // localCheckpoints while BUILDING the plan, so the old
-    // construct-sequentially-then-materialize-concurrently split still
-    // serialized one driver wait per modality. Standing sides stay
+    // ledgerProbe) run bounded collects and tranche-frame
+    // localCheckpoints while BUILDING the plan, so a
+    // construct-sequentially-then-materialize-concurrently split would
+    // serialize one driver wait per modality. Standing sides stay
     // un-checkpointed — they come back partition-pruned from the
-    // stores, which is the whole point. The modality input frames
-    // (hashes, frames, embeddings) checkpoint inside their thunk too
-    // and are reused by the append phase below.
-    var img: Option[DataFrame] = None
-    var aud: Option[DataFrame] = None
-    var vid: Option[DataFrame] = None
-    var emb: Option[DataFrame] = None
+    // stores, which is the whole point.
     var embRouting: Option[DataFrame] = None
     val verdictThunks = Seq.newBuilder[() => (String, DataFrame)]
-    verdictThunks += (() => {
+    verdictThunks += inPhase("verdict:text") { () =>
       // self-exclusion everywhere below: the tranche's own ids are
       // dropped from every standing side (a re-run of a failed commit
       // probes a store that may already carry this tranche's append)
       val textIdx =
         if (textUp) Dedup.probeView(spark, stores.textIndex, trancheIdx,
-          Some(excl))
+          Some(excl), trancheParts = bucketPair("text.bk", "text.ch"))
         else Dedup.nearDupIndex(docs.filter(lit(false)), "doc_id", "text",
           k, bands, rows)
       "text" -> Dedup.ledgerProbeFrom(textIdx, trancheIdx, docs,
         "doc_id", jThresh).localCheckpoint()
-    })
-    imgHashes.foreach { h0 =>
-      verdictThunks += (() => {
-        val h = h0.localCheckpoint()
-        img = Some(h)
-        "image" -> (
-          if (imgUp) ImageHash.ledgerProbeIndexed(spark, stores.image, h,
-            "doc_id", "hash", maxDist = hashMaxDist, exclude = Some(excl),
-            storeBands = Some(hashBands))
-          else ImageHash.ledgerProbe(h.filter(lit(false)), h, "doc_id",
-            "hash", bands = hashBands, maxDist = hashMaxDist))
-          .localCheckpoint()
-      })
     }
-    audHashes.foreach { h0 =>
-      verdictThunks += (() => {
-        val h = h0.localCheckpoint()
-        aud = Some(h)
-        "audio" -> (
-          if (audUp) ImageHash.ledgerProbeIndexed(spark, stores.audio, h,
-            "doc_id", "hash", maxDist = hashMaxDist, exclude = Some(excl),
-            storeBands = Some(hashBands))
-          else ImageHash.ledgerProbe(h.filter(lit(false)), h, "doc_id",
-            "hash", bands = hashBands, maxDist = hashMaxDist))
-          .localCheckpoint()
-      })
+    def hashVerdict(what: String, hb: Seq[DataFrame], up: Boolean,
+                    dir: String) = inPhase(s"verdict:$what") { () =>
+      val Seq(h, banded) = hb
+      what -> (
+        if (up) ImageHash.ledgerProbeIndexed(spark, dir, h,
+          "doc_id", "hash", maxDist = hashMaxDist, exclude = Some(excl),
+          storeBands = Some(hashBands),
+          trancheParts = bucketPair(s"$what.bk", s"$what.hsh"),
+          bandedIn = Some(banded))
+        else ImageHash.ledgerProbe(h.filter(lit(false)), h, "doc_id",
+          "hash", bands = hashBands, maxDist = hashMaxDist))
+        .localCheckpoint()
     }
-    vidFrames.foreach { f0 =>
-      verdictThunks += (() => {
-        val f = f0.localCheckpoint()
-        vid = Some(f)
+    img.foreach(hb => verdictThunks += hashVerdict("image", hb, imgUp, stores.image))
+    aud.foreach(hb => verdictThunks += hashVerdict("audio", hb, audUp, stores.audio))
+    vid.foreach { f =>
+      verdictThunks += inPhase("verdict:video") { () =>
         "video" -> (
           if (vidUp) VideoHash.ledgerProbeIndexed(spark, stores.video, f,
             docs, "doc_id", exclude = Some(excl))
           else VideoHash.ledgerProbe(f.filter(lit(false)), f, docs,
             "doc_id")).localCheckpoint()
-      })
+      }
     }
     // semantic layer: a persisted IvfIndex (detected by its centroids
     // table) probes cell-pruned — THE 100 TB shape; a flat store is the
     // sub-million-vector option, label-blocked and read whole
-    embeddings.foreach { e0 =>
-      verdictThunks += (() => {
-        val e = e0.localCheckpoint()
-        emb = Some(e)
+    emb.foreach { e =>
+      verdictThunks += inPhase("verdict:embedding") { () =>
         // one routing pass per tranche, shared by the semantic probe
         // and the store append (both need the same integer-codebook
         // argmin); lazy checkpoint — first reference materializes it
@@ -787,7 +817,7 @@ object Curation {
         "embedding" -> (
           if (embIvf) IvfIndex.ledgerProbe(spark, stores.embedding, e,
             "vec_id", "embedding", cosThresh, exclude = Some(excl),
-            routedIn = routed)
+            routedIn = routed, batchSize = Some(embRows))
           else {
             val standing =
               (if (embUp) spark.read.parquet(stores.embedding)
@@ -797,7 +827,16 @@ object Curation {
             Similarity.ledgerProbe(standing, e, "vec_id", "embedding",
               "label", cosThresh)
           }).localCheckpoint()
-      })
+      }
+    }
+    // the serving-side PQ feed's verdict-free part derives beside them:
+    // the tranche's codes through the frozen codebook, minus rows a
+    // failed attempt already appended (its id buckets' standing codes)
+    val pqFeed = emb.zip(pqSubWidth).map { case (e, subWidth) =>
+      inPhase("pq-feed") { () =>
+        "pq" -> PQ.pendingCodes(e.select("vec_id", "embedding"), pqLive.get,
+          subWidth, buckets("embedding")).localCheckpoint()
+      }
     }
     // ---- writes: ledger, store appends, id registry, markers ---------
     // modality verdicts derive CONCURRENTLY (independent probe plans
@@ -805,46 +844,55 @@ object Curation {
     // modality, not the sum), then the ledger write lands from the
     // checkpointed rows (one output directory — concurrent committers
     // must not share its staging path)
-    val verdictsC = StoreSwap.concurrentlyAll(verdictThunks.result()).toMap
-    Ledger.appendTranche(verdictsC, trancheId, stores.ledger)
+    val derived = StoreSwap.concurrentlyAll(
+      idGuardThunks.map(g => () => { g(); Option.empty[(String, DataFrame)] }) ++
+        (verdictThunks.result() ++ pqFeed).map(t => () => Some(t())))
+      .flatten.toMap
+    val pqPending = derived.get("pq")
+    val verdictsC = derived - "pq"
+    phase("ledger") {
+      Ledger.appendTranche(verdictsC, trancheId, stores.ledger)
+    }
     // store appends run concurrently too — each its own directory;
     // the text append ships the SAME checkpointed tranche frames the
-    // probe used
-    // bootstrap-only params write: for a standing store the guard phase
-    // already validated geometry AND layout — re-reading params/schema
-    // here would add two driver-side parquet reads to every
-    // steady-state commit
-    if (!textUp)
-      Dedup.ensureNearDupIndexParams(spark, stores.textIndex, k, bands, rows)
+    // probe used. Bootstrap-only params write: for a standing store the
+    // guard phase already validated geometry AND layout — re-reading
+    // params/schema here would add two driver-side parquet reads to
+    // every steady-state commit
     StoreSwap.concurrently(Seq(
-      () => Dedup.writeNearDupIndexFrames(trancheIdx, stores.textIndex,
-        checkLayout = false)) ++
-      img.map(h => () =>
-        ImageHash.appendHashIndex(h, "doc_id", "hash", stores.image,
-          hashBands, paramsChecked = imgUp)) ++
-      aud.map(h => () =>
-        ImageHash.appendHashIndex(h, "doc_id", "hash", stores.audio,
-          hashBands, paramsChecked = audUp)) ++
-      vid.map(f => () => VideoHash.appendSeqIndex(f, stores.video)) ++
-      emb.map(e => () =>
+      inPhase("append:text") { () =>
+        if (!textUp)
+          Dedup.ensureNearDupIndexParams(spark, stores.textIndex, k, bands, rows)
+        Dedup.writeNearDupIndexFrames(trancheIdx, stores.textIndex,
+          checkLayout = false)
+      }) ++
+      img.map(hb => inPhase("append:image") { () =>
+        ImageHash.appendHashIndex(hb(0), "doc_id", "hash", stores.image,
+          hashBands, paramsChecked = imgUp, bandedIn = Some(hb(1))) }) ++
+      aud.map(hb => inPhase("append:audio") { () =>
+        ImageHash.appendHashIndex(hb(0), "doc_id", "hash", stores.audio,
+          hashBands, paramsChecked = audUp, bandedIn = Some(hb(1))) }) ++
+      vid.map(f => inPhase("append:video") { () =>
+        VideoHash.appendSeqIndex(f, stores.video) }) ++
+      emb.map(e => inPhase("append:embedding") { () =>
         if (embIvf) IvfIndex.append(e.drop("label"), stores.embedding,
           routed = embRouting)
-        else e.write.mode("append").parquet(stores.embedding)) ++
+        else e.write.mode("append").parquet(stores.embedding) }) ++
       // serving-side PQ append: the tranche's KEPT embedding vectors
       // (the curated corpus is what serves — a duplicate's vector must
-      // not become a second searchable candidate) encode through the
-      // frozen persisted codebook; re-runs are idempotent via the
-      // bucket-pruned (vec_id, sub) probe (ADC sums per candidate, so
-      // a doubled code row would corrupt its ranking)
-      emb.zip(pqSubWidth).map { case (e, subWidth) => () =>
-        PQ.appendIndexOnceAt(
-          e.select("vec_id", "embedding").join(
-            verdictsC("embedding").filter(col("decision") === "kept")
-              .select(col("doc_id").as("vec_id")),
-            Seq("vec_id"), "left_semi"),
-          pqLive.get, subWidth)
-      } ++
-      Seq(() => idRegistryAppend(spark, ids, trancheId, stores.ledger)): _*)
+      // not become a second searchable candidate), encoded through the
+      // frozen persisted codebook before the verdicts; re-runs are
+      // idempotent via the bucket-pruned (vec_id, sub) probe (ADC sums
+      // per candidate, so a doubled code row would corrupt its ranking)
+      pqPending.map(p => inPhase("append:pq") { () =>
+        StoreLayout.appendBuckets(
+          p.join(broadcast(verdictsC("embedding")
+              .filter(col("decision") === "kept")
+              .select(col("doc_id").as("vec_id"))), Seq("vec_id"), "left_semi")
+            .withColumn("idp", StoreLayout.part(col("vec_id"))),
+          "idp", s"${pqLive.get}/codes") }) ++
+      Seq(inPhase("append:id-registry") { () =>
+        idRegistryAppend(spark, ids, trancheId, stores.ledger) }): _*)
     (Seq(stores.textIndex, stores.ledger, s"${stores.ledger}.ids") ++
       img.map(_ => stores.image) ++ aud.map(_ => stores.audio) ++
       vid.map(_ => stores.video) ++ emb.map(_ => stores.embedding))

@@ -520,16 +520,25 @@ object Dedup {
 
   def nearDupIndex(df: DataFrame, idCol: String, textCol: String,
                    k: Int = 2, bands: Int = 8, rows: Int = 2)
-    : NearDupIndexFrames = {
-    val sigs = chSigs(df, idCol, textCol, k, bands * rows)
+    : NearDupIndexFrames =
+    indexOf(chSigs(df, idCol, textCol, k, bands * rows),
+      chMembers(df, idCol, textCol, k), bands, rows)
+
+  /** The index frames of [[contentSignatures]] rows (nSig = bands ×
+    * rows) and [[contentMembers]] rows: bands and sets are narrow
+    * projections of the signatures, so a caller that materializes the
+    * signatures once ([[Curation.commitTranche]]) derives both from one
+    * MinHash pass.
+    */
+  private[ext] def indexOf(sigs: DataFrame, members: DataFrame, bands: Int,
+                           rows: Int): NearDupIndexFrames = {
     val bandKeys = (0 until bands).map { b =>
       concat(lit(s"$b:"), concat_ws("-",
         (0 until rows).map(r => col(s"sig_${b * rows + r}").cast("string")): _*))
     }
     NearDupIndexFrames(
       sigs.select(col("ch"), explode(array(bandKeys: _*)).as("bk")),
-      sigs.select(col("ch"), col("sh")),
-      chMembers(df, idCol, textCol, k))
+      sigs.select(col("ch"), col("sh")), members)
   }
 
   /** Probe a standing corpus' index with a new tranche: the only pairs
@@ -561,9 +570,10 @@ object Dedup {
     * between a standing index and an incoming tranche's index:
     * (a_ch, b_ch, jaccard) with a_ch < b_ch, over cross (tranche ×
     * standing at colliding band keys) and within (tranche × tranche)
-    * candidates. Same-content pairs (ch = ch) are excluded — exact
-    * duplication is decidable from membership alone and must never
-    * depend on the band bucket cap. `maxBucket` caps oversized
+    * candidates; a pair repeats (identical rows) when one of its
+    * contents is both standing and in the tranche. Same-content pairs
+    * (ch = ch) are excluded — exact duplication is decidable from
+    * membership alone and must never depend on the band bucket cap. `maxBucket` caps oversized
     * STANDING buckets censused over distinct contents. Shared by
     * [[probeNearDupIndex]] (which expands to member pairs) and
     * [[ledgerProbe]] (which judges contents directly — no expansion).
@@ -589,14 +599,16 @@ object Dedup {
         col("a.bk") === col("b.bk") && col("a.ch") < col("b.ch"))
       .select(col("a.ch").as("a_ch"), col("b.ch").as("b_ch"))
     val candC = crossC.unionByName(withinC).distinct()
-    // exact verification once per distinct content pair; a content in
-    // both tranches has identical set rows on both sides — keep one
-    val sets = index.sets.unionByName(idxN.sets).dropDuplicates("ch")
+    // exact verification per distinct content pair; a content on both
+    // sides has identical set rows there, so its pairs repeat with
+    // identical jaccards (every consumer reads them as a set). Both
+    // lookups alias the same frame and share one exchange
+    val sets = index.sets.unionByName(idxN.sets)
     candC
-      .join(sets.select(col("ch").as("a_ch"), col("sh").as("sa")), "a_ch")
-      .join(sets.select(col("ch").as("b_ch"), col("sh").as("sb")), "b_ch")
+      .join(sets.as("sa"), col("a_ch") === col("sa.ch"))
+      .join(sets.as("sb"), col("b_ch") === col("sb.ch"))
       .select(col("a_ch"), col("b_ch"),
-        jaccardHashed(col("sa"), col("sb")).as("jaccard"))
+        jaccardHashed(col("sa.sh"), col("sb.sh")).as("jaccard"))
   }
 
   def probeNearDupIndex(index: NearDupIndexFrames,
@@ -714,45 +726,18 @@ object Dedup {
                       incoming: DataFrame, idCol: String,
                       jThresh: Double = 0.6,
                       maxBucket: Int = 4096): DataFrame = {
-    val memN = idxN.members
     // verdicts are decidable at the DISTINCT-CONTENT level — a 10k-copy
     // template page in the tranche is ONE judged content, never m²
-    // member pairs: the first occurrence (min id) per content carries
-    // the content's verdict, every other copy is exact_dup by
-    // membership alone
-    val firstOcc = memN.groupBy("ch").agg(min(col("id")).as("fid"))
-    val standingCh = index.members.select("ch").distinct()
-    val exact = memN.join(standingCh, Seq("ch"), "left_semi").select("id")
-      .unionByName(memN.join(firstOcc, "ch")
-        .filter(col("id") =!= col("fid")).select("id"))
-      .distinct().withColumn("ex", lit(1))
-    // near verdicts, also content-level: a tranche content is near iff
-    // a verified pair links it to a standing content (whose copies all
-    // arrived earlier) or to another tranche content whose first copy
-    // has a smaller id — the min member id decides the doc-level loser,
-    // so this reproduces the member-pair semantics exactly
-    val vp = verifiedContentPairs(index, idxN, maxBucket)
-      .filter(col("jaccard") >= jThresh)
-      .select(explode(array(
-        struct(col("a_ch").as("ch"), col("b_ch").as("p_ch")),
-        struct(col("b_ch").as("ch"), col("a_ch").as("p_ch")))).as("e"))
-      .select(col("e.ch").as("ch"), col("e.p_ch").as("p_ch"))
-    val nearC = vp.join(firstOcc, "ch")
-      .join(standingCh.select(col("ch").as("p_ch"), lit(1).as("st")),
-        Seq("p_ch"), "left")
-      .join(firstOcc.select(col("ch").as("p_ch"), col("fid").as("p_fid")),
-        Seq("p_ch"), "left")
-      .filter(col("st") === 1 || col("p_fid") < col("fid"))
-      .select("ch").distinct()
-    val near = memN.join(nearC, Seq("ch"), "left_semi")
-      .select("id").distinct().withColumn("nd", lit(1))
-    incoming.select(col(idCol).as("doc_id"))
-      .join(exact.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .join(near.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ex") === 1, lit("exact_dup"))
-          .when(col("nd") === 1, lit("near_dup"))
-          .otherwise(lit("kept")).as("decision"))
+    // member pairs; a content is near iff a verified pair links it to a
+    // standing content or to a tranche content whose first copy has a
+    // smaller id, which reproduces the member-pair semantics exactly
+    FirstSeen.verdicts(
+      idxN.members.select(col("id"), col("ch").as("key")),
+      index.members.select(col("ch").as("key")),
+      verifiedContentPairs(index, idxN, maxBucket)
+        .filter(col("jaccard") >= jThresh)
+        .select(col("a_ch").as("a"), col("b_ch").as("b")),
+      incoming.select(col(idCol).as("doc_id")))
   }
 
   /** The standing band buckets a given cap would drop in
@@ -812,9 +797,9 @@ object Dedup {
     * ([[probeView]]) pushes its touched buckets into the scans as
     * literal partition filters and reads colliding partitions only —
     * commit-time standing access is tranche-proportional, never
-    * O(standing corpus). The pre-write `repartition` on the partition
-    * column keeps each append at one file per touched partition (the
-    * writer would otherwise emit tasks × partitions small files).
+    * O(standing corpus). Each append lands at one file per touched
+    * partition ([[StoreLayout.appendBuckets]]; the writer would
+    * otherwise emit tasks × partitions small files).
     */
   def writeNearDupIndexFrames(idx: NearDupIndexFrames, dir: String,
                               checkLayout: Boolean = true): Unit = {
@@ -823,15 +808,15 @@ object Dedup {
     // bands-schema read on the hot ingest path
     if (checkLayout) requirePrunedLayout(idx.bands.sparkSession, dir)
     StoreSwap.concurrently(
-      () => idx.bands.withColumn("bkp", StoreLayout.part(col("bk")))
-        .repartition(col("bkp"))
-        .write.mode("append").partitionBy("bkp").parquet(s"$dir/bands"),
-      () => idx.sets.withColumn("chp", StoreLayout.part(col("ch")))
-        .repartition(col("chp"))
-        .write.mode("append").partitionBy("chp").parquet(s"$dir/sets"),
-      () => idx.members.withColumn("chp", StoreLayout.part(col("ch")))
-        .repartition(col("chp"))
-        .write.mode("append").partitionBy("chp").parquet(s"$dir/members"))
+      () => StoreLayout.appendBuckets(
+        idx.bands.withColumn("bkp", StoreLayout.part(col("bk"))), "bkp",
+        s"$dir/bands"),
+      () => StoreLayout.appendBuckets(
+        idx.sets.withColumn("chp", StoreLayout.part(col("ch"))), "chp",
+        s"$dir/sets"),
+      () => StoreLayout.appendBuckets(
+        idx.members.withColumn("chp", StoreLayout.part(col("ch"))), "chp",
+        s"$dir/members"))
   }
 
   /** Refuse an append into a PRE-PRUNED flat index (bands rows at the
@@ -926,7 +911,9 @@ object Dedup {
   def probeView(spark: org.apache.spark.sql.SparkSession, dir: String,
                 idxN: NearDupIndexFrames,
                 excludeIds: Option[DataFrame] = None,
-                materialize: Boolean = true): NearDupIndexFrames = {
+                materialize: Boolean = true,
+                trancheParts: Option[(Seq[Long], Seq[Long])] = None
+               ): NearDupIndexFrames = {
     // LAZY checkpoints throughout: the probe plan references each
     // standing frame several times (bucket census + capped join, exact
     // lookup + partner flags), and without materialization every
@@ -940,32 +927,32 @@ object Dedup {
     // filters on the SAME builder code the production path runs.
     def ckpt(df: DataFrame): DataFrame =
       if (materialize) df.localCheckpoint(false) else df
-    // ONE driver job collects both tranche-side touched-bucket sets
-    // (band-key buckets + content buckets — each ≤ StoreLayout.Parts
-    // by construction); the only other pre-probe job is the pruned
-    // bands materialization, whose collect doubles as partner-bucket
-    // discovery. The store reads list only those buckets, on the driver
-    val trancheParts =
-      idxN.bands.select(lit(0).as("t"), StoreLayout.part(col("bk")).as("p"))
+    // the tranche-side touched-bucket sets (band-key buckets, content
+    // buckets — each ≤ StoreLayout.Parts by construction): the caller's
+    // (the commit collects every tranche-side bucket set in one job),
+    // or ONE driver job here; the only other pre-probe collect is the
+    // partner-bucket discovery over the pruned bands. The store reads
+    // list only those buckets, on the driver
+    val (bkps, chpsT) = trancheParts.getOrElse {
+      val ps = idxN.bands.select(lit(0).as("t"), StoreLayout.part(col("bk")).as("p"))
         .unionByName(idxN.sets.select(lit(1).as("t"),
           StoreLayout.part(col("ch")).as("p")))
-        .distinct().collect()
-    val bkps = trancheParts.filter(_.getInt(0) == 0).map(_.getLong(1)).toSeq
-    val chpsT = trancheParts.filter(_.getInt(0) == 1).map(_.getLong(1)).toSeq
+        .distinct().limit(2 * StoreLayout.Parts + 1).collect()
+      (ps.filter(_.getInt(0) == 0).map(_.getLong(1)).toSeq,
+        ps.filter(_.getInt(0) == 1).map(_.getLong(1)).toSeq)
+    }
     val bandsRaw = StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
     val pruned = bandsRaw.columns.contains("bkp")
-    val bands0 = ckpt(
-      if (!pruned) bandsRaw.dropDuplicates("ch", "bk")
+    val bandsP =
+      if (!pruned) bandsRaw
       else bandsRaw.filter(col("bkp").isin(bkps: _*)).drop("bkp")
-        .dropDuplicates("ch", "bk"))
+    val bands0 = bandsP.dropDuplicates("ch", "bk")
     // contents this probe can touch: the tranche's own (exact-dup
     // lookups) plus any content colliding in the pruned bands (candidate
-    // partners) — both bounded, collected as literals (the
-    // partsOf(bands0) job doubles as bands0's materialization). A flat
-    // store (its bands flat too — appends into one are refused) reads
-    // whole
+    // partners) — both bounded, collected as literals. A flat store (its
+    // bands flat too — appends into one are refused) reads whole
     val chps =
-      if (pruned) Some((chpsT ++ StoreLayout.partsOf(bands0, col("ch"))).distinct)
+      if (pruned) Some((chpsT ++ StoreLayout.partsOf(bandsP, col("ch"))).distinct)
       else None
     val membersRaw = StoreLayout.read(spark, s"$dir/members", MembersTable, chps)
     val setsRaw = StoreLayout.read(spark, s"$dir/sets", SetsTable, chps)
@@ -978,12 +965,12 @@ object Dedup {
         (dropPart(membersRaw, "chp"), dropPart(setsRaw, "chp").dropDuplicates("ch"))
     }
     val members = ckpt(excludeIds.fold(members0)(ids =>
-      members0.join(ids.select(col(ids.columns.head).as("id")),
+      members0.join(broadcast(ids.select(col(ids.columns.head).as("id"))),
         Seq("id"), "left_anti")))
     // live contents = at least one surviving member; a failed append's
     // contents (members all excluded) leave the band census and the
     // candidate pool entirely
-    val live = members.select("ch").distinct()
+    val live = ckpt(members.select("ch").distinct())
     NearDupIndexFrames(
       ckpt(bands0.join(live, Seq("ch"), "left_semi")),
       ckpt(sets0.join(live, Seq("ch"), "left_semi")),

@@ -146,7 +146,9 @@ object ImageHash {
     * persisted index ([[writeHashIndex]]), so a stored band row always
     * equi-joins a probe-time band key.
     */
-  private def banded(m: DataFrame, bands: Int): DataFrame =
+  /** The (hsh, bk) band rows of member rows (id, hsh), one per
+    * distinct hash and band slice. */
+  private[ext] def banded(m: DataFrame, bands: Int): DataFrame =
     m.select("hsh").distinct()
       .select(col("hsh"),
         explode(array(bandKeyCols(col("hsh"), bands): _*)).as("bk"))
@@ -167,14 +169,13 @@ object ImageHash {
     * rows come off disk partition-pruned instead of being re-derived
     * from a full member scan.
     */
-  private def verifiedHashPairsFrom(bS: DataFrame, memN: DataFrame,
+  private def verifiedHashPairsFrom(bS: DataFrame, bN: DataFrame,
                                     bands: Int, maxDist: Int,
                                     maxBucket: Int): DataFrame = {
     requireGeometry(bands, maxDist, maxBucket)
     val oversized = bS.groupBy("bk").agg(count(lit(1)).as("n"))
       .filter(col("n") > maxBucket).select("bk")
     val bScap = bS.join(broadcast(oversized), Seq("bk"), "left_anti")
-    val bN = banded(memN, bands)
     val crossC = bN.as("n")
       .join(bScap.as("s"),
         col("n.bk") === col("s.bk") && col("n.hsh") =!= col("s.hsh"))
@@ -191,7 +192,8 @@ object ImageHash {
   private def verifiedHashPairs(memS: DataFrame, memN: DataFrame,
                                 bands: Int, maxDist: Int,
                                 maxBucket: Int): DataFrame =
-    verifiedHashPairsFrom(banded(memS, bands), memN, bands, maxDist, maxBucket)
+    verifiedHashPairsFrom(banded(memS, bands), banded(memN, bands), bands,
+      maxDist, maxBucket)
 
   def hammingProbe(standing: DataFrame, incoming: DataFrame,
                    idCol: String, hashCol: String,
@@ -247,54 +249,30 @@ object ImageHash {
                   maxBucket: Int = 4096): DataFrame = {
     val memS = standing.select(col(idCol).as("id"), col(hashCol).as("hsh"))
     val memN = incoming.select(col(idCol).as("id"), col(hashCol).as("hsh"))
-    ledgerVerdicts(memS.select("hsh").distinct(), banded(memS, bands),
-      memN, incoming, idCol, bands, maxDist, maxBucket)
+    ledgerVerdicts(memS.select("hsh"), banded(memS, bands), memN,
+      banded(memN, bands), incoming, idCol, bands, maxDist, maxBucket)
   }
 
   /** The verdict core shared by [[ledgerProbe]] (standing side derived
     * from a raw member frame) and [[ledgerProbeIndexed]] (standing side
     * read partition-pruned from the persisted index): `standingH` is
-    * the distinct standing hashes reachable by this probe, `bandedS`
-    * their (hsh, bk) band rows.
+    * the standing hashes reachable by this probe, `bandedS` their
+    * (hsh, bk) band rows, `bandedN` the tranche's.
     */
   private def ledgerVerdicts(standingH: DataFrame, bandedS: DataFrame,
-                             memN: DataFrame, incoming: DataFrame,
-                             idCol: String, bands: Int, maxDist: Int,
+                             memN: DataFrame, bandedN: DataFrame,
+                             incoming: DataFrame, idCol: String,
+                             bands: Int, maxDist: Int,
                              maxBucket: Int): DataFrame = {
     // verdicts are decidable at the DISTINCT-HASH level — a 10k-copy
     // template image in the tranche is ONE judged hash, never m² member
-    // pairs: the first occurrence (min id) per hash carries the hash's
-    // verdict, every other copy is exact_dup by membership alone
-    val firstOcc = memN.groupBy("hsh").agg(min(col("id")).as("fid"))
-    val exact = memN.join(standingH, Seq("hsh"), "left_semi").select("id")
-      .unionByName(memN.join(firstOcc, "hsh")
-        .filter(col("id") =!= col("fid")).select("id"))
-      .distinct().withColumn("ex", lit(1))
-    // near verdicts, also hash-level: a tranche hash is near iff a
-    // verified pair links it to a standing hash (whose copies all
-    // arrived earlier) or to another tranche hash whose first copy has
-    // a smaller id — the min member id decides the doc-level loser
-    val vp = verifiedHashPairsFrom(bandedS, memN, bands, maxDist, maxBucket)
-      .select(explode(array(
-        struct(col("ha").as("hsh"), col("hb").as("p_hsh")),
-        struct(col("hb").as("hsh"), col("ha").as("p_hsh")))).as("e"))
-      .select(col("e.hsh").as("hsh"), col("e.p_hsh").as("p_hsh"))
-    val nearC = vp.join(firstOcc, "hsh")
-      .join(standingH.select(col("hsh").as("p_hsh"), lit(1).as("st")),
-        Seq("p_hsh"), "left")
-      .join(firstOcc.select(col("hsh").as("p_hsh"), col("fid").as("p_fid")),
-        Seq("p_hsh"), "left")
-      .filter(col("st") === 1 || col("p_fid") < col("fid"))
-      .select("hsh").distinct()
-    val near = memN.join(nearC, Seq("hsh"), "left_semi")
-      .select("id").distinct().withColumn("nd", lit(1))
-    incoming.select(col(idCol).as("doc_id"))
-      .join(exact.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .join(near.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ex") === 1, lit("exact_dup"))
-          .when(col("nd") === 1, lit("near_dup"))
-          .otherwise(lit("kept")).as("decision"))
+    // pairs; a hash is near iff a verified pair links it to a standing
+    // hash or to a tranche hash whose first copy has a smaller id
+    FirstSeen.verdicts(memN.select(col("id"), col("hsh").as("key")),
+      standingH.select(col("hsh").as("key")),
+      verifiedHashPairsFrom(bandedS, bandedN, bands, maxDist, maxBucket)
+        .select(col("ha").as("a"), col("hb").as("b")),
+      incoming.select(col(idCol).as("doc_id")))
   }
 
   // ------------------------------------------------------------------
@@ -349,21 +327,23 @@ object ImageHash {
     * `dir` (bootstraps the store, params included, on first call).
     * `paramsChecked`: the caller already validated `bands` against the
     * standing store's params this pass ([[Curation.commitTranche]]'s
-    * guard phase), so the append skips re-reading them.
+    * guard phase), so the append skips re-reading them. `bandedIn`: the
+    * tranche's [[banded]] rows under `bands`, when the caller already
+    * materialized them.
     */
   def appendHashIndex(hashes: DataFrame, idCol: String, hashCol: String,
                       dir: String, bands: Int = 8,
-                      paramsChecked: Boolean = false): Unit = {
+                      paramsChecked: Boolean = false,
+                      bandedIn: Option[DataFrame] = None): Unit = {
     val spark = hashes.sparkSession
     val b = if (paramsChecked) bands else ensureHashIndexParams(spark, dir, bands)
     val mem = hashes.select(col(idCol).as("id"), col(hashCol).as("hsh"))
     StoreSwap.concurrently(
-      () => banded(mem, b).withColumn("bkp", StoreLayout.part(col("bk")))
-        .repartition(col("bkp"))
-        .write.mode("append").partitionBy("bkp").parquet(s"$dir/bands"),
-      () => mem.withColumn("hp", StoreLayout.part(col("hsh")))
-        .repartition(col("hp"))
-        .write.mode("append").partitionBy("hp").parquet(s"$dir/members"))
+      () => StoreLayout.appendBuckets(bandedIn.getOrElse(banded(mem, b))
+        .withColumn("bkp", StoreLayout.part(col("bk"))), "bkp", s"$dir/bands"),
+      () => StoreLayout.appendBuckets(
+        mem.withColumn("hp", StoreLayout.part(col("hsh"))), "hp",
+        s"$dir/members"))
   }
 
   /** [[ledgerProbe]] against the PERSISTED index — the commit-time
@@ -390,7 +370,9 @@ object ImageHash {
                          maxDist: Int = 6, maxBucket: Int = 4096,
                          exclude: Option[DataFrame] = None,
                          materialize: Boolean = true,
-                         storeBands: Option[Int] = None): DataFrame = {
+                         storeBands: Option[Int] = None,
+                         trancheParts: Option[(Seq[Long], Seq[Long])] = None,
+                         bandedIn: Option[DataFrame] = None): DataFrame = {
     val bands = storeBands.getOrElse(readHashIndexParams(spark, dir))
     // the tranche side is checkpointed FIRST: its fingerprints may be
     // expensive to derive (decode + hash per doc), and the probe's
@@ -401,7 +383,12 @@ object ImageHash {
         incoming.select(col(idCol).as("id"), col(hashCol).as("hsh"))
           .localCheckpoint(false)
       else incoming.select(col(idCol).as("id"), col(hashCol).as("hsh")))
-    val bkps = StoreLayout.partsOf(banded(memN, bands), col("bk"))
+    val bandedN = bandedIn.getOrElse(banded(memN, bands))
+    // the tranche's band-key and hash buckets: the caller's (the commit
+    // collects every tranche-side bucket set in one job), else two
+    // bounded collects here
+    val (bkps, hpsN) = trancheParts.getOrElse(
+      (StoreLayout.partsOf(bandedN, col("bk")), StoreLayout.partsOf(memN, col("hsh"))))
     // lazy checkpoints: each pruned slice is referenced several times
     // by the verdict plan (census + capped join, exact + partner flags)
     // — materialize the slice once, nothing beyond it; materialize =
@@ -409,20 +396,19 @@ object ImageHash {
     // (Dedup.probeView has the full rationale)
     def ckpt(df: DataFrame): DataFrame =
       if (materialize) df.localCheckpoint(false) else df
-    val bands0 = ckpt(StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
+    val bandsP = StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
       .filter(col("bkp").isin(bkps: _*)).drop("bkp")
-      .dropDuplicates("hsh", "bk"))
-    val hps = (StoreLayout.partsOf(memN, col("hsh")) ++
-      StoreLayout.partsOf(bands0, col("hsh"))).distinct
+    val bands0 = bandsP.dropDuplicates("hsh", "bk")
+    val hps = (hpsN ++ StoreLayout.partsOf(bandsP, col("hsh"))).distinct
     val members0 = StoreLayout.read(spark, s"$dir/members", MembersTable, Some(hps))
       .filter(col("hp").isin(hps: _*)).drop("hp")
     val members = exclude.fold(members0)(ids =>
-      members0.join(ids.select(col(ids.columns.head).as("id")),
+      members0.join(broadcast(ids.select(col(ids.columns.head).as("id"))),
         Seq("id"), "left_anti"))
     val live = ckpt(members.select("hsh").distinct())
     ledgerVerdicts(live,
       ckpt(bands0.join(live, Seq("hsh"), "left_semi")),
-      memN, incoming, idCol, bands, maxDist, maxBucket)
+      memN, bandedN, incoming, idCol, bands, maxDist, maxBucket)
   }
 
   /** Physically erase retracted ids from the persisted index by

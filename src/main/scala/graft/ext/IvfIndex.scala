@@ -69,8 +69,10 @@ object IvfIndex {
       .agg(min(struct(col("dist"), col("cid"))).as("m"))
       .select(col("vec_id"), col("m.cid").as("cell"))
 
+  // a batch shuffles once, by vec_id, before the explode: both of
+  // routeCellsWith's aggregations are then satisfied without an exchange
   private def routeCells(emb: DataFrame, dir: String): DataFrame =
-    routeCellsWith(emb,
+    routeCellsWith(emb.repartition(col("vec_id")),
       StoreLayout.read(emb.sparkSession, s"$dir/centroids_q", CentroidsQTable))
 
   // the persisted tables' read shapes (StoreLayoutSpec pins each
@@ -212,39 +214,48 @@ object IvfIndex {
                   probes: Int = 1, maxCells: Int = 4096,
                   maxBatch: Int = 1 << 16,
                   exclude: Option[DataFrame] = None,
-                  routedIn: Option[DataFrame] = None): DataFrame = {
+                  routedIn: Option[DataFrame] = None,
+                  batchSize: Option[Long] = None): DataFrame = {
     require(probes >= 1 && maxCells >= 1)
     requireNoSplitInFlight(spark, dir)
-    require(incoming.limit(maxBatch + 1).count() <= maxBatch,
+    // `batchSize`: the tranche's row count when the caller already has
+    // it (the commit's one tranche-side collect)
+    require(batchSize.getOrElse(incoming.limit(maxBatch + 1).count()) <= maxBatch,
       s"tranche exceeds maxBatch=$maxBatch — split the tranche")
     val embFrame = incoming.select(col(idCol).as("vec_id"),
       col(embCol).as("embedding"))
     val memN = embFrame.select(col("vec_id").as("id"),
       transform(col("embedding"), x => x.cast("double")).as("e"))
-    val firstOcc = memN.groupBy("e").agg(min(col("id")).as("fid"))
     def unit(df: DataFrame): DataFrame = df
       .withColumn("nrm", sqrt(Similarity.dot(col("e"), col("e"))))
       .withColumn("u", transform(col("e"), x => x / col("nrm")))
       .drop("nrm")
-    val qu = unit(firstOcc)
-    // probed cells per distinct vector: the integer-assigned cell
-    // (identity lives there — routeCells == training-time assignment)
-    // ∪ the `probes` nearest by the search-time double codebook.
-    // `routedIn` (a [[routing]] frame the caller shares with [[append]])
-    // skips re-running the routing pass.
-    val routed = routedIn.getOrElse(routeCells(embFrame, dir))
-      .join(memN.withColumnRenamed("id", "vec_id"), "vec_id")
+    // per distinct tranche vector: its first id, unit vector and
+    // integer-assigned cell (identity lives there — routeCells ==
+    // training-time assignment; every copy routes alike, the first
+    // copy's is taken). `routedIn` (a [[routing]] frame the caller
+    // shares with [[append]]) skips re-running the routing pass.
+    val q = unit(routedIn.getOrElse(routeCells(embFrame, dir))
+      .join(broadcast(memN.withColumnRenamed("id", "vec_id")), "vec_id")
       .groupBy("e").agg(min(struct(col("vec_id"), col("cell"))).as("m"))
-      .select(col("e"), col("m.cell").as("cell"))
+      .select(col("e"), col("m.vec_id").as("fid"), col("m.cell").as("cell")))
+    // its probed cells, materialized once with it: the assigned cell
+    // (`home`) ∪ the `probes` nearest by the search-time double
+    // codebook. A cell that is both appears twice, which only repeats
+    // pairs: the verdict core reads them as a set
     val cent = StoreLayout.read(spark, s"$dir/centroids", CentroidsTable)
-    val ranked = qu.crossJoin(broadcast(cent))
-      .select(col("e"), col("cell"),
-        Similarity.l2sq(col("e"), col("ce")).as("d"))
+    val ranked = q.crossJoin(broadcast(cent.select(col("cell").as("pcell"),
+        col("ce"))))
       .withColumn("rn", row_number().over(org.apache.spark.sql.expressions
-        .Window.partitionBy("e").orderBy(col("d"), col("cell"))))
-      .filter(col("rn") <= probes).select("e", "cell")
-    val probeCells = routed.unionByName(ranked).distinct()
-    val cells = probeCells.select("cell").distinct()
+        .Window.partitionBy("e").orderBy(
+          Similarity.l2sq(col("e"), col("ce")), col("pcell"))))
+      .filter(col("rn") <= probes)
+      .select(col("e"), col("fid"), col("u"), col("pcell").as("cell"),
+        lit(false).as("home"))
+    val probed = q.withColumn("home", lit(true)).unionByName(ranked)
+      .localCheckpoint()
+    val home = probed.filter(col("home")).drop("home")
+    val cells = probed.select("cell").distinct()
       .limit(maxCells + 1).collect().map(_.get(0))
     require(cells.length <= maxCells,
       s"probed cell set exceeds maxCells=$maxCells — not a codebook?")
@@ -262,35 +273,24 @@ object IvfIndex {
     val su = unit(standing.withColumnRenamed("se", "e"))
       .select(col("cell"), col("e").as("se"), col("u").as("sv"))
     // exact: identical standing vector (its cell is always probed), or
-    // a smaller-id tranche copy
-    val exact = su.select(col("se").as("e")).distinct()
-      .join(broadcast(memN), "e").select("id")
-      .unionByName(memN.join(firstOcc, "e")
-        .filter(col("id") =!= col("fid")).select("id"))
-      .distinct().withColumn("ex", lit(1))
-    // near, distinct-vector level: standing candidates from the probed
-    // cells; within-tranche candidates share the assigned cell
-    val pc = broadcast(probeCells.join(qu, "e"))
-    val crossN = pc.join(su, "cell")
+    // a smaller-id tranche copy. Near, distinct-vector level: standing
+    // candidates from the probed cells (an identical standing vector
+    // pairs with itself, which only restates exact); within-tranche
+    // candidates share the assigned cell, and the later first copy of a
+    // pair is the near one. A within pair whose earlier side also
+    // stands is judged the same either way: that standing copy lives in
+    // the shared assigned cell, so the cross pair already links them.
+    val crossN = broadcast(probed).join(su, "cell")
       .filter(round(Similarity.dot(col("u"), col("sv")), 6) >= threshold)
-      .select(col("e"))
-    val rq = routed.join(qu, "e")
-    val withinN = rq.as("a")
-      .join(rq.select(col("cell"), col("fid").as("p_fid"),
-        col("u").as("pu")), "cell")
-      .filter(col("p_fid") < col("fid") &&
-        round(Similarity.dot(col("u"), col("pu")), 6) >= threshold)
-      .select(col("a.e"))
-    val near = memN.join(crossN.unionByName(withinN).distinct(),
-        Seq("e"), "left_semi")
-      .select("id").distinct().withColumn("nd", lit(1))
-    incoming.select(col(idCol).as("doc_id"))
-      .join(exact.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .join(near.withColumnRenamed("id", "doc_id"), Seq("doc_id"), "left")
-      .select(col("doc_id"),
-        when(col("ex") === 1, lit("exact_dup"))
-          .when(col("nd") === 1, lit("near_dup"))
-          .otherwise(lit("kept")).as("decision"))
+      .select(col("e").as("a"), col("se").as("b"))
+    val withinN = home.as("x")
+      .join(broadcast(home).as("y"), col("x.cell") === col("y.cell") &&
+        col("x.fid") < col("y.fid") &&
+        round(Similarity.dot(col("x.u"), col("y.u")), 6) >= threshold)
+      .select(col("x.e").as("a"), col("y.e").as("b"))
+    FirstSeen.verdicts(memN.select(col("id"), col("e").as("key")),
+      su.select(col("se").as("key")), crossN.unionByName(withinN),
+      incoming.select(col(idCol).as("doc_id")))
   }
 
   /** Re-train the codebook from the CURRENT vector population and

@@ -516,31 +516,35 @@ object PQ {
     val spark = newEmb.sparkSession
     val live = liveDir(spark, dir)
     requirePrunedCodes(spark, live)
-    appendIndexOnceAt(newEmb, live, paramsAt(spark, live)._4)
+    val pending = pendingCodes(newEmb, live, paramsAt(spark, live)._4,
+      StoreLayout.partsOf(newEmb, col("vec_id")))
+    StoreLayout.appendBuckets(
+      pending.withColumn("idp", StoreLayout.part(col("vec_id"))), "idp",
+      s"$live/codes")
   }
 
-  /** [[appendIndexOnce]] into an already-resolved live generation
-    * `live` whose code layout the caller checked
-    * ([[requirePrunedCodes]]) and whose `subWidth` it read — the commit
-    * resolves all three once, in its guard phase.
+  /** The (vec_id, sub, cell) code rows [[appendIndexOnce]] still has to
+    * append for `newEmb` into the live generation `live` (whose code
+    * layout the caller checked and whose `subWidth` it read): every
+    * code of `newEmb` through the frozen codebook, minus the rows its
+    * id buckets `parts` already hold. `parts` must cover `newEmb`'s id
+    * buckets ([[StoreLayout.partsOf]]). Reads no verdict, so the commit
+    * derives it for the whole tranche before its verdicts and appends
+    * the kept slice after them.
     */
-  private[ext] def appendIndexOnceAt(newEmb: DataFrame, live: String,
-                                     subWidth: Int): Unit = {
+  private[ext] def pendingCodes(newEmb: DataFrame, live: String,
+                                subWidth: Int, parts: Seq[Long]): DataFrame = {
     val spark = newEmb.sparkSession
-    val centE = centroidsAt(spark, live).localCheckpoint()
-    val ids = newEmb.select("vec_id").dropDuplicates("vec_id")
-      .localCheckpoint()
-    val ps = StoreLayout.partsOf(ids, col("vec_id"))
-    val existing = StoreLayout.read(spark, s"$live/codes", CodesTable, Some(ps))
-      .filter(col("idp").isin(ps: _*))
-      .join(broadcast(ids), Seq("vec_id"), "left_semi")
+    val existing = StoreLayout.read(spark, s"$live/codes", CodesTable, Some(parts))
+      .filter(col("idp").isin(parts: _*))
+      .join(broadcast(newEmb.select("vec_id")), Seq("vec_id"), "left_semi")
       .select("vec_id", "sub")
-    assignTo(explodedSub(newEmb, subWidth), centE)
+    // one shuffle, by vec_id, before the explode: both of assignTo's
+    // aggregations are then satisfied without an exchange
+    assignTo(explodedSub(newEmb.repartition(col("vec_id")), subWidth),
+      centroidsAt(spark, live))
       .select(col("vec_id"), col("sub"), col("cid").as("cell"))
       .join(broadcast(existing), Seq("vec_id", "sub"), "left_anti")
-      .withColumn("idp", StoreLayout.part(col("vec_id")))
-      .repartition(col("idp"))
-      .write.mode("append").partitionBy("idp").parquet(s"$live/codes")
   }
 
   /** Physically erase retracted vectors from the SERVING store

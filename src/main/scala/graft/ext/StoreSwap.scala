@@ -58,12 +58,34 @@ private[ext] object StoreSwap {
     import scala.concurrent.ExecutionContext.Implicits.global
     // each thunk's jobs carry the thunk's own call site: its body is
     // graft code, so the pool thread's stack names the module doing the
-    // work (Dedup.probeView, PQ.appendIndexOnceAt, ...)
-    val fs = thunks.map(t => Future(blocking(t())))
+    // work (Dedup.probeView, PQ.pendingCodes, ...). They also carry
+    // the caller's job description: a pool thread keeps whatever local
+    // properties it inherited when it was created, so the label is set
+    // per thunk and restored after it
+    val label = SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext.getLocalProperty(JobDescription))
+    val fs = thunks.map(t => Future(blocking(
+      label.fold(t())(l => withJobDescription(l)(t())))))
     val results = fs.map(f => scala.util.Try(Await.result(f, Duration.Inf)))
     results.collectFirst { case scala.util.Failure(e) => throw e }
     results.map(_.get)
   }
+
+  private val JobDescription = "spark.job.description"
+
+  /** Run `body` with `label` as the Spark job description of every job
+    * it starts on this thread (adaptive-execution stage and broadcast
+    * jobs inherit it from the submitting thread), restoring the
+    * thread's previous description afterwards; a null label clears it.
+    */
+  def withJobDescription[A](label: String)(body: => A): A =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .map(_.sparkContext).fold(body) { sc =>
+        val prev = sc.getLocalProperty(JobDescription)
+        sc.setLocalProperty(JobDescription, label)
+        try body
+        finally sc.setLocalProperty(JobDescription, prev)
+      }
 
   private val inlineFlag = new ThreadLocal[java.lang.Boolean] {
     override def initialValue(): java.lang.Boolean = false
@@ -422,6 +444,28 @@ private[ext] object StoreLayout {
               key: org.apache.spark.sql.Column): Seq[Long] =
     df.select(part(key).as("p")).distinct()
       .limit(Parts + 1).collect().map(_.getLong(0)).toSeq
+
+  /** Append `df` to the table at `dir`, partitioned by its bucket
+    * column `partCol`, at one file per touched bucket. A frame that is
+    * already one partition — a narrow plan over a one-partition
+    * checkpoint, whose partition count the checkpointed RDD knows
+    * without a job — is written as it is; anything else is first
+    * shuffled by the bucket column.
+    */
+  def appendBuckets(df: DataFrame, partCol: String, dir: String): Unit = {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.execution.exchange.Exchange
+    // an adaptive plan (any exchange) is itself the only leaf
+    val plan = df.queryExecution.executedPlan
+    val onePartition = plan.find(_.isInstanceOf[Exchange]).isEmpty &&
+      (plan.collectLeaves() match {
+        case Seq(scan: RDDScanExec) => scan.rdd.getNumPartitions == 1
+        case _ => false
+      })
+    (if (onePartition) df
+     else df.repartition(org.apache.spark.sql.functions.col(partCol)))
+      .write.mode("append").partitionBy(partCol).parquet(dir)
+  }
 
   /** One store table's read shape: `ddl` is its full schema exactly as
     * `spark.read.parquet` returns it (data columns, then the INT

@@ -266,14 +266,11 @@ object VideoHash {
   def appendSeqIndex(frames: DataFrame, dir: String): Unit = {
     val sh = shingles(frames)
     StoreSwap.concurrently(
-      () => sh.join(sh.groupBy("doc_id").agg(count(lit(1)).as("n")), "doc_id")
-        .withColumn("kp", StoreLayout.part(col("k")))
-        .repartition(col("kp"))
-        .write.mode("append").partitionBy("kp").parquet(s"$dir/shingles"),
-      () => sequenceIds(frames)
-        .withColumn("sqp", StoreLayout.part(col("sq")))
-        .repartition(col("sqp"))
-        .write.mode("append").partitionBy("sqp").parquet(s"$dir/seqs"))
+      () => StoreLayout.appendBuckets(
+        sh.join(sh.groupBy("doc_id").agg(count(lit(1)).as("n")), "doc_id")
+          .withColumn("kp", StoreLayout.part(col("k"))), "kp", s"$dir/shingles"),
+      () => StoreLayout.appendBuckets(sequenceIds(frames)
+        .withColumn("sqp", StoreLayout.part(col("sq"))), "sqp", s"$dir/seqs"))
   }
 
   // the persisted tables' read shapes (StoreLayoutSpec pins each
@@ -303,7 +300,7 @@ object VideoHash {
                          exclude: Option[DataFrame] = None,
                          materialize: Boolean = true): DataFrame = {
     def excl(df: DataFrame): DataFrame = exclude.fold(df)(ids =>
-      df.join(ids.select(col(ids.columns.head).as("doc_id")),
+      df.join(broadcast(ids.select(col(ids.columns.head).as("doc_id"))),
         Seq("doc_id"), "left_anti"))
     // lazy checkpoints on the multiply-referenced frames (tranche
     // sequence ids ×3, tranche shingles ×3, pruned standing slice ×2);

@@ -168,6 +168,39 @@ class CurationSpec extends SparkSpec {
         .mkString("\n"))
   }
 
+  test("every job of a steady-state commit carries a phase label, within a per-phase budget") {
+    val d = StoreLayoutSpec.deployment(spark, sf())
+    val (verdicts, jobs) = graft.JobLog.during(spark)(
+      Curation.commitTranche(d.tranche, 1L, d.stores, imgHashes = Some(d.imgs),
+        vidFrames = Some(d.vids), embeddings = Some(d.embs)))
+    assert(verdicts.count() == 4 * d.tranche.count())
+    val tag = "commitTranche(1)/"
+    val unlabelled = jobs.filterNot(_.desc.startsWith(tag))
+    assert(unlabelled.isEmpty, s"${unlabelled.size} of ${jobs.size} commit " +
+      "jobs carry no phase label:\n" + unlabelled.map(j =>
+        s"'${j.desc.take(60)}' @ ${j.site.split('\n').take(3).mkString(" <- ")}")
+        .mkString("\n"))
+    val byPhase = jobs.groupBy(_.desc.stripPrefix(tag)).map { case (p, js) => p -> js.size }
+    info(byPhase.toSeq.sorted.map { case (p, n) => f"$p%-28s $n%3d" }.mkString("\n"))
+    // job creep fails here: every phase has a cap (a few jobs above what
+    // it runs today; a phase with no cap fails too), and so does the
+    // commit. The single-file appends are pinned exactly: a tranche
+    // frame already in one partition is written without a shuffle
+    val caps = Map(
+      "materialize:ids" -> 1, "materialize:text" -> 4, "materialize:image" -> 4,
+      "materialize:video" -> 1, "materialize:embedding" -> 3,
+      "materialize:exclusion" -> 3, "guard:text.params" -> 1,
+      "guard:image.params" -> 1, "guard:pq.params" -> 1, "buckets" -> 2,
+      "guard:ids" -> 5, "verdict:text" -> 22, "verdict:image" -> 18,
+      "verdict:video" -> 38, "verdict:embedding" -> 21, "pq-feed" -> 6,
+      "ledger" -> 2, "append:text" -> 3, "append:image" -> 2,
+      "append:video" -> 8, "append:embedding" -> 3, "append:pq" -> 3,
+      "append:id-registry" -> 1).withDefaultValue(0)
+    val over = byPhase.filter { case (p, n) => n > caps(p) }
+    assert(over.isEmpty, s"phases over their job cap: $over")
+    assert(jobs.size <= 145, s"${jobs.size} jobs in one steady-state commit")
+  }
+
   test("an IVF embedding store routes the semantic layer through the index, re-run safe", graft.Slow) {
     // the 100 TB semantic shape: the caller pre-trains the IVF store on
     // the initial corpus; commitTranche detects it (centroids table),

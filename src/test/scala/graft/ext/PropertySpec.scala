@@ -369,6 +369,154 @@ class PropertySpec extends SparkSpec {
     assert(Set("exact_dup", "near_dup", "kept").subsetOf(got.values.toSet))
   }
 
+  // the first-seen replay shared by the indexed-path properties below:
+  // `standing` docs arrive before `tranche` docs, ids ascending within
+  // each; exact losers are every later copy of a key, near losers the
+  // later side of a near pair that is not an exact loser
+  private def firstSeenReplay(standingIds: Seq[Long], tranche: Seq[Long],
+                              key: Long => Any,
+                              near: (Long, Long) => Boolean): Map[Long, String] = {
+    val all = standingIds ++ tranche
+    val arrival = all.zipWithIndex.toMap
+    val exactLosers = all.groupBy(key).values.flatMap { g =>
+      val first = g.minBy(arrival); g.filterNot(_ == first)
+    }.toSet
+    val nearLosers = (for {
+      a <- all; b <- all
+      if arrival(a) < arrival(b) && key(a) != key(b) && near(a, b)
+    } yield b).toSet -- exactLosers
+    tranche.map(id => id -> (if (exactLosers(id)) "exact_dup"
+      else if (nearLosers(id)) "near_dup" else "kept")).toMap
+  }
+
+  test("property: the indexed text and hash probes equal the first-seen replay, a failed attempt's rows excluded") {
+    // Dedup.probeView + ledgerProbeFrom and ImageHash.ledgerProbeIndexed
+    // — the commit's store-backed paths through the shared verdict core
+    // — against a replay over the union corpus. The store already holds
+    // the tranche (a failed first attempt's append); the probes exclude
+    // the tranche's ids, so the verdicts must equal the replay that
+    // never saw those rows. In-tranche copies (of a tranche doc and of
+    // a standing doc) are planted on top of the organic duplicates.
+    import spark.implicits._
+    import java.nio.file.Files
+    val root = Files.createTempDirectory("fsidx").toString
+    val seed = org.scalacheck.rng.Seed(77L)
+    val wordGen = Gen.oneOf("aa", "bb", "cc", "dd", "ee", "ff")
+    val docGen = for {
+      n <- Gen.choose(0, 8)
+      ws <- Gen.listOfN(n, wordGen)
+    } yield ws.mkString(" ")
+    val standingT = Gen.listOfN(100, docGen).pureApply(Gen.Parameters.default, seed)
+    val trancheT0 = Gen.listOfN(100, docGen).pureApply(Gen.Parameters.default, seed.next)
+    val trancheT = trancheT0 ++ Seq(trancheT0(7), standingT(11), "aa bb cc dd ee ff aa bb")
+    val standing = standingT.zipWithIndex.map { case (t, i) => (i.toLong, t) }
+      .toDF("doc_id", "text")
+    val tranche = trancheT.zipWithIndex.map { case (t, i) => (1000L + i, t) }
+      .toDF("doc_id", "text")
+    val ids = tranche.select("doc_id")
+    val textDir = s"$root/text"
+    Dedup.writeNearDupIndex(standing, "doc_id", "text", textDir)
+    Dedup.writeNearDupIndex(tranche, "doc_id", "text", textDir)
+    val idxN = Dedup.nearDupIndex(tranche, "doc_id", "text")
+    val gotText = Dedup.ledgerProbeFrom(
+        Dedup.probeView(spark, textDir, idxN, Some(ids)), idxN, tranche, "doc_id")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val union = standing.unionByName(tranche)
+    val content = Dedup.contentMembers(union, "doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val pairs = Dedup.minhashLshPairs(union, "doc_id", "text")
+      .filter(col("jaccard") >= 0.6).select("a_id", "b_id")
+      .collect().map(r => Set(r.getLong(0), r.getLong(1))).toSet
+    // docs below the shingle floor have no content and are kept
+    val textIds = trancheT.indices.map(1000L + _)
+    val expText = firstSeenReplay(standingT.indices.map(_.toLong), textIds,
+      id => content.getOrElse(id, s"none-$id"), (a, b) => pairs(Set(a, b)))
+    assert(gotText == expText)
+    assert(Set("exact_dup", "near_dup", "kept").subsetOf(gotText.values.toSet))
+
+    // hash layer: ≤14-bit flips of four far-apart bases (the hash-layer
+    // property's generator), plus copies of a tranche hash and of a
+    // standing hash
+    val bases = Seq(0L, -1L, 0x00FF00FF00FF00FFL, 0xF0F0F0F0F0F0F0F0L)
+    val hashGen = for {
+      b <- Gen.oneOf(bases)
+      nf <- Gen.oneOf(0, 1, 2, 10, 12, 14)
+      flips <- Gen.listOfN(nf, Gen.choose(0, 63))
+    } yield flips.foldLeft(b)((h, i) => h ^ (1L << i))
+    val standingH = Gen.listOfN(60, hashGen).pureApply(Gen.Parameters.default, seed.next.next)
+    val trancheH0 = Gen.listOfN(60, hashGen).pureApply(Gen.Parameters.default,
+      seed.next.next.next)
+    val trancheH = trancheH0 ++ Seq(trancheH0(3), standingH(4), standingH(5) ^ 1L)
+    val hStanding = standingH.zipWithIndex.map { case (h, i) => (i.toLong, h) }
+      .toDF("doc_id", "hash")
+    val hTranche = trancheH.zipWithIndex.map { case (h, i) => (1000L + i, h) }
+      .toDF("doc_id", "hash")
+    val hashDir = s"$root/img"
+    ImageHash.appendHashIndex(hStanding, "doc_id", "hash", hashDir)
+    ImageHash.appendHashIndex(hTranche, "doc_id", "hash", hashDir)
+    val gotHash = ImageHash.ledgerProbeIndexed(spark, hashDir, hTranche,
+        "doc_id", "hash", exclude = Some(hTranche.select("doc_id")))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val hashOf = (standingH.zipWithIndex.map { case (h, i) => i.toLong -> h } ++
+      trancheH.zipWithIndex.map { case (h, i) => (1000L + i) -> h }).toMap
+    val expHash = firstSeenReplay(standingH.indices.map(_.toLong),
+      trancheH.indices.map(1000L + _), hashOf,
+      (a, b) => java.lang.Long.bitCount(hashOf(a) ^ hashOf(b)) <= 6)
+    assert(gotHash == expHash)
+    assert(Set("exact_dup", "near_dup", "kept").subsetOf(gotHash.values.toSet))
+  }
+
+  test("property: the IVF vector probe equals an independent first-seen replay, a failed attempt's rows excluded") {
+    // IvfIndex.ledgerProbe through the shared verdict core against a
+    // replay in plain doubles. Every cell is probed (probes = k), so a
+    // standing partner anywhere counts; tranche partners count within
+    // the assigned cell, which the replay reads off the store (the
+    // failed attempt's append routed every tranche vector there).
+    // Vectors are small perturbations of four directions, so cosines
+    // straddle the threshold organically; exact copies of a standing and
+    // of a tranche vector are planted.
+    import spark.implicits._
+    import java.nio.file.Files
+    val dir = Files.createTempDirectory("fsivf").toString
+    val seed = org.scalacheck.rng.Seed(55L)
+    val dim = 6
+    val bases = Seq(Seq(1f, 0f, 0f, 0f, 0f, 0f), Seq(0f, 1f, 0f, 0f, 0f, 0f),
+      Seq(0.6f, 0.8f, 0f, 0f, 0f, 0f), Seq(0f, 0f, 1f, 1f, 0f, 0f))
+    val vecGen = for {
+      b <- Gen.oneOf(bases)
+      bare <- Gen.oneOf(true, false, false, false)
+      noise <- Gen.listOfN(dim, Gen.choose(-0.3f, 0.3f))
+    } yield if (bare) b else b.zip(noise).map { case (x, n) => x + n }
+    val standingV = Gen.listOfN(50, vecGen).pureApply(Gen.Parameters.default, seed)
+    val trancheV0 = Gen.listOfN(50, vecGen).pureApply(Gen.Parameters.default, seed.next)
+    val trancheV = trancheV0 ++ Seq(trancheV0(2), standingV(9))
+    val standing = standingV.zipWithIndex.map { case (v, i) => (i.toLong, v) }
+      .toDF("vec_id", "embedding")
+    val tranche = trancheV.zipWithIndex.map { case (v, i) => (1000L + i, v) }
+      .toDF("vec_id", "embedding")
+    val k = 2
+    IvfIndex.write(standing, dir, k = k, iters = 2)
+    IvfIndex.append(tranche, dir)
+    val got = IvfIndex.ledgerProbe(spark, dir, tranche, "vec_id", "embedding",
+        threshold = 0.9, probes = k, exclude = Some(tranche.select("vec_id")))
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
+    val cellOf = spark.read.parquet(s"$dir/vectors").filter(col("vec_id") >= 1000L)
+      .select("vec_id", "cell").collect().map(r => r.getLong(0) -> r.get(1).toString).toMap
+    val vecOf = (standingV.zipWithIndex.map { case (v, i) => i.toLong -> v } ++
+      trancheV.zipWithIndex.map { case (v, i) => (1000L + i) -> v })
+      .toMap.map { case (id, v) => id -> v.map(_.toDouble) }
+    def dot(a: Seq[Double], b: Seq[Double]) =
+      a.zip(b).foldLeft(0.0) { case (s, (x, y)) => s + x * y }
+    def unit(a: Seq[Double]) = { val n = math.sqrt(dot(a, a)); a.map(_ / n) }
+    def cos(a: Long, b: Long) = BigDecimal(dot(unit(vecOf(a)), unit(vecOf(b))))
+      .setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
+    val exp = firstSeenReplay(standingV.indices.map(_.toLong),
+      trancheV.indices.map(1000L + _), vecOf,
+      (a, b) => cos(a, b) >= 0.9 && (a < 1000L || cellOf(a) == cellOf(b)))
+    assert(got == exp)
+    assert(Set("exact_dup", "near_dup", "kept").subsetOf(got.values.toSet))
+  }
+
   test("property: the disk curation loop equals the first-seen replay under random tranching", graft.Slow) {
     // Curation.commitTranche end-to-end (disk standing index, ledger
     // appends, index appends between commits) on a random corpus split

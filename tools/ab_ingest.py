@@ -13,9 +13,12 @@ also builds it (about 3.5 min). At least three seeds are required: a
 single run on a shared VM varies up to 2x and is not evidence.
 
 It prints, for every end-to-end metric, each variant's median and its
-quartile spread `(q3 - q1) / median`, the ratio of the medians, and in how
-many seed pairs the change was better; `--out` also writes every run's
-metrics as JSON.
+quartile spread `(q3 - q1) / median`, the ratio of the medians, in how
+many seed pairs the change was better, and the acceptance decision for a
+claimed gain on that metric: `gain` when the change is better in at least
+nine of every ten pairs AND its median beats the base median by more than
+the distance between the base's quartiles (q3 - q1), `no gain` otherwise.
+`--out` also writes every run's metrics as JSON.
 """
 import argparse
 import io
@@ -71,6 +74,13 @@ def summary(values):
             "spread": (q3 - q1) / med if med else float("inf")}
 
 
+def gain_accepted(base, change, wins, pairs, lower):
+    """The rule a claimed gain must meet: better in at least 9 of every 10
+    seed pairs, and a median gap larger than the base's quartile distance."""
+    gap = base["median"] - change["median"] if lower else change["median"] - base["median"]
+    return pairs > 0 and wins * 10 >= 9 * pairs and gap > base["q3"] - base["q1"]
+
+
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n\n")[0])
     ap.add_argument("--base", required=True, help="checkout directory or git revision")
@@ -108,11 +118,15 @@ def main():
         wins = sum(1 for seed, b in by_seed["base"].items() if seed in by_seed["change"]
                    and (by_seed["change"][seed] < b if lower else by_seed["change"][seed] > b))
         ratio = s["change"]["median"] / s["base"]["median"] if s["base"]["median"] else float("nan")
+        pairs = sum(1 for seed in by_seed["base"] if seed in by_seed["change"])
+        accepted = gain_accepted(s["base"], s["change"], wins, pairs, lower)
         report["metrics"][name] = {"base": s["base"], "change": s["change"],
-                                   "ratio": ratio, "change_better_pairs": wins}
+                                   "ratio": ratio, "change_better_pairs": wins,
+                                   "pairs": pairs, "gain_accepted": accepted}
         print(f"  {name:18s} base {s['base']['median']:10.4g} [{s['base']['spread']:.3f}]"
               f"  change {s['change']['median']:10.4g} [{s['change']['spread']:.3f}]"
-              f"  ratio {ratio:.3f}  better in {wins}/{len(a.seeds)} pairs ({m['better']})")
+              f"  ratio {ratio:.3f}  better in {wins}/{pairs} pairs ({m['better']})"
+              f"  {'gain' if accepted else 'no gain'}")
     if a.out:
         with open(a.out, "w") as f:
             json.dump(report, f, indent=1)
