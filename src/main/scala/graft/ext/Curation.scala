@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreLayout.StoreWrite
+
 /** The one-call-per-tranche ingestion API: everything the streaming
   * multimodal test wires by hand — probe every modality's PERSISTED
   * standing store for first-seen verdicts, append the verdicts to the
@@ -424,7 +426,7 @@ object Curation {
       .withColumn("epoch", lit(epoch))
       .withColumn("idp", StoreLayout.part(col("doc_id")))
       .coalesce(1)
-      .write.mode("append").partitionBy("idp").parquet(dir)
+      .storeWrite.mode("append").partitionBy("idp").parquet(dir)
     markInit(spark, dir)
   }
 
@@ -447,7 +449,7 @@ object Curation {
       .withColumn("epoch", lit(1L))
       .withColumn("idp", StoreLayout.part(col("doc_id")))
       .coalesce(1)
-      .write.partitionBy("idp").parquet(tmp)
+      .storeWrite.partitionBy("idp").parquet(tmp)
     StoreSwap.swap(spark, dir, tmp)
     writeEpochMark(spark, dir, 1L)
   }
@@ -877,7 +879,7 @@ object Curation {
       emb.map(e => inPhase("append:embedding") { () =>
         if (embIvf) IvfIndex.append(e.drop("label"), stores.embedding,
           routed = embRouting)
-        else e.write.mode("append").parquet(stores.embedding) }) ++
+        else e.storeWrite.mode("append").parquet(stores.embedding) }) ++
       // serving-side PQ append: the tranche's KEPT embedding vectors
       // (the curated corpus is what serves — a duplicate's vector must
       // not become a second searchable candidate), encoded through the
@@ -1274,10 +1276,10 @@ object Curation {
       }
       val manifest = corpusAsOf(spark, stores, cutoff).localCheckpoint()
       val (rows, digest) = manifestDigest(manifest)
-      manifest.write.mode("overwrite").parquet(manifestDir(stores, cutoff))
+      manifest.storeWrite.mode("overwrite").parquet(manifestDir(stores, cutoff))
       Seq((cutoff, rows, digest, java.time.Instant.now().toString))
         .toDF("cutoff", "rows", "digest", "published_at")
-        .coalesce(1).write.mode("append").parquet(releaseRegistry(stores))
+        .coalesce(1).storeWrite.mode("append").parquet(releaseRegistry(stores))
       digest
     }
 
@@ -1392,7 +1394,7 @@ object Curation {
           s"${pinned.get.withdrawn.get._1})")
       Seq((cutoff, reason, java.time.Instant.now().toString))
         .toDF("cutoff", "reason", "withdrawn_at")
-        .coalesce(1).write.mode("append")
+        .coalesce(1).storeWrite.mode("append")
         .parquet(withdrawnRegistry(stores))
       StoreSwap.fsOf(spark, releasesDir(stores)).delete(
         new org.apache.hadoop.fs.Path(manifestDir(stores, cutoff)), true)
@@ -1494,7 +1496,7 @@ object Curation {
         when(col("live").isNull, lit(null).cast("string"))
           .otherwise(col("ref")).as("content_ref"))
       dest.fold(out.localCheckpoint()) { d =>
-        out.write.mode("overwrite").parquet(d)
+        out.storeWrite.mode("overwrite").parquet(d)
         spark.read.parquet(d)
       }
     }
@@ -1903,7 +1905,7 @@ object Curation {
       all.flatMap { case (role, _, man, _, _, _, _, _) =>
         man.map(m => (role, m._1, m._2, m._3, m._4)) }
         .toDF("role", "relpath", "length", "mtime", "loc")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dest/_files")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dest/_files")
       all.map { case (role, src, _, nf, nb, cf, cb, _) =>
         (role, src, nf, nb, cf, cb) }
         .toDF("role", "src", "n_files", "n_bytes",
@@ -1912,7 +1914,7 @@ object Curation {
         .withColumn("base", lit(base.getOrElse("")))
         .withColumn("depth", lit(depth))
         .withColumn("created_at", lit(java.time.Instant.now().toString))
-        .coalesce(1).write.mode("overwrite").parquet(s"$dest/_meta")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dest/_meta")
       // created_ms: epoch millis, the registry's ORDER AUTHORITY
       // (ADVICE r16: Instant.now().toString is variable-precision
       // ISO-8601 — lexicographic order diverges from chronological
@@ -1920,7 +1922,7 @@ object Curation {
       Seq((dest, stamp, java.time.Instant.now().toString,
         System.currentTimeMillis(), depth))
         .toDF("dest", "stamp", "created_at", "created_ms", "depth")
-        .coalesce(1).write.mode("append")
+        .coalesce(1).storeWrite.mode("append")
         .parquet(snapshotsRegistry(stores))
       all.map(_._8)
     }
@@ -2560,7 +2562,7 @@ object Curation {
               .dropDuplicates("doc_id")
           val tmp = StoreSwap.prepareTmp(spark, s"$tomb.compact")
           rows.withColumn("idp", StoreLayout.part(col("doc_id")))
-            .coalesce(1).write.partitionBy("idp").parquet(tmp)
+            .coalesce(1).storeWrite.partitionBy("idp").parquet(tmp)
           StoreSwap.swap(spark, tomb, tmp)
           if (readEpochMark(spark, tomb) < 1L)
             writeEpochMark(spark, tomb, 1L)
@@ -2587,26 +2589,25 @@ object Curation {
     val root = fs.makeQualified(new org.apache.hadoop.fs.Path(dir))
     if (!fs.exists(root)) return Map.empty
     val counts = scala.collection.mutable.Map[String, (Long, Long)]()
-    val it = fs.listFiles(root, true)
-    while (it.hasNext) {
-      val f = it.next()
-      var cur = f.getPath
-      var hidden = false
-      while (cur != null && cur != root) {
-        val n = cur.getName
-        if (n.startsWith("_") || n.startsWith(".")) hidden = true
-        cur = cur.getParent
+    // a plain listStatus walk, not `listFiles`: its located statuses
+    // load every entry's owner and mode, which Hadoop's local FS does
+    // by starting an `ls -ld` process per file and directory
+    def walk(d: org.apache.hadoop.fs.Path): Unit =
+      fs.listStatus(d).foreach { f =>
+        val n = f.getPath.getName
+        if (n.startsWith("_") || n.startsWith(".")) ()
+        else if (f.isDirectory) walk(f.getPath)
+        else {
+          // rebased onto the caller's `dir` string (the listing returns
+          // scheme-qualified paths; the per-store bucket compactors
+          // validate dirs against the paths the caller owns)
+          val b = dir + f.getPath.getParent.toString
+            .stripPrefix(root.toString)
+          val (n0, s0) = counts.getOrElse(b, (0L, 0L))
+          counts(b) = (n0 + 1L, s0 + f.getLen)
+        }
       }
-      if (!hidden) {
-        // rebased onto the caller's `dir` string (listFiles returns
-        // scheme-qualified paths; the per-store bucket compactors
-        // validate dirs against the paths the caller owns)
-        val b = dir + f.getPath.getParent.toString
-          .stripPrefix(root.toString)
-        val (n0, s0) = counts.getOrElse(b, (0L, 0L))
-        counts(b) = (n0 + 1L, s0 + f.getLen)
-      }
-    }
+    walk(root)
     counts.toMap
   }
 
@@ -4095,7 +4096,7 @@ object Curation {
     val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
     spark.read.parquet(dir).dropDuplicates("doc_id", "tranche")
       .repartition(col("idp"))
-      .write.partitionBy("idp").parquet(tmp)
+      .storeWrite.partitionBy("idp").parquet(tmp)
     StoreSwap.swap(spark, dir, tmp)
   }
 
@@ -4111,7 +4112,7 @@ object Curation {
     val rows = removeIds.fold(rows0)(ids =>
       rows0.join(ids.select(col("doc_id").as(idCol)),
         Seq(idCol), "left_anti"))
-    rows.write.parquet(tmp)
+    rows.storeWrite.parquet(tmp)
     StoreSwap.swap(spark, dir, tmp)
   }
 }

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import StoreLayout.StoreWrite
+
 /** Deduplication operators for large text corpora — the training-data
   * pipeline extensions mandated by the north star (BASELINE.json), all
   * declarative DataFrame transforms so Catalyst plans them.
@@ -783,7 +785,7 @@ object Dedup {
     } else {
       import spark.implicits._
       Seq((k, bands, rows)).toDF("k", "bands", "rows")
-        .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+        .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/params")
     }
 
   /** Append already-built index frames (no geometry guard — callers
@@ -1016,7 +1018,7 @@ object Dedup {
       idx.copy(members = idx.members.dropDuplicates("id", "ch")), tmp)
     if (storeExists(spark, s"$dir/params"))
       spark.read.parquet(s"$dir/params").coalesce(1)
-        .write.parquet(s"$tmp/params")
+        .storeWrite.parquet(s"$tmp/params")
     StoreSwap.swap(spark, dir, tmp)
   }
 
@@ -1129,8 +1131,7 @@ object Dedup {
     */
   private[ext] def storeExists(spark: org.apache.spark.sql.SparkSession,
                                dir: String): Boolean = {
-    val p = new org.apache.hadoop.fs.Path(dir)
-    p.getFileSystem(spark.sessionState.newHadoopConf()).exists(p)
+    StoreSwap.fsOf(spark, dir).exists(new org.apache.hadoop.fs.Path(dir))
   }
 
   /** Duplicate-cluster resolution: connected components of the near-dup
@@ -1212,8 +1213,6 @@ object Dedup {
           }
         } finally ex.shutdownNow()
       }
-      if (sys.env.contains("GRAFT_CC_DEBUG"))
-        println(s"CC iter=$iter changed=$changed")
       lbl = next.select("id", "lbl")
       done = changed == 0
       iter += 1

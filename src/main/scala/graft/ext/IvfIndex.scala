@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import StoreLayout.StoreWrite
+
 /** Persistent IVF index — the ANN family's on-disk artifact, completing
   * the persistence story the dedup side already has
   * ([[Dedup.writeNearDupIndex]]): a production vector index is trained
@@ -42,11 +44,11 @@ object IvfIndex {
   /** Train on `emb` and persist the full index under `dir`. */
   def write(emb: DataFrame, dir: String, k: Int = 8, iters: Int = 2): Unit = {
     KMeans.centroids(emb, k, iters)
-      .write.mode("overwrite").parquet(s"$dir/centroids")
+      .storeWrite.mode("overwrite").parquet(s"$dir/centroids")
     KMeans.centroidsQuantized(emb, k, iters)
-      .write.mode("overwrite").parquet(s"$dir/centroids_q")
+      .storeWrite.mode("overwrite").parquet(s"$dir/centroids_q")
     emb.join(KMeans.assign(emb, k, iters).select("vec_id", "cell"), "vec_id")
-      .write.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
+      .storeWrite.mode("overwrite").partitionBy("cell").parquet(s"$dir/vectors")
   }
 
   /** Route an arriving batch into the PERSISTED codebook (no retrain, no
@@ -97,7 +99,7 @@ object IvfIndex {
              routed: Option[DataFrame] = None): Unit = {
     requireNoSplitInFlight(emb.sparkSession, dir)
     emb.join(routed.getOrElse(routeCells(emb, dir)), "vec_id")
-      .write.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
+      .storeWrite.mode("append").partitionBy("cell").parquet(s"$dir/vectors")
   }
 
   // A crashed [[splitCell]] can leave the store silently wrong (a
@@ -395,7 +397,7 @@ object IvfIndex {
     fs.mkdirs(new org.apache.hadoop.fs.Path(splitMarkerPath(dir)))
     movers.dropDuplicates("vec_id")
       .select(dataCols.map(col) :+ col("new_cell").as("cell"): _*)
-      .write.mode("append").partitionBy("cell").parquet(vecDir)
+      .storeWrite.mode("append").partitionBy("cell").parquet(vecDir)
     // surgical removal of flipped originals: rewrite ONLY the affected
     // source partitions (≤ codebook-many), via a dot-prefixed tmp the
     // partition discovery ignores
@@ -408,7 +410,7 @@ object IvfIndex {
       spark.read.parquet(pdir.toString)
         .join(broadcast(movers.filter(col("cell") === c).select("vec_id")),
           Seq("vec_id"), "left_anti")
-        .write.parquet(tmp.toString)
+        .storeWrite.parquet(tmp.toString)
       fs.delete(pdir, true)
       if (!fs.rename(tmp, pdir))
         throw new java.io.IOException(s"splitCell: cannot promote $tmp to $pdir")
@@ -416,10 +418,10 @@ object IvfIndex {
     // codebook swap (integer codebook first — append routing), then
     // retire the hot partition no codebook entry routes to anymore
     val tq = StoreSwap.prepareTmp(spark, s"$dir/centroids_q.split")
-    newCentQ.coalesce(1).write.parquet(tq)
+    newCentQ.coalesce(1).storeWrite.parquet(tq)
     StoreSwap.swap(spark, s"$dir/centroids_q", tq)
     val tc = StoreSwap.prepareTmp(spark, s"$dir/centroids.split")
-    newCent.coalesce(1).write.parquet(tc)
+    newCent.coalesce(1).storeWrite.parquet(tc)
     StoreSwap.swap(spark, s"$dir/centroids", tc)
     fs.delete(new org.apache.hadoop.fs.Path(s"$vecDir/cell=$cell"), true)
     // mutation phase complete: store consistent under the spliced
@@ -496,7 +498,7 @@ object IvfIndex {
     spark.read.parquet(vecDir)
       .dropDuplicates("vec_id")
       .repartition(col("cell"))
-      .write.partitionBy("cell").parquet(tmp)
+      .storeWrite.partitionBy("cell").parquet(tmp)
     StoreSwap.swap(spark, vecDir, tmp)
   }
 

@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreLayout.StoreWrite
+
 /** The PERSISTED, appendable curation ledger (VERDICT r9 "what's
   * missing" #2): the on-disk artifact a production ingestion pipeline
   * actually ships — one row per (document, modality) verdict, appended
@@ -30,7 +32,7 @@ object Ledger {
   // and the table goes file-count-bound at commit cadence
   private def write(rows: DataFrame, dir: String): Unit =
     rows.repartition(col("tranche"), col("modality"))
-      .write.mode("overwrite")
+      .storeWrite.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("tranche", "modality").parquet(dir)
 
@@ -126,7 +128,7 @@ object Ledger {
         Seq("doc_id"), "left_anti"))
     rows
       .repartition(col("tranche"), col("modality"))
-      .write.partitionBy("tranche", "modality").parquet(tmp)
+      .storeWrite.partitionBy("tranche", "modality").parquet(tmp)
     StoreSwap.swap(spark, dir, tmp)
   }
 

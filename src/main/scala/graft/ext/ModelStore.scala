@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreLayout.StoreWrite
+
 /** Persistence for TRAINED model artifacts — the missing half of the
   * repo's index-persistence story (VERDICT r9 "what's missing" #1): the
   * near-dup index persists ([[Dedup.writeNearDupIndex]]) and the IVF
@@ -38,7 +40,7 @@ object ModelStore {
     * first result, or the local trainers' merge rows lifted toDF).
     */
   def writeBpe(merges: DataFrame, dir: String): Unit =
-    merges.coalesce(1).write.mode("overwrite").parquet(s"$dir/merges")
+    merges.coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/merges")
 
   /** The persisted merge table, training order restored. */
   def readBpe(spark: SparkSession, dir: String): DataFrame =
@@ -67,7 +69,7 @@ object ModelStore {
     */
   def writeBpeVocab(vocab: DataFrame, dir: String): Unit =
     vocab.select(col("word"), col("n"), col("repr"))
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/vocab")
+      .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/vocab")
 
   /** The persisted vocabulary, ready for the tokenization join. */
   def readBpeVocab(spark: SparkSession, dir: String): DataFrame =
@@ -84,7 +86,7 @@ object ModelStore {
                    dir: String): Unit = {
     import spark.implicits._
     model.pieces.toDF("piece", "cnt", "cost_fp")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/pieces")
+      .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/pieces")
   }
 
   /** Load a persisted unigram model for segmentation in a fresh
@@ -107,7 +109,7 @@ object ModelStore {
     * ([[QualityModel.trainPerceptron]]'s result).
     */
   def writeQualityWeights(weights: DataFrame, dir: String): Unit =
-    weights.coalesce(1).write.mode("overwrite").parquet(s"$dir/weights")
+    weights.coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/weights")
 
   /** The persisted weight table — feed straight to
     * [[QualityModel.scoreDocuments]] (which broadcasts it; absent
@@ -129,10 +131,10 @@ object ModelStore {
   def writeNgramLm(counts: NgramLm.Counts, dir: String): Unit = {
     val spark = counts.c1.sparkSession
     import spark.implicits._
-    counts.c1.coalesce(1).write.mode("overwrite").parquet(s"$dir/c1")
-    counts.c2.coalesce(1).write.mode("overwrite").parquet(s"$dir/c2")
+    counts.c1.coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/c1")
+    counts.c2.coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/c2")
     Seq((counts.b1, counts.b2)).toDF("b1", "b2")
-      .coalesce(1).write.mode("overwrite").parquet(s"$dir/params")
+      .coalesce(1).storeWrite.mode("overwrite").parquet(s"$dir/params")
   }
 
   /** The persisted LM counts — feed straight to [[NgramLm.scoreWith]].

@@ -4,6 +4,8 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
+import StoreLayout.StoreWrite
+
 /** Product quantization for memory-bounded ANN: split each embedding
   * into `m` contiguous subvectors, k-means each subspace independently
   * (same exact integer arithmetic as [[KMeans]] — any engine replays the
@@ -399,17 +401,17 @@ object PQ {
       .flatMap(genSeq).maxOption.getOrElse(0) + 1}%06d"
     val g = s"$dir/$next"
     val (assign, centE) = run(emb, m, k, iters, subWidth)
-    centE.write.mode("overwrite").parquet(s"$g/centroids")
+    centE.storeWrite.mode("overwrite").parquet(s"$g/centroids")
     assign.select(col("vec_id"), col("sub"), col("cid").as("cell"))
       .withColumn("idp", StoreLayout.part(col("vec_id")))
       .repartition(col("idp"))
-      .write.mode("overwrite").partitionBy("idp").parquet(s"$g/codes")
+      .storeWrite.mode("overwrite").partitionBy("idp").parquet(s"$g/codes")
     import spark.implicits._
     // the store is self-describing: encode/search read the training
     // geometry from here, so they can never disagree with it — and
     // params lands last, marking the generation complete
     Seq((m, k, iters, subWidth)).toDF("m", "k", "iters", "sub_width")
-      .coalesce(1).write.mode("overwrite").parquet(s"$g/params")
+      .coalesce(1).storeWrite.mode("overwrite").parquet(s"$g/params")
     publishGen(spark, dir, next)
     // legacy flat tables (pre-generational layout) are dead the moment
     // a generation is published — drop them so the store has one shape
@@ -496,7 +498,7 @@ object PQ {
       .select(col("vec_id"), col("sub"), col("cid").as("cell"))
       .withColumn("idp", StoreLayout.part(col("vec_id")))
       .repartition(col("idp"))
-      .write.mode("append").partitionBy("idp").parquet(s"$live/codes")
+      .storeWrite.mode("append").partitionBy("idp").parquet(s"$live/codes")
   }
 
   /** [[appendIndex]] with RE-RUN idempotency — the ingestion-path form
@@ -576,7 +578,7 @@ object PQ {
         .dropDuplicates("vec_id", "sub")
         .withColumn("idp", StoreLayout.part(col("vec_id")))
         .repartition(col("idp"))
-        .write.partitionBy("idp").parquet(tmp)
+        .storeWrite.partitionBy("idp").parquet(tmp)
       StoreSwap.swap(spark, codesDir, tmp)
       return
     }
@@ -604,7 +606,7 @@ object PQ {
       .dropDuplicates("vec_id", "sub")
       .withColumn("idp", StoreLayout.part(col("vec_id")))
       .repartition(col("idp"))
-      .write.partitionBy("idp").parquet(tmp)
+      .storeWrite.partitionBy("idp").parquet(tmp)
     StoreSwap.swap(spark, codesDir, tmp)
   }
 

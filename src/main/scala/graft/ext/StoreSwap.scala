@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
+import StoreLayout.StoreWrite
+
 /** The one store-replacement discipline shared by every rewriting
   * maintenance pass ([[IvfIndex.rewrite]], [[Dedup.compactNearDupIndex]],
   * [[Ledger.compact]]): the new store is fully written to a sibling tmp
@@ -25,7 +27,7 @@ import org.apache.spark.sql.SparkSession
 private[ext] object StoreSwap {
 
   private def fs(spark: SparkSession, p: Path) =
-    p.getFileSystem(spark.sessionState.newHadoopConf())
+    p.getFileSystem(StoreLayout.hadoopConf(spark))
 
   def fsOf(spark: SparkSession, path: String): org.apache.hadoop.fs.FileSystem =
     fs(spark, new Path(path))
@@ -165,7 +167,7 @@ private[ext] object StoreSwap {
       val nOut = math.min(Int.MaxValue.toLong,
         math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
       transform(spark.read.parquet(d)).coalesce(nOut)
-        .write.parquet(tmp.toString)
+        .storeWrite.parquet(tmp.toString)
       if (!f.rename(p, aside))
         throw new java.io.IOException(
           s"bucket compaction: cannot retire $p to $aside")
@@ -217,10 +219,6 @@ private[ext] object StoreSwap {
                               org.apache.spark.sql.DataFrame,
                             tmpPrefix: String = ".compact_"): Unit = {
     if (dirs.isEmpty) return
-    if (sys.env.contains("GRAFT_EXP_PERDIR")) {
-      rewriteLeafDirs(spark, dirs.map(d => (d, transform)), tmpPrefix)
-      return
-    }
     // split a leaf path into (base table path, k=v partition segments)
     def split(d: String): (String, Seq[String]) = {
       var cur = new Path(d)
@@ -306,7 +304,7 @@ private[ext] object StoreSwap {
       .parquet(small.map(_._1): _*)
     transform(in)
       .repartition(small.size, partCols.map(col): _*)
-      .write.partitionBy(partCols: _*).parquet(batchTmp.toString)
+      .storeWrite.partitionBy(partCols: _*).parquet(batchTmp.toString)
     // promotion-safety assertion (ADVICE r17): every leaf the batch
     // write emitted must be one of this batch's expected rel paths —
     // an unexpected leaf means a partition value did not survive the
@@ -415,9 +413,69 @@ private[ext] object StoreSwap {
   */
 private[ext] object StoreLayout {
   import org.apache.hadoop.fs.{FileStatus, FileSystem}
-  import org.apache.spark.sql.DataFrame
+  import org.apache.hadoop.fs.permission.FsPermission
+  import org.apache.spark.sql.{DataFrame, DataFrameWriter, Row}
   import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType,
     MapType, StructField, StructType}
+
+  /** The stores' local filesystem: Hadoop's checksummed
+    * `LocalFileSystem` over [[InProcessPermissions]]. Without the
+    * native `libhadoop`, Hadoop's raw local FS sets a permission by
+    * starting a `chmod` process, and it sets one on every file it
+    * creates (each `.crc` included) and every directory it makes: one
+    * fork/exec each, which was most of a commit's append time. This FS
+    * writes the same tree, bytes, checksums and modes, with no process.
+    */
+  final class LocalFs extends org.apache.hadoop.fs.LocalFileSystem(
+    new InProcessPermissions)
+
+  /** Hadoop's raw local FS, setting a permission in-process: the same
+    * `chmod(2)` that `NativeIO.POSIX.chmod` makes when `libhadoop` is
+    * loaded. A mode with bits above 0777 (sticky, setuid, setgid) or a
+    * path with no POSIX attribute view is left to Hadoop's own path.
+    */
+  final class InProcessPermissions
+    extends org.apache.hadoop.fs.RawLocalFileSystem {
+    override def setPermission(p: Path, permission: FsPermission): Unit = {
+      import java.nio.file.attribute.{PosixFileAttributeView,
+        PosixFilePermission}
+      val mode = permission.toShort.toInt
+      val view = if ((mode & ~0x1ff) != 0) null
+        else java.nio.file.Files.getFileAttributeView(pathToFile(p).toPath,
+          classOf[PosixFileAttributeView])
+      if (view == null) super.setPermission(p, permission)
+      else {
+        // PosixFilePermission's order is the mode's bit order, 0400 first
+        val bits = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
+        PosixFilePermission.values.zipWithIndex.foreach { case (b, i) =>
+          if ((mode & (0x100 >> i)) != 0) bits.add(b) }
+        view.setPermissions(bits)
+      }
+    }
+  }
+
+  /** The two Hadoop keys that give a Hadoop configuration [[LocalFs]]
+    * for `file:` paths. Hadoop caches filesystems by scheme, authority
+    * and user, not by configuration, so the cache is bypassed for
+    * `file:` as well: a cached default instance would otherwise win.
+    * Other schemes (HDFS, object stores) are untouched.
+    */
+  private val FsKeys: Map[String, String] = Map(
+    "fs.file.impl" -> classOf[LocalFs].getName,
+    "fs.file.impl.disable.cache" -> "true")
+
+  /** The session's Hadoop configuration with [[FsKeys]]: for every
+    * driver-side store operation. */
+  def hadoopConf(spark: SparkSession): org.apache.hadoop.conf.Configuration =
+    spark.sessionState.newHadoopConfWithOptions(FsKeys)
+
+  /** `df.storeWrite`: `df.write` into a store. Spark merges writer
+    * options into the write job's Hadoop configuration, so [[FsKeys]]
+    * reach every task's committer and file writer, and no session
+    * configuration is set. */
+  implicit class StoreWrite(private val df: DataFrame) extends AnyVal {
+    def storeWrite: DataFrameWriter[Row] = df.write.options(FsKeys)
+  }
 
   /** Partition fan-out. Every append writes ~one file per touched
     * partition, so Parts trades probe selectivity against per-commit
@@ -464,7 +522,7 @@ private[ext] object StoreLayout {
       })
     (if (onePartition) df
      else df.repartition(org.apache.spark.sql.functions.col(partCol)))
-      .write.mode("append").partitionBy(partCol).parquet(dir)
+      .storeWrite.mode("append").partitionBy(partCol).parquet(dir)
   }
 
   /** One store table's read shape: `ddl` is its full schema exactly as
@@ -507,7 +565,7 @@ private[ext] object StoreLayout {
     */
   def isFlat(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
-    val f = p.getFileSystem(spark.sessionState.newHadoopConf())
+    val f = p.getFileSystem(hadoopConf(spark))
     f.exists(p) && visible(f, p).exists(_.isFile)
   }
 
@@ -531,7 +589,7 @@ private[ext] object StoreLayout {
     import org.apache.spark.sql.execution.datasources.{FileStatusCache,
       HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}
     import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-    val conf = spark.sessionState.newHadoopConf()
+    val conf = hadoopConf(spark)
     val root0 = new Path(dir)
     val f = root0.getFileSystem(conf)
     val root = f.makeQualified(root0)

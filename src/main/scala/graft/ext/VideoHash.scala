@@ -3,6 +3,8 @@ package graft.ext
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import StoreLayout.StoreWrite
+
 /** Perceptual VIDEO near-duplicate detection — the temporal member of
   * the dedup family, completing the modality grid (text MinHash x2,
   * image dHash x92, audio energy-hash x98): a video is a SEQUENCE of
@@ -419,10 +421,10 @@ object VideoHash {
     val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
     excl(spark.read.parquet(s"$dir/shingles").dropDuplicates("doc_id", "k"))
       .repartition(col("kp"))
-      .write.partitionBy("kp").parquet(s"$tmp/shingles")
+      .storeWrite.partitionBy("kp").parquet(s"$tmp/shingles")
     excl(spark.read.parquet(s"$dir/seqs").dropDuplicates("doc_id", "sq"))
       .repartition(col("sqp"))
-      .write.partitionBy("sqp").parquet(s"$tmp/seqs")
+      .storeWrite.partitionBy("sqp").parquet(s"$tmp/seqs")
     StoreSwap.swap(spark, dir, tmp)
   }
 }

@@ -201,6 +201,26 @@ class CurationSpec extends SparkSpec {
     assert(jobs.size <= 145, s"${jobs.size} jobs in one steady-state commit")
   }
 
+  test("a steady-state commit, retract and maintenance pass start no process") {
+    val d = StoreLayoutSpec.deployment(spark, sf())
+    // control: a plain Spark write on this host sets every mode by
+    // starting `chmod`, so an empty census below is not vacuous
+    val (_, control) = graft.ProcLog.during(spark.range(1).write
+      .parquet(Files.createTempDirectory("ctl").toString + "/t"))
+    assert(control.exists(_.startsWith("chmod")), control)
+    val (due, procs) = graft.ProcLog.during {
+      Curation.commitTranche(d.tranche, 1L, d.stores, imgHashes = Some(d.imgs),
+        vidFrames = Some(d.vids), embeddings = Some(d.embs))
+      Curation.retract(spark,
+        d.tranche.select("doc_id").orderBy("doc_id").limit(3), d.stores)
+      Curation.maintainDue(spark, d.stores)
+    }
+    assert(due.nonEmpty, "premise: the pass erased the retraction")
+    assert(procs.isEmpty, s"${procs.size} process starts, e.g. " +
+      procs.groupBy(_.takeWhile(_ != ' ')).map { case (c, ps) =>
+        s"${ps.size} × $c (${ps.head.take(120)})" }.mkString("; "))
+  }
+
   test("an IVF embedding store routes the semantic layer through the index, re-run safe", graft.Slow) {
     // the 100 TB semantic shape: the caller pre-trains the IVF store on
     // the initial corpus; commitTranche detects it (centroids table),

@@ -2,18 +2,23 @@ package graft.ext
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.fs.{FileUtil, Path}
+import org.apache.hadoop.fs.permission.FsPermission
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.{JobLog, SparkSpec}
+import graft.{JobLog, ProcLog, SparkSpec}
 import graft.model.Tables
 
 /** The commit path's store reader ([[StoreLayout.read]]) against
   * `spark.read.parquet` on every table it serves: same rows, same
   * partition filters in the executed plan, hidden entries skipped, flat
-  * tables still readable, no Spark job to plan any of it; and every
-  * declared read schema equal to what its writer produces.
+  * tables still readable, no Spark job to plan any of it; every
+  * declared read schema equal to what its writer produces; and the
+  * store writer ([[StoreLayout.LocalFs]]) against a plain Spark write:
+  * same tree, bytes and modes, no process started.
   */
 class StoreLayoutSpec extends SparkSpec {
   import StoreLayoutSpec._
@@ -113,6 +118,57 @@ class StoreLayoutSpec extends SparkSpec {
     val mine = StoreLayout.read(spark, flat, ImageHash.MembersTable, Some(Seq(1, 2)))
     assert(!mine.columns.contains("hp"))
     assert(rows(mine) == rows(spark.read.parquet(flat)))
+  }
+
+  // every entry under `root` by relative path (writer UUIDs masked):
+  // its POSIX mode bits, sticky/setuid/setgid included, and a file's bytes
+  private def tree(root: String): Map[String, (Int, Seq[Byte])] = {
+    val r = java.nio.file.Paths.get(root)
+    val uuid = "[0-9a-f]{8}(-[0-9a-f]{4}){3}-[0-9a-f]{12}".r
+    Files.walk(r).iterator().asScala.map { p =>
+      uuid.replaceAllIn(r.relativize(p).toString, "<uuid>") ->
+        (Files.getAttribute(p, "unix:mode").asInstanceOf[Int] & 0xfff,
+          if (Files.isDirectory(p)) Nil else Files.readAllBytes(p).toSeq)
+    }.toMap
+  }
+
+  test("a store append writes the tree, bytes and modes of a plain Spark write, starting no process") {
+    val df = spark.range(0, 128, 1, 1)
+      .select(col("id"), (col("id") * 7 % 64).cast("int").as("p"))
+    val root = Files.createTempDirectory("sameout").toString
+    val (_, plainProcs) = ProcLog.during(df.repartition(col("p"))
+      .write.mode("append").partitionBy("p").parquet(s"$root/plain"))
+    val (_, storeProcs) = ProcLog.during(
+      StoreLayout.appendBuckets(df, "p", s"$root/store"))
+    // control: the plain write set its modes through Hadoop's `chmod`
+    assert(plainProcs.count(_.startsWith("chmod")) > 64, plainProcs.take(3))
+    assert(storeProcs.isEmpty, storeProcs.take(3))
+    val (plain, store) = (tree(s"$root/plain"), tree(s"$root/store"))
+    assert(store.keySet == plain.keySet)
+    assert(plain.keys.count(_.startsWith("p=")) == 64 + 2 * 64)
+    assert(plain.keySet.exists(_.endsWith(".crc")) && plain.keySet("_SUCCESS"))
+    plain.foreach { case (rel, (mode, bytes)) =>
+      assert(store(rel)._1 == mode, f"$rel: mode ${store(rel)._1}%o vs $mode%o")
+      assert(store(rel)._2 == bytes, s"$rel: bytes differ")
+    }
+    assert(plain.values.map(_._1).toSet == Set(0x1a4, 0x1ed)) // 0644, 0755
+    assert(rows(spark.read.parquet(s"$root/store")) ==
+      rows(spark.read.parquet(s"$root/plain")))
+  }
+
+  test("the store FS sets a mode in-process and leaves bits above 0777 to Hadoop") {
+    val local = Files.createTempDirectory("modes").resolve("d")
+    val d = new Path(local.toString)
+    val fs = StoreSwap.fsOf(spark, d.toString)
+    assert(fs.isInstanceOf[StoreLayout.LocalFs])
+    assert(fs.mkdirs(d))
+    def mode = Files.getAttribute(local, "unix:mode").asInstanceOf[Int] & 0xfff
+    def set(octal: String) = ProcLog.during(fs.setPermission(d,
+      new FsPermission(Integer.parseInt(octal, 8).toShort)))._2
+    assert(set("750").isEmpty && mode == Integer.parseInt("750", 8))
+    val sticky = set("1755")
+    assert(sticky.exists(_.startsWith("chmod 1755")), sticky)
+    assert(mode == Integer.parseInt("1755", 8))
   }
 }
 
