@@ -423,7 +423,7 @@ private[ext] object StoreLayout {
     * native `libhadoop`, Hadoop's raw local FS sets a permission by
     * starting a `chmod` process, and it sets one on every file it
     * creates (each `.crc` included) and every directory it makes: one
-    * fork/exec each, which was most of a commit's append time. This FS
+    * fork/exec each, most of an append's time at commit sizes. This FS
     * writes the same tree, bytes, checksums and modes, with no process.
     */
   final class LocalFs extends org.apache.hadoop.fs.LocalFileSystem(
@@ -565,7 +565,7 @@ private[ext] object StoreLayout {
     */
   def isFlat(spark: SparkSession, dir: String): Boolean = {
     val p = new Path(dir)
-    val f = p.getFileSystem(hadoopConf(spark))
+    val f = StoreSwap.fsOf(spark, dir)
     f.exists(p) && visible(f, p).exists(_.isFile)
   }
 
