@@ -129,16 +129,14 @@ object Curation {
     * state between — an initialized store gone missing (mid-swap /
     * loss), a partial uninitialized store (crashed bootstrap), or a
     * NON-EMPTY directory carrying none of the expected layout (a
-    * pre-index FLAT store or a foreign path — bootstrapping an index
-    * next to it would silently strand its rows and judge their
-    * duplicates kept; `migrateHint` names the one-time upgrade).
+    * foreign or unrecognized path — bootstrapping an index next to it
+    * would silently strand its rows and judge their duplicates kept).
     * Adopting a complete store built outside commitTranche (e.g.
     * [[Dedup.writeNearDupIndex]], [[IvfIndex.write]]) writes its
     * marker on first sight.
     */
   private def guardedExists(spark: SparkSession, dir: String,
-                            parts: Seq[String], what: String,
-                            migrateHint: String = ""): Boolean = {
+                            parts: Seq[String], what: String): Boolean = {
     val marker = s"$dir.init"
     val present = parts.map(p =>
       exists(spark, if (p.isEmpty) dir else s"$dir/$p"))
@@ -158,12 +156,10 @@ object Curation {
     if (missing.nonEmpty && dirNonEmpty(spark, dir))
       throw new IllegalStateException(
         s"$what store at $dir holds data in an unrecognized layout " +
-          s"(none of ${parts.mkString(", ")} present) — a pre-index flat " +
-          "store or a foreign directory; refusing to bootstrap an index " +
-          "next to it (its rows would be silently stranded and their " +
-          "duplicates judged kept)" +
-          (if (migrateHint.nonEmpty) s". Upgrade once with $migrateHint"
-           else ""))
+          s"(none of ${parts.mkString(", ")} present) — a foreign " +
+          "directory; refusing to bootstrap an index next to it (its " +
+          "rows would be silently stranded and their duplicates judged " +
+          "kept)")
     if (missing.isEmpty) { markInit(spark, dir); true } else false
   }
 
@@ -210,7 +206,7 @@ object Curation {
         none.as("tranche")).join(broadcast(ids), Seq("doc_id"), "left_anti"))
     }
     val retracted = tombRows.map { t =>
-      (if (t.columns.contains("idp")) t.filter(col("idp").isin(idParts: _*)) else t)
+      t.filter(col("idp").isin(idParts: _*))
         .select(lit(frames.size).as("check"), col("doc_id"), none.as("tranche"))
         .join(broadcast(ids), Seq("doc_id"), "left_semi")
     }
@@ -261,6 +257,31 @@ object Curation {
 
   private def lockPath(stores: Stores) = s"${stores.ledger}.lock"
 
+  /** The one store format this engine reads and writes. The bootstrap
+    * [[commitTranche]] stamps it in `<ledger>.format`, beside the
+    * ledger's `.lock`, `.init` and `.epoch` sidecars, before the ledger
+    * is marked initialized; snapshots carry it with the other sidecars.
+    */
+  private val StoreFormat = "1"
+  private def formatPath(stores: Stores) = s"${stores.ledger}.format"
+
+  /** Why the deployment is not in [[StoreFormat]], or None when it is —
+    * or when its ledger was never initialized (a fresh deployment,
+    * which its bootstrap commit stamps). Driver-side sidecar reads
+    * only: no Spark job, no process.
+    */
+  private def formatFault(spark: SparkSession, stores: Stores): Option[String] =
+    if (!exists(spark, s"${stores.ledger}.init")) None
+    else readSidecar(spark, formatPath(stores)) match {
+      case Some(StoreFormat) => None
+      case None => Some(s"no store format stamp at ${formatPath(stores)}")
+      case Some(v) => Some(s"store format '$v' at ${formatPath(stores)}, " +
+        s"not format $StoreFormat")
+    }
+  private val FormatRecovery =
+    "this engine reads and writes only its own store format and " +
+      "upgrades no other; re-ingest into a fresh deployment"
+
   /** ENFORCED single-writer discipline: every mutating pass
     * ([[commitTranche]], [[maintain]], [[retract]], [[gc]]) runs under
     * the deployment's writer lock — an atomically-created marker file
@@ -275,9 +296,16 @@ object Curation {
     * refusal message carries the holder, its age, and that exact call.
     * Reads ([[storeCensus]], [[Ledger.read]], probes) never take the
     * lock.
+    *
+    * The lock is also the one place the store format is checked: a
+    * deployment in another format ([[formatFault]]) is refused before
+    * the lock file or anything else is written. Every Spark job of the
+    * pass runs under the job description `what`.
     */
   private def withWriterLock[A](spark: SparkSession, stores: Stores,
                                 what: String)(body: => A): A = {
+    formatFault(spark, stores).foreach(f => throw new IllegalStateException(
+      s"deployment at ${stores.ledger} has $f — $FormatRecovery"))
     val fs = StoreSwap.fsOf(spark, lockPath(stores))
     val p = new org.apache.hadoop.fs.Path(lockPath(stores))
     val holder = s"$what started ${java.time.Instant.now()}"
@@ -349,7 +377,7 @@ object Curation {
           "mutating pass in flight; if that writer is dead, clear it " +
           "with Curation.breakLock and re-run the failed pass")
     }
-    try body
+    try StoreSwap.withJobDescription(what)(body)
     finally { fs.delete(p, false); () }
   }
 
@@ -410,7 +438,6 @@ object Curation {
     // re-bootstrap a registry holding only THESE ids, silently
     // restoring every earlier retracted doc's verdict influence
     guardedExists(spark, dir, Seq(""), "tombstone registry")
-    migrateTombstonesIfV1(spark, stores)
     // claim the epoch BEFORE any row lands: a crash between the two
     // leaves an unused epoch (harmless), while the reverse order could
     // let a re-run share an epoch with rows an interleaved maintenance
@@ -430,51 +457,35 @@ object Curation {
     markInit(spark, dir)
   }
 
-  /** One-time upgrade of a pre-epoch tombstone table (flat doc_id
-    * rows): rewrite as (doc_id, epoch = 1) under id-bucket partitions
-    * through the shared [[StoreSwap]] discipline and set the epoch
-    * counter to 1. Stores' legacy count-format applied watermarks are
-    * NOT translated — [[appliedEpoch]] reads them as 0 (nothing
-    * provably applied in epoch terms), which is conservative: the next
-    * maintenance re-applies and writes the epoch-format watermark.
-    */
-  private def migrateTombstonesIfV1(spark: SparkSession,
-                                    stores: Stores): Unit = {
-    val dir = tombstonesDir(stores)
-    if (!exists(spark, dir)) return
-    if (spark.read.parquet(dir).schema.fieldNames.contains("epoch")) return
-    val tmp = StoreSwap.prepareTmp(spark, s"$dir.migrate")
-    spark.read.parquet(dir).select(col("doc_id"))
-      .dropDuplicates("doc_id")
-      .withColumn("epoch", lit(1L))
-      .withColumn("idp", StoreLayout.part(col("doc_id")))
-      .coalesce(1)
-      .storeWrite.partitionBy("idp").parquet(tmp)
-    StoreSwap.swap(spark, dir, tmp)
-    writeEpochMark(spark, dir, 1L)
+  // a small text sidecar beside a store (`.epoch`, `.gcmark`,
+  // `.fsckmark`, `.format`), read and written on the driver: its
+  // trimmed content, None when absent
+  private def readSidecar(spark: SparkSession, path: String): Option[String] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    val fs = StoreSwap.fsOf(spark, path)
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      val buf = new Array[Byte](64)
+      val n = try math.max(0, in.read(buf)) finally in.close()
+      Some(new String(buf, 0, n, "UTF-8").trim)
+    }
+  }
+  private def writeSidecar(spark: SparkSession, path: String,
+                           content: String): Unit = {
+    val out = StoreSwap.fsOf(spark, path)
+      .create(new org.apache.hadoop.fs.Path(path), true)
+    try out.write(content.getBytes("UTF-8")) finally out.close()
   }
 
   // the epoch allocation counter, in a sidecar the table swaps never
   // touch; monotone non-decreasing is the only contract
   private def epochMark(dir: String) = s"$dir.epoch"
-  private def readEpochMark(spark: SparkSession, dir: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(epochMark(dir))
-    val fs = StoreSwap.fsOf(spark, dir)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      val buf = new Array[Byte](64)
-      val n = math.max(0, in.read(buf)); in.close()
-      try new String(buf, 0, n, "UTF-8").trim.toLong
-      catch { case _: NumberFormatException => 0L }
-    }
-  }
+  private def readEpochMark(spark: SparkSession, dir: String): Long =
+    readSidecar(spark, epochMark(dir)).flatMap(_.toLongOption).getOrElse(0L)
   private def writeEpochMark(spark: SparkSession, dir: String,
-                             e: Long): Unit = {
-    val out = StoreSwap.fsOf(spark, dir)
-      .create(new org.apache.hadoop.fs.Path(epochMark(dir)), true)
-    out.write(e.toString.getBytes("UTF-8")); out.close()
-  }
+                             e: Long): Unit =
+    writeSidecar(spark, epochMark(dir), e.toString)
 
   /** [[retract]] a whole committed tranche: its ids come from the id
     * registry, and its ledger partition (`tranche=<id>`, all
@@ -493,27 +504,19 @@ object Curation {
       Ledger.dropTranche(spark, stores.ledger, trancheId)
     }
 
-  /** The raw tombstone rows (doc_id, epoch) — duplicates across epochs
-    * possible (a re-run retraction re-appends under a fresh epoch), a
-    * pre-epoch table normalized to epoch 1. Marker-guarded like every
+  /** The raw tombstone rows (doc_id, epoch, idp) — duplicates across
+    * epochs possible (a re-run retraction re-appends under a fresh
+    * epoch); the id-bucket partition column stays so a caller's bucket
+    * filter prunes at the partition level. Marker-guarded like every
     * standing store: an initialized tombstone registry gone missing
     * REFUSES instead of silently resurrecting every retracted doc.
     */
   private def readTombstoneRows(spark: SparkSession,
                                 stores: Stores): Option[DataFrame] = {
     val dir = tombstonesDir(stores)
-    if (guardedExists(spark, dir, Seq(""), "tombstone registry")) {
-      // a pre-epoch (v1) table is flat and reads through Spark's own
-      // discovery; the epoch layout reads as declared
-      val raw = StoreLayout.read(spark, dir, TombstonesTable)
-      Some(
-        if (raw.schema.fieldNames.contains("epoch"))
-          // keep the id-bucket partition column when present so a
-          // caller's bucket filter prunes at the partition level
-          raw.select(raw.columns.filter(
-            Set("doc_id", "epoch", "idp")).map(col).toIndexedSeq: _*)
-        else raw.select(col("doc_id"), lit(1L).as("epoch")))
-    } else None
+    if (guardedExists(spark, dir, Seq(""), "tombstone registry"))
+      Some(StoreLayout.read(spark, dir, TombstonesTable))
+    else None
   }
 
   /** Commit one tranche: guards → probe → ledger append → store
@@ -552,19 +555,12 @@ object Curation {
     // ---- guards, strictly before any write ---------------------------
     val textUp = guardedExists(spark, stores.textIndex,
       Seq("params", "bands", "sets", "members"), "text near-dup index")
-    // a pre-pruned FLAT text index is readable but must not be appended
-    // into (mixed layouts wedge partition discovery) — refuse HERE, not
-    // in the write phase after the ledger landed
-    if (textUp) Dedup.requirePrunedLayout(spark, stores.textIndex)
     val imgUp = guardedExists(spark, stores.image,
-      Seq("params", "bands", "members"), "image hash index",
-      "ImageHash.migrateFlatHashes(spark, dir)")
+      Seq("params", "bands", "members"), "image hash index")
     val audUp = guardedExists(spark, stores.audio,
-      Seq("params", "bands", "members"), "audio hash index",
-      "ImageHash.migrateFlatHashes(spark, dir)")
+      Seq("params", "bands", "members"), "audio hash index")
     val vidUp = guardedExists(spark, stores.video,
-      Seq("shingles", "seqs"), "video sequence index",
-      "VideoHash.migrateFlatFrames(spark, dir)")
+      Seq("shingles", "seqs"), "video sequence index")
     val embIvf = exists(spark, s"${stores.embedding}/centroids")
     val embUp =
       if (embIvf) guardedExists(spark, stores.embedding,
@@ -580,8 +576,8 @@ object Curation {
       if (stores.pqIndex.isEmpty) None else Some(PQ.liveDir(spark, stores.pqIndex))
     val pqUp = pqLive.exists { live =>
       if (live == stores.pqIndex)
-        // flat pre-generational layout (or nothing yet): the shared
-        // marker/partial-store/foreign-dir guard applies as-is
+        // no complete generation: not trained yet, unless the shared
+        // marker/partial-store/foreign-dir guard refuses
         guardedExists(spark, stores.pqIndex,
           Seq("params", "centroids", "codes"), "pq serving index")
       else {
@@ -600,13 +596,14 @@ object Curation {
         true
       }
     }
-    // the PQ feed's code layout and frozen geometry, resolved once (in
-    // the concurrent guard phase below): a flat code table refuses
-    // before any write
-    lazy val pqSubWidth = pqLive.filter(_ => pqUp && embeddings.nonEmpty).map { live =>
-      PQ.requirePrunedCodes(spark, live)
-      PQ.paramsAt(spark, live)._4
-    }
+    // the PQ feed's frozen geometry, resolved once (in the concurrent
+    // guard phase below)
+    lazy val pqSubWidth = pqLive.filter(_ => pqUp && embeddings.nonEmpty)
+      .map(PQ.paramsAt(spark, _)._4)
+    // the bootstrap commit stamps the store format before anything can
+    // mark the ledger initialized ([[withWriterLock]] checks the stamp)
+    if (!exists(spark, s"${stores.ledger}.init"))
+      writeSidecar(spark, formatPath(stores), StoreFormat)
     guardedExists(spark, stores.ledger, Seq(""), "ledger")
     // geometry guards: a standing index built under different shingle/
     // band params must refuse the commit before any verdict is derived
@@ -858,15 +855,13 @@ object Curation {
     // store appends run concurrently too — each its own directory;
     // the text append ships the SAME checkpointed tranche frames the
     // probe used. Bootstrap-only params write: for a standing store the
-    // guard phase already validated geometry AND layout — re-reading
-    // params/schema here would add two driver-side parquet reads to
-    // every steady-state commit
+    // guard phase already validated geometry — re-reading params here
+    // would add a driver-side parquet read to every steady-state commit
     StoreSwap.concurrently(Seq(
       inPhase("append:text") { () =>
         if (!textUp)
           Dedup.ensureNearDupIndexParams(spark, stores.textIndex, k, bands, rows)
-        Dedup.writeNearDupIndexFrames(trancheIdx, stores.textIndex,
-          checkLayout = false)
+        Dedup.writeNearDupIndexFrames(trancheIdx, stores.textIndex)
       }) ++
       img.map(hb => inPhase("append:image") { () =>
         ImageHash.appendHashIndex(hb(0), "doc_id", "hash", stores.image,
@@ -1717,7 +1712,7 @@ object Curation {
       throw new java.io.IOException(s"snapshot: cannot copy $src to $dst")
   }
 
-  // live-state recursive FULL copy (sidecars, legacy-snapshot restore).
+  // live-state recursive FULL copy (sidecars).
   // The dst ROOT dir is always created — an `.init` marker is an empty
   // directory, and dropping it would make every restored store read as
   // never-initialized.
@@ -1744,8 +1739,9 @@ object Curation {
     if (relpath.isEmpty) s"$loc/$role" else s"$loc/$role/$relpath"
 
   // the sidecars a role's tables depend on: the init marker (a dir),
-  // the epoch counter, and the applied-epoch watermark
-  private val SidecarSuffixes = Seq("init", "epoch", "gcmark")
+  // the epoch counter, the applied-epoch watermark, and (the ledger's)
+  // the store format stamp
+  private val SidecarSuffixes = Seq("init", "epoch", "gcmark", "format")
   private def copySidecars(spark: SparkSession, src: String,
                            destRole: String): Unit =
     SidecarSuffixes.foreach { sfx =>
@@ -1872,27 +1868,25 @@ object Curation {
           copySidecars(spark, src, s"$dest/$role")
           (role, src, man, nf, nb, cf, cb, line(role, nf, nb, cf, cb))
         })
-      val pqActions =
-        if (stores.pqIndex.isEmpty || !exists(spark, stores.pqIndex))
-          Seq.empty
-        else {
-          val live = PQ.liveDir(spark, stores.pqIndex)
-          val gen =
-            if (live == stores.pqIndex) "" // flat pre-generational store
-            else live.stripPrefix(s"${stores.pqIndex}/")
-          val parts = Seq("params", "centroids", "codes")
-            .filter(t => exists(spark, s"$live/$t"))
-            .map(t => t -> s"$live/$t")
-          val (man, nf, nb, cf, cb) =
-            diffCopyRole(spark, "pq", parts, dest, baseFiles)
-          copySidecars(spark, stores.pqIndex, s"$dest/pq")
-          // src records the LIVE path; restore re-derives the pinned
-          // generation from its basename
-          Seq(("pq", live, man, nf, nb, cf, cb,
-            s"copied pq live generation " +
-              s"${if (gen.isEmpty) "(flat)" else gen} " +
-              s"($cf of $nf files, $cb of $nb bytes)"))
-        }
+      // the serving index's live generation; an untrained one (no
+      // complete generation) has nothing to back up
+      val pqLive =
+        if (stores.pqIndex.isEmpty) None
+        else Some(PQ.liveDir(spark, stores.pqIndex)).filter(_ != stores.pqIndex)
+      val pqActions = pqLive.toSeq.flatMap { live =>
+        val gen = live.stripPrefix(s"${stores.pqIndex}/")
+        val parts = Seq("params", "centroids", "codes")
+          .filter(t => exists(spark, s"$live/$t"))
+          .map(t => t -> s"$live/$t")
+        val (man, nf, nb, cf, cb) =
+          diffCopyRole(spark, "pq", parts, dest, baseFiles)
+        copySidecars(spark, stores.pqIndex, s"$dest/pq")
+        // src records the LIVE path; restore re-derives the pinned
+        // generation from its basename
+        Seq(("pq", live, man, nf, nb, cf, cb,
+          s"copied pq live generation $gen " +
+            s"($cf of $nf files, $cb of $nb bytes)"))
+      }
       val all = roleActions ++ pqActions
       val depth: Long = base.map(b =>
         try spark.read.parquet(s"$b/_meta").select("depth")
@@ -2075,41 +2069,34 @@ object Curation {
     require(exists(spark, s"$src/_meta"),
       s"no snapshot _meta at $src — not a snapshot, or its write " +
         "crashed before the meta landed")
+    require(exists(spark, s"$src/_files"),
+      s"no snapshot _files manifest at $src — a snapshot without its " +
+        "per-file manifest cannot be verified; take a fresh snapshot")
     val metaRoles = spark.read.parquet(s"$src/_meta")
       .select("role", "n_files", "n_bytes").collect()
       .map(r => (r.getString(0), r.getLong(1), r.getLong(2)))
+    val rows = spark.read.parquet(s"$src/_files")
+      .select("role", "relpath", "length", "loc").collect()
+      .map(r => (r.getString(0), r.getString(1), r.getLong(2),
+        r.getString(3)))
+    // one listing per physical parent directory
+    val lens = new scala.collection.mutable.HashMap[String,
+      Map[String, Long]]()
+    def presentLen(p: String): Option[Long] = {
+      val dir = p.substring(0, p.lastIndexOf('/'))
+      lens.getOrElseUpdate(dir,
+        try StoreSwap.fsOf(spark, dir)
+          .listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
+          .filter(_.isFile)
+          .map(s => s.getPath.getName -> s.getLen).toMap
+        catch { case _: java.io.FileNotFoundException => Map.empty })
+        .get(p.substring(dir.length + 1))
+    }
     val found: Map[String, (Long, Long)] =
-      if (!exists(spark, s"$src/_files"))
-        // legacy (pre-manifest) snapshot: directory-walk totals
-        metaRoles.map(m => m._1 -> snapshotStats(spark, s"$src/${m._1}"))
-          .toMap
-      else {
-        val rows = spark.read.parquet(s"$src/_files")
-          .select("role", "relpath", "length", "loc").collect()
-          .map(r => (r.getString(0), r.getString(1), r.getLong(2),
-            r.getString(3)))
-        // one listing per physical parent directory
-        val lens = new scala.collection.mutable.HashMap[String,
-          Map[String, Long]]()
-        def dirOf(p: String): (String, String) = {
-          val i = p.lastIndexOf('/')
-          (p.substring(0, i), p.substring(i + 1))
-        }
-        def presentLen(p: String): Option[Long] = {
-          val (dir, name) = dirOf(p)
-          lens.getOrElseUpdate(dir,
-            try StoreSwap.fsOf(spark, dir)
-              .listStatus(new org.apache.hadoop.fs.Path(dir)).toSeq
-              .filter(_.isFile)
-              .map(s => s.getPath.getName -> s.getLen).toMap
-            catch { case _: java.io.FileNotFoundException => Map.empty })
-            .get(name)
-        }
-        rows.groupBy(_._1).map { case (role, rs) =>
-          val ok = rs.filter(r =>
-            presentLen(physPath(r._4, role, r._2)).contains(r._3))
-          role -> ((ok.length.toLong, ok.map(_._3).sum))
-        }
+      rows.groupBy(_._1).map { case (role, rs) =>
+        val ok = rs.filter(r =>
+          presentLen(physPath(r._4, role, r._2)).contains(r._3))
+        role -> ((ok.length.toLong, ok.map(_._3).sum))
       }
     metaRoles.map { case (role, nf, nb) =>
       val (ff, fb) = found.getOrElse(role, (0L, 0L))
@@ -2192,20 +2179,14 @@ object Curation {
       // chain-resolving per-role file lists: each `_files` row names
       // the chain member that physically holds its copy, so a restore
       // from a differential snapshot reads straight from the recorded
-      // holders — no chain walk. Legacy (pre-manifest) snapshots
-      // synthesize the list from their own directory tree.
+      // holders — no chain walk (verifySnapshot above refused a
+      // snapshot without `_files`)
       val roleFiles: Map[String, Seq[(String, String)]] =
-        if (exists(spark, s"$src/_files"))
-          spark.read.parquet(s"$src/_files")
-            .select("role", "relpath", "loc").collect()
-            .map(r => (r.getString(0), r.getString(1), r.getString(2)))
-            .groupBy(_._1).map { case (role, rs) =>
-              role -> rs.toSeq.map(r => (r._2, r._3)) }
-        else meta.keys.map { role =>
-          role -> (
-            if (!exists(spark, s"$src/$role")) Seq.empty[(String, String)]
-            else listLive(spark, s"$src/$role").map(f => (f._1, src)))
-        }.toMap
+        spark.read.parquet(s"$src/_files")
+          .select("role", "relpath", "loc").collect()
+          .map(r => (r.getString(0), r.getString(1), r.getString(2)))
+          .groupBy(_._1).map { case (role, rs) =>
+            role -> rs.toSeq.map(r => (r._2, r._3)) }
       def reseat(role: String, target: String,
                  files: Seq[(String, String)]): Unit =
         files.foreach { case (rel, loc) =>
@@ -2263,20 +2244,12 @@ object Curation {
           Seq("skipped pq (live state stands)")
         else {
           requireIntact("pq")
-          val base = pqSrc.split('/').last
-          val gen = if (base.startsWith("gen-")) base else ""
-          val target =
-            if (gen.isEmpty) stores.pqIndex else s"${stores.pqIndex}/$gen"
-          reseat("pq", target, roleFiles.getOrElse("pq", Seq.empty))
+          val gen = pqSrc.split('/').last
+          reseat("pq", s"${stores.pqIndex}/$gen",
+            roleFiles.getOrElse("pq", Seq.empty))
           copySidecars(spark, s"$src/pq", stores.pqIndex)
-          if (gen.nonEmpty) {
-            val fs = StoreSwap.fsOf(spark, stores.pqIndex)
-            val out = fs.create(new org.apache.hadoop.fs.Path(
-              s"${stores.pqIndex}/${PQ.PointerName}"), true)
-            try out.write(gen.getBytes("UTF-8")) finally out.close()
-          }
-          Seq(s"restored pq live generation " +
-            s"${if (gen.isEmpty) "(flat)" else gen}")
+          writeSidecar(spark, s"${stores.pqIndex}/${PQ.PointerName}", gen)
+          Seq(s"restored pq live generation $gen")
         }
       }
       roleActions ++ pqActions
@@ -2397,8 +2370,8 @@ object Curation {
     * [[ImageHash.removeIdsHashIndex]], [[VideoHash.removeIdsSeqIndex]]),
     * alongside the directly partition-keyed stores
     * ([[IvfIndex.removeIds]], [[PQ.removeIdsIndex]],
-    * [[Ledger.removeIds]]). Only legacy FLAT layouts lack an `erase`
-    * hook and keep the store-wide anti-join.
+    * [[Ledger.removeIds]]). Only the flat embedding store lacks an
+    * `erase` hook and keeps the store-wide anti-join.
     */
   private final case class MaintUnit(name: String, root: String,
                                      tables: Seq[String],
@@ -2454,14 +2427,6 @@ object Curation {
               ImageHash.compactHashIndexBuckets(spark, d, ds)),
             erase = Some(ids =>
               ImageHash.removeIdsHashIndex(spark, d, ids)))
-        // pre-index FLAT fingerprint stores (a legacy deployment that
-        // has retracted but not yet migrated) keep their erasure half:
-        // every flat fingerprint table is keyed on doc_id, so the
-        // generic flat compaction scrubs it — skipping silently would
-        // leave the takedown contract unmet with no error
-        else if (exists(spark, d))
-          units += MaintUnit(s"${name}_flat", d, Seq(d), erasable = true,
-            ts => compactFlat(spark, d, removeIds = ts, idCol = "doc_id"))
     }
     if (exists(spark, s"${stores.video}/shingles"))
       units += MaintUnit("video_index", stores.video,
@@ -2473,11 +2438,6 @@ object Curation {
           VideoHash.compactSeqIndexBuckets(spark, stores.video, ds)),
         erase = Some(ids =>
           VideoHash.removeIdsSeqIndex(spark, stores.video, ids)))
-    else if (exists(spark, stores.video))
-      units += MaintUnit("video_flat", stores.video, Seq(stores.video),
-        erasable = true,
-        ts => compactFlat(spark, stores.video, removeIds = ts,
-          idCol = "doc_id"))
     if (exists(spark, s"${stores.embedding}/centroids"))
       // erasure is surgical (affected cells only); per-tranche append
       // files are collapsed by [[IvfIndex.compactCells]] when the file
@@ -2547,25 +2507,17 @@ object Curation {
         _ => {
           // collapse re-run duplicates to each doc's EARLIEST epoch
           // (the retraction that actually suppressed it — later
-          // duplicate epochs are vacuous) and rewrite under the v2
+          // duplicate epochs are vacuous) and rewrite under the
           // id-bucket layout. Compacted files mix epochs, which is
           // fine: by the time this runs the pass has applied every
           // epoch present, so slice reads (`epoch > applied`) skip
           // the whole compacted file on its footer max.
-          val raw = spark.read.parquet(tomb)
-          val rows =
-            if (raw.schema.fieldNames.contains("epoch"))
-              raw.groupBy("doc_id")
-                .agg(org.apache.spark.sql.functions.min("epoch")
-                  .as("epoch"))
-            else raw.select(col("doc_id"), lit(1L).as("epoch"))
-              .dropDuplicates("doc_id")
           val tmp = StoreSwap.prepareTmp(spark, s"$tomb.compact")
-          rows.withColumn("idp", StoreLayout.part(col("doc_id")))
+          spark.read.parquet(tomb).groupBy("doc_id")
+            .agg(org.apache.spark.sql.functions.min("epoch").as("epoch"))
+            .withColumn("idp", StoreLayout.part(col("doc_id")))
             .coalesce(1).storeWrite.partitionBy("idp").parquet(tmp)
           StoreSwap.swap(spark, tomb, tmp)
-          if (readEpochMark(spark, tomb) < 1L)
-            writeEpochMark(spark, tomb, 1L)
         })
     units.result()
   }
@@ -2714,34 +2666,14 @@ object Curation {
   // last compaction physically applied, in a sidecar the store swaps
   // never touch ("epoch:<N>"). pending = tombstone rows with epoch >
   // watermark; epochs are monotone (the retraction counter), so the
-  // watermark is a clock. A legacy count-format marker (pre-epoch
-  // deployments wrote the applied distinct-id count) reads as 0 —
-  // "nothing provably applied in epoch terms" — which is conservative:
-  // commits over-exclude (a no-op against erased rows) and the next
-  // maintenance pass re-applies once and writes the epoch format.
+  // watermark is a clock. No sidecar reads as 0: nothing applied.
   private def appliedMark(root: String) = s"$root.gcmark"
-  private def appliedEpoch(spark: SparkSession, root: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(appliedMark(root))
-    val fs = StoreSwap.fsOf(spark, root)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      val buf = new Array[Byte](64)
-      val n = math.max(0, in.read(buf)); in.close()
-      val s = new String(buf, 0, n, "UTF-8").trim
-      if (!s.startsWith("epoch:")) 0L
-      else
-        try s.stripPrefix("epoch:").toLong
-        catch { case _: NumberFormatException => 0L }
-    }
-  }
+  private def appliedEpoch(spark: SparkSession, root: String): Long =
+    readSidecar(spark, appliedMark(root))
+      .flatMap(_.stripPrefix("epoch:").toLongOption).getOrElse(0L)
   private def markApplied(spark: SparkSession, root: String,
-                          e: Long): Unit = {
-    val fs = StoreSwap.fsOf(spark, root)
-    val out = fs.create(new org.apache.hadoop.fs.Path(appliedMark(root)),
-      true)
-    out.write(s"epoch:$e".getBytes("UTF-8")); out.close()
-  }
+                          e: Long): Unit =
+    writeSidecar(spark, appliedMark(root), s"epoch:$e")
 
   /** Per-store maintenance due-ness, decided from METADATA plus one
     * tiny scan — file counts per bucket (append amplification: every
@@ -2825,9 +2757,8 @@ object Curation {
     *    store supports surgical erasure (`erase`: IVF cells, PQ code
     *    buckets) only the partitions the retracted ids live in are
     *    rewritten;
-    *  - stores with neither hook applicable (flat legacy layouts;
-    *    erasure of band-spread text/image/video rows) keep the
-    *    store-wide rewrite;
+    *  - stores with neither hook applicable (the flat embedding
+    *    store) keep the store-wide rewrite;
     *  - retired SERVING GENERATIONS past `keepRetiredGens` are
     *    reclaimed oldest-first (VERDICT r13 missing #2: a re-release
     *    retires a full store copy, and without a scheduled policy they
@@ -3166,8 +3097,7 @@ object Curation {
       add("pq_index", "vectors")(
         spark.read.parquet(s"$pqCensusLive/codes")
           .select("vec_id").distinct().count())
-      // retired generations awaiting gc (0 on a flat legacy store);
-      // counts generations OLDER than live — a complete generation
+      // retired generations awaiting gc; counts generations OLDER than live — a complete generation
       // NEWER than the pointer is a crashed publish (fsck pq_publish
       // pending, repair publishes it), not reclaimable backlog
       add("pq_index", "retired_generations")(
@@ -3304,13 +3234,9 @@ object Curation {
         Some(spark.read.parquet(reg).select("doc_id"))
       else None
     val tombRows =
-      if (exists(spark, tombstonesDir(stores))) {
-        val raw = spark.read.parquet(tombstonesDir(stores))
-        Some(
-          if (raw.schema.fieldNames.contains("epoch"))
-            raw.select("doc_id", "epoch")
-          else raw.select(col("doc_id"), lit(1L).as("epoch")))
-      } else None
+      if (exists(spark, tombstonesDir(stores)))
+        Some(spark.read.parquet(tombstonesDir(stores)).select("doc_id", "epoch"))
+      else None
     val tomb = tombRows.map(_.select("doc_id").dropDuplicates())
     // anchored at max(table, sidecar counter): tombstone compaction
     // collapses each doc to its EARLIEST epoch, so after a re-run
@@ -3435,9 +3361,9 @@ object Curation {
         val partial = PQ.listGens(spark, dir).diff(complete)
         val tmpStanding = exists(spark, s"$dir/_current.tmp")
         // a pointer only ever exists after a complete-generation
-        // publish — on a flat store whose first generational write
-        // crashed partial (ADVICE r14), "pointer lost" would be a
-        // wrong diagnosis; the partial row below names that state
+        // publish — with only partial generations (a crashed first
+        // training), "pointer lost" would be a wrong diagnosis; the
+        // partial row below names that state
         val ptrLost = ptr.isEmpty && !tmpStanding && complete.nonEmpty
         val ptrDangling = ptr.exists(!complete.contains(_))
         // a COMPLETE generation newer than the published one: a publish
@@ -3473,24 +3399,6 @@ object Curation {
           ("pq_publish", "ok", (complete.size - 1).toLong,
             "retired generations awaiting gc")
       })
-      // legacy flat root tables surviving the generational upgrade's
-      // post-publish cleanup crash (ADVICE r13): dead the moment a
-      // COMPLETE generation was published, invisible to readers
-      // (liveDir resolves into the generation), but standing bytes no
-      // pass reclaims — repair deletes them (idempotent with
-      // writeIndex's own cleanup). With no complete generation on disk
-      // (only partials from a crashed first generational write) the
-      // root tables are the LIVE index, not residue (ADVICE r14) —
-      // gated out, like repair's matching action. Emitted only when
-      // the state exists, so a healthy report is stable.
-      add(Some {
-        if (PQ.completeGens(spark, stores.pqIndex).isEmpty) Seq.empty
-        else Seq("params", "centroids", "codes")
-          .filter(t => exists(spark, s"${stores.pqIndex}/$t"))
-      }.filter(_.nonEmpty).map(res =>
-        ("pq_root_residue", "pending", res.size.toLong,
-          "pre-generational root tables survive a crashed upgrade " +
-            s"cleanup (${res.mkString(", ")}); repair deletes them")))
     }
     // a bucket rewrite that crashed mid-swap leaves the partition
     // directory MISSING with a complete copy standing hidden — the
@@ -3709,6 +3617,11 @@ object Curation {
     if (exists(spark, lockPath(stores)))
       add(Some(("writer_lock", "pending", 1L,
         "a mutating pass holds (or crashed holding) the writer lock")))
+    // a deployment in another store format: every mutating pass
+    // refuses it. Emitted only in that state (a healthy report is
+    // stable)
+    add(formatFault(spark, stores).map(f =>
+      ("store_format", "violation", 1L, s"$f — $FormatRecovery")))
     StoreSwap.concurrentlyAll(checks).flatten
       .toDF("check", "status", "n", "detail").orderBy("check")
   }
@@ -3746,14 +3659,11 @@ object Curation {
         "id_registry" -> s"${stores.ledger}.ids",
         "tombstones" -> tombstonesDir(stores)) ++
       (if (stores.pqIndex.nonEmpty)
-        // the PQ root is generational now (re-release is a pointer
-        // flip, never a dir swap — pq_publish audits its crash states);
-        // the root scope stays for a PRE-generational deployment whose
-        // old whole-dir swap crashed, and the LIVE generation's code
-        // table still swap-rewrites on legacy upgrades and store-wide
+        // the PQ root is generational (re-release is a pointer flip,
+        // never a dir swap — pq_publish audits its crash states); the
+        // LIVE generation's code table swap-rewrites on store-wide
         // compaction
-        Seq("pq_index" -> stores.pqIndex,
-          "pq_codes" -> s"${PQ.liveDir(spark, stores.pqIndex)}/codes")
+        Seq("pq_codes" -> s"${PQ.liveDir(spark, stores.pqIndex)}/codes")
       else Seq.empty)
   }
 
@@ -3763,7 +3673,7 @@ object Curation {
   // are deliberately NOT here: a crashed splitCell is owned by its
   // in-flight marker (ivf_split_inflight; IvfIndex.rewrite recovers) —
   // blind promotion could pair inconsistent integer/double codebooks.
-  private val SwapTmpSuffixes = Seq(".compact", ".rewrite", ".migrate")
+  private val SwapTmpSuffixes = Seq(".compact", ".rewrite")
 
   /** Crashed store-wide swaps: scopes whose live dir is MISSING with a
     * complete hidden generation standing. Returns (what, promote-from,
@@ -3777,27 +3687,13 @@ object Curation {
         .find(exists(spark, _)).map(src => (what, src, p))
     }
 
-  /** Resolve a hidden rewrite artifact's promotion target, or None if
-    * the name is not one. Handles the legacy pre-r12
-    * `IvfIndex.removeIds` tmp naming (`.retract_<digits>` under a
-    * `vectors` table targeted `cell=<digits>`; a prefix-strip alone
-    * would derive a garbage `<digits>` sibling — ADVICE r12).
+  /** Resolve a hidden rewrite artifact's promotion target — its name
+    * without the `.compact_` / `.retract_` / `.old_` prefix, and
+    * whether it is an `.old_` aside — or None if the name is not one.
     */
-  private def orphanTarget(parent: org.apache.hadoop.fs.Path,
-                           name: String): Option[(String, Boolean)] = {
-    val stripped =
-      if (name.startsWith(".compact_")) Some(name.stripPrefix(".compact_"))
-      else if (name.startsWith(".retract_")) Some(name.stripPrefix(".retract_"))
-      else if (name.startsWith(".old_")) Some(name.stripPrefix(".old_"))
-      else None
-    stripped.map { s =>
-      val t =
-        if (name.startsWith(".retract_") && s.forall(_.isDigit) &&
-          parent.getName == "vectors") s"cell=$s"
-        else s
-      (t, name.startsWith(".old_"))
-    }
-  }
+  private def orphanTarget(name: String): Option[(String, Boolean)] =
+    Seq(".compact_", ".retract_", ".old_").find(name.startsWith)
+      .map(pre => (name.stripPrefix(pre), pre == ".old_"))
 
   /** Directories listed by the most recent crashed-rewrite walks —
     * the test-visible witness that the audit is traffic-bounded, not
@@ -3815,24 +3711,8 @@ object Curation {
   // re-walks).
   private def fsckMarkPath(root: String) = s"$root.fsckmark"
   private val FsckMarkSlackMs = 2000L
-  private def readFsckMark(spark: SparkSession, root: String): Long = {
-    val p = new org.apache.hadoop.fs.Path(fsckMarkPath(root))
-    val fs = StoreSwap.fsOf(spark, root)
-    if (!fs.exists(p)) 0L
-    else {
-      val in = fs.open(p)
-      val buf = new Array[Byte](64)
-      val n = math.max(0, in.read(buf)); in.close()
-      try new String(buf, 0, n, "UTF-8").trim.toLong
-      catch { case _: NumberFormatException => 0L }
-    }
-  }
-  private def writeFsckMark(spark: SparkSession, root: String,
-                            t: Long): Unit = {
-    val out = StoreSwap.fsOf(spark, root)
-      .create(new org.apache.hadoop.fs.Path(fsckMarkPath(root)), true)
-    out.write(t.toString.getBytes("UTF-8")); out.close()
-  }
+  private def readFsckMark(spark: SparkSession, root: String): Long =
+    readSidecar(spark, fsckMarkPath(root)).flatMap(_.toLongOption).getOrElse(0L)
 
   /** Crashed-rewrite artifacts under one unit's tables: hidden
     * `.compact_*` / `.retract_*` / `.old_*` directories whose
@@ -3862,7 +3742,7 @@ object Curation {
           fsckDirsListed.incrementAndGet()
           fs.listStatus(p).toSeq.filter(_.isDirectory).flatMap { s =>
             val n = s.getPath.getName
-            orphanTarget(p, n) match {
+            orphanTarget(n) match {
               case Some((target, aside)) =>
                 if (fs.exists(new org.apache.hadoop.fs.Path(p, target)))
                   Seq.empty // stale next to its live target: harmless
@@ -3879,7 +3759,8 @@ object Curation {
       walk(new org.apache.hadoop.fs.Path(t))
     }
     if (orphans.isEmpty)
-      writeFsckMark(spark, u.root, scanStart - FsckMarkSlackMs)
+      writeSidecar(spark, fsckMarkPath(u.root),
+        (scanStart - FsckMarkSlackMs).toString)
     orphans
   }
 
@@ -3905,8 +3786,7 @@ object Curation {
     *    newest generation (a re-release that crashed before its
     *    pointer flip — ADVICE r13: without this, gc would reclaim the
     *    finished re-release as if retired), re-point a lost/dangling
-    *    pointer, drop partial generations, and delete flat root tables
-    *    a generational upgrade's cleanup crash left behind;
+    *    pointer, and drop partial generations;
     *  - `force = true` additionally clears a crashed writer's lock
     *    FIRST ([[breakLock]] — only the operator can know the writer
     *    is dead; without it a held lock refuses the repair like any
@@ -4004,23 +3884,7 @@ object Curation {
               Seq(s"dropped partial pq generation $dir/$g (crashed re-release)")
             }
           }
-          // flat root tables a generational upgrade's post-publish
-          // cleanup crash left behind: dead ONLY once a COMPLETE
-          // generation exists (readers resolve into it) — with nothing
-          // but partial generations on disk (first generational
-          // writeIndex crashed before params landed), liveDir still
-          // resolves to the flat root and these tables ARE the live
-          // serving index, so deleting them would destroy it
-          // (ADVICE r14). Idempotent with writeIndex's own cleanup.
-          val a4 =
-            if (complete.isEmpty) Seq.empty[String]
-            else Seq("params", "centroids", "codes")
-              .filter(t => exists(spark, s"$dir/$t")).map { t =>
-                fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$t"), true)
-                s"deleted stale pre-generational root table $dir/$t " +
-                  "(crashed upgrade cleanup)"
-              }
-          a1 ++ a2 ++ a3 ++ a4
+          a1 ++ a2 ++ a3
         }
       // withdrawn-release residue (a crashed unpublishRelease: the
       // audit row landed, the manifest delete did not) — reclaim it;
@@ -4049,7 +3913,7 @@ object Curation {
             else {
               val kids = fs.listStatus(p).toSeq.filter(_.isDirectory)
               val hidden = kids.flatMap { s =>
-                orphanTarget(p, s.getPath.getName)
+                orphanTarget(s.getPath.getName)
                   .map { case (target, aside) => (s.getPath, target, aside) }
               }
               val acted = hidden.groupBy(_._2).toSeq.sortBy(_._1)
@@ -4100,18 +3964,17 @@ object Curation {
     StoreSwap.swap(spark, dir, tmp)
   }
 
-  /** Full-row duplicate collapse + small-file compaction of one flat
+  /** Full-row duplicate collapse + small-file compaction of the flat
     * embedding store, through the shared [[StoreSwap]] discipline;
     * `removeIds` erases retracted vectors during the rewrite.
     */
   private def compactFlat(spark: SparkSession, dir: String,
-                          removeIds: Option[DataFrame] = None,
-                          idCol: String = "vec_id"): Unit = {
+                          removeIds: Option[DataFrame]): Unit = {
     val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
     val rows0 = spark.read.parquet(dir).dropDuplicates()
     val rows = removeIds.fold(rows0)(ids =>
-      rows0.join(ids.select(col("doc_id").as(idCol)),
-        Seq(idCol), "left_anti"))
+      rows0.join(ids.select(col("doc_id").as("vec_id")),
+        Seq("vec_id"), "left_anti"))
     rows.storeWrite.parquet(tmp)
     StoreSwap.swap(spark, dir, tmp)
   }

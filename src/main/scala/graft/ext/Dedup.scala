@@ -252,42 +252,6 @@ object Dedup {
                         k: Int = 2, nSig: Int = 16): DataFrame =
     chSigs(df, idCol, textCol, k, nSig)
 
-  /** ONE corpus scan shared by [[contentMembersFrom]] and
-    * [[contentSignaturesFrom]]: (id, ch, sh_str) — doc id, content
-    * hash, distinct k-shingle strings. The shingling (WordShingles +
-    * array_distinct) is the expensive half of both the membership scan
-    * and the signature scan; a caller that persists this frame pays it
-    * once instead of once per derived frame (VERDICT r7 #1 — the
-    * "census passes rescan the corpus" fusion).
-    */
-  def contentBase(df: DataFrame, idCol: String, textCol: String,
-                  k: Int = 2): DataFrame = {
-    val sh = shinglesOf(col(textCol), k)
-    df.select(col(idCol).as("id"), md5(col(textCol)).as("ch"), sh.as("sh_str"))
-      .filter(size(col("sh_str")) >= 1)
-  }
-
-  /** [[contentMembers]] as a projection of a (persisted) [[contentBase]]
-    * frame — row-identical to the direct derivation.
-    */
-  def contentMembersFrom(base: DataFrame): DataFrame = base.select("id", "ch")
-
-  /** [[contentSignatures]] from a (persisted) [[contentBase]] frame:
-    * explode the pre-computed shingles, hash each once in the codegen'd
-    * projection, one partial-aggregating groupBy per distinct content —
-    * the same shape (and bit-identical output) as the direct derivation,
-    * minus the corpus re-scan and re-shingling.
-    */
-  def contentSignaturesFrom(base: DataFrame, nSig: Int = 16): DataFrame = {
-    val hashed = base.select(col("ch"), explode(col("sh_str")).as("s"))
-      .select(col("ch"), Hashing.h32(col("s")).as("h"))
-    val sigAggs = (0 until nSig).map { j =>
-      min((lit(2L * j + 1) * col("h") + lit(7919L * j)) % lit(4294967311L)).as(s"sig_$j")
-    }
-    val aggs = sort_array(collect_set(col("h"))).as("sh") +: sigAggs
-    hashed.groupBy(col("ch")).agg(aggs.head, aggs.tail: _*)
-  }
-
   /** Capped band join + exact verification at the distinct-content
     * level: (a_ch, b_ch, jaccard), a_ch < b_ch.
     */
@@ -803,12 +767,7 @@ object Dedup {
     * partition ([[StoreLayout.appendBuckets]]; the writer would
     * otherwise emit tasks × partitions small files).
     */
-  def writeNearDupIndexFrames(idx: NearDupIndexFrames, dir: String,
-                              checkLayout: Boolean = true): Unit = {
-    // checkLayout=false lets a caller that ALREADY validated the pruned
-    // layout this commit (Curation's guard phase) skip the second
-    // bands-schema read on the hot ingest path
-    if (checkLayout) requirePrunedLayout(idx.bands.sparkSession, dir)
+  def writeNearDupIndexFrames(idx: NearDupIndexFrames, dir: String): Unit =
     StoreSwap.concurrently(
       () => StoreLayout.appendBuckets(
         idx.bands.withColumn("bkp", StoreLayout.part(col("bk"))), "bkp",
@@ -819,24 +778,6 @@ object Dedup {
       () => StoreLayout.appendBuckets(
         idx.members.withColumn("chp", StoreLayout.part(col("ch"))), "chp",
         s"$dir/members"))
-  }
-
-  /** Refuse an append into a PRE-PRUNED flat index (bands rows at the
-    * subdirectory root, no `bkp` partition column): mixing partitioned
-    * appends into a flat store wedges partition discovery for every
-    * later reader — including [[compactNearDupIndex]], the upgrade path
-    * itself — so the mix must never be written. Flat stores stay fully
-    * READABLE ([[readNearDupIndex]], [[probeView]]); one compaction
-    * upgrades them to the pruned layout, after which appends proceed.
-    */
-  private[ext] def requirePrunedLayout(
-      spark: org.apache.spark.sql.SparkSession, dir: String): Unit =
-    if (StoreLayout.isFlat(spark, s"$dir/bands"))
-      throw new IllegalStateException(
-        s"near-dup index at $dir has the pre-probe-pruned FLAT layout; " +
-          "appending partitioned tranches into it would corrupt partition " +
-          s"discovery — run Dedup.compactNearDupIndex(spark, \"$dir\") " +
-          "once to upgrade it, then retry")
 
   // the persisted tables' read shapes (what the writers above produce;
   // StoreLayoutSpec pins each against its writer)
@@ -857,23 +798,18 @@ object Dedup {
     (p.getInt(0), p.getInt(1), p.getInt(2))
   }
 
-  // drop a store-layout partition column on read (absent on pre-r11
-  // flat stores — both layouts stay readable)
-  private def dropPart(df: DataFrame, c: String): DataFrame =
-    if (df.columns.contains(c)) df.drop(c) else df
-
   /** Load a persisted near-dup index, re-collapsing contents duplicated
-    * across tranche appends. Reads both layouts (probe-key partitioned
-    * and pre-r11 flat); partition columns never surface to callers.
+    * across tranche appends; partition columns never surface to
+    * callers.
     */
   def readNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String): NearDupIndexFrames =
     NearDupIndexFrames(
-      dropPart(spark.read.parquet(s"$dir/bands"), "bkp")
+      spark.read.parquet(s"$dir/bands").drop("bkp")
         .dropDuplicates("ch", "bk"),
-      dropPart(spark.read.parquet(s"$dir/sets"), "chp")
+      spark.read.parquet(s"$dir/sets").drop("chp")
         .dropDuplicates("ch"),
-      dropPart(spark.read.parquet(s"$dir/members"), "chp"))
+      spark.read.parquet(s"$dir/members").drop("chp"))
 
   /** PRUNED standing view of a persisted index for probing with the
     * tranche index `idxN` — the commit-time access path of
@@ -906,9 +842,6 @@ object Dedup {
     * a failed append must not inflate the bucket census or pair as a
     * standing candidate, or a re-run at the cap boundary would diverge
     * from the first attempt.
-    *
-    * A pre-r11 flat store (no partition columns) degrades to the full
-    * read + the same exclusion semantics — correct, just unpruned.
     */
   def probeView(spark: org.apache.spark.sql.SparkSession, dir: String,
                 idxN: NearDupIndexFrames,
@@ -943,29 +876,17 @@ object Dedup {
       (ps.filter(_.getInt(0) == 0).map(_.getLong(1)).toSeq,
         ps.filter(_.getInt(0) == 1).map(_.getLong(1)).toSeq)
     }
-    val bandsRaw = StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
-    val pruned = bandsRaw.columns.contains("bkp")
-    val bandsP =
-      if (!pruned) bandsRaw
-      else bandsRaw.filter(col("bkp").isin(bkps: _*)).drop("bkp")
+    val bandsP = StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
+      .filter(col("bkp").isin(bkps: _*)).drop("bkp")
     val bands0 = bandsP.dropDuplicates("ch", "bk")
     // contents this probe can touch: the tranche's own (exact-dup
     // lookups) plus any content colliding in the pruned bands (candidate
-    // partners) — both bounded, collected as literals. A flat store (its
-    // bands flat too — appends into one are refused) reads whole
-    val chps =
-      if (pruned) Some((chpsT ++ StoreLayout.partsOf(bandsP, col("ch"))).distinct)
-      else None
-    val membersRaw = StoreLayout.read(spark, s"$dir/members", MembersTable, chps)
-    val setsRaw = StoreLayout.read(spark, s"$dir/sets", SetsTable, chps)
-    val (members0, sets0) = chps match {
-      case Some(ps) if membersRaw.columns.contains("chp") =>
-        (membersRaw.filter(col("chp").isin(ps: _*)).drop("chp"),
-          setsRaw.filter(col("chp").isin(ps: _*)).drop("chp")
-            .dropDuplicates("ch"))
-      case _ =>
-        (dropPart(membersRaw, "chp"), dropPart(setsRaw, "chp").dropDuplicates("ch"))
-    }
+    // partners) — both bounded, collected as literals
+    val chps = (chpsT ++ StoreLayout.partsOf(bandsP, col("ch"))).distinct
+    val members0 = StoreLayout.read(spark, s"$dir/members", MembersTable, Some(chps))
+      .filter(col("chp").isin(chps: _*)).drop("chp")
+    val sets0 = StoreLayout.read(spark, s"$dir/sets", SetsTable, Some(chps))
+      .filter(col("chp").isin(chps: _*)).drop("chp").dropDuplicates("ch")
     val members = ckpt(excludeIds.fold(members0)(ids =>
       members0.join(broadcast(ids.select(col(ids.columns.head).as("id"))),
         Seq("id"), "left_anti")))
@@ -1012,8 +933,6 @@ object Dedup {
         members)
     }
     val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
-    // written through the probe-key-partitioned writer, so compaction
-    // also UPGRADES a pre-r11 flat store to the pruned layout
     writeNearDupIndexFrames(
       idx.copy(members = idx.members.dropDuplicates("id", "ch")), tmp)
     if (storeExists(spark, s"$dir/params"))
@@ -1034,13 +953,11 @@ object Dedup {
     * restricted to those buckets. Erasure (tombstones) is bucket-
     * bounded too, but lives in [[removeIdsNearDup]]: members-first
     * discovery turns the retracted ids into the exact content/band
-    * buckets their rows spread across. Only the pre-r11 FLAT layout
-    * falls back to the store-wide anti-join.
+    * buckets their rows spread across.
     */
   def compactNearDupIndexBuckets(spark: org.apache.spark.sql.SparkSession,
                                  dir: String,
                                  leafDirs: Seq[String]): Unit = {
-    requirePrunedLayout(spark, dir)
     // per-table shared transforms: the batched form writes each table's
     // touched buckets in one job (exact cross-bucket: every collapse
     // key's partition value is a function of the key)
@@ -1081,18 +998,12 @@ object Dedup {
     */
   def removeIdsNearDup(spark: org.apache.spark.sql.SparkSession,
                        dir: String, ids: DataFrame): Unit = {
-    if (StoreLayout.isFlat(spark, s"$dir/bands")) {
-      // pre-r11 flat layout: no partitions to bound the rewrite —
-      // degrade to the store-wide pass, which also upgrades the layout
-      compactNearDupIndex(spark, dir, removeIds = Some(ids))
-      return
-    }
     val idf = ids.select(col(ids.columns.head).as("id")).localCheckpoint()
     val fs = StoreSwap.fsOf(spark, dir)
     def existing(table: String, part: String, vals: Seq[Long]) =
       vals.map(p => s"$dir/$table/$part=$p")
         .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    val mem = spark.read.parquet(s"$dir/members")
+    val mem = StoreLayout.read(spark, s"$dir/members", MembersTable)
     // contents the retracted ids belong to: bounded by the takedown
     // batch (docs × contents-per-doc), collected nowhere — checkpointed
     val hit = mem.join(broadcast(idf), Seq("id"), "left_semi")
@@ -1113,7 +1024,7 @@ object Dedup {
     val bkps =
       if (!anyDead) Seq.empty
       else StoreLayout.partsOf(
-        spark.read.parquet(s"$dir/bands")
+        StoreLayout.read(spark, s"$dir/bands", BandsTable)
           .join(broadcast(dead), Seq("ch"), "left_semi"), col("bk"))
     // members first (the correctness-critical step), then hygiene —
     // skipped entirely when every touched content keeps a surviving

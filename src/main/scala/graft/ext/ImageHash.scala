@@ -432,7 +432,7 @@ object ImageHash {
     def existing(table: String, part: String, vals: Seq[Long]) =
       vals.map(p => s"$dir/$table/$part=$p")
         .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    val mem = spark.read.parquet(s"$dir/members")
+    val mem = StoreLayout.read(spark, s"$dir/members", MembersTable)
     val hit = mem.join(broadcast(idf), Seq("id"), "left_semi")
       .select("hsh").distinct().localCheckpoint()
     val hps = StoreLayout.partsOf(hit, col("hsh"))
@@ -446,7 +446,7 @@ object ImageHash {
     val bkps =
       if (!anyDead) Seq.empty
       else StoreLayout.partsOf(
-        spark.read.parquet(s"$dir/bands")
+        StoreLayout.read(spark, s"$dir/bands", BandsTable)
           .join(broadcast(dead), Seq("hsh"), "left_semi"), col("bk"))
     StoreSwap.rewriteLeafDirsShared(spark, existing("members", "hp", hps),
       (df: DataFrame) => df.join(broadcast(idf), Seq("id"), "left_anti"))
@@ -505,27 +505,6 @@ object ImageHash {
       StoreSwap.rewriteLeafDirsShared(spark, ds,
         (df: DataFrame) => df.dropDuplicates(keys))
     }
-
-  /** One-time upgrade of a pre-index FLAT fingerprint store — plain
-    * (id, hash) parquet rows at the directory root, the layout older
-    * deployments appended per tranche — into the persisted banded
-    * index ([[appendHashIndex]]'s layout). [[Curation.commitTranche]]
-    * REFUSES a flat store (it carries no probe-prunable structure and
-    * its rows would otherwise be silently stranded next to a bootstrap
-    * index) and names this as the upgrade path. Same swap discipline as
-    * every rewriting pass; the flat rows are retained under `<dir>.old`.
-    */
-  def migrateFlatHashes(spark: org.apache.spark.sql.SparkSession,
-                        dir: String, idCol: String = "doc_id",
-                        hashCol: String = "hash", bands: Int = 8): Unit = {
-    require(!Dedup.storeExists(spark, s"$dir/params"),
-      s"$dir already carries an index layout (params present) — nothing to migrate")
-    // sever lineage from the files about to be renamed away
-    val flat = spark.read.parquet(dir).localCheckpoint()
-    val tmp = StoreSwap.prepareTmp(spark, s"$dir.migrate")
-    appendHashIndex(flat, idCol, hashCol, tmp, bands)
-    StoreSwap.swap(spark, dir, tmp)
-  }
 
   /** The band buckets a given cap would drop in [[hammingNearDups]] —
     * (bk, n_hashes) over distinct hashes.

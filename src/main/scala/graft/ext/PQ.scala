@@ -277,8 +277,7 @@ object PQ {
   // last table written, so "params exists" == complete). In-place
   // mutation passes (append, surgical erasure, bucket compaction) work
   // INSIDE the live generation and keep their bucket-local blast
-  // radius. Pre-generational FLAT stores (tables at `dir` root) stay
-  // fully readable and mutable; their first re-release upgrades them.
+  // radius.
 
   private val GenPrefix = "gen-"
   private[ext] val PointerName = "_current"
@@ -317,8 +316,8 @@ object PQ {
     * generation NEWER than the live one is NOT retired: it is a publish
     * that crashed between completing its tables and the pointer flip
     * (fsck reports it; repair publishes it) — reclaiming it would
-    * silently discard a finished re-release (ADVICE r13). Empty on a
-    * pre-generational flat store.
+    * silently discard a finished re-release (ADVICE r13). Empty on an
+    * untrained store.
     */
   private[ext] def retiredGens(spark: org.apache.spark.sql.SparkSession,
                                dir: String): Seq[String] = {
@@ -350,8 +349,9 @@ object PQ {
     * the generation `dir/_current` names (if complete on disk), else
     * the newest complete generation (covers the pointer-flip window
     * and every publish crash state — the newest complete generation
-    * is always a correct, consistent index), else `dir` itself (the
-    * pre-generational flat layout). Callers inside one logical
+    * is always a correct, consistent index), else `dir` itself: no
+    * complete generation, the index is not trained yet. Callers inside
+    * one logical
     * operation resolve ONCE and reuse the path, so the operation
     * never spans generations.
     */
@@ -391,8 +391,6 @@ object PQ {
     * marks the generation complete). On a store that already holds
     * generations this IS the re-release: the previous generation stays
     * on disk for in-flight readers until [[Curation.gc]] reclaims it.
-    * On a pre-generational flat store the legacy root tables are
-    * dropped after the publish (the upgrade).
     */
   def writeIndex(emb: DataFrame, dir: String, m: Int = 4, k: Int = 4,
                  iters: Int = 2, subWidth: Int = 16): Unit = {
@@ -413,12 +411,6 @@ object PQ {
     Seq((m, k, iters, subWidth)).toDF("m", "k", "iters", "sub_width")
       .coalesce(1).storeWrite.mode("overwrite").parquet(s"$g/params")
     publishGen(spark, dir, next)
-    // legacy flat tables (pre-generational layout) are dead the moment
-    // a generation is published — drop them so the store has one shape
-    val fs = StoreSwap.fsOf(spark, dir)
-    Seq("params", "centroids", "codes").foreach { t =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$t"), true)
-    }
   }
 
   // raw accessors over an ALREADY-RESOLVED generation root — every
@@ -444,10 +436,8 @@ object PQ {
     StoreLayout.Table("vec_id BIGINT, sub INT, cell BIGINT, idp INT", "idp")
 
   private def codesAt(spark: org.apache.spark.sql.SparkSession,
-                      root: String): DataFrame = {
-    val raw = spark.read.parquet(s"$root/codes")
-    if (raw.columns.contains("idp")) raw.drop("idp") else raw
-  }
+                      root: String): DataFrame =
+    spark.read.parquet(s"$root/codes").drop("idp")
 
   /** The persisted training geometry: (m, k, iters, sub_width). */
   def readIndexParams(spark: org.apache.spark.sql.SparkSession,
@@ -459,27 +449,12 @@ object PQ {
                     dir: String): DataFrame =
     centroidsAt(spark, liveDir(spark, dir))
 
-  /** The persisted code table: (vec_id, sub, cell). Reads both layouts
-    * (id-bucket partitioned and pre-r12 flat); the partition column
-    * never surfaces to callers.
+  /** The persisted code table: (vec_id, sub, cell); the id-bucket
+    * partition column never surfaces to callers.
     */
   def readCodes(spark: org.apache.spark.sql.SparkSession,
                 dir: String): DataFrame =
     codesAt(spark, liveDir(spark, dir))
-
-  /** Refuse an append into a pre-r12 FLAT code table (no `idp`
-    * partition column): mixing partitioned appends into a flat store
-    * wedges partition discovery for every later reader. Flat stores
-    * stay fully readable; one [[compactCodesIndex]] upgrades them.
-    */
-  private[ext] def requirePrunedCodes(
-      spark: org.apache.spark.sql.SparkSession, root: String): Unit =
-    if (StoreLayout.isFlat(spark, s"$root/codes"))
-      throw new IllegalStateException(
-        s"PQ index at $root has the pre-id-bucketed FLAT code layout; " +
-          "appending partitioned tranches into it would corrupt " +
-          s"partition discovery — run PQ.compactCodesIndex(spark, " +
-          s""""$root") once to upgrade it, then retry""")
 
   /** Encode a new tranche through the frozen persisted codebook and
     * append its codes — the index grows without retraining (re-release
@@ -491,7 +466,6 @@ object PQ {
   def appendIndex(newEmb: DataFrame, dir: String): Unit = {
     val spark = newEmb.sparkSession
     val live = liveDir(spark, dir)
-    requirePrunedCodes(spark, live)
     val subWidth = paramsAt(spark, live)._4
     val centE = centroidsAt(spark, live).localCheckpoint()
     assignTo(explodedSub(newEmb, subWidth), centE)
@@ -517,7 +491,6 @@ object PQ {
   def appendIndexOnce(newEmb: DataFrame, dir: String): Unit = {
     val spark = newEmb.sparkSession
     val live = liveDir(spark, dir)
-    requirePrunedCodes(spark, live)
     val pending = pendingCodes(newEmb, live, paramsAt(spark, live)._4,
       StoreLayout.partsOf(newEmb, col("vec_id")))
     StoreLayout.appendBuckets(
@@ -526,8 +499,8 @@ object PQ {
   }
 
   /** The (vec_id, sub, cell) code rows [[appendIndexOnce]] still has to
-    * append for `newEmb` into the live generation `live` (whose code
-    * layout the caller checked and whose `subWidth` it read): every
+    * append for `newEmb` into the live generation `live` (whose
+    * `subWidth` the caller read): every
     * code of `newEmb` through the frozen codebook, minus the rows its
     * id buckets `parts` already hold. `parts` must cover `newEmb`'s id
     * buckets ([[StoreLayout.partsOf]]). Reads no verdict, so the commit
@@ -561,27 +534,13 @@ object PQ {
     * bounded by the buckets the ids hash into, never the corpus.
     * Idempotent and crash-safe: a partial pass leaves the remaining
     * retracted codes physically present but still tombstone-tracked (a
-    * re-run completes the erasure). A pre-r12 flat code table degrades
-    * to one whole-table rewrite that also UPGRADES it to the bucketed
-    * layout.
+    * re-run completes the erasure).
     */
   def removeIdsIndex(spark: org.apache.spark.sql.SparkSession,
                      dir: String, ids: DataFrame): Unit = {
     val codesDir = s"${liveDir(spark, dir)}/codes"
     val idf = ids.select(col(ids.columns.head).as("vec_id"))
       .localCheckpoint()
-    if (!spark.read.parquet(codesDir).columns.contains("idp")) {
-      // legacy flat layout: one swap-rewrite, upgraded on the way out
-      val tmp = StoreSwap.prepareTmp(spark, s"$codesDir.compact")
-      spark.read.parquet(codesDir)
-        .join(broadcast(idf), Seq("vec_id"), "left_anti")
-        .dropDuplicates("vec_id", "sub")
-        .withColumn("idp", StoreLayout.part(col("vec_id")))
-        .repartition(col("idp"))
-        .storeWrite.partitionBy("idp").parquet(tmp)
-      StoreSwap.swap(spark, codesDir, tmp)
-      return
-    }
     val fs = StoreSwap.fsOf(spark, dir)
     val touched = StoreLayout.partsOf(idf, col("vec_id"))
       .map(p => s"$codesDir/idp=$p")
@@ -592,8 +551,7 @@ object PQ {
   }
 
   /** Store-wide code-table compaction: collapse re-appended duplicate
-    * codes and per-append small files (and upgrade a pre-r12 flat
-    * table to the id-bucketed layout); same swap discipline as
+    * codes and per-append small files; same swap discipline as
     * [[Dedup.compactNearDupIndex]]. The scheduled bucket-local form is
     * [[compactCodesBuckets]].
     */
@@ -661,8 +619,7 @@ object PQ {
     * undrifted corpus the deterministic integer training reproduces
     * the same codebook, so ADC top-k is preserved exactly (ExtSpec
     * pins it); on a drifted one the re-release is the fix the
-    * [[codesCensus]] skew pointed at. Upgrades a pre-generational
-    * flat store in the same motion.
+    * [[codesCensus]] skew pointed at.
     */
   def rewriteIndex(spark: org.apache.spark.sql.SparkSession,
                    dir: String, emb: DataFrame): Unit = {

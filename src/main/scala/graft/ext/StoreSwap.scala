@@ -559,16 +559,6 @@ private[ext] object StoreLayout {
   private def visible(fs: FileSystem, p: Path): Seq[FileStatus] =
     fs.listStatus(p).toSeq.filterNot(s => hidden(s.getPath.getName))
 
-  /** True iff `dir` holds data files at its root: the pre-partitioned
-    * flat layout of a table now written partitioned, which appends must
-    * refuse. Driver-side listing only (hidden entries aside).
-    */
-  def isFlat(spark: SparkSession, dir: String): Boolean = {
-    val p = new Path(dir)
-    val f = StoreSwap.fsOf(spark, dir)
-    f.exists(p) && visible(f, p).exists(_.isFile)
-  }
-
   /** Read the store table at `dir` as `spark.read.parquet(dir)` would —
     * same rows, same columns, same `PartitionFilters` in the executed
     * plan — without starting a Spark job to plan it (the cost model in
@@ -579,9 +569,9 @@ private[ext] object StoreLayout {
     * buckets the filter would drop.
     *
     * Layouts the declaration does not describe — a missing or empty
-    * directory, a pre-partitioned flat table, nested or foreign
-    * directories — fall back to `spark.read.parquet(dir)`, so legacy
-    * stores keep reading (and failing) exactly as before.
+    * directory, files where partition directories are declared, nested
+    * or foreign directories — fall back to `spark.read.parquet(dir)`,
+    * so they read (and fail) exactly as Spark's own discovery would.
     */
   def read(spark: SparkSession, dir: String, table: Table,
            parts: Option[Iterable[Any]] = None): DataFrame = {

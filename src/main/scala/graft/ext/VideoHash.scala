@@ -333,25 +333,6 @@ object VideoHash {
       sqN, firstOcc, incoming, idCol)
   }
 
-  /** One-time upgrade of a pre-index FLAT frame store — raw
-    * [[frameHashes]] rows (doc_id, frame_no, fh) at the directory root,
-    * the layout older deployments appended per tranche — into the
-    * persisted sequence index ([[appendSeqIndex]]'s layout).
-    * [[Curation.commitTranche]] REFUSES a flat store (no probe-prunable
-    * structure; its videos would otherwise be silently stranded next to
-    * a bootstrap index) and names this as the upgrade path. The flat
-    * rows are retained under `<dir>.old`.
-    */
-  def migrateFlatFrames(spark: SparkSession, dir: String): Unit = {
-    require(!graft.ext.Dedup.storeExists(spark, s"$dir/shingles"),
-      s"$dir already carries an index layout (shingles present) — nothing to migrate")
-    // sever lineage from the files about to be renamed away
-    val flat = spark.read.parquet(dir).localCheckpoint()
-    val tmp = StoreSwap.prepareTmp(spark, s"$dir.migrate")
-    appendSeqIndex(flat, tmp)
-    StoreSwap.swap(spark, dir, tmp)
-  }
-
   /** Bucket-local compaction (VERDICT r11 #1): collapse duplicate rows
     * and per-append small files in ONLY the named leaf partition
     * directories (`<dir>/shingles/kp=N`, `<dir>/seqs/sqp=N`) — write
@@ -392,8 +373,9 @@ object VideoHash {
     val fs = graft.ext.StoreSwap.fsOf(spark, dir)
     // the ids' touched partitions: a column-pruned (doc_id, partition)
     // scan per table, collected as ≤ Parts literals
-    def touched(table: String, part: String): Seq[String] =
-      spark.read.parquet(s"$dir/$table")
+    def touched(table: String, part: String,
+                decl: StoreLayout.Table): Seq[String] =
+      StoreLayout.read(spark, s"$dir/$table", decl)
         .join(broadcast(idf), Seq("doc_id"), "left_semi")
         .select(part).distinct()
         .limit(graft.ext.StoreLayout.Parts + 1).collect()
@@ -403,7 +385,8 @@ object VideoHash {
         .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
         .toSeq
     StoreSwap.rewriteLeafDirsShared(spark,
-      touched("shingles", "kp") ++ touched("seqs", "sqp"),
+      touched("shingles", "kp", ShinglesTable) ++
+        touched("seqs", "sqp", SeqsTable),
       (df: org.apache.spark.sql.DataFrame) =>
         df.join(broadcast(idf), Seq("doc_id"), "left_anti"))
   }

@@ -172,9 +172,9 @@ case class AsOfJoinExec(left: SparkPlan, right: SparkPlan,
   }
 }
 
-/** User-facing API: installs the strategy on the live session (works in
-  * any session — no extensions wiring needed) and builds the plan from
-  * the analyzed children.
+/** User-facing API: installs the native strategies on the live session
+  * ([[NativeStrategies]]; works in any session — no extensions wiring
+  * needed) and builds the plan from the analyzed children.
   */
 object AsOfJoinNative {
   /** `direction`: "backward" (latest right ≤ t, the default) or "forward"
@@ -189,14 +189,7 @@ object AsOfJoinNative {
     require(direction == "backward" || direction == "forward",
       s"direction must be backward|forward, got $direction")
     val spark: SparkSession = left.sparkSession
-    // read-modify-write of a session-global: synchronize so concurrent
-    // first calls can't lose the update or install duplicates
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(AsOfJoinStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ AsOfJoinStrategy
-      }
-    }
+    NativeStrategies.install(spark)
     val lPlan = left.queryExecution.analyzed
     val rPlan = right.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n)

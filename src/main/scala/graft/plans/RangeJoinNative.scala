@@ -104,19 +104,15 @@ case class RangeJoinExec(left: SparkPlan, right: SparkPlan,
   }
 }
 
-/** User-facing API mirroring [[AsOfJoinNative]]: installs the strategy on
-  * the live session and builds the plan from the analyzed children.
+/** User-facing API mirroring [[AsOfJoinNative]]: installs the native
+  * strategies on the live session ([[NativeStrategies]]) and builds the
+  * plan from the analyzed children.
   */
 object RangeJoinNative {
   def pointsInIntervals(points: DataFrame, intervals: DataFrame,
                         pointCol: String, loCol: String, hiCol: String): DataFrame = {
     val spark: SparkSession = points.sparkSession
-    spark.experimental.synchronized {
-      if (!spark.experimental.extraStrategies.contains(RangeJoinStrategy)) {
-        spark.experimental.extraStrategies =
-          spark.experimental.extraStrategies :+ RangeJoinStrategy
-      }
-    }
+    NativeStrategies.install(spark)
     val lPlan = points.queryExecution.analyzed
     val rPlan = intervals.queryExecution.analyzed
     def attr(p: LogicalPlan, n: String) = p.output.find(_.name == n)

@@ -4667,7 +4667,7 @@ object ExtQueries {
     // ∝ |labeled split|, and the trained weights are memoized per
     // (session, sfDir) so x93 and x102 share one training.
     // The 24-round budget is NOT slack (VERDICT r8 "watch" item,
-    // measured at sf0.1 via Scratch __qconv): training-split accuracy
+    // measured at sf0.1 by training at each budget): training-split accuracy
     // is still climbing monotonically at the budget boundary —
     // 0.48@8, 0.53@12, 0.56@16, 0.62@20, 0.69@24 (corpus accuracy
     // tracks it: 0.49 → 0.66) — so cutting rounds trades the accuracy
@@ -6861,21 +6861,6 @@ object ExtQueries {
     ledgerKernels(spark, sfDir).frames
       .map(f => Future(f.count()))
       .foreach(Await.result(_, Duration.Inf))
-  }
-
-  /** Per-frame materialization timings of the kernel build (Scratch
-    * diagnostics — same work as [[warmLedgerKernels]], labeled).
-    */
-  def ledgerKernelTimings(spark: SparkSession,
-                          sfDir: String): Seq[(String, Double)] = {
-    val k = ledgerKernels(spark, sfDir)
-    Seq("corpus", "keep", "tclusters", "contaminated", "removal",
-      "iclusters", "icanon", "aclusters", "vclusters", "vcanon",
-      "eclusters").zip(k.frames).map { case (n, f) =>
-      val t0 = System.nanoTime()
-      f.count()
-      (n, (System.nanoTime() - t0) / 1e9)
-    }
   }
 
   private def ledgerKernels(spark: SparkSession, sfDir: String): LedgerKernels = {

@@ -2,6 +2,8 @@ package graft.ext
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -211,9 +213,19 @@ class CurationSpec extends SparkSpec {
     val (due, procs) = graft.ProcLog.during {
       Curation.commitTranche(d.tranche, 1L, d.stores, imgHashes = Some(d.imgs),
         vidFrames = Some(d.vids), embeddings = Some(d.embs))
-      Curation.retract(spark,
-        d.tranche.select("doc_id").orderBy("doc_id").limit(3), d.stores)
-      Curation.maintainDue(spark, d.stores)
+      val (_, retractJobs) = graft.JobLog.during(spark)(Curation.retract(spark,
+        d.tranche.select("doc_id").orderBy("doc_id").limit(3), d.stores))
+      val (due, maintJobs) = graft.JobLog.during(spark)(
+        Curation.maintainDue(spark, d.stores))
+      // the writer lock labels every job of its arc
+      Seq("retract" -> retractJobs, "maintainDue" -> maintJobs).foreach {
+        case (arc, js) =>
+          val other = js.filterNot(_.desc == arc)
+          assert(js.nonEmpty && other.isEmpty, s"$arc: ${other.size} of " +
+            s"${js.size} jobs not labelled '$arc': " + other.map(j =>
+              s"'${j.desc.take(60)}' @ ${j.site.split('\n').head}").mkString("; "))
+      }
+      due
     }
     assert(due.nonEmpty, "premise: the pass erased the retraction")
     assert(procs.isEmpty, s"${procs.size} process starts, e.g. " +
@@ -300,7 +312,7 @@ class CurationSpec extends SparkSpec {
       s"adopted 16-band standing rows did not judge the copy: $v")
   }
 
-  test("a pre-index FLAT fingerprint store is refused, then migrates") {
+  test("a pre-index FLAT fingerprint store is refused before the ledger write") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
     val stores = freshStores()
     def imgOf(b: org.apache.spark.sql.DataFrame) =
@@ -312,24 +324,13 @@ class CurationSpec extends SparkSpec {
     val e = intercept[IllegalStateException] {
       Curation.commitTranche(t1, 0L, stores, imgHashes = Some(imgOf(t1)))
     }
-    assert(e.getMessage.contains("migrateFlatHashes"),
-      s"flat-store refusal does not name the upgrade path: ${e.getMessage}")
+    assert(e.getMessage.contains("unrecognized layout"),
+      s"flat-store refusal unclear: ${e.getMessage}")
     assert(!new java.io.File(stores.ledger).exists(),
       "a flat-store commit left ledger rows behind")
-    // one-time upgrade, then the commit proceeds and the MIGRATED
-    // standing rows judge: a copy of a t0 doc is exact_dup
-    ImageHash.migrateFlatHashes(spark, stores.image)
-    val copy = t0.orderBy("doc_id").limit(1)
-      .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    val v = Curation.commitTranche(t1.unionAll(copy), 0L, stores,
-        imgHashes = Some(imgOf(t1.unionAll(copy))))
-      .filter(col("modality") === "image" && col("doc_id") >= 5000000L)
-      .collect().map(_.getString(2)).toSeq
-    assert(v == Seq("exact_dup"),
-      s"migrated standing rows did not judge the copy: $v")
   }
 
-  test("a pre-index FLAT video store is refused, then migrates") {
+  test("a pre-index FLAT video store is refused before the ledger write") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 100)
     val stores = freshStores()
@@ -340,51 +341,52 @@ class CurationSpec extends SparkSpec {
       Curation.commitTranche(t1, 0L, stores,
         vidFrames = Some(VideoHash.frameHashes(t1, "doc_id", "text")))
     }
-    assert(e.getMessage.contains("migrateFlatFrames"),
-      s"flat-store refusal does not name the upgrade path: ${e.getMessage}")
-    VideoHash.migrateFlatFrames(spark, stores.video)
-    val copy = t0.orderBy("doc_id").limit(1)
-      .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    val t1c = t1.unionAll(copy)
-    val v = Curation.commitTranche(t1c, 0L, stores,
-        vidFrames = Some(VideoHash.frameHashes(t1c, "doc_id", "text")))
-      .filter(col("modality") === "video" && col("doc_id") >= 5000000L)
-      .collect().map(_.getString(2)).toSeq
-    assert(v == Seq("exact_dup"),
-      s"migrated standing frames did not judge the copy: $v")
+    assert(e.getMessage.contains("unrecognized layout"),
+      s"flat-store refusal unclear: ${e.getMessage}")
+    assert(!new java.io.File(stores.ledger).exists(),
+      "a flat-store commit left ledger rows behind")
   }
 
-  test("a FLAT text index is refused for append before the ledger write") {
+  test("a deployment without store format 1 refuses every writer before any write") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
+      .filter(col("doc_id") < 60)
     val stores = freshStores()
-    val t0 = docs.filter(col("doc_id") % 2 === 0)
-    // simulate the pre-pruned layout: index frames written WITHOUT the
-    // partition columns (what older writeNearDupIndex produced)
-    val idx = Dedup.nearDupIndex(t0, "doc_id", "text")
-    idx.bands.write.parquet(s"${stores.textIndex}/bands")
-    idx.sets.write.parquet(s"${stores.textIndex}/sets")
-    idx.members.write.parquet(s"${stores.textIndex}/members")
-    import spark.implicits._
-    Seq((2, 8, 2)).toDF("k", "bands", "rows")
-      .coalesce(1).write.parquet(s"${stores.textIndex}/params")
-    val t1 = docs.filter(col("doc_id") % 2 === 1)
-    val e = intercept[IllegalStateException] {
-      Curation.commitTranche(t1, 0L, stores)
+    Curation.commitTranche(docs.filter(col("doc_id") % 2 === 0), 0L, stores)
+    val fmt = java.nio.file.Paths.get(s"${stores.ledger}.format")
+    assert(new String(Files.readAllBytes(fmt), "UTF-8") == "1")
+    // through the store filesystem, which keeps the checksum file in step
+    val fs = StoreSwap.fsOf(spark, stores.ledger)
+    val fmtP = new org.apache.hadoop.fs.Path(fmt.toString)
+    val root = java.nio.file.Paths.get(stores.ledger).getParent
+    def tree(): Map[String, Seq[Byte]] = {
+      val w = Files.walk(root)
+      try w.iterator().asScala.filter(Files.isRegularFile(_)).map(p =>
+        root.relativize(p).toString -> Files.readAllBytes(p).toSeq).toMap
+      finally w.close()
     }
-    assert(e.getMessage.contains("compactNearDupIndex"),
-      s"flat-layout refusal does not name the upgrade path: ${e.getMessage}")
-    assert(!new java.io.File(stores.ledger).exists(),
-      "a flat-layout commit left ledger rows behind")
-    // compaction upgrades the layout in place; the commit then proceeds
-    // and the upgraded standing rows judge a cross-tranche copy
-    Dedup.compactNearDupIndex(spark, stores.textIndex)
-    val copy = t0.orderBy("doc_id").limit(1)
-      .select((col("doc_id") + 5000000L).as("doc_id"), col("text"))
-    val v = Curation.commitTranche(t1.unionAll(copy), 0L, stores)
-      .filter(col("doc_id") >= 5000000L)
-      .collect().map(_.getString(2)).toSeq
-    assert(v == Seq("exact_dup"),
-      s"upgraded standing index did not judge the copy: $v")
+    val t1 = docs.filter(col("doc_id") % 2 === 1)
+    Seq[Option[String]](None, Some("2")).foreach { stamp =>
+      stamp.fold(fs.delete(fmtP, false)) { v =>
+        val out = fs.create(fmtP, true)
+        try out.write(v.getBytes("UTF-8")) finally out.close()
+        true
+      }
+      val before = tree()
+      Seq[(String, () => Any)](
+        "commitTranche" -> (() => Curation.commitTranche(t1, 1L, stores)),
+        "retract" -> (() => Curation.retract(spark, t1.select("doc_id"), stores)),
+        "maintainDue" -> (() => Curation.maintainDue(spark, stores))).foreach {
+        case (arc, run) =>
+          val e = intercept[IllegalStateException](run())
+          assert(e.getMessage.contains("re-ingest into a fresh deployment"),
+            s"$arc refusal names no recovery: ${e.getMessage}")
+      }
+      assert(tree() == before, s"a refused writer changed the deployment ($stamp)")
+      val rows = Curation.fsck(spark, stores).collect()
+        .filter(_.getString(0) == "store_format")
+      assert(rows.length == 1 && rows(0).getString(1) == "violation",
+        s"fsck store_format rows with stamp $stamp: ${rows.toSeq}")
+    }
   }
 
   test("a lost id registry refuses the commit instead of forgetting ids") {
@@ -571,36 +573,6 @@ class CurationSpec extends SparkSpec {
         Seq((5000L, "zz lost registry probe text")).toDF("doc_id", "text"),
         1L, stores)
     }
-  }
-
-  test("maintain scrubs retracted rows from pre-index FLAT fingerprint stores") {
-    val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-      .filter(col("doc_id") < 200)
-    val stores = freshStores()
-    Curation.commitTranche(docs, 0L, stores)
-    // a legacy (pre-index) deployment's flat fingerprint tables: these
-    // cannot be appended into (commitTranche refuses them until
-    // migrated) but their ERASURE half must still hold — maintain
-    // scrubs them via the generic doc_id-keyed flat compaction
-    docs.select(col("doc_id"), xxhash64(col("text")).as("hash"))
-      .write.parquet(stores.image)
-    docs.select(col("doc_id"), lit(0).as("frame_idx"),
-        xxhash64(col("text")).as("hash"))
-      .write.parquet(stores.video)
-    val gone = docs.orderBy("doc_id").limit(3).select("doc_id")
-    val goneIds = gone.collect().map(_.getLong(0)).toSet
-    Curation.retract(spark, gone, stores)
-    Curation.maintain(spark, stores)
-    val imgIds = spark.read.parquet(stores.image)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(imgIds.intersect(goneIds).isEmpty,
-      "maintain left retracted rows in the flat image store")
-    assert(imgIds.nonEmpty, "maintain over-erased the flat image store")
-    val vidIds = spark.read.parquet(stores.video)
-      .select("doc_id").collect().map(_.getLong(0)).toSet
-    assert(vidIds.intersect(goneIds).isEmpty,
-      "maintain left retracted rows in the flat video store")
-    assert(vidIds.nonEmpty, "maintain over-erased the flat video store")
   }
 
   test("maintainDue compacts only the stores the metadata says drifted", graft.Slow) {
@@ -1426,82 +1398,12 @@ class CurationSpec extends SparkSpec {
     assert(Curation.repair(spark, stores)
       .exists(_.contains("dropped partial")), "repair kept the partial gen")
     assert(pub()._1 == "ok" && serveIds() == healthy)
-    // stale flat ROOT tables on a generational store (a crashed upgrade
-    // cleanup, ADVICE r13): fsck reports them, repair deletes them
-    fsys.mkdirs(new org.apache.hadoop.fs.Path(s"$dir/centroids"))
-    val res = Curation.fsck(spark, stores).collect()
-      .find(_.getString(0) == "pq_root_residue")
-    assert(res.exists(_.getString(1) == "pending"), s"root residue: $res")
-    assert(Curation.repair(spark, stores)
-      .exists(_.contains("stale pre-generational root table")),
-      "repair left the root residue standing")
-    assert(Curation.fsck(spark, stores).collect()
-      .forall(_.getString(0) != "pq_root_residue"))
-    assert(serveIds() == healthy)
     // gc retention: the retired generation goes, the live one serves
     assert(PQ.completeGens(spark, dir).size == 2)
     Curation.gc(spark, stores)
     assert(PQ.completeGens(spark, dir) == Seq("gen-000002"),
       s"gc retention wrong: ${PQ.completeGens(spark, dir)}")
     assert(serveIds() == healthy)
-  }
-
-  test("flat pq store with only a partial generation: root tables are live, not residue") {
-    // ADVICE r14: a legacy flat store whose FIRST generational
-    // writeIndex crashed before params landed has partial gen(s) but
-    // NO complete one — PQ.liveDir still resolves to the flat root,
-    // so the root tables ARE the serving index. fsck must not call
-    // them residue and repair must not delete them.
-    val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-      .filter(col("doc_id") < 80)
-    val emb = Tables.embeddings(spark, sf())
-    val base = freshStores()
-    val stores = base.copy(pqIndex = s"${base.ledger}_pqflat")
-    def embOf(b: org.apache.spark.sql.DataFrame) = emb.join(
-      b.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-    Curation.commitTranche(docs, 0L, stores, embeddings = Some(embOf(docs)))
-    PQ.writeIndex(embOf(docs).drop("label"), stores.pqIndex,
-      m = 4, k = 4, iters = 1, subWidth = 16)
-    val dir = stores.pqIndex
-    val fsys = StoreSwap.fsOf(spark, dir)
-    def p(s: String) = new org.apache.hadoop.fs.Path(s)
-    // devolve to the legacy flat layout: tables at the root, no
-    // generation, no pointer
-    Seq("params", "centroids", "codes").foreach { t =>
-      assert(fsys.rename(p(s"$dir/gen-000001/$t"), p(s"$dir/$t")),
-        s"fixture: cannot flatten $t")
-    }
-    fsys.delete(p(s"$dir/gen-000001"), true)
-    fsys.delete(p(s"$dir/_current"), false)
-    assert(PQ.liveDir(spark, dir) == dir,
-      "flat store did not resolve to its root")
-    def serveIds() = PQ.adcTopKIndex(
-      embOf(docs.orderBy("doc_id").limit(2)).drop("label"), dir, topK = 3)
-      .select("cid").collect().map(_.getLong(0)).toSet
-    val healthy = serveIds()
-    assert(healthy.nonEmpty, "fixture: flat store does not serve")
-    // the first generational upgrade crashes before params lands:
-    // a partial generation, aged past the in-flight grace window
-    fsys.mkdirs(p(s"$dir/gen-000001/codes"))
-    val aged = System.currentTimeMillis() - 20L * 60 * 1000
-    Seq(s"$dir/gen-000001", s"$dir/gen-000001/codes").foreach(g =>
-      fsys.setTimes(p(g), aged, aged))
-    val rep = Curation.fsck(spark, stores).collect()
-    assert(!rep.exists(_.getString(0) == "pq_root_residue"),
-      "live flat tables mislabeled as residue")
-    val pubRow = rep.find(_.getString(0) == "pq_publish")
-      .map(r => (r.getString(1), r.getString(3)))
-    assert(pubRow.exists(r => r._1 == "pending" && r._2.contains("partial")),
-      s"partial-over-flat state misdiagnosed: $pubRow")
-    val acts = Curation.repair(spark, stores)
-    assert(acts.exists(_.contains("dropped partial")), acts.mkString("; "))
-    assert(!acts.exists(_.contains("root table")),
-      s"repair deleted the live flat index: ${acts.mkString("; ")}")
-    Seq("params", "centroids", "codes").foreach(t =>
-      assert(fsys.exists(p(s"$dir/$t")), s"live flat table $t destroyed"))
-    assert(serveIds() == healthy, "repair broke flat-store serving")
-    assert(Curation.fsck(spark, stores).collect()
-      .forall(_.getString(1) != "violation"))
   }
 
   test("takedown reaches the serving-side PQ index surgically", graft.Slow) {
@@ -1686,35 +1588,6 @@ class CurationSpec extends SparkSpec {
       .filter(col("modality") === "text").collect()
     assert(v.length == 1 && v(0).getString(2) == "exact_dup",
       s"recovered store lost its standing side: ${v.mkString(",")}")
-  }
-
-  test("fsck resolves legacy .retract_<digits> tmps to their cell partition") {
-    val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-      .filter(col("doc_id") < 200)
-    val emb = Tables.embeddings(spark, sf())
-    val stores = freshStores()
-    def embOf(b: org.apache.spark.sql.DataFrame) = emb.join(
-      b.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-    IvfIndex.write(embOf(docs).drop("label"), stores.embedding, k = 4)
-    Curation.commitTranche(docs, 0L, stores, embeddings = Some(embOf(docs)))
-    val vectors = new java.io.File(s"${stores.embedding}/vectors")
-    val victim = vectors.listFiles().filter(_.getName.startsWith("cell=")).head
-    val cellNum = victim.getName.stripPrefix("cell=")
-    // a pre-r12 IvfIndex.removeIds crash left `.retract_<digits>` (no
-    // `cell=` in the tmp name): a prefix-strip alone would derive a
-    // garbage `<digits>` sibling (ADVICE r12)
-    val legacy = new java.io.File(vectors, s".retract_$cellNum")
-    assert(victim.renameTo(legacy))
-    val row = Curation.fsck(spark, stores).collect()
-      .map(r => r.getString(0) -> ((r.getString(1), r.getString(3))))
-      .filter(_._1 == "embedding_ivf_crashed_rewrite").head._2
-    assert(row._1 == "violation" && row._2.contains(s"cell=$cellNum"),
-      s"legacy tmp target not resolved to the cell partition: $row")
-    Curation.repair(spark, stores)
-    assert(victim.exists() && !legacy.exists(),
-      "repair did not restore the legacy-named cell partition")
-    assert(Curation.fsck(spark, stores).filter(col("status") =!= lit("ok"))
-      .count() == 0)
   }
 
   test("commits feed the PQ serving index: kept vectors only, re-run idempotent", graft.Slow) {
@@ -2671,7 +2544,7 @@ class CurationSpec extends SparkSpec {
       s"${stores.ledger}.releases", s"${stores.ledger}.releases.registry",
       s"${stores.ledger}.releases.withdrawn", stores.pqIndex)
     roots.foreach { r =>
-      rm(r); rm(s"$r.init"); rm(s"$r.epoch"); rm(s"$r.gcmark")
+      rm(r); rm(s"$r.init"); rm(s"$r.epoch"); rm(s"$r.gcmark"); rm(s"$r.format")
     }
     val racts = Curation.restore(spark, stores, chained)
     assert(racts.count(_.startsWith("restored")) >= 6,
@@ -2687,6 +2560,11 @@ class CurationSpec extends SparkSpec {
     assert(serveNow() == served, "serving diverged across the drill")
     assert(asofNow() == asof, "corpusAsOf diverged across the drill")
     assert(relNow() == rel, "readRelease diverged across the drill")
+    // the restored deployment carries its store format and commits
+    assert(new java.io.File(s"${stores.ledger}.format").isFile &&
+      Curation.commitTranche(Tables.documents(spark, sf()).select("doc_id", "text")
+        .filter(col("doc_id") >= 150 && col("doc_id") < 160), 3L, stores).count() > 0,
+      "the restored deployment lost its store format")
   }
 
   test("scheduled snapshots: maintainDue takes one iff the deployment drifted", graft.Slow) {

@@ -105,8 +105,6 @@ class StoreLayoutSpec extends SparkSpec {
 
   test("flat tables read correctly, declared flat or left from a legacy layout") {
     val params = s"${dep.stores.textIndex}/params"
-    assert(!StoreLayout.isFlat(spark, s"${dep.stores.textIndex}/bands"))
-    assert(StoreLayout.isFlat(spark, params))
     assert(rows(StoreLayout.read(spark, params, Dedup.ParamsTable)) ==
       rows(spark.read.parquet(params)))
     // a pre-partitioned flat copy of a partitioned table: read whole,
@@ -114,7 +112,6 @@ class StoreLayoutSpec extends SparkSpec {
     val flat = Files.createTempDirectory("flat").toString + "/members"
     spark.read.parquet(s"${dep.stores.image}/members").drop("hp")
       .write.parquet(flat)
-    assert(StoreLayout.isFlat(spark, flat))
     val mine = StoreLayout.read(spark, flat, ImageHash.MembersTable, Some(Seq(1, 2)))
     assert(!mine.columns.contains("hp"))
     assert(rows(mine) == rows(spark.read.parquet(flat)))

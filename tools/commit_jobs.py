@@ -7,8 +7,9 @@ and, for the jobs that started inside each `commitTranche` span (or the
 span named by `--span`), prints one row per phase label: jobs, summed
 task seconds, and wall seconds (the union of the phase's job intervals).
 The phase label is the job's description after `commitTranche(<id>)/`,
-as `Curation.commitTranche` sets it; a job without one is listed under
-`(unlabelled) <engine frame or call site>`. Rows are summed over every
+as `Curation.commitTranche` sets it, or the whole description for the
+other writer-locked arcs (`retract`, `maintainDue`, ...); a job without
+one is listed under `(unlabelled) <engine frame or call site>`. Rows are summed over every
 commit span of the file; `--per-span` divides them by the span count.
 """
 import argparse
@@ -34,9 +35,12 @@ def union_seconds(intervals):
 
 
 def phase_of(job):
-    m = LABEL.match(job.get("desc", ""))
+    desc = job.get("desc", "")
+    m = LABEL.match(desc)
     if m:
         return m.group(1)
+    if desc:
+        return desc[:40]
     where = job.get("frame") or job.get("site") or "?"
     return "(unlabelled) " + re.sub(r"\$anonfun\$|\$\d+", "", where)[:60]
 
