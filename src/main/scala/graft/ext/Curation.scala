@@ -1739,8 +1739,8 @@ object Curation {
     if (relpath.isEmpty) s"$loc/$role" else s"$loc/$role/$relpath"
 
   // the sidecars a role's tables depend on: the init marker (a dir),
-  // the epoch counter, the applied-epoch watermark, and (the ledger's)
-  // the store format stamp
+  // the epoch counter, the applied-epoch watermark, and the ledger's
+  // store format stamp
   private val SidecarSuffixes = Seq("init", "epoch", "gcmark", "format")
   private def copySidecars(spark: SparkSession, src: String,
                            destRole: String): Unit =
@@ -3097,9 +3097,10 @@ object Curation {
       add("pq_index", "vectors")(
         spark.read.parquet(s"$pqCensusLive/codes")
           .select("vec_id").distinct().count())
-      // retired generations awaiting gc; counts generations OLDER than live — a complete generation
-      // NEWER than the pointer is a crashed publish (fsck pq_publish
-      // pending, repair publishes it), not reclaimable backlog
+      // retired generations awaiting gc: generations OLDER than live —
+      // a complete generation NEWER than the pointer is a crashed
+      // publish (fsck pq_publish pending, repair publishes it), not
+      // reclaimable backlog
       add("pq_index", "retired_generations")(
         PQ.retiredGens(spark, stores.pqIndex).size.toLong)
     }
@@ -3234,9 +3235,9 @@ object Curation {
         Some(spark.read.parquet(reg).select("doc_id"))
       else None
     val tombRows =
-      if (exists(spark, tombstonesDir(stores)))
-        Some(spark.read.parquet(tombstonesDir(stores)).select("doc_id", "epoch"))
-      else None
+      if (!exists(spark, tombstonesDir(stores))) None
+      else Some(spark.read.parquet(tombstonesDir(stores))
+        .select("doc_id", "epoch"))
     val tomb = tombRows.map(_.select("doc_id").dropDuplicates())
     // anchored at max(table, sidecar counter): tombstone compaction
     // collapses each doc to its EARLIEST epoch, so after a re-run

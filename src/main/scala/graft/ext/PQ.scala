@@ -351,9 +351,8 @@ object PQ {
     * and every publish crash state — the newest complete generation
     * is always a correct, consistent index), else `dir` itself: no
     * complete generation, the index is not trained yet. Callers inside
-    * one logical
-    * operation resolve ONCE and reuse the path, so the operation
-    * never spans generations.
+    * one logical operation resolve ONCE and reuse the path, so the
+    * operation never spans generations.
     */
   def liveDir(spark: org.apache.spark.sql.SparkSession,
               dir: String): String =
@@ -500,8 +499,8 @@ object PQ {
 
   /** The (vec_id, sub, cell) code rows [[appendIndexOnce]] still has to
     * append for `newEmb` into the live generation `live` (whose
-    * `subWidth` the caller read): every
-    * code of `newEmb` through the frozen codebook, minus the rows its
+    * `subWidth` the caller read): every code of `newEmb` through the
+    * frozen codebook, minus the rows its
     * id buckets `parts` already hold. `parts` must cover `newEmb`'s id
     * buckets ([[StoreLayout.partsOf]]). Reads no verdict, so the commit
     * derives it for the whole tranche before its verdicts and appends
