@@ -1889,10 +1889,9 @@ object Curation {
       }
       val all = roleActions ++ pqActions
       val depth: Long = base.map(b =>
-        try spark.read.parquet(s"$b/_meta").select("depth")
+        spark.read.parquet(s"$b/_meta").select("depth")
           .limit(1).collect().headOption.map(_.getLong(0) + 1L)
-          .getOrElse(1L)
-        catch { case _: org.apache.spark.sql.AnalysisException => 1L })
+          .getOrElse(1L))
         .getOrElse(0L)
       // the per-file manifest FIRST, `_meta` last: a snapshot whose
       // write crashed between them has no `_meta` and restore refuses
@@ -2011,9 +2010,7 @@ object Curation {
       val standing = listSnapDirs(spark, destRoot)
       val dest =
         f"$destRoot/snap-${standing.map(_._1).foldLeft(-1L)(math.max) + 1}%06d"
-      val newestDepth = newest.map(r =>
-        if (r.schema.fieldNames.contains("depth")) r.getAs[Long]("depth")
-        else 0L).getOrElse(0L)
+      val newestDepth = newest.map(_.getAs[Long]("depth")).getOrElse(0L)
       val base =
         if (newestIntact && newestDepth < maxChain) newestDest else None
       val rotNote =
