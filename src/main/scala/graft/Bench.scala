@@ -1,5 +1,7 @@
 package graft
 import org.apache.spark.sql.SparkSession
+
+import graft.queries.Builds
 object Bench {
 
   /** Reader for a prior round's bench output: extracts per-query seconds.
@@ -30,10 +32,11 @@ object Bench {
         else txt
       // value must start with a digit/sign so `"sf":"/root/..."` and other
       // string-valued keys never match; keys are ALLOWLISTED to the
-      // current query surface + the two build line items (ADVICE r6:
-      // the old metadata-key denylist let any future numeric wrapper
-      // key silently enter the map and fire phantom regressions).
-      val queryNames = SparkEntry.queries.keySet ++ buildItems
+      // current query surface + the build line items, which the gate
+      // compares like any query (VERDICT r7 #1) (ADVICE r6: the old
+      // metadata-key denylist let any future numeric wrapper key
+      // silently enter the map and fire phantom regressions).
+      val queryNames = SparkEntry.queries.keySet ++ Builds.table.map(_._1)
       "\"([A-Za-z0-9_]+)\":(-?[0-9][0-9.eE+-]*)".r.findAllMatchIn(body)
         .map(m => m.group(1) -> m.group(2).toDouble)
         .filter { case (k, _) => queryNames(k) }
@@ -41,24 +44,59 @@ object Bench {
     } catch { case _: Throwable => Map.empty }
   }
 
-  /** The shared pre-built line items: one-shot builds timed outside the
-    * two query passes but compared by the regression gate like any query
-    * (VERDICT r7 #1 — the r6 gate compared declared queries only, so
-    * `neardup_pairs_build` doubled without tripping it).
+  /** Temp root for a session-keyed deployment ([[graft.queries.Builds
+    * .deployment]]), with a janitor sweep (VERDICT r13 nit #3): siblings
+    * with the same prefix left by earlier runs are dead weight in the
+    * temp dir — reclaim any older than two hours (old enough that no
+    * live session still reads them; a concurrent run's fresh deployment
+    * is never touched).
     */
-  private[graft] val buildItems = Set(
-    "synthlinks_build", "neardup_pairs_build", "pq_train_build",
-    "kmeans_train_build", "quality_train_build", "neardup_index_build",
-    "ledger_kernels_build", "unigram_train_build",
-    "curation_bootstrap_build", "curation_commit_build",
-    "phash_index_build", "videoseq_index_build", "commit_sequence_build",
-    "retraction_build", "fsck_audit_build", "pq_serve_build",
-    "pq_commit_build", "release_publish_build", "recall_probe_build",
-    "release_registry_build")
+  private[graft] def freshDeploymentRoot(prefix: String): String = {
+    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
+    val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
+    def deleteRec(f: java.io.File): Unit = {
+      val kids = f.listFiles()
+      if (kids != null) kids.foreach(deleteRec)
+      f.delete(); ()
+    }
+    // ownership guard (ADVICE r14): a >2h run on a loaded box must not
+    // have its LIVE cached deployment swept by a newer concurrent run —
+    // each root carries its creator's pid, and the janitor skips any
+    // sibling whose owner process is still alive (the age cutoff alone
+    // was the race)
+    def ownerAlive(f: java.io.File): Boolean = {
+      val owner = new java.io.File(f, ".owner")
+      if (!owner.isFile) false
+      else
+        try {
+          val pid = new String(java.nio.file.Files
+            .readAllBytes(owner.toPath), "UTF-8").trim
+          // ProcessHandle, not a /proc probe: /proc exists only on
+          // Linux, and "every owner reads dead" elsewhere is exactly
+          // the concurrent-run race this guard closes (ADVICE r15)
+          pid.nonEmpty && pid.length <= 18 && pid.forall(_.isDigit) &&
+            ProcessHandle.of(pid.toLong)
+              .map[java.lang.Boolean](h => Boolean.box(h.isAlive))
+              .orElse(java.lang.Boolean.FALSE).booleanValue
+        } catch { case _: java.io.IOException => false }
+    }
+    val sibs = tmpRoot.listFiles()
+    if (sibs != null)
+      sibs.filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
+        f.lastModified < cutoff && !ownerAlive(f)).foreach(deleteRec)
+    val root = java.nio.file.Files.createTempDirectory(prefix)
+    java.nio.file.Files.write(root.resolve(".owner"),
+      ProcessHandle.current.pid.toString.getBytes("UTF-8"))
+    root.toString
+  }
 
-  def main(args: Array[String]): Unit = {
+  /** The bench session over `SPARK_GRAFT_SF_DIR`, warmed up untimed so
+    * the timed builds and queries measure themselves, not JVM start.
+    * ProfileBuild starts from the same state.
+    */
+  private[graft] def session(defaultCpus: String): (SparkSession, String) = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
@@ -67,24 +105,14 @@ object Bench {
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // SPARK_GRAFT_SKIP_BUILDS=1 skips every one-shot build line item
-    // (their seconds report 0) — an ADJUDICATION/ITERATION knob, never
-    // set by the driver: it isolates whether declared-query times are
-    // inflated by the builds' shared-session residue (temp-dir
-    // deployments, shuffle files, JVM/GC pressure) rather than by the
-    // queries themselves. Queries that consume a build's memoized
-    // artifact pay its construction inline on first touch, so only
-    // build-independent queries are comparable under this flag.
-    val skipBuilds = sys.env.get("SPARK_GRAFT_SKIP_BUILDS").contains("1")
-    // Untimed warmup: touch every table (parquet footers, codegen, JIT)
-    // so per-query timings measure the queries, not JVM start.
+    // touch every table (parquet footers, codegen, JIT)
     Seq("region", "nation", "customer", "supplier", "part", "orders",
       "lineitem", "events", "documents", "embeddings").foreach { t =>
       try spark.read.parquet(s"$sfDir/$t.parquet").count()
       catch { case _: Throwable => }
     }
-    // Untimed codegen/JIT warmup of the MinHash-LSH pipeline on a
-    // 64-doc sample: the pair build's generated classes (WordShingles,
+    // codegen/JIT warmup of the MinHash-LSH pipeline on a 2048-doc
+    // sample: the pair build's generated classes (WordShingles,
     // signature aggs, band join, SortedLongIntersect) first-compile
     // here, so the timed `neardup_pairs_build` measures the
     // data-proportional work (~1.5 s warm at sf0.1) instead of ~3.5 s
@@ -94,180 +122,24 @@ object Bench {
       graft.model.Tables.documents(spark, sfDir).limit(2048),
       "doc_id", "text").count()
     catch { case _: Throwable => }
-    // One-shot build line items: each shared persisted/memoized
-    // artifact is constructed up front and timed as its own visible
-    // line (VERDICT r2/r7: whichever query ran first used to absorb
-    // the build cost, and untimed builds escaped the regression gate).
-    def build(label: String)(body: => Unit): Double = {
+    (spark, sfDir)
+  }
+
+  def main(args: Array[String]): Unit = {
+    val (spark, sfDir) = session("4")
+    // One-shot build line items, in the build table's order: each shared
+    // persisted/memoized artifact is constructed up front and timed as
+    // its own visible line (VERDICT r2/r7: whichever query ran first used
+    // to absorb the build cost, and untimed builds escaped the
+    // regression gate). A failed build is reported and its time kept.
+    val builds = Builds.table.map { case (name, build) =>
       val t0 = System.nanoTime()
-      if (!skipBuilds)
-        try body
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $label failed: ${e.getMessage}")
-        }
-      (System.nanoTime() - t0) / 1e9
-    }
-    // the shared persisted SynthLinks intermediate: ~16 queries start
-    // from it
-    val linksSec = build("synthlinks warm") {
-      graft.queries.SynthLinks.links(spark, sfDir).count(); ()
-    }
-    // the shared MinHash-LSH pair intermediate (x2/x17/x38/x58/x61):
-    // per-query numbers are cache-hit times for all five consumers
-    // regardless of Map iteration order
-    val pairsSec = build("pairs warm") {
-      graft.queries.ExtQueries.warmPairs(spark, sfDir)
-    }
-    // PQ + coarse-k-means training (VERDICT r7 #5): x27/x51/x52/x53
-    // start from the same memoized codebooks. The caches are NOT
-    // cleared between passes — that clearing (ADVICE r4) predates
-    // these build line items and made x51's time 80% training.
-    val pqSec = build("pq warm") {
-      graft.queries.ExtQueries.warmPqTraining(spark, sfDir)
-    }
-    val kmSec = build("kmeans warm") {
-      graft.queries.ExtQueries.warmKmeansTraining(spark, sfDir)
-    }
-    // perceptron-trained quality weights (x93 + x102 share them)
-    val qwSec = build("quality-train warm") {
-      graft.queries.ExtQueries.warmQualityTraining(spark, sfDir)
-    }
-    // x87's STANDING near-dup index: built once per corpus commit in
-    // production (the persisted writeNearDupIndex artifact), so the
-    // declared x87 measures the recurring per-tranche probe
-    // (VERDICT r8 #1)
-    val niSec = build("neardup-index warm") {
-      graft.queries.ExtQueries.warmNearDupIndex(spark, sfDir)
-    }
-    // x112's kernel frames (per-modality cluster/canonical
-    // assignments, removal masses, contamination set): the standing
-    // pipeline's own once-per-corpus-commit outputs
-    val lkSec = build("ledger-kernels warm") {
-      graft.queries.ExtQueries.warmLedgerKernels(spark, sfDir)
-    }
-    // unigram-LM tokenizer training (x113's model, x106's fertility)
-    val utSec = build("unigram warm") {
-      graft.queries.ExtQueries.warmUnigramTraining(spark, sfDir)
-    }
-    // the r11 persisted standing stores: banded image-hash index
-    // (x117's standing side), video sequence index (x121's), the
-    // two-tranche commit sequence whose on-disk ledger x124 reads
-    // back, the retraction arc (x125: commit → retract → tombstoned
-    // commit → maintain → post-GC commit, priced end-to-end), and the
-    // fsck deployment (x127: frozen BEFORE maintenance, mixed
-    // ok/pending report)
-    val piSec = build("phash-index warm") {
-      graft.queries.ExtQueries.warmPhashIndex(spark, sfDir)
-    }
-    val viSec = build("videoseq-index warm") {
-      graft.queries.ExtQueries.warmSeqIndex(spark, sfDir)
-    }
-    val csSec = build("commit-sequence warm") {
-      graft.queries.ExtQueries.warmCommitSequence(spark, sfDir)
-    }
-    val rtSec = build("retraction warm") {
-      graft.queries.ExtQueries.warmRetraction(spark, sfDir)
-    }
-    val faSec = build("fsck-audit warm") {
-      graft.queries.ExtQueries.warmFsck(spark, sfDir)
-    }
-    // x128's serving deployment: PQ index trained on the full corpus,
-    // then the takedown erasure applied — the declared row measures
-    // the recurring disk-ADC serve over the erased store
-    val psSec = build("pq-serve warm") {
-      graft.queries.ExtQueries.warmPqServe(spark, sfDir)
-    }
-    // x129's full serving lifecycle: two commits (the second feeding
-    // the PQ serving store from inside the commit window) + takedown +
-    // scheduled maintenance — the declared row measures the recurring
-    // disk-ADC serve over the store the commits fed
-    val pcSec = build("pq-commit warm") {
-      graft.queries.ExtQueries.warmPqCommitServe(spark, sfDir)
-    }
-    // x134's release publishes over the retraction deployment (already
-    // warmed above, so this line prices the three publishRelease calls
-    // + their post-publish verification, not the deployment build)
-    val rpSec = build("release-publish warm") {
-      graft.queries.ExtQueries.warmReleases(spark, sfDir)
-    }
-    // the sampled self-recall probe over the x129 serving deployment
-    // (VERDICT r14 missing #3), priced as its own line: maintainDue
-    // runs it every scheduled window when minRecall is set, so the
-    // line staying sample-bounded (not corpus-priced) IS the probe's
-    // scale argument
-    val rcSec = build("recall-probe warm") {
-      graft.queries.ExtQueries.warmRecallProbe(spark, sfDir)
-    }
-    // x138's dedicated micro-deployment (two commits + two publishes +
-    // one audited withdrawal) — its own line so the query prices the
-    // registry READ, not the arc
-    val rrSec = build("release-registry warm") {
-      graft.queries.ExtQueries.warmReleaseRegistry(spark, sfDir)
-    }
-    // the production ingestion loop itself (Curation.commitTranche),
-    // timed end-to-end in two line items following the x87 discipline:
-    // the one-time deployment bootstrap (IVF codebook training on the
-    // initial corpus slice + 25% of the corpus onto empty stores) and
-    // the RECURRING steady-state commit (a 5% tranche probing real
-    // standing stores — probe-pruned text index, cell-pruned IVF
-    // embedding store — ledger append, index appends). Since r11 the
-    // benched loop is the full 100 TB shape: every standing side is
-    // read through literal partition filters, so THIS line is the one
-    // that must stay tranche-proportional as deployments grow (the
-    // doubled-standing flatness pair is asserted in ScaleSmoke).
-    // Text + embedding modalities — the video/perceptual verdict
-    // kernels are gated by their own declared rows (x117/x118/x121).
-    import org.apache.spark.sql.functions.col
-    // janitored like the x125/x127/x128/x129 deployments: stale
-    // benchcur roots from prior driver rounds are swept before creating
-    val curRoot = graft.queries.ExtQueries.freshDeploymentRoot("benchcur")
-    val curStores = graft.ext.Curation.Stores(s"$curRoot/text",
-      s"$curRoot/img", s"$curRoot/aud", s"$curRoot/vid", s"$curRoot/emb",
-      s"$curRoot/led")
-    val curDocs = graft.model.Tables.documents(spark, sfDir)
-      .select("doc_id", "text")
-    val curEmb = graft.model.Tables.embeddings(spark, sfDir)
-    def curCommit(t: Long, pred: org.apache.spark.sql.Column,
-                  withEmb: Boolean): Unit = {
-      val b = curDocs.filter(pred)
-      graft.ext.Curation.commitTranche(b, t, curStores,
-        embeddings = if (!withEmb) None
-        else Some(curEmb.join(
-          b.select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")))
-      ()
-    }
-    val tCb0 = System.nanoTime()
-    val cbOk = !skipBuilds &&
-      (try {
-        // codebook trained on the bootstrap slice's embeddings; the
-        // bootstrap tranche itself commits without the embedding
-        // modality (its vectors ARE the trained store — re-appending
-        // them would only duplicate rows)
-        graft.ext.IvfIndex.write(
-          curEmb.join(curDocs.filter(col("doc_id") % 4 === 0)
-            .select(col("doc_id").as("vec_id")), Seq("vec_id"), "left_semi")
-            .select("vec_id", "embedding"),
-          curStores.embedding)
-        curCommit(0L, col("doc_id") % 4 === 0, withEmb = false)
-        true
-      }
+      try build(spark, sfDir)
       catch { case e: Throwable =>
-        System.err.println(s"[bench] curation bootstrap failed: ${e.getMessage}")
-        false
-      })
-    val cbSec = (System.nanoTime() - tCb0) / 1e9
-    // a steady-state commit against half-bootstrapped stores would
-    // record a misleadingly cheap minimum that poisons the regression
-    // baseline — skip it when the bootstrap failed
-    val tCc0 = System.nanoTime()
-    if (cbOk)
-      try curCommit(1L, col("doc_id") % 20 === 1, withEmb = true)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] curation commit failed: ${e.getMessage}")
+        System.err.println(s"[bench] $name failed: ${e.getMessage}")
       }
-    else if (!skipBuilds)
-      System.err.println("[bench] curation commit skipped: bootstrap failed")
-    val ccSec = (System.nanoTime() - tCc0) / 1e9
+      name -> (System.nanoTime() - t0) / 1e9
+    }
     // Two timed passes, report the per-query MINIMUM. A single pass is
     // hostage to whatever else the container is doing (the r3 driver run
     // recorded 16.3 s for a query that takes ~3 s locally); min-of-two
@@ -302,17 +174,7 @@ object Bench {
     // consumer runs first in p2
     val p2 = onePass()
     val results0 = p1.map { case (k, v) => k -> math.min(v, p2.getOrElse(k, v)) }
-    val results = results0 +
-      ("synthlinks_build" -> linksSec) + ("neardup_pairs_build" -> pairsSec) +
-      ("pq_train_build" -> pqSec) + ("kmeans_train_build" -> kmSec) +
-      ("quality_train_build" -> qwSec) + ("neardup_index_build" -> niSec) +
-      ("ledger_kernels_build" -> lkSec) + ("unigram_train_build" -> utSec) +
-      ("curation_bootstrap_build" -> cbSec) + ("curation_commit_build" -> ccSec) +
-      ("phash_index_build" -> piSec) + ("videoseq_index_build" -> viSec) +
-      ("commit_sequence_build" -> csSec) + ("retraction_build" -> rtSec) +
-      ("fsck_audit_build" -> faSec) + ("pq_serve_build" -> psSec) +
-      ("pq_commit_build" -> pcSec) + ("release_publish_build" -> rpSec) +
-      ("recall_probe_build" -> rcSec) + ("release_registry_build" -> rrSec)
+    val results = results0 ++ builds
     // Regression gate vs the previous round's bench (VERDICT r4 #9,
     // repaired per VERDICT r5 #1): any query >2x its prior min is flagged
     // loudly NOW, in-round. Prev defaults to the committed bench_full.json
@@ -345,11 +207,7 @@ object Bench {
     // file — the driver's BENCH_r{N}.json keeps only the last 2000 chars
     // of stdout, which truncated every line since r3. Next round's gate
     // reads this file, not a tail.
-    // a skip-builds experiment must never overwrite the committed
-    // artifact: its zero build seconds would poison the next round's
-    // regression baseline as phantom minima
-    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL",
-      if (skipBuilds) "bench_skipbuilds.json" else "bench_full.json")
+    val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_FULL", "bench_full.json")
     val fullJson =
       s"""{"metric":"total","value":$total,"unit":"sec","sf":"$sfDir","compared":$compared,"queries":${jmap(results)},"pass1":${jmap(p1)},"pass2":${jmap(p2)},"regressions":$regs,"failed":$fs}"""
     try {

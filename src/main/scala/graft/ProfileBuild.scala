@@ -1,30 +1,32 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
+
+import graft.queries.Builds
 
 /** Round-17 measurement harness (guide §1): runs ONE named bench build
   * (or declared query) under a SparkListener that records every job's
   * wall-clock, description and stage breakdown, then prints a sorted
-  * per-job table. Purely diagnostic — never invoked by the driver.
+  * per-job table. The target is looked up in [[Builds.table]], and the
+  * session starts where Bench's does. Purely diagnostic — never invoked
+  * by the driver.
   *
   * Usage: sbt "runMain graft.ProfileBuild pq_commit_build"
   */
 object ProfileBuild {
-  private case class JobRec(id: Int, desc: String, var ms: Long = 0,
-                            start: Long = 0)
-
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val (spark, sfDir) = Bench.session("32")
+    val target = args.headOption.getOrElse("pq_commit_build")
+    val at = Builds.table.indexWhere(_._1 == target)
+    val body: Builds.Build =
+      if (at >= 0) Builds.table(at)._2
+      else if (SparkEntry.queries.contains(target))
+        (s, d) => SparkEntry.queries(target)(s, d).count()
+      else sys.error(s"unknown target $target")
+    // price what Bench prices: every build Bench times before the target
+    // (all of them, before a declared query) runs first, untimed
+    Builds.table.take(if (at >= 0) at else Builds.table.size)
+      .foreach { case (_, build) => build(spark, sfDir) }
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long, Long)]()
     var stageTasks = 0L
@@ -59,39 +61,8 @@ object ProfileBuild {
       }
     })
 
-    // same warmup as Bench so the first job's JIT does not pollute
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "events", "documents", "embeddings").foreach { t =>
-      try spark.read.parquet(s"$sfDir/$t.parquet").count()
-      catch { case _: Throwable => }
-    }
-    try graft.ext.Dedup.minhashLshPairs(
-      graft.model.Tables.documents(spark, sfDir).limit(2048),
-      "doc_id", "text").count()
-    catch { case _: Throwable => }
-    jobs.clear()
-
-    val target = args.headOption.getOrElse("pq_commit_build")
-    import graft.queries.ExtQueries
-    val body: () => Unit = target match {
-      case "pq_commit_build" => () => ExtQueries.warmPqCommitServe(spark, sfDir)
-      case "retraction_build" => () => ExtQueries.warmRetraction(spark, sfDir)
-      case "release_registry_build" => () => ExtQueries.warmReleaseRegistry(spark, sfDir)
-      case "commit_sequence_build" => () => ExtQueries.warmCommitSequence(spark, sfDir)
-      case "fsck_audit_build" => () => ExtQueries.warmFsck(spark, sfDir)
-      case "recall_probe_build" => () => { ExtQueries.warmPqCommitServe(spark, sfDir); jobs.clear(); ExtQueries.warmRecallProbe(spark, sfDir) }
-      case "pq_serve_build" => () => ExtQueries.warmPqServe(spark, sfDir)
-      case "release_publish_build" => () => { ExtQueries.warmRetraction(spark, sfDir); jobs.clear(); ExtQueries.warmReleases(spark, sfDir) }
-      case "quality_train_build" => () => ExtQueries.warmQualityTraining(spark, sfDir)
-      case "ledger_kernels_build" => () => ExtQueries.warmLedgerKernels(spark, sfDir)
-      case "neardup_pairs_build" => () => ExtQueries.warmPairs(spark, sfDir)
-      case "curation_builds" => () => ()  // handled below
-      case q if SparkEntry.queries.contains(q) =>
-        () => { SparkEntry.queries(q)(spark, sfDir).count(); () }
-      case other => sys.error(s"unknown target $other")
-    }
     val t0 = System.nanoTime()
-    body()
+    body(spark, sfDir)
     val totalSec = (System.nanoTime() - t0) / 1e9
 
     import scala.jdk.CollectionConverters._

