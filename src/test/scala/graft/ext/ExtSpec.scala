@@ -2363,13 +2363,17 @@ class ExtSpec extends SparkSpec {
         Files.readAttributes(f.toPath,
           classOf[java.nio.file.attribute.BasicFileAttributes])
           .creationTime.toMillis >= started)
-    assert(prefixes.forall(p => roots.exists(_.getName.startsWith(p))),
-      s"premise: each fixture built a root in this JVM: $roots")
-    val pid = ProcessHandle.current.pid.toString
-    val unowned = roots.filterNot { r =>
-      val owner = new java.io.File(r, ".owner")
-      owner.isFile && new String(Files.readAllBytes(owner.toPath), "UTF-8").trim == pid
+    def owner(r: java.io.File): Option[String] = {
+      val f = new java.io.File(r, ".owner")
+      if (f.isFile) Some(new String(Files.readAllBytes(f.toPath), "UTF-8").trim)
+      else None
     }
-    assert(unowned.isEmpty, s"fixture roots without this JVM's owner stamp: $unowned")
+    // another JVM building the same fixtures meanwhile stamps its own pid
+    val unowned = roots.filter(owner(_).isEmpty)
+    assert(unowned.isEmpty, s"fixture roots without an owner stamp: $unowned")
+    val pid = ProcessHandle.current.pid.toString
+    assert(prefixes.forall(p => roots.exists(r =>
+      r.getName.startsWith(p) && owner(r).contains(pid))),
+      s"premise: each fixture built a root stamped by this JVM: $roots")
   }
 }
