@@ -15,14 +15,15 @@ import graft.queries.Builds
   */
 object ProfileBuild {
   def main(args: Array[String]): Unit = {
-    val (spark, sfDir) = Bench.session("32")
-    val target = args.headOption.getOrElse("pq_commit_build")
+    val target = args.headOption.getOrElse(
+      sys.error("usage: ProfileBuild <build item or declared query>"))
     val at = Builds.table.indexWhere(_._1 == target)
     val body: Builds.Build =
       if (at >= 0) Builds.table(at)._2
       else if (SparkEntry.queries.contains(target))
         (s, d) => SparkEntry.queries(target)(s, d).count()
       else sys.error(s"unknown target $target")
+    val (spark, sfDir) = Bench.session("32")
     // price what Bench prices: every build Bench times before the target
     // (all of them, before a declared query) runs first, untimed
     Builds.table.take(if (at >= 0) at else Builds.table.size)
