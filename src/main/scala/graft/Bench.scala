@@ -168,10 +168,6 @@ object Bench {
       name -> (System.nanoTime() - t0) / 1e9
     }
     val p1 = onePass()
-    // no cache clearing between passes: pairs, PQ and k-means training
-    // are pre-built, separately-timed line items, so both passes should
-    // hit them — clearing would charge regeneration to whichever
-    // consumer runs first in p2
     val p2 = onePass()
     val results0 = p1.map { case (k, v) => k -> math.min(v, p2.getOrElse(k, v)) }
     val results = results0 ++ builds
