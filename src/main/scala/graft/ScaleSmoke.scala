@@ -605,7 +605,8 @@ object ScaleSmoke {
       .select(pmod(xxhash64(col("vec_id")), lit(64L)).as("p"))
       .distinct().collect().map(r => s"idp=${r.getLong(0)}").toSet
     val tPqE = System.nanoTime()
-    graft.ext.PQ.removeIdsIndex(spark, pqDir, eraseIds)
+    graft.ext.Maintenance.erase(spark, graft.ext.PQ.codesStore(spark, pqDir),
+      eraseIds)
     val pqESec = (System.nanoTime() - tPqE) / 1e9
     val pqSnapA = bucketSnapshot(pqLiveCodes)
     pqSnapB.foreach { case (d2, files) =>

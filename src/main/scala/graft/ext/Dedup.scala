@@ -769,25 +769,29 @@ object Dedup {
     */
   def writeNearDupIndexFrames(idx: NearDupIndexFrames, dir: String): Unit =
     StoreSwap.concurrently(
-      () => StoreLayout.appendBuckets(
-        idx.bands.withColumn("bkp", StoreLayout.part(col("bk"))), "bkp",
-        s"$dir/bands"),
-      () => StoreLayout.appendBuckets(
-        idx.sets.withColumn("chp", StoreLayout.part(col("ch"))), "chp",
-        s"$dir/sets"),
-      () => StoreLayout.appendBuckets(
-        idx.members.withColumn("chp", StoreLayout.part(col("ch"))), "chp",
+      () => StoreLayout.appendBuckets(idx.bands, BandsTable, s"$dir/bands"),
+      () => StoreLayout.appendBuckets(idx.sets, SetsTable, s"$dir/sets"),
+      () => StoreLayout.appendBuckets(idx.members, MembersTable,
         s"$dir/members"))
 
-  // the persisted tables' read shapes (what the writers above produce;
-  // StoreLayoutSpec pins each against its writer)
+  // the persisted tables (what the writers above produce; StoreLayoutSpec
+  // pins each against its writer). Content-keyed: a takedown scrubs
+  // members, then the bands and sets of contents left with no member
   private[ext] val ParamsTable = StoreLayout.Table("k INT, bands INT, rows INT")
   private[ext] val BandsTable =
-    StoreLayout.Table("ch STRING, bk STRING, bkp INT", "bkp")
+    StoreLayout.Table("ch STRING, bk STRING, bkp INT", Seq("bkp"), key = "bk",
+      collapse = Some(Seq("ch", "bk")), erase = StoreLayout.ByContent("ch"))
   private[ext] val SetsTable =
-    StoreLayout.Table("ch STRING, sh ARRAY<BIGINT>, chp INT", "chp")
+    StoreLayout.Table("ch STRING, sh ARRAY<BIGINT>, chp INT", Seq("chp"),
+      key = "ch", collapse = Some(Seq("ch")), erase = StoreLayout.ByContent("ch"))
   private[ext] val MembersTable =
-    StoreLayout.Table("id BIGINT, ch STRING, chp INT", "chp")
+    StoreLayout.Table("id BIGINT, ch STRING, chp INT", Seq("chp"), key = "ch",
+      collapse = Some(Seq("id", "ch")), erase = StoreLayout.ById("id"))
+
+  /** The near-dup index under `dir` as one maintained store. */
+  private[graft] def nearDupStore(dir: String): Maintenance.Store =
+    Maintenance.Store(dir, Seq("bands" -> BandsTable, "sets" -> SetsTable,
+      "members" -> MembersTable, "params" -> ParamsTable))
 
   /** The persisted shingle/band geometry: (k, bands, rows). Probes of a
     * persisted index must run with exactly these.
@@ -805,10 +809,8 @@ object Dedup {
   def readNearDupIndex(spark: org.apache.spark.sql.SparkSession,
                        dir: String): NearDupIndexFrames =
     NearDupIndexFrames(
-      spark.read.parquet(s"$dir/bands").drop("bkp")
-        .dropDuplicates("ch", "bk"),
-      spark.read.parquet(s"$dir/sets").drop("chp")
-        .dropDuplicates("ch"),
+      BandsTable.collapsed(spark.read.parquet(s"$dir/bands").drop("bkp")),
+      SetsTable.collapsed(spark.read.parquet(s"$dir/sets").drop("chp")),
       spark.read.parquet(s"$dir/members").drop("chp"))
 
   /** PRUNED standing view of a persisted index for probing with the
@@ -878,15 +880,16 @@ object Dedup {
     }
     val bandsP = StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
       .filter(col("bkp").isin(bkps: _*)).drop("bkp")
-    val bands0 = bandsP.dropDuplicates("ch", "bk")
+    val bands0 = BandsTable.collapsed(bandsP)
     // contents this probe can touch: the tranche's own (exact-dup
     // lookups) plus any content colliding in the pruned bands (candidate
     // partners) — both bounded, collected as literals
     val chps = (chpsT ++ StoreLayout.partsOf(bandsP, col("ch"))).distinct
     val members0 = StoreLayout.read(spark, s"$dir/members", MembersTable, Some(chps))
       .filter(col("chp").isin(chps: _*)).drop("chp")
-    val sets0 = StoreLayout.read(spark, s"$dir/sets", SetsTable, Some(chps))
-      .filter(col("chp").isin(chps: _*)).drop("chp").dropDuplicates("ch")
+    val sets0 = SetsTable.collapsed(
+      StoreLayout.read(spark, s"$dir/sets", SetsTable, Some(chps))
+        .filter(col("chp").isin(chps: _*)).drop("chp"))
     val members = ckpt(excludeIds.fold(members0)(ids =>
       members0.join(broadcast(ids.select(col(ids.columns.head).as("id"))),
         Seq("id"), "left_anti")))
@@ -898,143 +901,6 @@ object Dedup {
       ckpt(bands0.join(live, Seq("ch"), "left_semi")),
       ckpt(sets0.join(live, Seq("ch"), "left_semi")),
       members)
-  }
-
-  /** Compact a persisted near-dup index: each tranche append leaves one
-    * `bands`/`sets` row per (content × tranche it re-entered in), and
-    * [[readNearDupIndex]] re-collapses that redundancy with
-    * dropDuplicates on EVERY read — so after heavy re-crawl traffic a
-    * content re-crawled in 1000 tranches drags 1000× its band rows
-    * through every probe's collapse shuffle, forever. Compaction pays
-    * that collapse ONCE and rewrites the three frames duplicate-free
-    * (members deduped on full (id, ch) rows, which also absorbs a
-    * re-run's double-append of the same tranche). Same swap discipline
-    * as [[IvfIndex.rewrite]]: write to a fresh directory, two atomic
-    * renames, previous store retained under `<dir>.old` for the
-    * caller's retention policy. Probe results are unchanged by
-    * construction — the compacted store round-trips through the same
-    * [[readNearDupIndex]] collapse, now a no-op.
-    */
-  def compactNearDupIndex(spark: org.apache.spark.sql.SparkSession,
-                          dir: String,
-                          removeIds: Option[DataFrame] = None): Unit = {
-    val idx0 = readNearDupIndex(spark, dir)
-    // physical erasure of retracted docs ([[Curation.retract]] applies
-    // tombstones here): their member rows go, and contents with NO
-    // surviving member leave bands/sets entirely — the store ends
-    // exactly as if the docs were never committed
-    val idx = removeIds.fold(idx0) { ids =>
-      val members = idx0.members.join(
-        ids.select(col(ids.columns.head).as("id")), Seq("id"), "left_anti")
-      val live = members.select("ch").distinct()
-      NearDupIndexFrames(
-        idx0.bands.join(live, Seq("ch"), "left_semi"),
-        idx0.sets.join(live, Seq("ch"), "left_semi"),
-        members)
-    }
-    val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
-    writeNearDupIndexFrames(
-      idx.copy(members = idx.members.dropDuplicates("id", "ch")), tmp)
-    if (storeExists(spark, s"$dir/params"))
-      spark.read.parquet(s"$dir/params").coalesce(1)
-        .storeWrite.parquet(s"$tmp/params")
-    StoreSwap.swap(spark, dir, tmp)
-  }
-
-  /** Bucket-local compaction (VERDICT r11 #1): collapse duplicate rows
-    * and per-append small files in ONLY the named leaf partition
-    * directories (`<dir>/bands/bkp=N`, `<dir>/sets/chp=N`,
-    * `<dir>/members/chp=N`) — the scheduled-maintenance rewrite whose
-    * write work is bounded by the buckets that drifted, never the
-    * store. Correct bucket-locally BY CONSTRUCTION: every table's
-    * partition value is a function of its collapse key (bk → bkp,
-    * ch → chp), so a key's duplicates can never live in an untouched
-    * bucket and the per-bucket collapse equals [[compactNearDupIndex]]
-    * restricted to those buckets. Erasure (tombstones) is bucket-
-    * bounded too, but lives in [[removeIdsNearDup]]: members-first
-    * discovery turns the retracted ids into the exact content/band
-    * buckets their rows spread across.
-    */
-  def compactNearDupIndexBuckets(spark: org.apache.spark.sql.SparkSession,
-                                 dir: String,
-                                 leafDirs: Seq[String]): Unit = {
-    // per-table shared transforms: the batched form writes each table's
-    // touched buckets in one job (exact cross-bucket: every collapse
-    // key's partition value is a function of the key)
-    val byKeys = leafDirs.groupBy { d =>
-      if (d.startsWith(s"$dir/bands/")) Seq("ch", "bk")
-      else if (d.startsWith(s"$dir/sets/")) Seq("ch")
-      else if (d.startsWith(s"$dir/members/")) Seq("id", "ch")
-      else throw new IllegalArgumentException(
-        s"$d is not a leaf bucket of the near-dup index at $dir")
-    }
-    byKeys.foreach { case (keys, ds) =>
-      StoreSwap.rewriteLeafDirsShared(spark, ds,
-        (df: DataFrame) => df.dropDuplicates(keys))
-    }
-  }
-
-  /** Physically erase retracted docs from the persisted index by
-    * rewriting ONLY the partitions their rows live in — the
-    * [[IvfIndex.removeIds]] discipline for the text store
-    * ([[Curation.maintainDue]]'s surgical erasure hook; the store-wide
-    * [[compactNearDupIndex]] anti-join remains the deep pass).
-    *
-    * Discovery is two column-pruned key scans, never a payload read:
-    * the retracted ids' member rows name the touched content buckets
-    * (a content's whole membership lives in one `chp` partition), and
-    * contents left with NO surviving member name the band buckets
-    * their band keys spread across. Write work is then bounded by
-    * those partitions.
-    *
-    * Crash-safe BY THE PROBE'S OWN SEMANTICS: the members scrub is the
-    * only correctness-critical step — [[probeView]]/[[readNearDupIndex]]
-    * derive content liveness from `members` at read time (bands/sets
-    * rows whose content has no surviving member are live-filtered
-    * out), so band/set rows orphaned by a crash between steps are
-    * verdict-neutral space the next compaction reclaims. A re-run
-    * (same unapplied slice — the watermark only advances after this
-    * returns) re-scrubs idempotently.
-    */
-  def removeIdsNearDup(spark: org.apache.spark.sql.SparkSession,
-                       dir: String, ids: DataFrame): Unit = {
-    val idf = ids.select(col(ids.columns.head).as("id")).localCheckpoint()
-    val fs = StoreSwap.fsOf(spark, dir)
-    def existing(table: String, part: String, vals: Seq[Long]) =
-      vals.map(p => s"$dir/$table/$part=$p")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    val mem = StoreLayout.read(spark, s"$dir/members", MembersTable)
-    // contents the retracted ids belong to: bounded by the takedown
-    // batch (docs × contents-per-doc), collected nowhere — checkpointed
-    val hit = mem.join(broadcast(idf), Seq("id"), "left_semi")
-      .select("ch").distinct().localCheckpoint()
-    val chps = StoreLayout.partsOf(hit, col("ch"))
-    if (chps.isEmpty) return
-    // contents with NO surviving member leave bands/sets too — decided
-    // BEFORE the scrub, from the touched buckets only (a content's
-    // membership is bucket-complete)
-    val dead = hit.join(
-        mem.filter(col("chp").isin(chps: _*))
-          .join(broadcast(idf), Seq("id"), "left_anti")
-          .select("ch").distinct(),
-        Seq("ch"), "left_anti").localCheckpoint()
-    val anyDead = dead.limit(1).count() > 0
-    // band buckets the dead contents' keys spread across: one
-    // column-pruned (ch, bkp) scan, ≤ Parts literals
-    val bkps =
-      if (!anyDead) Seq.empty
-      else StoreLayout.partsOf(
-        StoreLayout.read(spark, s"$dir/bands", BandsTable)
-          .join(broadcast(dead), Seq("ch"), "left_semi"), col("bk"))
-    // members first (the correctness-critical step), then hygiene —
-    // skipped entirely when every touched content keeps a surviving
-    // member (the common takedown: rows die, no content does)
-    StoreSwap.rewriteLeafDirsShared(spark, existing("members", "chp", chps),
-      (df: DataFrame) => df.join(broadcast(idf), Seq("id"), "left_anti"))
-    if (anyDead)
-      StoreSwap.rewriteLeafDirsShared(spark,
-        existing("sets", "chp", chps) ++ existing("bands", "bkp", bkps),
-        (df: DataFrame) => df.join(broadcast(dead), Seq("ch"), "left_anti"))
   }
 
   /** Store-FS existence check (local path or URI — java.io.File would

@@ -291,7 +291,7 @@ object ImageHash {
   //    exact-duplicate lookups prune to the tranche's hash buckets.
   // A hash re-entering in several tranches leaves one idempotent bands
   // row per tranche; probes re-collapse with dropDuplicates and
-  // [[compactHashIndex]] collapses the store itself.
+  // [[Maintenance]] collapses the store itself.
   // ------------------------------------------------------------------
 
   /** Guard-or-bootstrap the persisted geometry; returns the store's
@@ -317,13 +317,21 @@ object ImageHash {
                           dir: String): Int =
     StoreLayout.read(spark, s"$dir/params", ParamsTable).collect()(0).getInt(0)
 
-  // the persisted tables' read shapes (StoreLayoutSpec pins each
-  // against its writer)
+  // the persisted tables (StoreLayoutSpec pins each against its
+  // writer). Content-keyed: a takedown scrubs members, then the bands of
+  // hashes left with no member
   private[ext] val ParamsTable = StoreLayout.Table("bands INT")
   private[ext] val BandsTable =
-    StoreLayout.Table("hsh BIGINT, bk STRING, bkp INT", "bkp")
+    StoreLayout.Table("hsh BIGINT, bk STRING, bkp INT", Seq("bkp"), key = "bk",
+      collapse = Some(Seq("hsh", "bk")), erase = StoreLayout.ByContent("hsh"))
   private[ext] val MembersTable =
-    StoreLayout.Table("id BIGINT, hsh BIGINT, hp INT", "hp")
+    StoreLayout.Table("id BIGINT, hsh BIGINT, hp INT", Seq("hp"), key = "hsh",
+      collapse = Some(Seq("id", "hsh")), erase = StoreLayout.ById("id"))
+
+  /** The hash index under `dir` as one maintained store. */
+  private[graft] def hashStore(dir: String): Maintenance.Store =
+    Maintenance.Store(dir, Seq("bands" -> BandsTable,
+      "members" -> MembersTable, "params" -> ParamsTable))
 
   /** Append one tranche's (id, hash) rows to the persisted index under
     * `dir` (bootstraps the store, params included, on first call).
@@ -341,11 +349,9 @@ object ImageHash {
     val b = if (paramsChecked) bands else ensureHashIndexParams(spark, dir, bands)
     val mem = hashes.select(col(idCol).as("id"), col(hashCol).as("hsh"))
     StoreSwap.concurrently(
-      () => StoreLayout.appendBuckets(bandedIn.getOrElse(banded(mem, b))
-        .withColumn("bkp", StoreLayout.part(col("bk"))), "bkp", s"$dir/bands"),
-      () => StoreLayout.appendBuckets(
-        mem.withColumn("hp", StoreLayout.part(col("hsh"))), "hp",
-        s"$dir/members"))
+      () => StoreLayout.appendBuckets(bandedIn.getOrElse(banded(mem, b)),
+        BandsTable, s"$dir/bands"),
+      () => StoreLayout.appendBuckets(mem, MembersTable, s"$dir/members"))
   }
 
   /** [[ledgerProbe]] against the PERSISTED index — the commit-time
@@ -400,7 +406,7 @@ object ImageHash {
       if (materialize) df.localCheckpoint(false) else df
     val bandsP = StoreLayout.read(spark, s"$dir/bands", BandsTable, Some(bkps))
       .filter(col("bkp").isin(bkps: _*)).drop("bkp")
-    val bands0 = bandsP.dropDuplicates("hsh", "bk")
+    val bands0 = BandsTable.collapsed(bandsP)
     val hps = (hpsN ++ StoreLayout.partsOf(bandsP, col("hsh"))).distinct
     val members0 = StoreLayout.read(spark, s"$dir/members", MembersTable, Some(hps))
       .filter(col("hp").isin(hps: _*)).drop("hp")
@@ -412,99 +418,6 @@ object ImageHash {
       ckpt(bands0.join(live, Seq("hsh"), "left_semi")),
       memN, bandedN, incoming, idCol, bands, maxDist, maxBucket)
   }
-
-  /** Physically erase retracted ids from the persisted index by
-    * rewriting ONLY the partitions their rows live in
-    * ([[Curation.maintainDue]]'s surgical erasure hook — the
-    * [[graft.ext.Dedup.removeIdsNearDup]] discipline for the
-    * perceptual stores; store-wide [[compactHashIndex]] remains the
-    * deep pass). Crash-safe by the probe's own semantics: liveness
-    * derives from `members` at read time ([[ledgerProbeIndexed]]
-    * live-filters bands through surviving members), so the members
-    * scrub is the one correctness-critical step and band rows orphaned
-    * by a crash are verdict-neutral space the next compaction
-    * reclaims.
-    */
-  def removeIdsHashIndex(spark: org.apache.spark.sql.SparkSession,
-                         dir: String, ids: DataFrame): Unit = {
-    val idf = ids.select(col(ids.columns.head).as("id")).localCheckpoint()
-    val fs = StoreSwap.fsOf(spark, dir)
-    def existing(table: String, part: String, vals: Seq[Long]) =
-      vals.map(p => s"$dir/$table/$part=$p")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    val mem = StoreLayout.read(spark, s"$dir/members", MembersTable)
-    val hit = mem.join(broadcast(idf), Seq("id"), "left_semi")
-      .select("hsh").distinct().localCheckpoint()
-    val hps = StoreLayout.partsOf(hit, col("hsh"))
-    if (hps.isEmpty) return
-    val dead = hit.join(
-        mem.filter(col("hp").isin(hps: _*))
-          .join(broadcast(idf), Seq("id"), "left_anti")
-          .select("hsh").distinct(),
-        Seq("hsh"), "left_anti").localCheckpoint()
-    val anyDead = dead.limit(1).count() > 0
-    val bkps =
-      if (!anyDead) Seq.empty
-      else StoreLayout.partsOf(
-        StoreLayout.read(spark, s"$dir/bands", BandsTable)
-          .join(broadcast(dead), Seq("hsh"), "left_semi"), col("bk"))
-    StoreSwap.rewriteLeafDirsShared(spark, existing("members", "hp", hps),
-      (df: DataFrame) => df.join(broadcast(idf), Seq("id"), "left_anti"))
-    // hygiene skipped when every touched hash keeps a surviving member
-    if (anyDead)
-      StoreSwap.rewriteLeafDirsShared(spark, existing("bands", "bkp", bkps),
-        (df: DataFrame) => df.join(broadcast(dead), Seq("hsh"), "left_anti"))
-  }
-
-  /** Collapse re-appended duplicate rows and small files; same swap
-    * discipline as [[Dedup.compactNearDupIndex]].
-    */
-  def compactHashIndex(spark: org.apache.spark.sql.SparkSession,
-                       dir: String,
-                       removeIds: Option[DataFrame] = None): Unit = {
-    val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
-    // physical erasure of retracted docs ([[Curation.retract]] applies
-    // tombstones here): their member rows go, and hashes with NO
-    // surviving member leave the bands table too
-    val members0 = spark.read.parquet(s"$dir/members")
-      .dropDuplicates("id", "hsh")
-    val members = removeIds.fold(members0)(ids =>
-      members0.join(ids.select(col(ids.columns.head).as("id")),
-        Seq("id"), "left_anti"))
-    val bands0 = spark.read.parquet(s"$dir/bands").dropDuplicates("hsh", "bk")
-    val bands = removeIds.fold(bands0)(_ =>
-      bands0.join(members.select("hsh").distinct(), Seq("hsh"), "left_semi"))
-    bands
-      .repartition(col("bkp"))
-      .storeWrite.partitionBy("bkp").parquet(s"$tmp/bands")
-    members
-      .repartition(col("hp"))
-      .storeWrite.partitionBy("hp").parquet(s"$tmp/members")
-    spark.read.parquet(s"$dir/params").coalesce(1)
-      .storeWrite.parquet(s"$tmp/params")
-    StoreSwap.swap(spark, dir, tmp)
-  }
-
-  /** Bucket-local compaction (VERDICT r11 #1): collapse duplicate rows
-    * and per-append small files in ONLY the named leaf partition
-    * directories (`<dir>/bands/bkp=N`, `<dir>/members/hp=N`) — write
-    * work bounded by the drifted buckets, never the store. Correct
-    * bucket-locally because each partition value is a function of the
-    * collapse key (bk → bkp, hsh → hp); erasure stays with the
-    * store-wide [[compactHashIndex]] (a retracted id's band rows
-    * spread across band-key buckets).
-    */
-  def compactHashIndexBuckets(spark: org.apache.spark.sql.SparkSession,
-                              dir: String, leafDirs: Seq[String]): Unit =
-    leafDirs.groupBy { d =>
-      if (d.startsWith(s"$dir/bands/")) Seq("hsh", "bk")
-      else if (d.startsWith(s"$dir/members/")) Seq("id", "hsh")
-      else throw new IllegalArgumentException(
-        s"$d is not a leaf bucket of the hash index at $dir")
-    }.foreach { case (keys, ds) =>
-      StoreSwap.rewriteLeafDirsShared(spark, ds,
-        (df: DataFrame) => df.dropDuplicates(keys))
-    }
 
   /** The band buckets a given cap would drop in [[hammingNearDups]] —
     * (bk, n_hashes) over distinct hashes.

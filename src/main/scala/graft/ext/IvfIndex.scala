@@ -83,7 +83,19 @@ object IvfIndex {
   private[ext] val CentroidsTable =
     StoreLayout.Table("cell BIGINT, ce ARRAY<DOUBLE>")
   private[ext] val CentroidsQTable = StoreLayout.Table("cid BIGINT, i INT, v BIGINT")
-  private[ext] val VectorsTable = StoreLayout.Table("", "cell")
+  // doc-keyed by vec_id; the frozen codebook routes every copy of a
+  // vec_id to one cell, so a cell-local collapse is exact
+  private[ext] val VectorsTable = StoreLayout.Table("", Seq("cell"),
+    collapse = Some(Seq("vec_id")), erase = StoreLayout.ById("vec_id"))
+
+  /** The vector cells of the IVF index under `dir` as one maintained
+    * store; any rewrite of it refuses while a cell split is in flight.
+    * The codebook is untouched, so probes and appends route identically
+    * before and after. */
+  private[graft] def vectorsStore(spark: SparkSession,
+                                  dir: String): Maintenance.Store =
+    Maintenance.Store(s"$dir/vectors", Seq("" -> VectorsTable),
+      guard = () => requireNoSplitInFlight(spark, dir))
 
   /** The (vec_id, cell) routing of a batch under the persisted integer
     * codebook — exposed so a caller running probe AND append on the
@@ -307,11 +319,10 @@ object IvfIndex {
     */
   def rewrite(spark: SparkSession, dir: String, k: Int = 8,
               iters: Int = 2): Unit = {
-    // dropDuplicates(vec_id): a re-run of a failed commit may have
+    // the vectors' collapse: a re-run of a failed commit may have
     // appended a tranche twice (verdicts stay correct via probe-time
     // self-exclusion); the rewrite is where that redundancy collapses
-    val emb = spark.read.parquet(s"$dir/vectors").drop("cell")
-      .dropDuplicates("vec_id")
+    val emb = VectorsTable.collapsed(spark.read.parquet(s"$dir/vectors").drop("cell"))
       .localCheckpoint() // sever lineage from the files about to move
     val tmp = StoreSwap.prepareTmp(spark, s"$dir.rewrite")
     write(emb, tmp, k, iters)
@@ -358,7 +369,7 @@ object IvfIndex {
     val vecDir = s"$dir/vectors"
     val slice = spark.read.parquet(vecDir)
       .filter(col("cell") === cell).drop("cell")
-      .dropDuplicates("vec_id")
+      .transform(VectorsTable.collapsed)
       .localCheckpoint() // sever lineage from the partition about to go
     val nSlice = slice.count()
     require(nSlice >= kSplit,
@@ -480,70 +491,6 @@ object IvfIndex {
       }
     }
     splits
-  }
-
-  /** Collapse per-append small files inside every cell partition (each
-    * [[append]] lands ~one file per touched cell, so file count grows
-    * with tranche count until this runs): one shuffle-by-cell rewrite
-    * of the vectors table behind the shared atomic swap — the codebook
-    * is untouched, so probes and appends route identically before and
-    * after. [[Curation.maintain]]/[[Curation.maintainDue]] schedule it
-    * off the file census; codebook health stays with [[rewrite]] /
-    * [[heal]].
-    */
-  def compactCells(spark: SparkSession, dir: String): Unit = {
-    requireNoSplitInFlight(spark, dir)
-    val vecDir = s"$dir/vectors"
-    val tmp = StoreSwap.prepareTmp(spark, s"$vecDir.compact")
-    spark.read.parquet(vecDir)
-      .dropDuplicates("vec_id")
-      .repartition(col("cell"))
-      .storeWrite.partitionBy("cell").parquet(tmp)
-    StoreSwap.swap(spark, vecDir, tmp)
-  }
-
-  /** Bucket-local compaction (VERDICT r11 #1): collapse duplicate rows
-    * and per-append small files in ONLY the named cell partition
-    * directories (`<dir>/vectors/cell=N`) — the scheduled form of
-    * [[compactCells]], write work bounded by the cells that drifted.
-    * Correct cell-locally because appends route against the FROZEN
-    * codebook, so every copy of a vec_id lands in the same cell.
-    */
-  def compactCellDirs(spark: SparkSession, dir: String,
-                      leafDirs: Seq[String]): Unit = {
-    requireNoSplitInFlight(spark, dir)
-    leafDirs.foreach(d => require(d.startsWith(s"$dir/vectors/cell="),
-      s"$d is not a cell partition of the IVF index at $dir"))
-    StoreSwap.rewriteLeafDirsShared(spark, leafDirs,
-      (df: DataFrame) => df.dropDuplicates("vec_id"))
-  }
-
-  /** Physically erase retracted vectors ([[Curation.retract]] applies
-    * tombstones here): one column-pruned scan of (vec_id, cell) finds
-    * the AFFECTED cells, then each is surgically rewritten without the
-    * retracted rows — write work is bounded by the cells the ids live
-    * in (≤ codebook-many, typically ≪), never the store, and the
-    * codebook is untouched. Idempotent and crash-safe WITHOUT the
-    * splitCell marker: a partial pass leaves the remaining retracted
-    * rows physically present but still tombstone-excluded at probe
-    * time, and a re-run completes the erasure — no state in which a
-    * verdict can go wrong.
-    */
-  def removeIds(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    requireNoSplitInFlight(spark, dir)
-    val vecDir = s"$dir/vectors"
-    val idf = ids.select(col(ids.columns.head).as("vec_id"))
-      .localCheckpoint()
-    val cells = spark.read.parquet(vecDir).select("vec_id", "cell")
-      .join(idf, "vec_id").select("cell").distinct().collect().map(_.get(0))
-    // the shared in-place rewrite discipline: size-capped output files,
-    // retire-by-rename (never delete-before-promote), concurrent cells.
-    // The `.retract_` tmp prefix derives the target by prefix-strip
-    // ([[Curation.fsck]] surfaces a crashed swap that way).
-    StoreSwap.rewriteLeafDirsShared(spark,
-      cells.toSeq.map(c => s"$vecDir/cell=$c"),
-      (df: DataFrame) => df.join(broadcast(idf), Seq("vec_id"), "left_anti"),
-      tmpPrefix = ".retract_")
   }
 
   /** Post-append cell occupancy census (VERDICT r9 #6): (cell,

@@ -31,10 +31,10 @@ object Ledger {
   // append lands as many files per partition as it had write tasks,
   // and the table goes file-count-bound at commit cadence
   private def write(rows: DataFrame, dir: String): Unit =
-    rows.repartition(col("tranche"), col("modality"))
+    rows.repartition(LedgerTable.partCols.map(col): _*)
       .storeWrite.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
-      .partitionBy("tranche", "modality").parquet(dir)
+      .partitionBy(LedgerTable.partCols: _*).parquet(dir)
 
   /** Append one tranche's verdicts for one modality. `verdicts` is the
     * ledgerProbe shape (doc_id, decision) — [[Dedup.ledgerProbe]],
@@ -74,16 +74,22 @@ object Ledger {
   // the ledger's full shape, declared so reads never depend on schema
   // inference — a store whose every tranche was retracted
   // ([[dropTranche]]) has no files to infer from but must read as the
-  // empty ledger, not fail
-  private val schemaDDL =
-    "doc_id LONG, decision STRING, tranche LONG, modality STRING"
+  // empty ledger, not fail. Doc-keyed; no collapse key: appends replace
+  // their own partitions, so a partition never holds duplicates
+  private[ext] val LedgerTable = StoreLayout.Table(
+    "doc_id BIGINT, decision STRING, tranche BIGINT, modality STRING",
+    Seq("tranche", "modality"), erase = StoreLayout.ById("doc_id"))
+
+  /** The ledger at `dir` as one maintained store. */
+  private[graft] def store(dir: String): Maintenance.Store =
+    Maintenance.Store(dir, Seq("" -> LedgerTable))
 
   /** The accumulated ledger: (doc_id, decision, tranche, modality).
     * Partition columns come back typed by the declared schema; cast to
     * the written shape so readers compare stably.
     */
   def read(spark: SparkSession, dir: String): DataFrame =
-    spark.read.schema(schemaDDL).parquet(dir)
+    StoreLayout.read(spark, dir, LedgerTable)
       .select(col("doc_id"), col("decision"),
         col("tranche").cast("long").as("tranche"),
         col("modality").cast("string").as("modality"))
@@ -96,82 +102,11 @@ object Ledger {
     */
   def readRange(spark: SparkSession, dir: String, from: Long,
                 to: Long): DataFrame =
-    spark.read.schema(schemaDDL).parquet(dir)
+    StoreLayout.read(spark, dir, LedgerTable)
       .filter(col("tranche") >= from && col("tranche") <= to)
       .select(col("doc_id"), col("decision"),
         col("tranche").cast("long").as("tranche"),
         col("modality").cast("string").as("modality"))
-
-  /** Compact the accumulated ledger's small files. Each tranche commit
-    * writes its own file set per (tranche, modality) partition — at one
-    * modality-write per [[appendTranche]] call the table becomes
-    * file-count-bound long before it is byte-bound (a year of hourly
-    * five-modality tranches is ~44k partitions of tiny verdict rows).
-    * Compaction shuffles the rows onto their (tranche, modality) keys
-    * so the writer emits ONE file per partition, preserving rows
-    * exactly; no verdict is ever revised, so a pure rewrite is safe at
-    * any time. Same swap discipline as [[IvfIndex.rewrite]] /
-    * [[Dedup.compactNearDupIndex]]: write to a fresh directory, two
-    * atomic renames, previous store under `<dir>.old` for rollback.
-    *
-    * `scrubIds`: doc_ids whose verdict rows must be REMOVED during the
-    * rewrite — the physical-erasure half of doc-level retraction
-    * ([[Curation.retract]]): a takedown's rows may be scattered across
-    * tranche partitions, so they are scrubbed here, at the pass that
-    * rewrites every partition anyway, instead of by per-row surgery.
-    */
-  def compact(spark: SparkSession, dir: String,
-              scrubIds: Option[DataFrame] = None): Unit = {
-    val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
-    val rows = scrubIds.fold(read(spark, dir))(ids =>
-      read(spark, dir).join(ids.select(col(ids.columns.head).as("doc_id")),
-        Seq("doc_id"), "left_anti"))
-    rows
-      .repartition(col("tranche"), col("modality"))
-      .storeWrite.partitionBy("tranche", "modality").parquet(tmp)
-    StoreSwap.swap(spark, dir, tmp)
-  }
-
-  /** Physically scrub retracted doc_ids by rewriting ONLY the
-    * (tranche, modality) partitions their verdict rows live in
-    * ([[graft.ext.Curation.maintainDue]]'s surgical erasure hook;
-    * store-wide [[compact]] remains the deep pass). A takedown's rows
-    * may be scattered across tranche partitions, so discovery is one
-    * column-pruned (doc_id + partition keys) scan; the scrub then
-    * touches those partitions only. A crash mid-pass leaves rows
-    * still tombstone-excluded at read time (the watermark advances
-    * only after this returns); the re-run completes the erasure.
-    */
-  def removeIds(spark: SparkSession, dir: String, ids: DataFrame): Unit = {
-    val idf = ids.select(col(ids.columns.head).as("doc_id"))
-      .localCheckpoint()
-    val fs = graft.ext.StoreSwap.fsOf(spark, dir)
-    val touched = read(spark, dir)
-      .join(broadcast(idf), Seq("doc_id"), "left_semi")
-      .select("tranche", "modality").distinct().collect()
-      // tranche comes back via partition-column inference (int for
-      // small values) — stringify, never assume the width
-      .map(r => s"$dir/tranche=${r.get(0)}/modality=${r.getString(1)}")
-      .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-      .toSeq
-    StoreSwap.rewriteLeafDirsShared(spark, touched,
-      (df: org.apache.spark.sql.DataFrame) =>
-        df.join(broadcast(idf), Seq("doc_id"), "left_anti"))
-  }
-
-  /** Bucket-local compaction (VERDICT r11 #1): collapse small files in
-    * ONLY the named leaf partition directories
-    * (`<dir>/tranche=N/modality=M`) — the scheduled form of
-    * [[compact]]. Rows are unchanged (appends land through dynamic
-    * partition overwrite, so a partition never holds duplicates); the
-    * rewrite just re-packs a drifted partition's files.
-    */
-  def compactBuckets(spark: SparkSession, leafDirs: Seq[String]): Unit =
-    // identity transform: rewriteLeafDirs itself sizes the output file
-    // count off the bucket's bytes, so a small partition re-packs to
-    // one file while an over-target one keeps ~target-sized files
-    StoreSwap.rewriteLeafDirsShared(spark, leafDirs,
-      (df: org.apache.spark.sql.DataFrame) => df)
 
   /** Drop ONE tranche's verdict rows — a partition-pruned delete of the
     * `tranche=<id>` directory (all modalities), the ledger side of

@@ -6,8 +6,8 @@ import org.apache.spark.sql.SparkSession
 import StoreLayout.StoreWrite
 
 /** The one store-replacement discipline shared by every rewriting
-  * maintenance pass ([[IvfIndex.rewrite]], [[Dedup.compactNearDupIndex]],
-  * [[Ledger.compact]]): the new store is fully written to a sibling tmp
+  * maintenance pass ([[IvfIndex.rewrite]], [[Maintenance.rewrite]]):
+  * the new store is fully written to a sibling tmp
   * directory FIRST ([[prepareTmp]] clears any stale one from a crashed
   * earlier pass), then two renames swap it in. The previous store is
   * retained under `<dir>.old` for the caller's retention policy (roll
@@ -119,13 +119,22 @@ private[ext] object StoreSwap {
     */
   private[ext] val TargetFileBytes: Long = 128L * 1024 * 1024
 
+  /** The output file count of a rewrite of `bytes` input bytes:
+    * ceil(bytes / [[TargetFileBytes]]), at least one. */
+  private[ext] def filesFor(bytes: Long): Int =
+    math.min(Int.MaxValue.toLong,
+      math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
+
+  /** The name prefix of a leaf bucket's hidden rewrite tmp. */
+  private val TmpPrefix = ".compact_"
+
   /** Rewrite the named leaf partition directories IN PLACE — the
     * bucket-local maintenance discipline (VERDICT r11 #1): each dir's
     * rows are read, passed through its `transform` (duplicate collapse,
     * erasure), fully written to a hidden sibling tmp
-    * (`<tmpPrefix><name>`), then swapped in by two renames —
-    * [[IvfIndex.removeIds]]'s per-partition rewrite generalized to any
-    * probe-key-partitioned table. Write work is bounded by the NAMED
+    * (`.compact_<name>`), then swapped in by two renames
+    * ([[Maintenance]]'s bucket-local collapse and surgical erasure).
+    * Write work is bounded by the NAMED
     * buckets, never the store, and the writer-lock window shrinks with
     * it. Dirs rewrite concurrently (each owns its directory, so
     * committers never share staging paths).
@@ -149,23 +158,20 @@ private[ext] object StoreSwap {
     * tmp — [[Curation.fsck]] surfaces it, [[Curation.repair]] applies
     * it). Unlike [[swap]], no rollback generation is kept past the
     * pass: every caller's transform is an idempotent collapse, so a
-    * crashed pass re-runs to the same rows (the removeIds contract).
+    * crashed pass re-runs to the same rows (the erasure contract).
     */
   def rewriteLeafDirs(spark: SparkSession,
                       dirs: Seq[(String,
                         org.apache.spark.sql.DataFrame =>
-                          org.apache.spark.sql.DataFrame)],
-                      tmpPrefix: String = ".compact_"): Unit =
+                          org.apache.spark.sql.DataFrame)]): Unit =
     concurrently(dirs.map { case (d, transform) => () => {
       val p = new Path(d)
       val f = fs(spark, p)
-      val tmp = new Path(p.getParent, s"$tmpPrefix${p.getName}")
+      val tmp = new Path(p.getParent, s"$TmpPrefix${p.getName}")
       val aside = new Path(p.getParent, s".old_${p.getName}")
       f.delete(tmp, true)
       f.delete(aside, true) // stale aside: a prior pass crashed after promoting
-      val bytes = f.getContentSummary(p).getLength
-      val nOut = math.min(Int.MaxValue.toLong,
-        math.max(1L, (bytes + TargetFileBytes - 1) / TargetFileBytes)).toInt
+      val nOut = filesFor(f.getContentSummary(p).getLength)
       transform(spark.read.parquet(d)).coalesce(nOut)
         .storeWrite.parquet(tmp.toString)
       if (!f.rename(p, aside))
@@ -202,7 +208,7 @@ private[ext] object StoreSwap {
     * the batch job writes to a hidden `.batchrw` sibling invisible to
     * readers and fsck (pure residue if the pass dies there — the live
     * dirs are untouched; the next pass deletes it), then each bucket's
-    * output is renamed into the same `<tmpPrefix><name>` position the
+    * output is renamed into the same `.compact_<name>` position the
     * per-dir path uses and swapped in by the same retire/promote rename
     * pair — every crash state an operator (or [[Curation.fsck]]/
     * [[Curation.repair]]) can observe is one the per-dir path already
@@ -216,8 +222,7 @@ private[ext] object StoreSwap {
   def rewriteLeafDirsShared(spark: SparkSession,
                             dirs: Seq[String],
                             transform: org.apache.spark.sql.DataFrame =>
-                              org.apache.spark.sql.DataFrame,
-                            tmpPrefix: String = ".compact_"): Unit = {
+                              org.apache.spark.sql.DataFrame): Unit = {
     if (dirs.isEmpty) return
     // split a leaf path into (base table path, k=v partition segments)
     def split(d: String): (String, Seq[String]) = {
@@ -234,13 +239,12 @@ private[ext] object StoreSwap {
       b.isEmpty || rel.isEmpty
     }
     // unrecognized layout: the per-dir path handles anything
-    rewriteLeafDirs(spark, flat.map { case (d, _) => (d, transform) },
-      tmpPrefix)
+    rewriteLeafDirs(spark, flat.map { case (d, _) => (d, transform) })
     ok.groupBy { case (_, (b, rel)) =>
       (b, rel.map(_.takeWhile(_ != '=')))
     }.foreach { case ((base, partCols), group) =>
       rewriteGroup(spark, base, partCols,
-        group.map { case (d, (_, rel)) => (d, rel) }, transform, tmpPrefix)
+        group.map { case (d, (_, rel)) => (d, rel) }, transform)
     }
   }
 
@@ -269,36 +273,29 @@ private[ext] object StoreSwap {
                            partCols: Seq[String],
                            dirsRel0: Seq[(String, Seq[String])],
                            transform: org.apache.spark.sql.DataFrame =>
-                             org.apache.spark.sql.DataFrame,
-                           tmpPrefix: String): Unit = {
+                             org.apache.spark.sql.DataFrame): Unit = {
     val f = fs(spark, new Path(base))
     // non-round-tripping leaf names cannot batch safely — per-dir path
     val (dirsRel, unsafe) = dirsRel0.partition(_._2.forall(roundTrips))
-    rewriteLeafDirs(spark, unsafe.map { case (d, _) => (d, transform) },
-      tmpPrefix)
+    rewriteLeafDirs(spark, unsafe.map { case (d, _) => (d, transform) })
     val sized = dirsRel.map { case (d, rel) =>
       (d, rel, f.getContentSummary(new Path(d)).getLength)
     }
     val (big, small) = sized.partition(_._3 > TargetFileBytes)
     // over-target buckets: data-bound rewrites, per-bucket jobs with
     // per-bucket output sizing (the at-scale path, unchanged)
-    rewriteLeafDirs(spark, big.map { case (d, _, _) => (d, transform) },
-      tmpPrefix)
+    rewriteLeafDirs(spark, big.map { case (d, _, _) => (d, transform) })
     if (small.isEmpty) return
     if (small.size == 1) {
-      rewriteLeafDirs(spark,
-        small.map { case (d, _, _) => (d, transform) }, tmpPrefix)
+      rewriteLeafDirs(spark, small.map { case (d, _, _) => (d, transform) })
       return
     }
     import org.apache.spark.sql.functions.col
-    // staging is per-caller-kind (suffix = the pass's tmpPrefix,
-    // ADVICE r17): concurrent same-base maintenance of DIFFERENT kinds
-    // (a compaction racing a retraction) can no longer clobber each
-    // other's staging, and a crashed pass's residue is reclaimed by the
-    // next pass of the same kind (the delete below) — same lifecycle as
-    // the per-dir `.compact_*` tmps, invisible to readers either way
-    val batchTmp = new Path(base,
-      s".batchrw_${tmpPrefix.filter(c => c.isLetterOrDigit || c == '_')}")
+    // a crashed pass's staging residue is reclaimed by the next pass
+    // (the delete below) — same lifecycle as the per-dir `.compact_*`
+    // tmps, invisible to readers either way. One table's rewrites never
+    // overlap: every caller runs them in sequence, under the writer lock
+    val batchTmp = new Path(base, ".batchrw_compact_")
     f.delete(batchTmp, true)
     val in = spark.read.option("basePath", base)
       .parquet(small.map(_._1): _*)
@@ -331,7 +328,7 @@ private[ext] object StoreSwap {
     val emptied = small.flatMap { case (d, rel, _) =>
       val leaf = new Path(d)
       val src = new Path(batchTmp, rel.mkString("/"))
-      val tmp = new Path(leaf.getParent, s"$tmpPrefix${leaf.getName}")
+      val tmp = new Path(leaf.getParent, s"$TmpPrefix${leaf.getName}")
       val aside = new Path(leaf.getParent, s".old_${leaf.getName}")
       f.delete(tmp, true)
       f.delete(aside, true)
@@ -353,8 +350,7 @@ private[ext] object StoreSwap {
       }
     }
     f.delete(batchTmp, true)
-    rewriteLeafDirs(spark,
-      emptied.map(d => (d, transform)), tmpPrefix)
+    rewriteLeafDirs(spark, emptied.map(d => (d, transform)))
   }
 
   /** Delete any stale tmp left by a crashed pass and return the path to
@@ -503,16 +499,18 @@ private[ext] object StoreLayout {
     df.select(part(key).as("p")).distinct()
       .limit(Parts + 1).collect().map(_.getLong(0)).toSeq
 
-  /** Append `df` to the table at `dir`, partitioned by its bucket
-    * column `partCol`, at one file per touched bucket. A frame that is
-    * already one partition — a narrow plan over a one-partition
-    * checkpoint, whose partition count the checkpointed RDD knows
-    * without a job — is written as it is; anything else is first
-    * shuffled by the bucket column.
+  /** Append `df` to the bucketed `table` at `dir`, at one file per
+    * touched bucket; the bucket column is derived from the table's
+    * declaration ([[Table.bucketed]]). A frame that is already one
+    * partition — a narrow plan over a one-partition checkpoint, whose
+    * partition count the checkpointed RDD knows without a job — is
+    * written as it is; anything else is first shuffled by the bucket
+    * column.
     */
-  def appendBuckets(df: DataFrame, partCol: String, dir: String): Unit = {
+  def appendBuckets(df0: DataFrame, table: Table, dir: String): Unit = {
     import org.apache.spark.sql.execution.RDDScanExec
     import org.apache.spark.sql.execution.exchange.Exchange
+    val df = table.bucketed(df0)
     // an adaptive plan (any exchange) is itself the only leaf
     val plan = df.queryExecution.executedPlan
     val onePartition = plan.find(_.isInstanceOf[Exchange]).isEmpty &&
@@ -521,23 +519,86 @@ private[ext] object StoreLayout {
         case _ => false
       })
     (if (onePartition) df
-     else df.repartition(org.apache.spark.sql.functions.col(partCol)))
-      .storeWrite.mode("append").partitionBy(partCol).parquet(dir)
+     else df.repartition(org.apache.spark.sql.functions.col(table.partCol)))
+      .storeWrite.mode("append").partitionBy(table.partCol).parquet(dir)
   }
 
-  /** One store table's read shape: `ddl` is its full schema exactly as
-    * `spark.read.parquet` returns it (data columns, then the INT
-    * partition column `partCol`, if any — every store partition value
-    * is a small integer, which Spark's discovery types as INT). An empty
-    * `ddl` marks a table whose data columns follow the frames callers
-    * indexed (IVF vectors keep every column of the embedding frame);
-    * its data schema comes from one file footer, read on the driver.
+  /** How a takedown reaches a table's rows ([[Maintenance.erase]]). */
+  sealed trait Erasure
+  /** Rows outlive a takedown (parameters, codebooks, the id registry
+    * and the tombstones themselves). */
+  case object Keep extends Erasure
+  /** Doc-keyed: the rows whose column `id` holds a retracted id go. */
+  final case class ById(id: String) extends Erasure
+  /** Content-keyed: the rows whose column `content` holds a content
+    * left with no surviving member go — members are the store's
+    * [[ById]] table, which carries the same column. */
+  final case class ByContent(content: String) extends Erasure
+
+  /** One store table, declared once for its readers, writers and
+    * maintenance.
+    *
+    * `ddl` is its full schema exactly as `spark.read.parquet` returns
+    * it (data columns, then the partition columns — every single-level
+    * partition value is a small integer, which Spark's discovery types
+    * as INT). An empty `ddl` marks a table whose data columns follow
+    * the frames callers wrote (IVF vectors keep every column of the
+    * embedding frame, the flat embedding store the commit's frame); its
+    * data schema comes from one file footer, read on the driver.
+    *
+    * `partCols` are its partition columns, outermost first. `key` is
+    * the column its one bucket column is computed from
+    * (`partCol = part(key)`); empty where the partition values are
+    * data (the ledger's tranche and modality) or routed (IVF cells).
+    *
+    * `collapse` is its collapse key: duplicate rows of one key are one
+    * row. `None` keeps every row (the ledger's appends are
+    * duplicate-free; parameter tables are one row); `Some(Nil)`
+    * collapses whole rows. Every collapse key determines the row's
+    * bucket, so a bucket-local collapse is exact. `earliest`, with a
+    * key, keeps the key's row with the smallest value of that column
+    * instead of any one of them (the tombstones' earliest epoch).
     */
-  final case class Table(ddl: String, partCol: String = "") {
+  final case class Table(ddl: String, partCols: Seq[String] = Nil,
+                         key: String = "",
+                         collapse: Option[Seq[String]] = None,
+                         earliest: String = "",
+                         erase: Erasure = Keep) {
     val schema: Option[StructType] =
       Option(ddl).filter(_.nonEmpty).map(StructType.fromDDL)
-    require(partCol.isEmpty || schema.forall(_(partCol).dataType == IntegerType),
+    require(partCols.size <= 1 ||
+      schema.exists(s => partCols.forall(s.fieldNames.contains)),
+      s"a store table partitioned by ${partCols.mkString(", ")} must declare them")
+    require(partCols.size != 1 ||
+      schema.forall(_(partCols.head).dataType == IntegerType),
       s"store table partition column $partCol must be declared INT")
+    require(key.isEmpty || partCols.size == 1,
+      "a keyed table has exactly one bucket column")
+    require(earliest.isEmpty || collapse.exists(_.nonEmpty),
+      "an earliest-row collapse needs a collapse key")
+
+    /** The single-level bucket column; empty if there is none. */
+    def partCol: String = if (partCols.size == 1) partCols.head else ""
+
+    /** `df` with its bucket column derived from `key`. */
+    def bucketed(df: DataFrame): DataFrame =
+      if (key.isEmpty) df
+      else df.withColumn(partCol, part(org.apache.spark.sql.functions.col(key)))
+
+    /** `df`'s rows collapsed by the declared collapse key. */
+    def collapsed(df: DataFrame): DataFrame = {
+      import org.apache.spark.sql.functions.{col, min_by, struct}
+      collapse match {
+        case None => df
+        case Some(Nil) => df.dropDuplicates()
+        case Some(k) if earliest.isEmpty => df.dropDuplicates(k)
+        case Some(k) =>
+          df.groupBy(k.map(col): _*)
+            .agg(min_by(struct(df.columns.map(col).toIndexedSeq: _*),
+              col(earliest)).as("row"))
+            .select("row.*")
+      }
+    }
   }
 
   // Spark's own hidden-path rule (HadoopFSUtils.shouldFilterOutPathName):
@@ -571,10 +632,15 @@ private[ext] object StoreLayout {
     * Layouts the declaration does not describe — a missing or empty
     * directory, files where partition directories are declared, nested
     * or foreign directories — fall back to `spark.read.parquet(dir)`,
-    * so they read (and fail) exactly as Spark's own discovery would.
+    * so they read (and fail) exactly as Spark's own discovery would. A
+    * table of several partition levels (the ledger) is read by Spark's
+    * discovery under its declared schema, so a table with no files
+    * left reads empty.
     */
   def read(spark: SparkSession, dir: String, table: Table,
            parts: Option[Iterable[Any]] = None): DataFrame = {
+    if (table.partCols.size > 1)
+      return spark.read.schema(table.schema.get).parquet(dir)
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.execution.datasources.{FileStatusCache,
       HadoopFsRelation, InMemoryFileIndex, PartitionPath, PartitionSpec}

@@ -258,7 +258,7 @@ object VideoHash {
   //  - `seqs` (doc_id, sq) PARTITIONED BY sqp = StoreLayout.part(sq) —
   //    exact-duplicate lookups prune to the tranche's sequence buckets.
   // Re-appended videos leave idempotent duplicate rows; probes
-  // re-collapse with dropDuplicates, [[compactSeqIndex]] collapses the
+  // re-collapse with dropDuplicates, [[Maintenance]] collapses the
   // store.
   // ------------------------------------------------------------------
 
@@ -269,18 +269,26 @@ object VideoHash {
     val sh = shingles(frames)
     StoreSwap.concurrently(
       () => StoreLayout.appendBuckets(
-        sh.join(sh.groupBy("doc_id").agg(count(lit(1)).as("n")), "doc_id")
-          .withColumn("kp", StoreLayout.part(col("k"))), "kp", s"$dir/shingles"),
-      () => StoreLayout.appendBuckets(sequenceIds(frames)
-        .withColumn("sqp", StoreLayout.part(col("sq"))), "sqp", s"$dir/seqs"))
+        sh.join(sh.groupBy("doc_id").agg(count(lit(1)).as("n")), "doc_id"),
+        ShinglesTable, s"$dir/shingles"),
+      () => StoreLayout.appendBuckets(sequenceIds(frames), SeqsTable,
+        s"$dir/seqs"))
   }
 
-  // the persisted tables' read shapes (StoreLayoutSpec pins each
-  // against its writer)
+  // the persisted tables (StoreLayoutSpec pins each against its
+  // writer); both doc-keyed
   private[ext] val ShinglesTable =
-    StoreLayout.Table("doc_id BIGINT, k STRING, n BIGINT, kp INT", "kp")
+    StoreLayout.Table("doc_id BIGINT, k STRING, n BIGINT, kp INT", Seq("kp"),
+      key = "k", collapse = Some(Seq("doc_id", "k")),
+      erase = StoreLayout.ById("doc_id"))
   private[ext] val SeqsTable =
-    StoreLayout.Table("doc_id BIGINT, sq STRING, sqp INT", "sqp")
+    StoreLayout.Table("doc_id BIGINT, sq STRING, sqp INT", Seq("sqp"),
+      key = "sq", collapse = Some(Seq("doc_id", "sq")),
+      erase = StoreLayout.ById("doc_id"))
+
+  /** The sequence index under `dir` as one maintained store. */
+  private[graft] def seqStore(dir: String): Maintenance.Store =
+    Maintenance.Store(dir, Seq("seqs" -> SeqsTable, "shingles" -> ShinglesTable))
 
   /** [[ledgerProbe]] against the PERSISTED index — the commit-time
     * access path of [[Curation.commitTranche]]: standing sequence ids
@@ -328,86 +336,8 @@ object VideoHash {
     val shS = ckpt(excl(StoreLayout.read(spark, s"$dir/shingles", ShinglesTable,
           Some(kps))
         .filter(col("kp").isin(kps: _*)).drop("kp")
-        .dropDuplicates("doc_id", "k")))
+        .transform(ShinglesTable.collapsed)))
     ledgerVerdicts(standingSq, sequenceProbeFrom(shS, shN, maxBucket),
       sqN, firstOcc, incoming, idCol)
-  }
-
-  /** Bucket-local compaction (VERDICT r11 #1): collapse duplicate rows
-    * and per-append small files in ONLY the named leaf partition
-    * directories (`<dir>/shingles/kp=N`, `<dir>/seqs/sqp=N`) — write
-    * work bounded by the drifted buckets. Correct bucket-locally
-    * because each partition value is a function of the collapse key
-    * (k → kp, sq → sqp); erasure stays with the store-wide
-    * [[compactSeqIndex]] (a retracted video's shingles spread across
-    * shingle-key buckets).
-    */
-  def compactSeqIndexBuckets(spark: SparkSession, dir: String,
-                             leafDirs: Seq[String]): Unit =
-    leafDirs.groupBy { d =>
-      if (d.startsWith(s"$dir/shingles/")) Seq("doc_id", "k")
-      else if (d.startsWith(s"$dir/seqs/")) Seq("doc_id", "sq")
-      else throw new IllegalArgumentException(
-        s"$d is not a leaf bucket of the sequence index at $dir")
-    }.foreach { case (keys, ds) =>
-      StoreSwap.rewriteLeafDirsShared(spark, ds,
-        (df: org.apache.spark.sql.DataFrame) => df.dropDuplicates(keys))
-    }
-
-  /** Physically erase retracted videos from the persisted index by
-    * rewriting ONLY the partitions their rows live in
-    * ([[graft.ext.Curation.maintainDue]]'s surgical erasure hook;
-    * store-wide [[compactSeqIndex]] remains the deep pass). Both
-    * tables are doc-keyed, so discovery is one column-pruned
-    * (doc_id, partition) scan per table and the scrub is a direct
-    * anti-join — no two-level liveness like the text/hash stores.
-    * A crash mid-pass leaves the remaining rows physically present
-    * but still tombstone-excluded at probe time (the watermark only
-    * advances after this returns), and the re-run completes the
-    * erasure — the [[graft.ext.IvfIndex.removeIds]] contract.
-    */
-  def removeIdsSeqIndex(spark: SparkSession, dir: String,
-                        ids: DataFrame): Unit = {
-    val idf = ids.select(col(ids.columns.head).as("doc_id"))
-      .localCheckpoint()
-    val fs = graft.ext.StoreSwap.fsOf(spark, dir)
-    // the ids' touched partitions: a column-pruned (doc_id, partition)
-    // scan per table, collected as ≤ Parts literals
-    def touched(table: String, part: String,
-                decl: StoreLayout.Table): Seq[String] =
-      StoreLayout.read(spark, s"$dir/$table", decl)
-        .join(broadcast(idf), Seq("doc_id"), "left_semi")
-        .select(part).distinct()
-        .limit(graft.ext.StoreLayout.Parts + 1).collect()
-        // partition values come back via partition-column inference
-        // (int for small values) — stringify, never assume the width
-        .map(r => s"$dir/$table/$part=${r.get(0)}")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-        .toSeq
-    StoreSwap.rewriteLeafDirsShared(spark,
-      touched("shingles", "kp", ShinglesTable) ++
-        touched("seqs", "sqp", SeqsTable),
-      (df: org.apache.spark.sql.DataFrame) =>
-        df.join(broadcast(idf), Seq("doc_id"), "left_anti"))
-  }
-
-  /** Collapse re-appended duplicate rows and small files; same swap
-    * discipline as [[graft.ext.Dedup.compactNearDupIndex]].
-    */
-  def compactSeqIndex(spark: SparkSession, dir: String,
-                      removeIds: Option[DataFrame] = None): Unit = {
-    // both tables are doc-keyed, so physical erasure of retracted docs
-    // ([[Curation.retract]] applies tombstones here) is one anti-join
-    def excl(df: DataFrame): DataFrame = removeIds.fold(df)(ids =>
-      df.join(ids.select(col(ids.columns.head).as("doc_id")),
-        Seq("doc_id"), "left_anti"))
-    val tmp = StoreSwap.prepareTmp(spark, s"$dir.compact")
-    excl(spark.read.parquet(s"$dir/shingles").dropDuplicates("doc_id", "k"))
-      .repartition(col("kp"))
-      .storeWrite.partitionBy("kp").parquet(s"$tmp/shingles")
-    excl(spark.read.parquet(s"$dir/seqs").dropDuplicates("doc_id", "sq"))
-      .repartition(col("sqp"))
-      .storeWrite.partitionBy("sqp").parquet(s"$tmp/seqs")
-    StoreSwap.swap(spark, dir, tmp)
   }
 }

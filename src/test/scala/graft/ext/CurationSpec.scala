@@ -19,7 +19,7 @@ import graft.model.Tables
 class CurationSpec extends SparkSpec {
 
   private def freshStores(): Curation.Stores = {
-    val root = Files.createTempDirectory("curspec").toString
+    val root = tempDir("curspec")
     Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led")
   }
@@ -142,7 +142,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("a steady-state commit plans its store reads without discovery or inference jobs") {
-    val d = StoreLayoutSpec.deployment(spark, sf())
+    val d = StoreLayoutSpec.deployment(spark, sf(), tempDir("layout"))
     val st = d.stores
     // premise: every 64-bucket table the commit probes has every bucket
     // populated — well past Spark's 32-path parallel-listing threshold
@@ -171,7 +171,7 @@ class CurationSpec extends SparkSpec {
   }
 
   test("every job of a steady-state commit carries a phase label, within a per-phase budget") {
-    val d = StoreLayoutSpec.deployment(spark, sf())
+    val d = StoreLayoutSpec.deployment(spark, sf(), tempDir("layout"))
     val (verdicts, jobs) = graft.JobLog.during(spark)(
       Curation.commitTranche(d.tranche, 1L, d.stores, imgHashes = Some(d.imgs),
         vidFrames = Some(d.vids), embeddings = Some(d.embs)))
@@ -204,11 +204,11 @@ class CurationSpec extends SparkSpec {
   }
 
   test("a steady-state commit, retract and maintenance pass start no process") {
-    val d = StoreLayoutSpec.deployment(spark, sf())
+    val d = StoreLayoutSpec.deployment(spark, sf(), tempDir("layout"))
     // control: a plain Spark write on this host sets every mode by
     // starting `chmod`, so an empty census below is not vacuous
     val (_, control) = graft.ProcLog.during(spark.range(1).write
-      .parquet(Files.createTempDirectory("ctl").toString + "/t"))
+      .parquet(tempDir("ctl") + "/t"))
     assert(control.exists(_.startsWith("chmod")), control)
     val (due, procs) = graft.ProcLog.during {
       Curation.commitTranche(d.tranche, 1L, d.stores, imgHashes = Some(d.imgs),
@@ -1016,6 +1016,69 @@ class CurationSpec extends SparkSpec {
     Curation.commitTranche(
       Seq((910003L, "zz bucket drift probe three")).toDF("doc_id", "text"),
       2L, stores)
+  }
+
+  test("maintainDue's bucket-local collapse and erasure leave the rows maintain leaves, in every store") {
+    // the two passes run one maintenance path over the same store
+    // declarations: on a deployment with every store, duplicate rows
+    // plus a takedown, the scheduled pass (bucket-local collapse of
+    // every drifted bucket, surgical erasure) and the store-wide pass
+    // must leave the same rows in every table, retracted ids gone
+    val d = StoreLayoutSpec.deployment(spark, sf(), tempDir("layout"))
+    val st = d.stores
+    Curation.commitTranche(d.tranche, 1L, st, imgHashes = Some(d.imgs),
+      vidFrames = Some(d.vids), embeddings = Some(d.embs))
+    val pq = s"${PQ.liveDir(spark, st.pqIndex)}/codes"
+    val dupTables = Seq(
+      s"${st.textIndex}/bands" -> "bkp", s"${st.textIndex}/sets" -> "chp",
+      s"${st.textIndex}/members" -> "chp", s"${st.image}/bands" -> "bkp",
+      s"${st.image}/members" -> "hp", s"${st.video}/shingles" -> "kp",
+      s"${st.video}/seqs" -> "sqp", s"${st.embedding}/vectors" -> "cell",
+      pq -> "idp", s"${st.ledger}.ids" -> "idp",
+      s"${st.ledger}.tombstones" -> "idp")
+    // a re-run's double append, in every bucket of every collapsible table
+    dupTables.foreach { case (t, pc) =>
+      spark.read.parquet(t).localCheckpoint()
+        .repartition(col(pc)).write.mode("append").partitionBy(pc).parquet(t)
+    }
+    val gone = d.tranche.select("doc_id").orderBy("doc_id").limit(4)
+    val goneIds = gone.collect().map(_.getLong(0)).toSet
+    Curation.retract(spark, gone, st)
+    // two copies of the same deployment: one per pass
+    val fs = StoreSwap.fsOf(spark, st.ledger)
+    val root = new org.apache.hadoop.fs.Path(st.ledger).getParent
+    val copy = new org.apache.hadoop.fs.Path(tempDir("layoutcopy"), "d")
+    assert(org.apache.hadoop.fs.FileUtil.copy(fs, root, fs, copy, false,
+      spark.sessionState.newHadoopConf()))
+    def moved(p: String) = p.replace(root.toUri.getPath, copy.toUri.getPath)
+    val st2 = Curation.Stores(moved(st.textIndex), moved(st.image),
+      moved(st.audio), moved(st.video), moved(st.embedding), moved(st.ledger),
+      pqIndex = moved(st.pqIndex))
+    val due = Curation.maintainDue(spark, st, maxFilesPerBucket = 1)
+    Seq("text_index", "image_index", "video_index", "embedding_ivf",
+      "pq_index", "ledger", "id_registry", "tombstones").foreach(u =>
+      assert(due.contains(u), s"$u not maintained by the scheduled pass: $due"))
+    Curation.maintain(spark, st2)
+    def rows(t: String) =
+      spark.read.parquet(t).collect().map(_.toString).sorted.toSeq
+    (dupTables.map(_._1) :+ st.ledger).foreach { t =>
+      val (scheduled, storeWide) = (rows(t), rows(moved(t)))
+      val dups = scheduled.size - scheduled.distinct.size
+      assert(dups == 0, s"$t: $dups duplicate rows left")
+      val diff = scheduled.diff(storeWide) ++ storeWide.diff(scheduled)
+      val disagree = diff.size
+      assert(disagree == 0, s"$t: the passes disagree, e.g. ${diff.take(2)}")
+    }
+    Seq(s"${st.textIndex}/members" -> "id", s"${st.image}/members" -> "id",
+        s"${st.video}/shingles" -> "doc_id", s"${st.video}/seqs" -> "doc_id",
+        s"${st.embedding}/vectors" -> "vec_id", pq -> "vec_id",
+        st.ledger -> "doc_id").foreach { case (t, c) =>
+      val left = spark.read.parquet(t).select(c).collect()
+        .map(_.getLong(0)).toSet.intersect(goneIds)
+      assert(left.isEmpty, s"$t still holds retracted ids $left")
+    }
+    assert(Curation.fsck(spark, st).filter(col("status") === "violation")
+      .count() == 0, "the scheduled pass left fsck violations")
   }
 
   test("maintainDue erases surgically: every store rewrites only the ids' partitions", graft.Slow) {
@@ -2170,7 +2233,7 @@ class CurationSpec extends SparkSpec {
     assert(rep == Set(("text", (clean.size - gone.size).toLong,
       gone.size.toLong, (clean.size - gone.size).toLong)), s"report: $rep")
     // dest variant lands the export as parquet and reads it back
-    val dest = java.nio.file.Files.createTempDirectory("exp").toString + "/out"
+    val dest = tempDir("exp") + "/out"
     val viaDest = Curation.exportRelease(spark, stores, 1L, Some(dest))
       .collect().map(r => (r.getAs[Long]("doc_id"),
         r.getAs[String]("modality"), r.getAs[String]("status"),
@@ -2211,8 +2274,7 @@ class CurationSpec extends SparkSpec {
     Curation.rereleaseServing(spark, stores)
     assert(PQ.completeGens(spark, stores.pqIndex).size == 2,
       "fixture: no retired generation")
-    val dest = java.nio.file.Files
-      .createTempDirectory("snapspec").toString + "/s1"
+    val dest = tempDir("snapspec") + "/s1"
     val acts = Curation.snapshot(spark, stores, dest)
     Seq("text", "embedding", "ledger", "ids", "tombstones", "releases",
       "releases_registry", "pq").foreach(r =>
@@ -2272,8 +2334,7 @@ class CurationSpec extends SparkSpec {
     assert(snapRow().exists(r => r._1 == "pending" &&
       r._2.contains("changed since")), s"stale: ${snapRow()}")
     // ...and maintenance alone never stales a snapshot (logical stamp)
-    val dest2 = java.nio.file.Files
-      .createTempDirectory("snapspec").toString + "/s2"
+    val dest2 = tempDir("snapspec") + "/s2"
     Curation.snapshot(spark, stores, dest2)
     assert(snapRow().exists(_._1 == "ok"))
     Curation.maintain(spark, stores)
@@ -2328,7 +2389,7 @@ class CurationSpec extends SparkSpec {
     Curation.commitTranche(docs.filter(col("doc_id") % 2 === 1), 1L, stores)
     Curation.publishRelease(spark, stores, 0L)
     Curation.publishRelease(spark, stores, 1L)
-    val dest = Files.createTempDirectory("wdsnap").toString + "/s1"
+    val dest = tempDir("wdsnap") + "/s1"
     Curation.snapshot(spark, stores, dest)
     Curation.unpublishRelease(spark, stores, 0L,
       "manifest metadata subject to takedown (spec)")
@@ -2401,7 +2462,7 @@ class CurationSpec extends SparkSpec {
       .filter(col("doc_id") < 80)
     val stores = freshStores()
     Curation.commitTranche(docs.filter(col("doc_id") % 2 === 0), 0L, stores)
-    val dest = Files.createTempDirectory("gonesnap").toString + "/s1"
+    val dest = tempDir("gonesnap") + "/s1"
     Curation.snapshot(spark, stores, dest)
     def rows() = Curation.fsck(spark, stores).collect()
       .map(r => r.getString(0) -> ((r.getString(1), r.getLong(2),
@@ -2513,7 +2574,7 @@ class CurationSpec extends SparkSpec {
       .map(_.getLong(0)).toSeq
     Curation.retract(spark, gone.toDF("doc_id"), stores)
     Curation.maintain(spark, stores)
-    val dest = Files.createTempDirectory("drillsnap").toString + "/s1"
+    val dest = tempDir("drillsnap") + "/s1"
     Curation.snapshot(spark, stores, dest)
     // one more tranche DRIFTS the deployment, and the scheduled window
     // backs it up DIFFERENTIALLY against the full snapshot above — the
@@ -2523,7 +2584,7 @@ class CurationSpec extends SparkSpec {
       .filter(col("doc_id") >= 120 && col("doc_id") < 150)
     Curation.commitTranche(docs2, 2L, stores,
       embeddings = Some(embOf(docs2)))
-    val schedRoot = Files.createTempDirectory("drillsched").toString
+    val schedRoot = tempDir("drillsched")
     val sacts = Curation.snapshotDue(spark, stores, schedRoot)
     val chained = s"$schedRoot/snap-000000"
     assert(sacts.exists(_.contains("re-seated by reference")),
@@ -2580,7 +2641,7 @@ class CurationSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 120)
     val stores = freshStores()
-    val snapRoot = Files.createTempDirectory("schedsnap").toString
+    val snapRoot = tempDir("schedsnap")
     def snaps(): Seq[String] = {
       val d = new java.io.File(snapRoot)
       Option(d.listFiles()).fold(Seq.empty[String])(
@@ -2654,7 +2715,7 @@ class CurationSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 120)
     val stores = freshStores()
-    val snapRoot = Files.createTempDirectory("rotsnap").toString
+    val snapRoot = tempDir("rotsnap")
     Curation.commitTranche(docs.filter(col("doc_id") % 4 === 0), 0L, stores)
     val a1 = Curation.snapshotDue(spark, stores, snapRoot)
     assert(a1.exists(_.contains("snapshot ")), s"first window: $a1")

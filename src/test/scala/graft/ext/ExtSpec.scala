@@ -1401,7 +1401,7 @@ class ExtSpec extends SparkSpec {
     val membersBefore = raw("members")
     val probeBefore = rows(Dedup.probeNearDupIndex(
       Dedup.readNearDupIndex(spark, dir), incoming, "doc_id", "text"))
-    Dedup.compactNearDupIndex(spark, dir)
+    Maintenance.rewrite(spark, Dedup.nearDupStore(dir))
     assert(raw("bands") == distinctBands, "bands not collapsed on disk")
     assert(raw("sets") == spark.read.parquet(s"$dir/sets")
       .dropDuplicates("ch").count(), "sets not collapsed on disk")
@@ -1421,7 +1421,7 @@ class ExtSpec extends SparkSpec {
     // store and read it back; a SECOND compaction replaces the stale
     // .old instead of failing on it
     Dedup.writeNearDupIndex(incoming, "doc_id", "text", dir)
-    Dedup.compactNearDupIndex(spark, dir)
+    Maintenance.rewrite(spark, Dedup.nearDupStore(dir))
     assert(Dedup.readNearDupIndex(spark, dir).members
       .join(incoming.select(col("doc_id").as("id")), Seq("id"), "left_semi")
       .count() > 0)

@@ -294,7 +294,7 @@ class IvfIndexSpec extends SparkSpec {
         emb.filter(col("vec_id") < 4), k = 5, probes = 1)
       .collect().map(r => (r.getAs[Long]("qid"), r.getAs[Int]("rank"),
         r.getAs[Long]("cid"))).toSet
-    IvfIndex.compactCells(spark, dir)
+    Maintenance.rewrite(spark, IvfIndex.vectorsStore(spark, dir))
     assert(cellFiles().values.max == 1,
       s"compactCells left small files: ${cellFiles()}")
     val after = IvfIndex.topK(spark, dir,
@@ -327,7 +327,8 @@ class IvfIndexSpec extends SparkSpec {
       .toMap
     val before = cellFiles()
     import spark.implicits._
-    IvfIndex.removeIds(spark, dir, victimIds.toSeq.toDF("vec_id"))
+    Maintenance.erase(spark, IvfIndex.vectorsStore(spark, dir),
+      victimIds.toSeq.toDF("vec_id"))
     val after = cellFiles()
     assert(!spark.read.parquet(s"$dir/vectors").select("vec_id").collect()
       .map(_.getLong(0)).toSet.exists(victimIds), "victims survived")

@@ -67,7 +67,7 @@ class LedgerSpec extends SparkSpec {
       .write.mode("append").partitionBy("tranche", "modality").parquet(dir)
     val before = rows(dir)
     assert(files(dir).size > 3, s"premise: >1 file somewhere, got ${files(dir).size}")
-    Ledger.compact(spark, dir)
+    Maintenance.rewrite(spark, Ledger.store(dir))
     assert(rows(dir) == before, "compaction changed the ledger's rows")
     val perPart = files(dir).groupBy(_.getParentFile.getPath)
     assert(perPart.size == 3 && perPart.values.forall(_.size == 1),
@@ -86,7 +86,7 @@ class LedgerSpec extends SparkSpec {
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir.compact/bands/junk"), "crashed pass")
     val after = rows(dir)
-    Ledger.compact(spark, dir)
+    Maintenance.rewrite(spark, Ledger.store(dir))
     assert(rows(dir) == after)
   }
 

@@ -102,7 +102,7 @@ class StoreIndexSpec extends SparkSpec {
       "self-exclusion did not reproduce the first attempt")
     // compaction collapses the double-banded rows without changing
     // geometry or verdicts
-    ImageHash.compactHashIndex(spark, dir)
+    Maintenance.rewrite(spark, ImageHash.hashStore(dir))
     assert(ImageHash.readHashIndexParams(spark, dir) == 8)
     val again = ImageHash.ledgerProbeIndexed(spark, dir, tranche,
       "doc_id", "hash", exclude = Some(tranche.select("doc_id")))
@@ -131,7 +131,7 @@ class StoreIndexSpec extends SparkSpec {
       "doc_id", exclude = Some(tranche.select("doc_id")))
     assert(rows(rerun) == rows(mem),
       "self-exclusion did not reproduce the first attempt")
-    VideoHash.compactSeqIndex(spark, dir)
+    Maintenance.rewrite(spark, VideoHash.seqStore(dir))
     val again = VideoHash.ledgerProbeIndexed(spark, dir, tFrames, tranche,
       "doc_id", exclude = Some(tranche.select("doc_id")))
     assert(rows(again) == rows(mem))

@@ -24,7 +24,7 @@ class StoreLayoutSpec extends SparkSpec {
   import StoreLayoutSpec._
 
   private lazy val dep = {
-    val d = deployment(spark, sf())
+    val d = deployment(spark, sf(), tempDir("layout"))
     Curation.commitTranche(d.tranche, 1L, d.stores, imgHashes = Some(d.imgs),
       vidFrames = Some(d.vids), embeddings = Some(d.embs))
     d
@@ -74,7 +74,7 @@ class StoreLayoutSpec extends SparkSpec {
 
   test("hidden files and directories are never read") {
     val src = s"${dep.stores.image}/members"
-    val dir = Files.createTempDirectory("hidden").toString + "/members"
+    val dir = tempDir("hidden") + "/members"
     val fs = StoreSwap.fsOf(spark, src)
     FileUtil.copy(fs, new Path(src), fs, new Path(dir), false,
       spark.sessionState.newHadoopConf())
@@ -109,7 +109,7 @@ class StoreLayoutSpec extends SparkSpec {
       rows(spark.read.parquet(params)))
     // a pre-partitioned flat copy of a partitioned table: read whole,
     // without the partition column, exactly as Spark reads it
-    val flat = Files.createTempDirectory("flat").toString + "/members"
+    val flat = tempDir("flat") + "/members"
     spark.read.parquet(s"${dep.stores.image}/members").drop("hp")
       .write.parquet(flat)
     val mine = StoreLayout.read(spark, flat, ImageHash.MembersTable, Some(Seq(1, 2)))
@@ -132,11 +132,12 @@ class StoreLayoutSpec extends SparkSpec {
   test("a store append writes the tree, bytes and modes of a plain Spark write, starting no process") {
     val df = spark.range(0, 128, 1, 1)
       .select(col("id"), (col("id") * 7 % 64).cast("int").as("p"))
-    val root = Files.createTempDirectory("sameout").toString
+    val root = tempDir("sameout")
     val (_, plainProcs) = ProcLog.during(df.repartition(col("p"))
       .write.mode("append").partitionBy("p").parquet(s"$root/plain"))
     val (_, storeProcs) = ProcLog.during(
-      StoreLayout.appendBuckets(df, "p", s"$root/store"))
+      StoreLayout.appendBuckets(df, StoreLayout.Table("id BIGINT, p INT", Seq("p")),
+        s"$root/store"))
     // control: the plain write set its modes through Hadoop's `chmod`
     assert(plainProcs.count(_.startsWith("chmod")) > 64, plainProcs.take(3))
     assert(storeProcs.isEmpty, storeProcs.take(3))
@@ -154,7 +155,7 @@ class StoreLayoutSpec extends SparkSpec {
   }
 
   test("the store FS sets a mode in-process and leaves bits above 0777 to Hadoop") {
-    val local = Files.createTempDirectory("modes").resolve("d")
+    val local = java.nio.file.Paths.get(tempDir("modes")).resolve("d")
     val d = new Path(local.toString)
     val fs = StoreSwap.fsOf(spark, d.toString)
     assert(fs.isInstanceOf[StoreLayout.LocalFs])
@@ -174,7 +175,7 @@ object StoreLayoutSpec {
                               imgs: DataFrame, vids: DataFrame,
                               embs: DataFrame)
 
-  /** A deployment shaped like the ingest benchmark's: an IVF codebook,
+  /** A deployment under `root` shaped like the ingest benchmark's: an IVF codebook,
     * a bootstrap tranche (every doc with doc_id % 5 != 0) over text,
     * image hashes and video frames, a PQ serving store and a three-doc
     * takedown, so every table a commit reads exists and the 64-bucket
@@ -182,10 +183,10 @@ object StoreLayoutSpec {
     * (doc_id % 5 == 0) with its image hashes, video frames and
     * embeddings, uncommitted.
     */
-  def deployment(spark: SparkSession, sfDir: String): Deployment = {
+  def deployment(spark: SparkSession, sfDir: String,
+                 root: String): Deployment = {
     val docs = Tables.documents(spark, sfDir).select("doc_id", "text")
     val emb = Tables.embeddings(spark, sfDir)
-    val root = Files.createTempDirectory("layout").toString
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led", pqIndex = s"$root/pq")
     def imgOf(b: DataFrame) =

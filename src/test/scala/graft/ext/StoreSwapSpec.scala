@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ class StoreSwapSpec extends SparkSpec {
 
   private def mkStore(parts: Int = 6, rowsPer: Int = 50): String = {
     import spark.implicits._
-    val root = Files.createTempDirectory("swapspec").toString
+    val root = tempDir("swapspec")
     val df = (0 until parts).flatMap(p =>
       (0 until rowsPer).map(i => (p.toLong * 1000 + i, s"v$i", p.toLong)))
       .toDF("id", "payload", "idp")
@@ -88,7 +86,7 @@ class StoreSwapSpec extends SparkSpec {
     // hand-build a zero-padded sibling whose value re-renders as 1
     // (idp=01 infers as 1, would re-render into live bucket idp=1)
     import spark.implicits._
-    val tmp = s"${Files.createTempDirectory("swapspec07")}/p"
+    val tmp = s"${tempDir("swapspec07")}/p"
     Seq((9901L, "x"), (9902L, "y")).toDF("id", "payload")
       .coalesce(1).write.parquet(tmp)
     val padded = new org.apache.hadoop.fs.Path(s"$dir/idp=01")
