@@ -1,9 +1,7 @@
 package graft.expr
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.types.{DataType, LongType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -75,933 +73,4 @@ case class Md5Prefix64(child: Expression, digits: Int)
 
   override protected def withNewChildInternal(newChild: Expression): Md5Prefix64 =
     copy(child = newChild)
-}
-
-/** `SparkSessionExtensions` installer (SURVEY.md §7.3 tier (c) machinery):
-  * `.withExtensions(new GraftExtensions)` or
-  * `spark.sql.extensions=graft.expr.GraftExtensions` exposes the custom
-  * expression library to SQL: `md5_prefix64(str, digits)`,
-  * `word_shingles(str, k)`, `vec_dot(a, b)`, `vec_l2sq(a, b)`,
-  * `sorted_long_intersect(a, b)`, `subword_token_count(str)`,
-  * `url_canonical(str)`, `top_k_pairs(score, key, k)`,
-  * `cms_sketch(term, depth, width)`, `hll_sketch(term)`,
-  * `bloom_sketch(term, mBits, k)`.
-  */
-class GraftExtensions extends (SparkSessionExtensions => Unit) {
-
-  private def intLit(e: Expression, what: String): Int = e match {
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v
-    case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v.toInt
-    case other => throw new IllegalArgumentException(
-      s"$what must be an integer literal, got $other")
-  }
-
-  private def inject(e: SparkSessionExtensions, name: String, arity: Int,
-                     usage: String, build: Seq[Expression] => Expression): Unit =
-    e.injectFunction((
-      new FunctionIdentifier(name),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == arity, s"$name takes $arity argument(s)")
-        build(exprs)
-      }))
-
-  override def apply(e: SparkSessionExtensions): Unit = {
-    // tier-(c) optimizer rule: opt-in approx-distinct mode
-    // (spark.graft.approxCountDistinct=true) — see plans/ApproxDistinctRule
-    e.injectOptimizerRule(spark => graft.plans.ApproxDistinctRule(spark))
-    inject(e, "md5_prefix64", 2,
-      "md5_prefix64(str, digits) - value of the first `digits` hex chars of md5(str); " +
-        "digits must be an integer literal in [1, 15]",
-      xs => Md5Prefix64(xs.head, intLit(xs(1), "md5_prefix64 digits")))
-    inject(e, "word_shingles", 2,
-      "word_shingles(str, k) - overlapping k-word shingles of a space-tokenized string; " +
-        "k must be an integer literal",
-      xs => WordShingles(xs.head, intLit(xs(1), "word_shingles k")))
-    inject(e, "vec_dot", 2,
-      "vec_dot(a, b) - dot product of two ARRAY<DOUBLE> of equal length",
-      xs => VecDot(xs.head, xs(1)))
-    inject(e, "vec_l2sq", 2,
-      "vec_l2sq(a, b) - squared L2 distance of two ARRAY<DOUBLE> of equal length",
-      xs => VecL2Sq(xs.head, xs(1)))
-    inject(e, "sorted_long_intersect", 2,
-      "sorted_long_intersect(a, b) - count of elements of a present in b. BOTH " +
-        "ARRAY<BIGINT> INPUTS MUST BE SORTED ASCENDING (e.g. sort_array(...)); " +
-        "unsorted input silently under-counts - run with -Dgraft.sorted.check=true " +
-        "to turn misuse into an error",
-      xs => SortedLongIntersect(xs.head, xs(1)))
-    inject(e, "subword_token_count", 1,
-      "subword_token_count(str) - BPE-ish subword token count of a string",
-      xs => SubwordTokenCount(xs.head))
-    inject(e, "url_canonical", 1,
-      "url_canonical(str) - canonical dedup key of a URL: fragment dropped, " +
-        "scheme/authority lowercased, tracking params (utm_*, expire, ref, fbclid) " +
-        "stripped, ?/& punctuation tidied; single-pass codegen",
-      xs => UrlCanonical(xs.head))
-    // aggregate: the analyzer wraps a bare AggregateFunction from the
-    // registry in an AggregateExpression itself
-    inject(e, "top_k_pairs", 3,
-      "top_k_pairs(score, key, k) - aggregate: the k best (BIGINT score, STRING key) " +
-        "pairs per group, ordered score DESC then key ASC; k must be an integer literal",
-      xs => TopKPairs(xs.head, xs(1), intLit(xs(2), "top_k_pairs k")))
-    inject(e, "cms_sketch", 3,
-      "cms_sketch(term, depth, width) - aggregate: count-min sketch of STRING terms " +
-        "as a row-major depth*width ARRAY<BIGINT>; depth and width must be integer literals",
-      xs => CmsSketchAgg(xs.head, intLit(xs(1), "cms_sketch depth"),
-        intLit(xs(2), "cms_sketch width")))
-    inject(e, "hll_sketch", 1,
-      "hll_sketch(term) - aggregate: HyperLogLog register file (p=8) of STRING " +
-        "terms as ARRAY<INT>(256); estimate = 0.7213/(1+1.079/256)*65536 / " +
-        "sum(2^-Mj), mergeable by elementwise max",
-      xs => HllSketchAgg(xs.head))
-    inject(e, "bloom_sketch", 3,
-      "bloom_sketch(term, mBits, k) - aggregate: Bloom filter of STRING terms " +
-        "as ARRAY<BIGINT> (mBits/64 words); zero false negatives, mergeable by " +
-        "elementwise OR; mBits and k must be integer literals",
-      xs => BloomSketchAgg(xs.head, intLit(xs(1), "bloom_sketch mBits"),
-        intLit(xs(2), "bloom_sketch k")))
-    inject(e, "bloom_might_contain", 4,
-      "bloom_might_contain(words, term, mBits, k) - membership probe against a " +
-        "bloom_sketch word array built with the same (mBits, k); true iff all k " +
-        "bit positions of term are set. mBits and k must be integer literals",
-      xs => BloomSketchAgg.mightContainExpr(xs.head, xs(1),
-        intLit(xs(2), "bloom_might_contain mBits"),
-        intLit(xs(3), "bloom_might_contain k")))
-
-    // table-valued surface for the native as-of join: the planner node
-    // (AsOfJoinPlan + AsOfJoinExec, plans/AsOfJoinNative.scala) becomes
-    // reachable from pure SQL — `FROM asof_join('l','r','k','t')` — so a
-    // SQL-only user gets the single-exchange merge, not the windowed
-    // composition. Args are name literals resolved against the session
-    // catalog at analysis time.
-    e.injectTableFunction((
-      new FunctionIdentifier("asof_join"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "asof_join",
-        "asof_join(left, right, key, time[, direction]) - table function: " +
-          "point-in-time join of catalog tables/views `left` and `right` on " +
-          "`key`, matching the latest right `time` <= left `time` " +
-          "(direction 'backward', default) or earliest >= ('forward'); " +
-          "appends a `matched` column. All arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4 || exprs.size == 5,
-          "asof_join takes (left, right, key, time[, direction])")
-        val args = exprs.zipWithIndex.map {
-          case (org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, _), _) =>
-            s.toString
-          case (other, i) => throw new IllegalArgumentException(
-            s"asof_join argument ${i + 1} must be a string literal, got $other")
-        }
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.plans.AsOfJoinNative.asOf(
-          spark.table(args(0)), spark.table(args(1)), args(2), args(3), args(3),
-          direction = if (args.size == 5) args(4) else "backward")
-          .queryExecution.analyzed
-      }))
-
-    // same table-valued surface for the native range join (broadcast
-    // interval sweep, plans/RangeJoinNative.scala)
-    e.injectTableFunction((
-      new FunctionIdentifier("range_join"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "range_join",
-        "range_join(points, intervals, point, lo, hi) - table function: rows of " +
-          "catalog table/view `points` joined to every `intervals` row whose " +
-          "[lo, hi] contains `point`. All arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5, "range_join takes (points, intervals, point, lo, hi)")
-        val args = exprs.zipWithIndex.map {
-          case (org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, _), _) =>
-            s.toString
-          case (other, i) => throw new IllegalArgumentException(
-            s"range_join argument ${i + 1} must be a string literal, got $other")
-        }
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.plans.RangeJoinNative.pointsInIntervals(
-          spark.table(args(0)), spark.table(args(1)), args(2), args(3), args(4))
-          .queryExecution.analyzed
-      }))
-
-    // the span-dedup family as table functions: a SQL-only user gets the
-    // bounded-shuffle corpus dedup passes — chunk-aligned and
-    // every-alignment — straight from the catalog
-    def injectDocsTable(name: String, usage: String,
-                        build: (org.apache.spark.sql.DataFrame, String, String, Int) =>
-                          org.apache.spark.sql.DataFrame): Unit =
-      e.injectTableFunction((
-        new FunctionIdentifier(name),
-        new ExpressionInfo(classOf[GraftExtensions].getName, null, name, usage, ""),
-        (exprs: Seq[Expression]) => {
-          require(exprs.size == 4, s"$name takes (table, idCol, textCol, window)")
-          val strs = exprs.take(3).zipWithIndex.map {
-            case (org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, _), _) =>
-              s.toString
-            case (other, i) => throw new IllegalArgumentException(
-              s"$name argument ${i + 1} must be a string literal, got $other")
-          }
-          val window = intLit(exprs(3), s"$name window")
-          val spark = org.apache.spark.sql.SparkSession.active
-          build(spark.table(strs(0)), strs(1), strs(2), window)
-            .queryExecution.analyzed
-        }))
-    injectDocsTable("chunk_dedup",
-      "chunk_dedup(table, idCol, textCol, window) - table function: keep each " +
-        "distinct window-token chunk only at its first corpus position and " +
-        "reassemble documents; returns (doc_id, n_chunks, n_kept, text_dedup). " +
-        "table/idCol/textCol string literals, window an integer literal.",
-      (df, id, text, w) => graft.ext.Dedup.chunkDedup(df, id, text, w))
-    injectDocsTable("substring_dedup",
-      "substring_dedup(table, idCol, textCol, window) - table function: exact-" +
-        "substring dedup at every alignment (non-first occurrences of " +
-        "corpus-duplicated window-token shingles lose their tokens); returns " +
-        "(doc_id, n_tokens, n_removed, text_clean). table/idCol/textCol string " +
-        "literals, window an integer literal.",
-      (df, id, text, w) => graft.ext.Dedup.substringDedup(df, id, text, w))
-
-    def strLit(e: Expression, what: String): String = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(s: UTF8String, _) =>
-        s.toString
-      case other => throw new IllegalArgumentException(
-        s"$what must be a string literal, got $other")
-    }
-    def longLit(e: Expression, what: String): Long = e match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toLong
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Long, _) => v
-      case other => throw new IllegalArgumentException(
-        s"$what must be an integer literal, got $other")
-    }
-
-    // the curation-selection kernels as table functions, completing the
-    // SQL-only reach of the corpus pipeline (dedupe spans → classify
-    // arrivals → fill a budget) from the catalog
-    e.injectTableFunction((
-      new FunctionIdentifier("budget_select"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "budget_select",
-        "budget_select(table, qualityCol, idCol, nCol, budget) - table " +
-          "function: keep the maximal quality-descending prefix of `table` " +
-          "whose cumulative `nCol` stays <= budget (two-phase distributed " +
-          "prefix sum); appends cum_tokens. Cols string literals, budget an " +
-          "integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5,
-          "budget_select takes (table, qualityCol, idCol, nCol, budget)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Sampling.budgetSelect(
-          spark.table(strLit(exprs(0), "budget_select table")),
-          strLit(exprs(1), "budget_select qualityCol"),
-          strLit(exprs(2), "budget_select idCol"),
-          strLit(exprs(3), "budget_select nCol"),
-          longLit(exprs(4), "budget_select budget"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("first_occurrence_dedup"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "first_occurrence_dedup",
-        "first_occurrence_dedup(table, keyCol, trancheCol, arrivalCol) - " +
-          "table function: classify every row of `table` as kept / " +
-          "dup_cross / dup_within by first occurrence of `keyCol` in " +
-          "(tranche, arrival) order; appends (status, keep_ord). All " +
-          "arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "first_occurrence_dedup takes (table, keyCol, trancheCol, arrivalCol)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val df = spark.table(strLit(exprs(0), "first_occurrence_dedup table"))
-        graft.ext.Dedup.firstOccurrenceDedup(df,
-          org.apache.spark.sql.functions.col(
-            strLit(exprs(1), "first_occurrence_dedup keyCol")),
-          org.apache.spark.sql.functions.col(
-            strLit(exprs(2), "first_occurrence_dedup trancheCol")),
-          org.apache.spark.sql.functions.col(
-            strLit(exprs(3), "first_occurrence_dedup arrivalCol")))
-          .queryExecution.analyzed
-      }))
-
-    // the curation READ side as table functions (VERDICT r14 ask #8):
-    // a SQL-only consumer audits a deployment straight from the
-    // catalog — the published-release registry, a release re-cut, and
-    // the between-cutoffs diff — addressing the deployment by its
-    // ledger path (every read-side table derives from it:
-    // `<ledger>.tombstones`, `<ledger>.releases*`). Read-only: none of
-    // these take the writer lock or touch modality stores.
-    def ledgerStores(path: String) =
-      graft.ext.Curation.Stores("", "", "", "", "", path)
-    e.injectTableFunction((
-      new FunctionIdentifier("curation_releases"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "curation_releases",
-        "curation_releases(ledgerPath) - table function: the published-" +
-          "release registry of the deployment whose ledger lives at " +
-          "ledgerPath; returns (cutoff, rows, digest, published_at, " +
-          "withdrawn, withdrawn_reason, withdrawn_at). ledgerPath a " +
-          "string literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 1, "curation_releases takes (ledgerPath)")
-        graft.ext.Curation.releases(
-          org.apache.spark.sql.SparkSession.active,
-          ledgerStores(strLit(exprs(0), "curation_releases ledgerPath")))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("corpus_asof"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "corpus_asof",
-        "corpus_asof(ledgerPath, cutoff) - table function: the curated " +
-          "corpus as it ships at tranche `cutoff` — kept (doc_id, " +
-          "tranche, modality) rows minus every retracted id " +
-          "(Curation.corpusAsOf). ledgerPath a string literal, cutoff " +
-          "an integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "corpus_asof takes (ledgerPath, cutoff)")
-        graft.ext.Curation.corpusAsOf(
-          org.apache.spark.sql.SparkSession.active,
-          ledgerStores(strLit(exprs(0), "corpus_asof ledgerPath")),
-          longLit(exprs(1), "corpus_asof cutoff"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("corpus_diff"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "corpus_diff",
-        "corpus_diff(ledgerPath, a, b) - table function: what changed " +
-          "between the re-cuts at cutoffs a and b — rows of " +
-          "corpus_asof(b) absent at a tagged 'added', rows of the " +
-          "earlier cut absent from the later tagged 'removed' " +
-          "(Curation.corpusDiff). ledgerPath a string literal, a/b " +
-          "integer literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 3, "corpus_diff takes (ledgerPath, a, b)")
-        graft.ext.Curation.corpusDiff(
-          org.apache.spark.sql.SparkSession.active,
-          ledgerStores(strLit(exprs(0), "corpus_diff ledgerPath")),
-          longLit(exprs(1), "corpus_diff a"),
-          longLit(exprs(2), "corpus_diff b"))
-          .queryExecution.analyzed
-      }))
-
-    // the curation SERVE + EXPORT sides as table functions (VERDICT
-    // r15 #4), completing the SQL-only reach: a consumer serves ANN
-    // with the takedown contract applied and materializes a published
-    // release straight from the catalog. serve_ann addresses the
-    // deployment by (ledger, pq) paths; export_release by the ledger
-    // alone (statuses + holes, content refs null — every release
-    // table derives from `<ledger>.releases*`) or by the full store
-    // paths when content refs matter. A WITHDRAWN release refuses
-    // here exactly as in Scala — the error surfaces through SQL.
-    e.injectTableFunction((
-      new FunctionIdentifier("serve_ann"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "serve_ann",
-        "serve_ann(ledgerPath, pqPath, queryTable, topK) - table " +
-          "function: disk-native ADC top-k over the deployment's live " +
-          "PQ serving generation with every UNAPPLIED tombstone " +
-          "excluded from the candidate side before ranking " +
-          "(Curation.serveAnn). queryTable names a catalog table/view " +
-          "with (vec_id, embedding). ledgerPath/pqPath/queryTable " +
-          "string literals, topK an integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "serve_ann takes (ledgerPath, pqPath, queryTable, topK)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Curation.serveAnn(spark,
-          graft.ext.Curation.Stores("", "", "", "", "",
-            strLit(exprs(0), "serve_ann ledgerPath"),
-            pqIndex = strLit(exprs(1), "serve_ann pqPath")),
-          spark.table(strLit(exprs(2), "serve_ann queryTable")),
-          topK = intLit(exprs(3), "serve_ann topK"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("export_release"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "export_release",
-        "export_release(ledgerPath, cutoff[, textPath, imagePath, " +
-          "audioPath, videoPath, embeddingPath]) - table function: " +
-          "materialize the published release at `cutoff` — one row per " +
-          "pinned manifest (doc_id, modality) with status " +
-          "exported/hole, takedown holes named instead of silently " +
-          "absent (Curation.exportRelease). The 2-arg form exports " +
-          "statuses from the ledger alone (content refs null); the " +
-          "7-arg form joins each modality store for content_rows/" +
-          "content_ref. Paths string literals, cutoff an integer " +
-          "literal; refuses a withdrawn release.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2 || exprs.size == 7,
-          "export_release takes (ledgerPath, cutoff) or (ledgerPath, " +
-            "cutoff, textPath, imagePath, audioPath, videoPath, " +
-            "embeddingPath)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        def p(i: Int, what: String) =
-          if (exprs.size == 2) "" else strLit(exprs(i), what)
-        graft.ext.Curation.exportRelease(spark,
-          graft.ext.Curation.Stores(
-            p(2, "export_release textPath"),
-            p(3, "export_release imagePath"),
-            p(4, "export_release audioPath"),
-            p(5, "export_release videoPath"),
-            p(6, "export_release embeddingPath"),
-            strLit(exprs(0), "export_release ledgerPath")),
-          longLit(exprs(1), "export_release cutoff"))
-          .queryExecution.analyzed
-      }))
-
-    e.injectTableFunction((
-      new FunctionIdentifier("export_release_payload"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "export_release_payload",
-        "export_release_payload(ledgerPath, cutoff, modality, storePath)" +
-          " - table function: the train-ready payload of a published " +
-          "release for one modality — the pinned manifest's rows joined " +
-          "back to the modality's store content with takedown holes " +
-          "EXCLUDED (Curation.exportReleasePayload). modality one of " +
-          "text/image/audio/video/embedding; storePath that modality's " +
-          "store root. Paths/modality string literals, cutoff an " +
-          "integer literal; refuses a withdrawn release.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "export_release_payload takes (ledgerPath, cutoff, modality, " +
-            "storePath)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val ledger = strLit(exprs(0), "export_release_payload ledgerPath")
-        val modality = strLit(exprs(2), "export_release_payload modality")
-        val store = strLit(exprs(3), "export_release_payload storePath")
-        val stores = modality match {
-          case "text" =>
-            graft.ext.Curation.Stores(store, "", "", "", "", ledger)
-          case "image" =>
-            graft.ext.Curation.Stores("", store, "", "", "", ledger)
-          case "audio" =>
-            graft.ext.Curation.Stores("", "", store, "", "", ledger)
-          case "video" =>
-            graft.ext.Curation.Stores("", "", "", store, "", ledger)
-          case "embedding" =>
-            graft.ext.Curation.Stores("", "", "", "", store, ledger)
-          case other => throw new IllegalArgumentException(
-            s"unknown payload modality '$other' — one of text, image, " +
-              "audio, video, embedding")
-        }
-        graft.ext.Curation.exportReleasePayload(spark, stores,
-          longLit(exprs(1), "export_release_payload cutoff"), modality)
-          .queryExecution.analyzed
-      }))
-
-    // the curation OPERATOR CONSOLE as table functions (VERDICT r16
-    // #5): the read/serve side was SQL-reachable but the compliance
-    // actions an operator console needs — the deployment audit, the
-    // scheduled-maintenance report, the release/backup integrity
-    // verifies — still required Scala. All read-only; none takes the
-    // writer lock. Two addressing forms where stores matter: the
-    // ledger path alone audits the ledger-side state (ledger, id
-    // registry, tombstones, releases — unregistered stores simply
-    // contribute no rows), and the full 6/7-path form audits the whole
-    // deployment including modality stores and the PQ serving index.
-    def storesOf(exprs: Seq[Expression], what: String)
-        : graft.ext.Curation.Stores = exprs.size match {
-      case 1 => ledgerStores(strLit(exprs(0), s"$what ledgerPath"))
-      case 6 | 7 => graft.ext.Curation.Stores(
-        strLit(exprs(0), s"$what textPath"),
-        strLit(exprs(1), s"$what imagePath"),
-        strLit(exprs(2), s"$what audioPath"),
-        strLit(exprs(3), s"$what videoPath"),
-        strLit(exprs(4), s"$what embeddingPath"),
-        strLit(exprs(5), s"$what ledgerPath"),
-        pqIndex =
-          if (exprs.size == 7) strLit(exprs(6), s"$what pqPath") else "")
-      case n => throw new IllegalArgumentException(
-        s"$what takes (ledgerPath) or (textPath, imagePath, audioPath, " +
-          s"videoPath, embeddingPath, ledgerPath[, pqPath]); got $n args")
-    }
-    e.injectTableFunction((
-      new FunctionIdentifier("curation_fsck"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "curation_fsck",
-        "curation_fsck(ledgerPath | textPath, imagePath, audioPath, " +
-          "videoPath, embeddingPath, ledgerPath[, pqPath]) - table " +
-          "function: the deployment audit (Curation.fsck) — one row per " +
-          "check, (check, status ok/pending/violation, n, detail); " +
-          "`pending` resolves at the next scheduled pass by design, " +
-          "`violation` names lost state with its recovery. Read-only, " +
-          "lock-free. Paths string literals.", ""),
-      (exprs: Seq[Expression]) =>
-        graft.ext.Curation.consoleRead(
-          graft.ext.Curation.fsck(
-            org.apache.spark.sql.SparkSession.active,
-            storesOf(exprs, "curation_fsck"))
-            .queryExecution.analyzed)))
-    e.injectTableFunction((
-      new FunctionIdentifier("maintenance_report"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "maintenance_report",
-        "maintenance_report(ledgerPath | textPath, imagePath, audioPath, " +
-          "videoPath, embeddingPath, ledgerPath[, pqPath]) - table " +
-          "function: the scheduled-maintenance due report " +
-          "(Curation.maintenanceReport at default thresholds) — one row " +
-          "per existing store: (store, files, buckets, files_per_bucket, " +
-          "tombstones_pending, due, skew, retired). Metadata-bounded, " +
-          "read-only. Paths string literals.", ""),
-      (exprs: Seq[Expression]) =>
-        graft.ext.Curation.consoleRead(
-          graft.ext.Curation.maintenanceReport(
-            org.apache.spark.sql.SparkSession.active,
-            storesOf(exprs, "maintenance_report"))
-            .queryExecution.analyzed)))
-    e.injectTableFunction((
-      new FunctionIdentifier("verify_release"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "verify_release",
-        "verify_release(ledgerPath, cutoff) - table function: audit one " +
-          "published release against its registry pin " +
-          "(Curation.verifyRelease) — one row: (cutoff, pinned_rows, " +
-          "pinned_digest, artifact_intact, recut_matches). " +
-          "recut_matches flips false the moment a takedown lands after " +
-          "publication, by design. ledgerPath a string literal, cutoff " +
-          "an integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "verify_release takes (ledgerPath, cutoff)")
-        graft.ext.Curation.consoleRead(
-          graft.ext.Curation.verifyRelease(
-            org.apache.spark.sql.SparkSession.active,
-            ledgerStores(strLit(exprs(0), "verify_release ledgerPath")),
-            longLit(exprs(1), "verify_release cutoff"))
-            .queryExecution.analyzed)
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("verify_snapshot"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "verify_snapshot",
-        "verify_snapshot(srcPath) - table function: audit one backup's " +
-          "integrity against its copy-time manifest, chain-resolved " +
-          "(Curation.verifySnapshot) — one row per role: (role, " +
-          "files_expected, files_found, bytes_expected, bytes_found, " +
-          "intact). srcPath a string literal naming the snapshot dir.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 1, "verify_snapshot takes (srcPath)")
-        graft.ext.Curation.consoleRead(
-          graft.ext.Curation.verifySnapshot(
-            org.apache.spark.sql.SparkSession.active,
-            strLit(exprs(0), "verify_snapshot srcPath"))
-            .queryExecution.analyzed)
-      }))
-
-    def dblLit(ex: Expression, what: String): Double = ex match {
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: java.math.BigDecimal, _) =>
-        v.doubleValue
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: org.apache.spark.sql.types.Decimal, _) =>
-        v.toDouble
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Double, _) => v
-      case org.apache.spark.sql.catalyst.expressions.Literal(v: Int, _) => v.toDouble
-      case other => throw new IllegalArgumentException(
-        s"$what must be a numeric literal, got $other")
-    }
-
-    // round-6 curation kernels: asymmetric containment dedup, curriculum
-    // ordering, and SQ8 quantization grading — same catalog-only reach
-    e.injectTableFunction((
-      new FunctionIdentifier("containment_pairs"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "containment_pairs",
-        "containment_pairs(table, idCol, textCol, maxDf, minContainment) - " +
-          "table function: asymmetric (containment) duplicate pairs via a " +
-          "rare-shingle inverted index; returns (a_id, b_id, la, lb, inter, " +
-          "jaccard, containment). Cols string literals, maxDf an integer " +
-          "literal, minContainment a numeric literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5,
-          "containment_pairs takes (table, idCol, textCol, maxDf, minContainment)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Dedup.containmentPairs(
-          spark.table(strLit(exprs(0), "containment_pairs table")),
-          strLit(exprs(1), "containment_pairs idCol"),
-          strLit(exprs(2), "containment_pairs textCol"),
-          maxDf = intLit(exprs(3), "containment_pairs maxDf"),
-          minContainment = dblLit(exprs(4), "containment_pairs minContainment"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("curriculum_interleave"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "curriculum_interleave",
-        "curriculum_interleave(table, idCol, scoreCol, nBuckets) - table " +
-          "function: rank by score desc (id tie-break), cut into nBuckets " +
-          "difficulty tiers, append (rank, bucket, pos); ordering by " +
-          "(pos, bucket) interleaves the tiers. Cols string literals, " +
-          "nBuckets an integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "curriculum_interleave takes (table, idCol, scoreCol, nBuckets)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Sampling.curriculumInterleave(
-          spark.table(strLit(exprs(0), "curriculum_interleave table")),
-          strLit(exprs(1), "curriculum_interleave idCol"),
-          strLit(exprs(2), "curriculum_interleave scoreCol"),
-          intLit(exprs(3), "curriculum_interleave nBuckets"))
-          .queryExecution.analyzed
-      }))
-    // profiling + snapshot audit as table functions: the one-scan
-    // ANALYZE and the crawl-delta classifier from pure SQL
-    e.injectTableFunction((
-      new FunctionIdentifier("table_profile"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "table_profile",
-        "table_profile(table) - table function: one-scan per-column profile of a " +
-          "catalog table/view; returns (col_name, n_nonnull, n_null, n_distinct, " +
-          "hll_est, min_s, max_s). Argument a string literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 1, "table_profile takes (table)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Profile.tableProfile(
-          spark.table(strLit(exprs(0), "table_profile table")))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("snapshot_diff"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "snapshot_diff",
-        "snapshot_diff(a, b, idCol) - table function: classify every id across " +
-          "two same-schema catalog tables/views as added / removed / changed / " +
-          "unchanged by row-fingerprint comparison. All arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 3, "snapshot_diff takes (a, b, idCol)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Profile.snapshotDiff(
-          spark.table(strLit(exprs(0), "snapshot_diff a")),
-          spark.table(strLit(exprs(1), "snapshot_diff b")),
-          strLit(exprs(2), "snapshot_diff idCol"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("sq8_stats"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "sq8_stats",
-        "sq8_stats(table, vecCol) - table function: per-dimension int8 " +
-          "scalar-quantization error report over a float-array column; " +
-          "returns (dim, mn, mx, n, sum_abs_err, max_err) in micro-units. " +
-          "Both arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 2, "sq8_stats takes (table, vecCol)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Quantize.sq8Stats(
-          spark.table(strLit(exprs(0), "sq8_stats table")),
-          strLit(exprs(1), "sq8_stats vecCol"))
-          .queryExecution.analyzed
-      }))
-    // round-7 kernels: the learned quality filter and incremental
-    // near-dup maintenance, reachable from pure SQL like the rest of
-    // the curation pipeline
-    e.injectTableFunction((
-      new FunctionIdentifier("model_quality_score"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "model_quality_score",
-        "model_quality_score(table, weights, idCol, textCol, buckets) - table " +
-          "function: score every document of `table` against the (bucket, wt) " +
-          "linear model in `weights` over hashed unigram+bigram features; " +
-          "returns (doc_id, n_features, score, keep). Table/col arguments " +
-          "string literals, buckets an integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5,
-          "model_quality_score takes (table, weights, idCol, textCol, buckets)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.QualityModel.scoreDocuments(
-          spark.table(strLit(exprs(0), "model_quality_score table")),
-          strLit(exprs(2), "model_quality_score idCol"),
-          strLit(exprs(3), "model_quality_score textCol"),
-          spark.table(strLit(exprs(1), "model_quality_score weights")),
-          intLit(exprs(4), "model_quality_score buckets"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("incremental_neardup_pairs"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "incremental_neardup_pairs",
-        "incremental_neardup_pairs(standing, incoming, idCol, textCol) - table " +
-          "function: MinHash-LSH near-dup pairs a new tranche adds to a " +
-          "standing corpus (new x standing via the band index, new x new " +
-          "within the tranche); returns (a_id, b_id, jaccard, src). All " +
-          "arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "incremental_neardup_pairs takes (standing, incoming, idCol, textCol)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Dedup.incrementalNearDupPairs(
-          spark.table(strLit(exprs(0), "incremental_neardup_pairs standing")),
-          spark.table(strLit(exprs(1), "incremental_neardup_pairs incoming")),
-          strLit(exprs(2), "incremental_neardup_pairs idCol"),
-          strLit(exprs(3), "incremental_neardup_pairs textCol"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("ivf_assign_with"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "ivf_assign_with",
-        "ivf_assign_with(incoming, train, k, iters) - table function: assign " +
-          "`incoming`'s (vec_id, embedding) rows into the IVF codebook learned " +
-          "on `train` (no retrain — the index-append path); returns (vec_id, " +
-          "cell, dist). Tables string literals, k/iters integer literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4, "ivf_assign_with takes (incoming, train, k, iters)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.KMeans.assignWith(
-          spark.table(strLit(exprs(0), "ivf_assign_with incoming")),
-          spark.table(strLit(exprs(1), "ivf_assign_with train")),
-          intLit(exprs(2), "ivf_assign_with k"),
-          intLit(exprs(3), "ivf_assign_with iters"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("codebook_drift"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "codebook_drift",
-        "codebook_drift(standing, incoming, k, iters, ratio) - table function: " +
-          "per-cell drift report after IVF appends (n_standing, n_new, " +
-          "mean_std, mean_new, retrain flag at ratio x drift). Tables string " +
-          "literals, k/iters/ratio integer literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5,
-          "codebook_drift takes (standing, incoming, k, iters, ratio)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.KMeans.codebookDrift(
-          spark.table(strLit(exprs(0), "codebook_drift standing")),
-          spark.table(strLit(exprs(1), "codebook_drift incoming")),
-          intLit(exprs(2), "codebook_drift k"),
-          intLit(exprs(3), "codebook_drift iters"),
-          intLit(exprs(4), "codebook_drift ratio"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("bm25_topk"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "bm25_topk",
-        "bm25_topk(docs, queries, idCol, textCol, topK) - table function: " +
-          "top-K documents per query by BM25 (k1=1.2, b=0.75) over a (qid, " +
-          "qtext) query table; returns (qid, rank, doc_id, score, n_hits). " +
-          "Tables/cols string literals, topK an integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5,
-          "bm25_topk takes (docs, queries, idCol, textCol, topK)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Retrieval.bm25TopK(
-          spark.table(strLit(exprs(0), "bm25_topk docs")),
-          strLit(exprs(2), "bm25_topk idCol"),
-          strLit(exprs(3), "bm25_topk textCol"),
-          spark.table(strLit(exprs(1), "bm25_topk queries")),
-          topK = intLit(exprs(4), "bm25_topk topK"))
-          .queryExecution.analyzed
-      }))
-    // round-8 kernels: image perceptual dedup, hybrid-retrieval fusion,
-    // perceptron training, and FFD packing from pure SQL
-    e.injectTableFunction((
-      new FunctionIdentifier("hamming_neardup_pairs"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "hamming_neardup_pairs",
-        "hamming_neardup_pairs(hashes, idCol, hashCol, maxDist) - table " +
-          "function: all id pairs whose 64-bit perceptual hashes are within " +
-          "Hamming distance maxDist (banded equi-join, exact by pigeonhole); " +
-          "returns (a_id, b_id, hamming). Table/cols string literals, maxDist " +
-          "an integer literal < 8.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "hamming_neardup_pairs takes (hashes, idCol, hashCol, maxDist)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.ImageHash.hammingNearDups(
-          spark.table(strLit(exprs(0), "hamming_neardup_pairs hashes")),
-          strLit(exprs(1), "hamming_neardup_pairs idCol"),
-          strLit(exprs(2), "hamming_neardup_pairs hashCol"),
-          maxDist = intLit(exprs(3), "hamming_neardup_pairs maxDist"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("rrf_fuse"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "rrf_fuse",
-        "rrf_fuse(rankA, rankB, kRrf, topK) - table function: reciprocal-" +
-          "rank fusion of two (qid, doc_id, rank) retrieval lists; returns " +
-          "(qid, rank, doc_id, rrf, n_lists). Tables string literals, " +
-          "kRrf/topK integer literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4, "rrf_fuse takes (rankA, rankB, kRrf, topK)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Retrieval.reciprocalRankFusion(
-          Seq(spark.table(strLit(exprs(0), "rrf_fuse rankA")),
-            spark.table(strLit(exprs(1), "rrf_fuse rankB"))),
-          intLit(exprs(2), "rrf_fuse kRrf"),
-          intLit(exprs(3), "rrf_fuse topK"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("train_quality_model"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "train_quality_model",
-        "train_quality_model(docs, labels, idCol, textCol, buckets, rounds) - " +
-          "table function: batch-perceptron training of the hashed linear " +
-          "quality model against a (doc_id, y) label table (y in {-1, 1}); " +
-          "returns the (bucket, wt) weight table model_quality_score " +
-          "consumes. Tables/cols string literals, buckets/rounds integer " +
-          "literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 6,
-          "train_quality_model takes (docs, labels, idCol, textCol, buckets, rounds)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.QualityModel.trainPerceptron(
-          spark.table(strLit(exprs(0), "train_quality_model docs")),
-          strLit(exprs(2), "train_quality_model idCol"),
-          strLit(exprs(3), "train_quality_model textCol"),
-          spark.table(strLit(exprs(1), "train_quality_model labels")),
-          intLit(exprs(4), "train_quality_model buckets"),
-          intLit(exprs(5), "train_quality_model rounds"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("ffd_pack"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "ffd_pack",
-        "ffd_pack(table, idCol, lenCol, binSize, bucketWidth) - table " +
-          "function: first-fit-decreasing whole-document packing within " +
-          "length buckets; returns (doc_id, len, bucket, bin). Table/cols " +
-          "string literals, binSize/bucketWidth integer literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5,
-          "ffd_pack takes (table, idCol, lenCol, binSize, bucketWidth)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Packing.ffdPackBuckets(
-          spark.table(strLit(exprs(0), "ffd_pack table")),
-          strLit(exprs(1), "ffd_pack idCol"),
-          strLit(exprs(2), "ffd_pack lenCol"),
-          intLit(exprs(3), "ffd_pack binSize").toLong,
-          intLit(exprs(4), "ffd_pack bucketWidth").toLong)
-          .queryExecution.analyzed
-      }))
-    // late round-8 kernels: LM perplexity filtering and within-document
-    // repetition removal from pure SQL
-    e.injectTableFunction((
-      new FunctionIdentifier("lm_perplexity"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "lm_perplexity",
-        "lm_perplexity(table, idCol, textCol, targetExpr) - table function: " +
-          "score every document under a stupid-backoff hashed bigram LM " +
-          "trained on the rows where the SQL boolean `targetExpr` holds; " +
-          "returns (doc_id, n_bigrams, logprob, bin, ppl_bucket). All " +
-          "arguments string literals; targetExpr is a SQL expression over " +
-          "the table's columns.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "lm_perplexity takes (table, idCol, textCol, targetExpr)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.NgramLm.perplexityScores(
-          spark.table(strLit(exprs(0), "lm_perplexity table")),
-          strLit(exprs(1), "lm_perplexity idCol"),
-          strLit(exprs(2), "lm_perplexity textCol"),
-          org.apache.spark.sql.functions.expr(
-            strLit(exprs(3), "lm_perplexity targetExpr")))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("intradoc_dedup"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "intradoc_dedup",
-        "intradoc_dedup(table, idCol, textCol, width) - table function: keep " +
-          "only the first within-document occurrence of each aligned " +
-          "width-token segment (degenerate-repetition removal); returns " +
-          "(doc_id, n_segs, n_removed, clean_text). Table/cols string " +
-          "literals, width an integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "intradoc_dedup takes (table, idCol, textCol, width)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Boilerplate.dedupWithinDocuments(
-          spark.table(strLit(exprs(0), "intradoc_dedup table")),
-          strLit(exprs(1), "intradoc_dedup idCol"),
-          strLit(exprs(2), "intradoc_dedup textCol"),
-          intLit(exprs(3), "intradoc_dedup width"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("score_psi"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "score_psi",
-        "score_psi(standing, incoming, scoreCol, bins) - table function: " +
-          "population-stability report between two integer-score tables; " +
-          "returns (bin, n_std, n_new, psi), total PSI = sum(psi), alarm " +
-          "conventionally at 0.2. Tables/col string literals, bins an " +
-          "integer literal.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "score_psi takes (standing, incoming, scoreCol, bins)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Drift.scorePsi(
-          spark.table(strLit(exprs(0), "score_psi standing")),
-          spark.table(strLit(exprs(1), "score_psi incoming")),
-          strLit(exprs(2), "score_psi scoreCol"),
-          intLit(exprs(3), "score_psi bins"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("lsh_recall_audit"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "lsh_recall_audit",
-        "lsh_recall_audit(table, idCol, textCol) - table function: exact " +
-          "all-pairs Jaccard over the (bounded!) sample table vs the " +
-          "MinHash-LSH candidate pipeline; returns per Jaccard decile " +
-          "(jband, n_truth, n_caught). All arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 3,
-          "lsh_recall_audit takes (table, idCol, textCol)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Dedup.lshRecallAudit(
-          spark.table(strLit(exprs(0), "lsh_recall_audit table")),
-          strLit(exprs(1), "lsh_recall_audit idCol"),
-          strLit(exprs(2), "lsh_recall_audit textCol"))
-          .queryExecution.analyzed
-      }))
-    // round-9 kernels: unigram-LM tokenizer training and the streaming
-    // per-tranche curation ledger from pure SQL
-    e.injectTableFunction((
-      new FunctionIdentifier("unigram_train"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "unigram_train",
-        "unigram_train(table, textCol, multiK, rounds) - table function: " +
-          "SentencePiece-style hard-EM unigram tokenizer training over the " +
-          "table's word stream; returns the final (piece, cnt, cost_fp) " +
-          "vocabulary with fixed-point -log2 likelihood costs. Table/col " +
-          "string literals, multiK/rounds integer literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "unigram_train takes (table, textCol, multiK, rounds)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.UnigramLm.train(
-          graft.ext.TextAnalytics.wordFreq(
-            spark.table(strLit(exprs(0), "unigram_train table")),
-            strLit(exprs(1), "unigram_train textCol")),
-          multiK = intLit(exprs(2), "unigram_train multiK"),
-          rounds = intLit(exprs(3), "unigram_train rounds"))
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("ledger_probe"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null, "ledger_probe",
-        "ledger_probe(standing, incoming, idCol, textCol) - table function: " +
-          "first-occurrence curation verdicts for the incoming tranche " +
-          "against the standing corpus' near-dup index; returns (doc_id, " +
-          "decision in exact_dup|near_dup|kept). All arguments string " +
-          "literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 4,
-          "ledger_probe takes (standing, incoming, idCol, textCol)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        val idCol = strLit(exprs(2), "ledger_probe idCol")
-        val textCol = strLit(exprs(3), "ledger_probe textCol")
-        graft.ext.Dedup.ledgerProbe(
-          graft.ext.Dedup.nearDupIndex(
-            spark.table(strLit(exprs(0), "ledger_probe standing")),
-            idCol, textCol),
-          spark.table(strLit(exprs(1), "ledger_probe incoming")),
-          idCol, textCol)
-          .queryExecution.analyzed
-      }))
-    e.injectTableFunction((
-      new FunctionIdentifier("embedding_ledger_probe"),
-      new ExpressionInfo(classOf[GraftExtensions].getName, null,
-        "embedding_ledger_probe",
-        "embedding_ledger_probe(standing, incoming, idCol, embCol, " +
-          "blockCol) - table function: first-occurrence semantic " +
-          "curation verdicts for the incoming embedding tranche against " +
-          "the standing corpus (identity exact, block-scoped cosine >= " +
-          "0.35 near); returns (doc_id, decision in " +
-          "exact_dup|near_dup|kept). All arguments string literals.", ""),
-      (exprs: Seq[Expression]) => {
-        require(exprs.size == 5,
-          "embedding_ledger_probe takes (standing, incoming, idCol, embCol, blockCol)")
-        val spark = org.apache.spark.sql.SparkSession.active
-        graft.ext.Similarity.ledgerProbe(
-          spark.table(strLit(exprs(0), "embedding_ledger_probe standing")),
-          spark.table(strLit(exprs(1), "embedding_ledger_probe incoming")),
-          strLit(exprs(2), "embedding_ledger_probe idCol"),
-          strLit(exprs(3), "embedding_ledger_probe embCol"),
-          strLit(exprs(4), "embedding_ledger_probe blockCol"),
-          threshold = 0.35)
-          .queryExecution.analyzed
-      }))
-  }
 }

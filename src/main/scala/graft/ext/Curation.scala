@@ -93,10 +93,10 @@ object Curation {
                           pqIndex: String = "")
 
   /** Run a read-only audit `f` with the deployment's driver-side check
-    * fan-out executing INLINE on the calling thread. The SQL console's
-    * table functions ([[fsck]]/[[maintenanceReport]]/[[verifyRelease]]/
-    * [[verifySnapshot]] as `curation_fsck` etc.) must use it: a table-
-    * function builder runs inside `SessionCatalog.lookupFunction`,
+    * fan-out executing INLINE on the calling thread. Every SQL table
+    * function's builder runs under it (`graft.expr.GraftExtensions`,
+    * e.g. `curation_fsck` over [[fsck]]): a builder runs inside
+    * `SessionCatalog.lookupFunction`,
     * which holds the session-catalog monitor — a check task building a
     * Dataset on a worker thread re-enters the catalog and deadlocks
     * against the builder awaiting it. Inline, the monitor stays
@@ -2364,15 +2364,14 @@ object Curation {
     * the drifted buckets reach ([[Maintenance.erase]],
     * [[Maintenance.collapse]]).
     *
-    * `audit` names the unit's [[fsck]] tombstone check: the check's name
-    * and detail, and whether it counts distinct ids or rows of the
-    * store's first doc-keyed table. `skew`/`heal` are the IVF unit's
-    * codebook health, `retiredGens` the PQ unit's retired serving
-    * generations.
+    * `audit` names the unit's [[fsck]] tombstone check and the rows its
+    * detail counts: the rows of the store's first doc-keyed table that
+    * carry a retracted id. `skew`/`heal` are the IVF unit's codebook
+    * health, `retiredGens` the PQ unit's retired serving generations.
     */
   private final case class MaintUnit(name: String, root: String,
                                      store: Maintenance.Store,
-                                     audit: Option[(String, String, Boolean)] = None,
+                                     audit: Option[(String, String)] = None,
                                      skew: Option[() => Double] = None,
                                      heal: Option[Double => Int] = None,
                                      retiredGens:
@@ -2392,10 +2391,10 @@ object Curation {
     if (exists(spark, s"${stores.textIndex}/bands"))
       units += MaintUnit("text_index", stores.textIndex,
         Dedup.nearDupStore(stores.textIndex),
-        Some(("text_tombstoned_members", "text member rows", false)))
+        Some(("text_tombstoned_members", "text member rows")))
     if (exists(spark, stores.ledger))
       units += MaintUnit("ledger", stores.ledger, Ledger.store(stores.ledger),
-        Some(("ledger_tombstoned_rows", "ledger rows", false)))
+        Some(("ledger_tombstoned_rows", "ledger rows")))
     val reg = s"${stores.ledger}.ids"
     if (exists(spark, reg))
       // the registry RETAINS retracted ids (recommit refusal) — file
@@ -2406,12 +2405,12 @@ object Curation {
       case (name, d) =>
         if (exists(spark, s"$d/bands"))
           units += MaintUnit(s"${name}_index", d, ImageHash.hashStore(d),
-            Some((s"${name}_tombstoned_members", s"$name member rows", true)))
+            Some((s"${name}_tombstoned_members", s"$name member rows")))
     }
     if (exists(spark, s"${stores.video}/shingles"))
       units += MaintUnit("video_index", stores.video,
         VideoHash.seqStore(stores.video),
-        Some(("video_tombstoned_seqs", "video sequence rows", true)))
+        Some(("video_tombstoned_seqs", "video sequence rows")))
     if (exists(spark, s"${stores.embedding}/centroids"))
       // erasure is surgical (affected cells only); per-tranche append
       // files collapse cell-locally when the file census makes the unit
@@ -2422,7 +2421,7 @@ object Curation {
       // [[IvfIndex.heal]] splits the hot cells, bounded per window.
       units += MaintUnit("embedding_ivf", stores.embedding,
         IvfIndex.vectorsStore(spark, stores.embedding),
-        Some(("embedding_tombstoned_vectors", "IVF vector rows", true)),
+        Some(("embedding_tombstoned_vectors", "IVF vector rows")),
         skew = Some(() => {
           val m = IvfIndex.cellCensus(spark, stores.embedding)
             .agg(max(col("skew"))).collect()
@@ -2449,7 +2448,7 @@ object Curation {
       // code, changing serving results corpus-wide; that is a release
       // decision, not hygiene a scheduled window should take silently.
       units += MaintUnit("pq_index", stores.pqIndex, codes,
-        Some(("pq_tombstoned_codes", "pq code rows", true)),
+        Some(("pq_tombstoned_codes", "pq code rows")),
         // every re-release retires a full generation; without a due
         // signal they accumulate silently (VERDICT r13 missing #2) —
         // the scheduled pass keeps the newest `keepRetiredGens` (an
@@ -3230,15 +3229,14 @@ object Curation {
     // first doc-keyed table — a tombstoned row surviving past its
     // store's applied watermark is the silent right-to-erasure failure
     // fsck exists to surface
-    for (u <- units; (check, what, distinct) <- u.audit;
+    for (u <- units; (check, what) <- u.audit;
          (rel, t, id) <- u.store.tables.collectFirst {
            case (rel, t) if t.erase.isInstanceOf[StoreLayout.ById] =>
              (rel, t, t.erase.asInstanceOf[StoreLayout.ById].id) }
          if exists(spark, u.store.path(rel)))
       add(tomb.map { tt =>
-        val ids = StoreLayout.read(spark, u.store.path(rel), t)
+        val n = StoreLayout.read(spark, u.store.path(rel), t)
           .select(col(id).as("doc_id"))
-        val n = (if (distinct) ids.dropDuplicates("doc_id") else ids)
           .join(tt, Seq("doc_id"), "left_semi").count()
         (check, tombStatus(n, u.root), n, s"$what carrying retracted ids")
       })

@@ -49,6 +49,39 @@ class SqlSurfaceSpec extends SparkSpec {
     assert(r.getLong(4) == 2L)
     assert(r.getLong(5) == 3L)
     assert(r.getString(6) == "http://h.org/p?q=2")
+    // the registries hold every declared name, scalar and aggregate
+    // functions apart from table functions, each with its usage text
+    val ss = spark.sessionState
+    def registered(reg: org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase[_]) =
+      reg.listFunction().flatMap(reg.lookupFunction)
+        .filter(_.getClassName == classOf[graft.expr.GraftExtensions].getName)
+        .map(i => i.getName -> i.getUsage).toMap
+    val scalars = registered(ss.functionRegistry)
+    val tables = registered(ss.tableFunctionRegistry)
+    assert(scalars.keySet == Set("md5_prefix64", "word_shingles", "vec_dot", "vec_l2sq",
+      "sorted_long_intersect", "subword_token_count", "url_canonical", "top_k_pairs",
+      "cms_sketch", "hll_sketch", "bloom_sketch", "bloom_might_contain"))
+    assert(tables.keySet == Set("asof_join", "range_join", "chunk_dedup",
+      "substring_dedup", "budget_select", "first_occurrence_dedup", "curation_releases",
+      "corpus_asof", "corpus_diff", "serve_ann", "export_release", "export_release_payload",
+      "curation_fsck", "maintenance_report", "verify_release", "verify_snapshot",
+      "containment_pairs", "curriculum_interleave", "table_profile", "snapshot_diff",
+      "sq8_stats", "model_quality_score", "incremental_neardup_pairs", "ivf_assign_with",
+      "codebook_drift", "bm25_topk", "hamming_neardup_pairs", "rrf_fuse",
+      "train_quality_model", "ffd_pack", "lm_perplexity", "intradoc_dedup", "score_psi",
+      "lsh_recall_audit", "unigram_train", "ledger_probe", "embedding_ledger_probe"))
+    (scalars ++ tables).foreach { case (n, usage) =>
+      assert(usage.startsWith(s"$n(") && usage.contains(") - "), usage)
+    }
+    // signatures with an optional tail and with alternative forms
+    assert(scalars("md5_prefix64") == "md5_prefix64(str, digits) - value of the first " +
+      "`digits` hex chars of md5(str); digits must be an integer literal in [1, 15]")
+    assert(tables("asof_join").startsWith(
+      "asof_join(left, right, key, time[, direction]) - table function: "))
+    assert(tables("export_release").startsWith("export_release(ledgerPath, cutoff[, " +
+      "textPath, imagePath, audioPath, videoPath, embeddingPath]) - table function: "))
+    assert(tables("curation_fsck").startsWith("curation_fsck(ledgerPath | textPath, " +
+      "imagePath, audioPath, videoPath, embeddingPath, ledgerPath[, pqPath]) - "))
   }
 
   test("top_k_pairs aggregate is SQL-callable end-to-end") {
@@ -707,5 +740,32 @@ class SqlSurfaceSpec extends SparkSpec {
       spark.sql("SELECT md5_prefix64('a', length('xy'))").collect()
     }
     assert(nonLiteral.getMessage.contains("integer literal"))
+    // a BIGINT literal outside INT range is refused by name, not wrapped
+    val wide = intercept[Exception] {
+      spark.sql("SELECT md5_prefix64('a', 4294967297)").collect()
+    }
+    assert(wide.getMessage.contains("md5_prefix64 digits") &&
+      wide.getMessage.contains("integer literal"), wide.getMessage)
+    // ...and a BIGINT parameter takes it whole: one bin holds all three docs
+    import spark.implicits._
+    Seq((1L, 100L), (2L, 100L), (3L, 100L)).toDF("doc_id", "len")
+      .createOrReplaceTempView("wide_docs")
+    val packed = spark.sql(
+      """SELECT doc_id, bin FROM ffd_pack('wide_docs', 'doc_id', 'len', 4294967297, 32)
+        |ORDER BY doc_id""".stripMargin).collect()
+      .map(r => (r.getLong(0), r.getLong(1)))
+    assert(packed.toSeq == Seq((1L, 0L), (2L, 0L), (3L, 0L)), packed.mkString(","))
+    // table functions: a wrong arity lists the parameters, optional tail
+    // included; a non-literal table name or integer is refused by name
+    def refusal(q: String) = intercept[Exception](spark.sql(q).collect()).getMessage
+    val arity = refusal("SELECT * FROM range_join('wide_docs', 'wide_docs')")
+    assert(arity.contains("range_join takes (points, intervals, point, lo, hi)"), arity)
+    val tail = refusal("SELECT * FROM asof_join('a', 'b', 'k', 't', 'forward', 'x')")
+    assert(tail.contains("asof_join takes (left, right, key, time[, direction])"), tail)
+    val table = refusal("SELECT * FROM table_profile(lower('WIDE_DOCS'))")
+    assert(table.contains("table_profile table") && table.contains("string literal"), table)
+    val int = refusal(
+      "SELECT * FROM intradoc_dedup('wide_docs', 'doc_id', 'len', length('xy'))")
+    assert(int.contains("intradoc_dedup width") && int.contains("integer literal"), int)
   }
 }

@@ -1497,6 +1497,14 @@ class CurationSpec extends SparkSpec {
       .map(r => r.getString(0) -> r.getString(1)).toMap
     assert(fsckMap()("pq_tombstoned_codes") == "pending",
       s"serving-side backlog invisible: ${fsckMap()}")
+    // the audit counts rows, as its detail says: PQ keeps one code row
+    // per subspace, so a retracted vector counts once per subspace
+    val tombN = Curation.fsck(spark, stores)
+      .filter(col("check") === "pq_tombstoned_codes").select("n").collect()(0).getLong(0)
+    val goneCodeRows = PQ.readCodes(spark, stores.pqIndex)
+      .filter(col("vec_id").isin(goneIds.toSeq: _*)).count()
+    assert(tombN == goneCodeRows && goneCodeRows > goneIds.size,
+      s"pq_tombstoned_codes counts $tombN, the retracted vectors hold $goneCodeRows code rows")
     // snapshot the code buckets the retracted ids do NOT live in
     def walk(f: java.io.File): Seq[java.io.File] =
       if (f.isDirectory) f.listFiles().toSeq.flatMap(walk)
