@@ -96,8 +96,8 @@ object Curation {
     * fan-out executing INLINE on the calling thread. Every SQL table
     * function's builder runs under it (`graft.expr.GraftExtensions`,
     * e.g. `curation_fsck` over [[fsck]]): a builder runs inside
-    * `SessionCatalog.lookupFunction`,
-    * which holds the session-catalog monitor — a check task building a
+    * `SessionCatalog.lookupFunction`, which holds the session-catalog
+    * monitor — a check task building a
     * Dataset on a worker thread re-enters the catalog and deadlocks
     * against the builder awaiting it. Inline, the monitor stays
     * reentrant; the audit pays the sum of its checks instead of the
