@@ -92,6 +92,261 @@ object Curation {
                           video: String, embedding: String, ledger: String,
                           pqIndex: String = "")
 
+  /** One census metric of a store: the row count of the table at `rel`
+    * under its maintained store's root, or the count of its distinct
+    * `distinct` values. */
+  private final case class Metric(name: String, rel: String,
+                                  distinct: String = "")
+
+  /** What an export reads from a store: the table at `rel` under its
+    * maintained store's root, its doc id column, the `ref` column
+    * [[exportRelease]] ships (None: a null ref), and the named
+    * `payload` column [[exportReleasePayload]] ships. */
+  private final case class Member(rel: String, id: String,
+                                  ref: Option[org.apache.spark.sql.Column],
+                                  payload: (String, org.apache.spark.sql.Column))
+
+  /** One store of a deployment, declared once. Its names, one per
+    * scheme: `name` in the maintenance report, the census and fsck's
+    * checks; `role`, its snapshot directory (on-disk layout; "" for
+    * none); `scope`, the store-wide swap of its maintained store's root
+    * ("" for none). `root` anchors its sidecars (init marker, applied
+    * watermark, audit cursor).
+    *
+    *  - `layout`: Some(ivf) on the two entries of the embedding store,
+    *    each true only under that layout ([[Catalogue.ivf]]).
+    *  - `modality`: the ledger modality whose frames it holds;
+    *    `committed`: every commit appends to it (ledger, id registry).
+    *    Together they name the stores a commit marks initialized.
+    *  - `store`: its maintained tables, the store module's own
+    *    declaration; a maintenance unit while the table at `gate`
+    *    exists (None: whenever its layout holds).
+    *  - `census`: its metrics, read through the declared tables, gated
+    *    on the first one's table; `more`: metrics computed whole.
+    *  - `guard`: the tables [[commitTranche]] requires of it, in
+    *    refusal order, naming it `what`.
+    *  - `member`: what an export reads from it.
+    *  - `scopes`/`asides`: its other swap scopes and rollback asides,
+    *    by path under `root`.
+    *  - `audit` names its [[fsck]] tombstone check and the rows the
+    *    detail counts (its first doc-keyed table's rows carrying a
+    *    retracted id); `skew`/`heal` are the IVF codebook's health,
+    *    `retiredGens` the PQ store's retired serving generations.
+    */
+  private final case class Entry(name: String, role: String, scope: String,
+                                 root: String,
+                                 layout: Option[Boolean] = None,
+                                 modality: String = "",
+                                 committed: Boolean = false,
+                                 store: Option[() => Maintenance.Store] = None,
+                                 gate: Option[String] = Some(""),
+                                 census: Seq[Metric] = Nil,
+                                 more: Option[() => Seq[(String, Long)]] = None,
+                                 guard: Seq[String] = Nil, what: String = "",
+                                 member: Option[Member] = None,
+                                 scopes: Seq[(String, String)] = Nil,
+                                 asides: Seq[String] = Nil,
+                                 audit: Option[(String, String)] = None,
+                                 skew: Option[() => Double] = None,
+                                 heal: Option[Double => Int] = None,
+                                 retiredGens: Option[() => Seq[String]] = None) {
+    lazy val maint: Maintenance.Store = store.get()
+    def tables: Seq[String] = maint.maintained
+    def erasable: Boolean = maint.erasable
+    def under(rel: String): String = if (rel.isEmpty) root else s"$root/$rel"
+    def table(rel: String): StoreLayout.Table =
+      maint.tables.collectFirst { case (`rel`, t) => t }.get
+  }
+
+  /** A deployment's stores, one [[Entry]] each: every deployment-wide
+    * arc — maintenance, census, snapshot, rollback asides, swap scopes,
+    * export and the commit guards — is a filter or a map over
+    * `entries`. An arc resolves it once; it touches the filesystem only
+    * as the arc asks (the embedding layout, the PQ store's live
+    * generation and each gate on first use). Unregistered (blank)
+    * stores have no entry.
+    */
+  private final class Catalogue(spark: SparkSession, val stores: Stores) {
+
+    /** Where the embedding vectors live — the one IVF-or-flat answer.
+      * An embedding store holding a codebook (`<embedding>/centroids`)
+      * is an [[IvfIndex]], its vectors under `<embedding>/vectors`;
+      * otherwise `<embedding>` is the flat vector table itself. */
+    lazy val ivf: Boolean = stores.embedding.trim.nonEmpty &&
+      exists(spark, s"${stores.embedding}/centroids")
+
+    private lazy val pqCodes = PQ.codesStore(spark, stores.pqIndex)
+
+    // every store the deployment declares, registered or not
+    private val declared: Seq[Entry] = {
+      val (emb, pq) = (stores.embedding, stores.pqIndex)
+      val vectors = Some(Member("", "vec_id", None, "embedding" -> col("embedding")))
+      Seq(Entry("text_index", "text", "text_index", stores.textIndex,
+          modality = "text",
+          store = Some(() => Dedup.nearDupStore(stores.textIndex)),
+          gate = Some("bands"),
+          census = Seq(Metric("member_rows", "members"),
+            Metric("contents", "members", "ch"), Metric("band_rows", "bands"),
+            Metric("set_rows", "sets")),
+          guard = Seq("params", "bands", "sets", "members"),
+          what = "text near-dup index",
+          member = Some(Member("members", "id", Some(col("ch")), "ch" -> col("ch"))),
+          audit = Some(("text_tombstoned_members", "text member rows")))) ++
+      Seq("image" -> stores.image, "audio" -> stores.audio).map { case (m, d) =>
+        Entry(s"${m}_index", m, m, d, modality = m,
+          store = Some(() => ImageHash.hashStore(d)), gate = Some("bands"),
+          census = Seq(Metric("member_rows", "members"),
+            Metric("hashes", "members", "hsh"), Metric("band_rows", "bands")),
+          guard = Seq("params", "bands", "members"), what = s"$m hash index",
+          member = Some(Member("members", "id", None, "hsh" -> col("hsh"))),
+          audit = Some((s"${m}_tombstoned_members", s"$m member rows")))
+      } ++ Seq(
+        Entry("video_index", "video", "video", stores.video, modality = "video",
+          store = Some(() => VideoHash.seqStore(stores.video)),
+          gate = Some("shingles"),
+          census = Seq(Metric("shingle_rows", "shingles"),
+            Metric("seq_rows", "seqs")),
+          guard = Seq("shingles", "seqs"), what = "video sequence index",
+          // `sq` is the md5 hex text of a frame sequence (SeqsTable's
+          // STRING): hex() ships the hex of that text's bytes
+          member = Some(Member("seqs", "doc_id", Some(hex(col("sq"))),
+            "sq" -> hex(col("sq")))),
+          audit = Some(("video_tombstoned_seqs", "video sequence rows"))),
+        // erasure is surgical (affected cells only); per-tranche append
+        // files collapse cell-locally when the file census makes the
+        // unit due. Codebook health is a due signal too (VERDICT r12
+        // missing #2): appends route into a FROZEN codebook, so a
+        // drifted ingest distribution piles into hot cells and probe
+        // cost degrades — the census's occupancy skew makes the unit due
+        // and [[IvfIndex.heal]] splits the hot cells, bounded per window
+        Entry("embedding_ivf", "embedding", "embedding_vectors", emb,
+          layout = Some(true), modality = "embedding",
+          store = Some(() => IvfIndex.vectorsStore(spark, emb)), gate = None,
+          more = Some(() => {
+            val c = IvfIndex.cellCensus(spark, emb)
+              .agg(count(lit(1)), sum(col("n_vectors")), max(col("skew")))
+              .collect()(0)
+            Seq("cells" -> c.getLong(0), "vectors" -> c.getLong(1),
+              "max_skew_pct" -> math.round(c.getDouble(2) * 100))
+          }),
+          guard = Seq("centroids", "centroids_q", "vectors"),
+          what = "embedding IVF index", member = vectors,
+          scopes = Seq("embedding" -> ""),
+          asides = Seq("centroids", "centroids_q"),
+          audit = Some(("embedding_tombstoned_vectors", "IVF vector rows")),
+          skew = Some(() => {
+            val m = IvfIndex.cellCensus(spark, emb).agg(max(col("skew"))).collect()
+            if (m.isEmpty || m(0).isNullAt(0)) 0.0 else m(0).getDouble(0)
+          }),
+          heal = Some(ms => IvfIndex.heal(spark, emb, maxSkew = ms, maxSplits = 8))),
+        Entry("embedding_flat", "embedding", "embedding", emb,
+          layout = Some(false), modality = "embedding",
+          store = Some(() => Maintenance.Store(emb, Seq("" -> FlatEmbeddingTable))),
+          census = Seq(Metric("vectors", "")), guard = Seq(""),
+          what = "embedding", member = vectors),
+        Entry("ledger", "ledger", "ledger", stores.ledger, committed = true,
+          store = Some(() => Ledger.store(stores.ledger)),
+          census = Seq(Metric("rows", "")),
+          audit = Some(("ledger_tombstoned_rows", "ledger rows"))),
+        // the registry RETAINS retracted ids (recommit refusal) — file
+        // pressure is its only due signal
+        Entry("id_registry", "ids", "id_registry", s"${stores.ledger}.ids",
+          committed = true,
+          store = Some(() => Maintenance.Store(s"${stores.ledger}.ids",
+            Seq("" -> IdsTable))),
+          census = Seq(Metric("ids", ""))),
+        // one small file lands per retract call and touched bucket; the
+        // table itself is permanent. Compacted files mix epochs, which
+        // is fine: by the time a pass collapses it, the pass has applied
+        // every epoch present, so slice reads (`epoch > applied`) skip a
+        // compacted file on its footer max
+        Entry("tombstones", "tombstones", "tombstones", tombstonesDir(stores),
+          store = Some(() => Maintenance.Store(tombstonesDir(stores),
+            Seq("" -> TombstonesTable))),
+          census = Seq(Metric("ids", ""))),
+        Entry("releases", "releases", "", releasesDir(stores)),
+        Entry("releases_registry", "releases_registry", "",
+          releaseRegistry(stores)),
+        Entry("releases_withdrawn", "releases_withdrawn", "",
+          withdrawnRegistry(stores)),
+        // serving-side ANN store: commits append each tranche's kept
+        // vectors through the frozen codebook, and takedowns MUST reach
+        // it (its codes are derived from retracted content). Its
+        // maintained store is the LIVE generation's code table, resolved
+        // per arc, so a re-release between windows redirects the next
+        // window. Codebook drift stays OPERATOR-cadenced on purpose
+        // ([[PQ.codesCensus]] is the signal, [[rereleaseServing]] the
+        // action): unlike an IVF cell split, a PQ re-release re-encodes
+        // EVERY code, changing serving results corpus-wide. Its
+        // generations are not snapshot roles: [[snapshot0]] pins the
+        // live one.
+        Entry("pq_index", "", "pq_codes", pq, store = Some(() => pqCodes),
+          census = Seq(Metric("code_rows", ""), Metric("vectors", "", "vec_id")),
+          // retired generations awaiting gc: generations OLDER than
+          // live — a complete generation NEWER than the pointer is a
+          // crashed publish (fsck pq_publish pending, repair publishes
+          // it), not reclaimable backlog
+          more = Some(() => Seq("retired_generations" ->
+            PQ.retiredGens(spark, pq).size.toLong)),
+          guard = Seq("params", "centroids", "codes"), what = "pq serving index",
+          audit = Some(("pq_tombstoned_codes", "pq code rows")),
+          // every re-release retires a full generation; without a due
+          // signal they accumulate silently (VERDICT r13 missing #2) —
+          // the scheduled pass keeps the newest `keepRetiredGens` (an
+          // in-flight lock-free query may still be reading the most
+          // recent one) and reclaims the rest
+          retiredGens = Some(() => PQ.retiredGens(spark, pq).map(g => s"$pq/$g"))))
+    }
+    val entries: Seq[Entry] = declared.filter(_.root.trim.nonEmpty)
+
+    /** The entries that hold under the deployment's embedding layout. */
+    def current: Seq[Entry] = entries.filter(_.layout.forall(_ == ivf))
+
+    /** Whether an entry's maintained store stands (its `gate` table). */
+    def present(e: Entry): Boolean =
+      e.gate.forall(g => exists(spark, e.maint.path(g)))
+
+    /** The maintenance units, existence-aware — the one list
+      * [[maintain]] (all of them), [[maintainDue]] (the due subset),
+      * [[fsck]], [[repair]] and the commit's exclusion slice share. */
+    lazy val units: Seq[Entry] = current.filter(e => e.store.nonEmpty && present(e))
+
+    /** The entry holding `modality`'s export member under the layout,
+      * registered or not (a blank store reads as absent). */
+    def member(modality: String): Option[Entry] = declared.find(e =>
+      e.member.nonEmpty && e.modality == modality && e.layout.forall(_ == ivf))
+
+    def pq: Option[Entry] = entries.find(_.name == "pq_index")
+
+    /** Snapshot role → source path. */
+    def roles: Seq[(String, String)] =
+      entries.filter(_.role.nonEmpty).map(e => e.role -> e.root).distinct
+
+    /** Every directory a STORE-WIDE [[StoreSwap.swap]] may replace, by
+      * declared path — NOT existence-gated like [[units]], because the
+      * crashed-swap state is exactly "the directory is gone": mid-swap
+      * the live dir does not exist (complete old generation under
+      * `<dir>.old`, complete new one under the pass's sibling tmp).
+      * The PQ root is generational (re-release is a pointer flip, never
+      * a dir swap — pq_publish audits its crash states); its LIVE
+      * generation's code table swap-rewrites on store-wide compaction.
+      */
+    def swapScopes: Seq[(String, String)] = entries.flatMap { e =>
+      e.scopes.map { case (n, rel) => n -> e.under(rel) } ++
+        (if (e.scope.isEmpty) Nil else Seq(e.scope -> e.maint.root))
+    }.distinct
+
+    /** The STANDING `.old` rollback asides swapping passes leave behind
+      * — the non-generational half of what [[gc]] reclaims, listed (not
+      * deleted) so [[fsck]] can surface the reclaimable footprint.
+      * Includes the LIVE PQ generation's code-table aside (a store-wide
+      * code compaction swaps inside the live generation).
+      */
+    def rollbackAsides: Seq[String] = entries.filter(_.store.nonEmpty)
+      .flatMap(e => e.root +: e.maint.root +: e.asides.map(e.under))
+      .distinct.map(d => s"$d.old").filter(exists(spark, _))
+  }
+
   /** Run a read-only audit `f` with the deployment's driver-side check
     * fan-out executing INLINE on the calling thread. Every SQL table
     * function's builder runs under it (`graft.expr.GraftExtensions`,
@@ -561,46 +816,36 @@ object Curation {
     val spark = docs.sparkSession
     withWriterLock(spark, stores, s"commitTranche($trancheId)") {
     // ---- guards, strictly before any write ---------------------------
-    val textUp = guardedExists(spark, stores.textIndex,
-      Seq("params", "bands", "sets", "members"), "text near-dup index")
-    val imgUp = guardedExists(spark, stores.image,
-      Seq("params", "bands", "members"), "image hash index")
-    val audUp = guardedExists(spark, stores.audio,
-      Seq("params", "bands", "members"), "audio hash index")
-    val vidUp = guardedExists(spark, stores.video,
-      Seq("shingles", "seqs"), "video sequence index")
-    val embIvf = exists(spark, s"${stores.embedding}/centroids")
-    val embUp =
-      if (embIvf) guardedExists(spark, stores.embedding,
-        Seq("centroids", "centroids_q", "vectors"), "embedding IVF index")
-      else guardedExists(spark, stores.embedding, Seq(""), "embedding")
+    val cat = new Catalogue(spark, stores)
+    val embIvf = cat.ivf
+    val up = cat.current.filter(_.modality.nonEmpty).map(e =>
+      e.modality -> guardedExists(spark, e.root, e.guard, e.what)).toMap
+    val Seq(textUp, imgUp, audUp, vidUp, embUp) =
+      Seq("text", "image", "audio", "video", "embedding").map(up.getOrElse(_, false))
     if (embIvf) IvfIndex.requireNoSplitInFlight(spark, stores.embedding)
     // serving-side PQ index: present → this commit FEEDS it (the kept
     // vectors append below); fully absent and never initialized → not
     // trained yet (PQ.writeIndex bootstraps a codebook from the corpus
     // — a commit cannot), so the append is skipped; initialized but
     // missing → refused like every standing store
-    val pqLive =
-      if (stores.pqIndex.isEmpty) None else Some(PQ.liveDir(spark, stores.pqIndex))
-    val pqUp = pqLive.exists { live =>
-      if (live == stores.pqIndex)
+    val pqLive = cat.pq.map(p => PQ.liveDir(spark, p.root))
+    val pqUp = cat.pq.zip(pqLive).exists { case (pq, live) =>
+      if (live == pq.root)
         // no complete generation: not trained yet, unless the shared
         // marker/partial-store/foreign-dir guard refuses
-        guardedExists(spark, stores.pqIndex,
-          Seq("params", "centroids", "codes"), "pq serving index")
+        guardedExists(spark, pq.root, pq.guard, pq.what)
       else {
         // generational: the pointer resolved to a complete live
         // generation (liveDir only returns one whose params exist);
         // verify its full table set, marker semantics unchanged
-        val missing = Seq("params", "centroids", "codes")
-          .filterNot(p => exists(spark, s"$live/$p"))
+        val missing = pq.guard.filterNot(t => exists(spark, s"$live/$t"))
         if (missing.nonEmpty)
           throw new IllegalStateException(
-            s"pq serving index at ${stores.pqIndex} resolved its live " +
+            s"pq serving index at ${pq.root} resolved its live " +
               s"generation to $live but it is missing " +
               s"${missing.mkString(", ")} — a crashed re-release; run " +
               "Curation.fsck/repair before committing")
-        markInit(spark, stores.pqIndex)
+        markInit(spark, pq.root)
         true
       }
     }
@@ -631,8 +876,7 @@ object Curation {
     }
     val tombRows = readTombstoneRows(spark, stores)
     val exclApplied = {
-      val probed = maintenanceUnits(spark, stores)
-        .filter(u => u.erasable && u.name != "ledger")
+      val probed = cat.units.filter(u => u.erasable && u.name != "ledger")
       if (probed.isEmpty) 0L
       else probed.map(u => appliedEpoch(spark, u.root)).min
     }
@@ -897,10 +1141,8 @@ object Curation {
           PQ.CodesTable, s"${pqLive.get}/codes") }) ++
       Seq(inPhase("append:id-registry") { () =>
         idRegistryAppend(spark, ids, trancheId, stores.ledger) }): _*)
-    (Seq(stores.textIndex, stores.ledger, s"${stores.ledger}.ids") ++
-      img.map(_ => stores.image) ++ aud.map(_ => stores.audio) ++
-      vid.map(_ => stores.video) ++ emb.map(_ => stores.embedding))
-      .foreach(markInit(spark, _))
+    cat.current.filter(e => e.committed || verdictsC.contains(e.modality))
+      .foreach(e => markInit(spark, e.root))
     verdictsC.map { case (m, v) =>
       v.select(col("doc_id"), lit(m).as("modality"), col("decision"))
     }.reduce(_ unionByName _)
@@ -966,14 +1208,11 @@ object Curation {
                             stores: Stores): DataFrame = {
     require(exists(spark, stores.ledger),
       s"no ledger at ${stores.ledger} — commit a bootstrap corpus first")
-    val embIvf = exists(spark, s"${stores.embedding}/centroids")
-    require(embIvf || exists(spark, stores.embedding),
+    val vectors = vectorsOf(spark, new Catalogue(spark, stores))
+    require(vectors.nonEmpty,
       s"no embedding store at ${stores.embedding} — nothing to train on")
-    val standing =
-      (if (embIvf)
-        spark.read.parquet(s"${stores.embedding}/vectors").drop("cell")
-      else spark.read.parquet(stores.embedding))
-        .select("vec_id", "embedding").dropDuplicates("vec_id")
+    val standing = vectors.get.select("vec_id", "embedding")
+      .dropDuplicates("vec_id")
     val kept = Ledger.read(spark, stores.ledger)
       .filter(col("modality") === "embedding" &&
         col("decision") === "kept")
@@ -1057,6 +1296,16 @@ object Curation {
     n
   }
 
+  /** The deployment's standing embedding vectors, read through their
+    * declared table wherever the layout keeps them; None when the
+    * deployment has no embedding store. */
+  private def vectorsOf(spark: SparkSession,
+                        cat: Catalogue): Option[DataFrame] =
+    cat.member("embedding").filter(cat.present).map { e =>
+      val rel = e.member.get.rel
+      StoreLayout.read(spark, e.maint.path(rel), e.table(rel))
+    }
+
   /** [[PQ.selfRecall]] over the deployment's registered serving index,
     * with raw vectors from its own embedding store — None when the
     * deployment has no trained serving index or no vector store to
@@ -1064,23 +1313,16 @@ object Curation {
     * probe's contract); the one corpus-touching step is the vectors
     * semi-join fetch of the sampled ids.
     */
-  private def pqSelfRecall(spark: SparkSession, stores: Stores,
+  private def pqSelfRecall(spark: SparkSession, cat: Catalogue,
                            sample: Int, topK: Int): Option[Double] = {
+    val stores = cat.stores
     if (stores.pqIndex.isEmpty || !exists(spark, stores.pqIndex)) None
     else {
       val live = PQ.liveDir(spark, stores.pqIndex)
       if (!exists(spark, s"$live/params") || !exists(spark, s"$live/codes"))
         None
-      else {
-        val vecs =
-          if (exists(spark, s"${stores.embedding}/vectors"))
-            Some(spark.read.parquet(s"${stores.embedding}/vectors"))
-          else if (exists(spark, stores.embedding))
-            Some(spark.read.parquet(stores.embedding))
-          else None
-        vecs.map(v => PQ.selfRecall(spark, stores.pqIndex,
-          v.select("vec_id", "embedding"), sample, topK))
-      }
+      else vectorsOf(spark, cat).map(v => PQ.selfRecall(spark, stores.pqIndex,
+        v.select("vec_id", "embedding"), sample, topK))
     }
   }
 
@@ -1450,39 +1692,23 @@ object Curation {
       val live = corpusAsOf(spark, stores, cutoff)
         .select(col("doc_id"), col("modality"), lit(true).as("live"))
       // per-modality physical content rows, existence-aware; pruned to
-      // the manifest's ids before the per-doc aggregation. An EMPTY
-      // store path reads as absent (the SQL surface's ledger-only
-      // addressing: export_release(ledger, cutoff) exports statuses
-      // with content refs null — see GraftExtensions)
-      def refsOf(modality: String, root: String, sub: String, idc: String,
-                 refc: Option[org.apache.spark.sql.Column]): Option[DataFrame] = {
-        val path = if (sub.isEmpty) root else s"$root/$sub"
-        if (root.isEmpty || !exists(spark, path)) None
-        else Some(spark.read.parquet(path)
-          .select(col(idc).as("doc_id"),
-            refc.map(_.cast("string"))
-              .getOrElse(lit(null).cast("string")).as("ref"))
-          .join(art.filter(col("modality") === modality)
+      // the manifest's ids before the per-doc aggregation. An
+      // unregistered (blank) store reads as absent (the SQL surface's
+      // ledger-only addressing: export_release(ledger, cutoff) exports
+      // statuses with content refs null — see GraftExtensions)
+      val refs = new Catalogue(spark, stores).current.flatMap { e =>
+        e.member.map(m => (e, m, e.maint.path(m.rel)))
+      }.filter(r => exists(spark, r._3)).map { case (e, m, path) =>
+        StoreLayout.read(spark, path, e.table(m.rel))
+          .select(col(m.id).as("doc_id"), m.ref.map(_.cast("string"))
+            .getOrElse(lit(null).cast("string")).as("ref"))
+          .join(art.filter(col("modality") === e.modality)
             .select("doc_id"), Seq("doc_id"), "left_semi")
           .groupBy("doc_id")
           .agg(count(lit(1)).as("n_rows"), min("ref").as("ref"))
-          .select(lit(modality).as("modality"), col("doc_id"),
-            col("n_rows"), col("ref")))
-      }
-      val refs = Seq(
-        refsOf("text", stores.textIndex, "members", "id",
-          Some(col("ch"))),
-        refsOf("image", stores.image, "members", "id", None),
-        refsOf("audio", stores.audio, "members", "id", None),
-        // sq is a binary sequence id — hex it (a raw binary→string
-        // cast reads as mojibake)
-        refsOf("video", stores.video, "seqs", "doc_id",
-          Some(hex(col("sq")))),
-        if (stores.embedding.nonEmpty &&
-          exists(spark, s"${stores.embedding}/vectors"))
-          refsOf("embedding", stores.embedding, "vectors", "vec_id", None)
-        else refsOf("embedding", stores.embedding, "", "vec_id", None)
-      ).flatten.reduceOption(_ unionByName _)
+          .select(lit(e.modality).as("modality"), col("doc_id"),
+            col("n_rows"), col("ref"))
+      }.reduceOption(_ unionByName _)
       val base = art.join(live, key, "left")
       val withRefs = refs.fold(
         base.withColumn("n_rows", lit(null).cast("long"))
@@ -1521,25 +1747,12 @@ object Curation {
     */
   def exportReleaseEmbeddings(spark: SparkSession, stores: Stores,
                               cutoff: Long): DataFrame = {
-    val src =
-      if (exists(spark, s"${stores.embedding}/vectors"))
-        s"${stores.embedding}/vectors"
-      else stores.embedding
-    require(exists(spark, src),
-      s"no embedding store at ${stores.embedding} — nothing to export")
-    val ids = withWriterLock(spark, stores,
-      s"exportReleaseEmbeddings($cutoff)") {
-      val art = readRelease(spark, stores, cutoff)
-        .filter(col("modality") === "embedding")
-        .select("doc_id", "tranche")
-      art.join(corpusAsOf(spark, stores, cutoff)
-        .filter(col("modality") === "embedding").select("doc_id"),
-        Seq("doc_id"), "left_semi")
-        .localCheckpoint()
-    }
-    spark.read.parquet(src).select(col("vec_id"), col("embedding"))
-      .join(ids.select(col("doc_id").as("vec_id"), col("tranche")),
-        Seq("vec_id"))
+    val e = new Catalogue(spark, stores).member("embedding").get
+    require(exists(spark, e.maint.path(e.member.get.rel)),
+      s"no embedding store at ${e.root} — nothing to export")
+    releasePayload(spark, stores, cutoff, e,
+      s"exportReleaseEmbeddings($cutoff)")
+      .select(col("doc_id").as("vec_id"), col("embedding"), col("tranche"))
   }
 
   /** The TRAIN-READY payload read of a published release for ANY
@@ -1561,7 +1774,8 @@ object Curation {
     *    member; a sub-2-token doc holds no member row and ships none.
     *  - `image` / `audio`: (doc_id, tranche, hsh) — the perceptual
     *    hash per member.
-    *  - `video`: (doc_id, tranche, sq) — hex-encoded sequence ids.
+    *  - `video`: (doc_id, tranche, sq) — each sequence id's md5 hex
+    *    text, hex-encoded again (`hex(sq)` over its bytes).
     *  - `embedding`: (doc_id, tranche, embedding) — the raw vectors
     *    ([[exportReleaseEmbeddings]] under a uniform id column).
     */
@@ -1571,39 +1785,36 @@ object Curation {
       return exportReleaseEmbeddings(spark, stores, cutoff)
         .select(col("vec_id").as("doc_id"), col("tranche"),
           col("embedding"))
-    val (path, idc, cols): (String, String, Seq[(String, org.apache.spark.sql.Column)]) =
-      modality match {
-        case "text" =>
-          (s"${stores.textIndex}/members", "id", Seq("ch" -> col("ch")))
-        case "image" =>
-          (s"${stores.image}/members", "id", Seq("hsh" -> col("hsh")))
-        case "audio" =>
-          (s"${stores.audio}/members", "id", Seq("hsh" -> col("hsh")))
-        case "video" =>
-          // sq is a binary sequence id — hex it (exportRelease's
-          // content_ref discipline)
-          (s"${stores.video}/seqs", "doc_id", Seq("sq" -> hex(col("sq"))))
-        case other => throw new IllegalArgumentException(
-          s"unknown payload modality '$other' — one of text, image, " +
-            "audio, video, embedding")
-      }
+    val e = new Catalogue(spark, stores).member(modality).getOrElse(
+      throw new IllegalArgumentException(
+        s"unknown payload modality '$modality' — one of text, image, " +
+          "audio, video, embedding"))
+    val path = e.maint.path(e.member.get.rel)
     require(exists(spark, path),
       s"no $modality store rows at $path — nothing to export")
-    val ids = withWriterLock(spark, stores,
-      s"exportReleasePayload($cutoff, $modality)") {
-      val art = readRelease(spark, stores, cutoff)
-        .filter(col("modality") === modality)
-        .select("doc_id", "tranche")
-      art.join(corpusAsOf(spark, stores, cutoff)
-        .filter(col("modality") === modality).select("doc_id"),
-        Seq("doc_id"), "left_semi")
+    releasePayload(spark, stores, cutoff, e,
+      s"exportReleasePayload($cutoff, $modality)")
+  }
+
+  // the release's pinned ids of `e`'s modality (manifest ∩ corpusAsOf,
+  // resolved under the writer lock), joined lazily to the payload column
+  // of `e`'s member table: (doc_id, tranche, <payload>)
+  private def releasePayload(spark: SparkSession, stores: Stores,
+                             cutoff: Long, e: Entry,
+                             what: String): DataFrame = {
+    val m = e.member.get
+    val ids = withWriterLock(spark, stores, what) {
+      readRelease(spark, stores, cutoff)
+        .filter(col("modality") === e.modality).select("doc_id", "tranche")
+        .join(corpusAsOf(spark, stores, cutoff)
+          .filter(col("modality") === e.modality).select("doc_id"),
+          Seq("doc_id"), "left_semi")
         .localCheckpoint()
     }
-    spark.read.parquet(path)
-      .select(col(idc).as("doc_id") +:
-        cols.map { case (n, c) => c.as(n) }: _*)
+    StoreLayout.read(spark, e.maint.path(m.rel), e.table(m.rel))
+      .select(col(m.id).as("doc_id"), m.payload._2.as(m.payload._1))
       .join(ids, Seq("doc_id"))
-      .select("doc_id", "tranche" +: cols.map(_._1): _*)
+      .select("doc_id", "tranche", m.payload._1)
   }
 
   /** Per-modality accounting of [[exportRelease]]: one row per
@@ -1755,20 +1966,6 @@ object Curation {
         s"$destRole.$sfx")
     }
 
-  /** The deployment's role → source-path catalogue a snapshot copies
-    * and a restore re-seats (pq handled separately — generation-
-    * pinned).
-    */
-  private def snapshotRoles(stores: Stores): Seq[(String, String)] = Seq(
-    "text" -> stores.textIndex, "image" -> stores.image,
-    "audio" -> stores.audio, "video" -> stores.video,
-    "embedding" -> stores.embedding, "ledger" -> stores.ledger,
-    "ids" -> s"${stores.ledger}.ids",
-    "tombstones" -> tombstonesDir(stores),
-    "releases" -> releasesDir(stores),
-    "releases_registry" -> releaseRegistry(stores),
-    "releases_withdrawn" -> withdrawnRegistry(stores))
-
   /** BACK UP the deployment's live state to `dest` (VERDICT r14
     * missing #2): every standing store, the ledger and its id
     * registry, the tombstone registry (with its epoch sidecar — the
@@ -1867,7 +2064,8 @@ object Curation {
           "rest re-seated by reference to the chain)"
       // roles are disjoint directory trees — copy them concurrently
       // (wall-clock pays the largest store, not the sum)
-      val roleActions = StoreSwap.concurrentlyAll(snapshotRoles(stores)
+      val cat = new Catalogue(spark, stores)
+      val roleActions = StoreSwap.concurrentlyAll(cat.roles
         .filter(r => exists(spark, r._2)).map { case (role, src) => () =>
           val (man, nf, nb, cf, cb) =
             diffCopyRole(spark, role, Seq("" -> src), dest, baseFiles)
@@ -1881,8 +2079,7 @@ object Curation {
         else Some(PQ.liveDir(spark, stores.pqIndex)).filter(_ != stores.pqIndex)
       val pqActions = pqLive.toSeq.flatMap { live =>
         val gen = live.stripPrefix(s"${stores.pqIndex}/")
-        val parts = Seq("params", "centroids", "codes")
-          .filter(t => exists(spark, s"$live/$t"))
+        val parts = cat.pq.get.guard.filter(t => exists(spark, s"$live/$t"))
           .map(t => t -> s"$live/$t")
         val (man, nf, nb, cf, cb) =
           diffCopyRole(spark, "pq", parts, dest, baseFiles)
@@ -2196,7 +2393,7 @@ object Curation {
           copyFile(spark, physPath(loc, role, rel),
             if (rel.isEmpty) target else s"$target/$rel")
         }
-      val roleActions = snapshotRoles(stores)
+      val roleActions = new Catalogue(spark, stores).roles
         .filter(r => meta.contains(r._1)).flatMap { case (role, target) =>
           val files = roleFiles.getOrElse(role, Seq.empty)
           if (role == "releases") {
@@ -2333,7 +2530,7 @@ object Curation {
   def searchEmbeddings(spark: SparkSession, stores: Stores,
                        queries: DataFrame, topK: Int,
                        probes: Int = 1): DataFrame = {
-    require(exists(spark, s"${stores.embedding}/centroids"),
+    require(new Catalogue(spark, stores).ivf,
       s"no IVF embedding index at ${stores.embedding} — train one with " +
         "IvfIndex.write (the flat store is commit-path-only)")
     def refuse(when: String): Nothing =
@@ -2352,121 +2549,6 @@ object Curation {
     if (exists(spark, lockPath(stores)))
       refuse("that acquired the lock mid-read")
     out
-  }
-
-  /** One maintenance unit of a deployment: a store declaration
-    * ([[Maintenance.Store]]) under a name, with `root` holding the
-    * unit's sidecars (its applied watermark, its audit cursor). The
-    * store's drift-prone tables gate file-driven due-ness, and a store
-    * with erasable tables is due while a tombstone is unapplied.
-    * [[maintain]] rewrites every store whole ([[Maintenance.rewrite]]);
-    * [[maintainDue]] erases and collapses only what the takedown and
-    * the drifted buckets reach ([[Maintenance.erase]],
-    * [[Maintenance.collapse]]).
-    *
-    * `audit` names the unit's [[fsck]] tombstone check and the rows its
-    * detail counts: the rows of the store's first doc-keyed table that
-    * carry a retracted id. `skew`/`heal` are the IVF unit's codebook
-    * health, `retiredGens` the PQ unit's retired serving generations.
-    */
-  private final case class MaintUnit(name: String, root: String,
-                                     store: Maintenance.Store,
-                                     audit: Option[(String, String)] = None,
-                                     skew: Option[() => Double] = None,
-                                     heal: Option[Double => Int] = None,
-                                     retiredGens:
-                                       Option[() => Seq[String]] = None) {
-    def tables: Seq[String] = store.maintained
-    def erasable: Boolean = store.erasable
-  }
-
-  /** The deployment's maintenance units, existence-aware — the single
-    * catalogue [[maintain]] (all of them), [[maintainDue]] (the due
-    * subset), [[fsck]] and [[repair]] share, so no two of them can
-    * disagree about a store.
-    */
-  private def maintenanceUnits(spark: SparkSession,
-                               stores: Stores): Seq[MaintUnit] = {
-    val units = Seq.newBuilder[MaintUnit]
-    if (exists(spark, s"${stores.textIndex}/bands"))
-      units += MaintUnit("text_index", stores.textIndex,
-        Dedup.nearDupStore(stores.textIndex),
-        Some(("text_tombstoned_members", "text member rows")))
-    if (exists(spark, stores.ledger))
-      units += MaintUnit("ledger", stores.ledger, Ledger.store(stores.ledger),
-        Some(("ledger_tombstoned_rows", "ledger rows")))
-    val reg = s"${stores.ledger}.ids"
-    if (exists(spark, reg))
-      // the registry RETAINS retracted ids (recommit refusal) — file
-      // pressure is its only due signal
-      units += MaintUnit("id_registry", reg,
-        Maintenance.Store(reg, Seq("" -> IdsTable)))
-    Seq("image" -> stores.image, "audio" -> stores.audio).foreach {
-      case (name, d) =>
-        if (exists(spark, s"$d/bands"))
-          units += MaintUnit(s"${name}_index", d, ImageHash.hashStore(d),
-            Some((s"${name}_tombstoned_members", s"$name member rows")))
-    }
-    if (exists(spark, s"${stores.video}/shingles"))
-      units += MaintUnit("video_index", stores.video,
-        VideoHash.seqStore(stores.video),
-        Some(("video_tombstoned_seqs", "video sequence rows")))
-    if (exists(spark, s"${stores.embedding}/centroids"))
-      // erasure is surgical (affected cells only); per-tranche append
-      // files collapse cell-locally when the file census makes the unit
-      // due. Codebook health is a due signal too (VERDICT r12 missing
-      // #2): appends route into a FROZEN codebook, so a drifted ingest
-      // distribution piles into hot cells and probe cost degrades — the
-      // census's occupancy skew makes the unit due and
-      // [[IvfIndex.heal]] splits the hot cells, bounded per window.
-      units += MaintUnit("embedding_ivf", stores.embedding,
-        IvfIndex.vectorsStore(spark, stores.embedding),
-        Some(("embedding_tombstoned_vectors", "IVF vector rows")),
-        skew = Some(() => {
-          val m = IvfIndex.cellCensus(spark, stores.embedding)
-            .agg(max(col("skew"))).collect()
-          if (m.isEmpty || m(0).isNullAt(0)) 0.0 else m(0).getDouble(0)
-        }),
-        heal = Some(ms => IvfIndex.heal(spark, stores.embedding,
-          maxSkew = ms, maxSplits = 8)))
-    else if (exists(spark, stores.embedding))
-      units += MaintUnit("embedding_flat", stores.embedding,
-        Maintenance.Store(stores.embedding, Seq("" -> FlatEmbeddingTable)))
-    val pqCodes =
-      if (stores.pqIndex.isEmpty) None
-      else Some(PQ.codesStore(spark, stores.pqIndex))
-    pqCodes.filter(c => exists(spark, c.root)).foreach { codes =>
-      // serving-side ANN store: commits append each tranche's kept
-      // vectors through the frozen codebook, and takedowns MUST reach
-      // it (its codes are derived from retracted content). The store is
-      // the LIVE generation's code table (resolved per pass, so a
-      // re-release between windows redirects the next window).
-      // Codebook drift stays OPERATOR-cadenced here on purpose
-      // ([[PQ.codesCensus]] is the signal, [[rereleaseServing]] the
-      // action): unlike an IVF cell split — which preserves every
-      // vector's search semantics — a PQ re-release re-encodes EVERY
-      // code, changing serving results corpus-wide; that is a release
-      // decision, not hygiene a scheduled window should take silently.
-      units += MaintUnit("pq_index", stores.pqIndex, codes,
-        Some(("pq_tombstoned_codes", "pq code rows")),
-        // every re-release retires a full generation; without a due
-        // signal they accumulate silently (VERDICT r13 missing #2) —
-        // the scheduled pass keeps the newest `keepRetiredGens` (an
-        // in-flight lock-free query may still be reading the most
-        // recent one) and reclaims the rest
-        retiredGens = Some(() => PQ.retiredGens(spark, stores.pqIndex)
-          .map(g => s"${stores.pqIndex}/$g")))
-    }
-    val tomb = tombstonesDir(stores)
-    if (exists(spark, tomb))
-      // one small file lands per retract call and touched bucket; the
-      // table itself is permanent. Compacted files mix epochs, which is
-      // fine: by the time a pass collapses it, the pass has applied
-      // every epoch present, so slice reads (`epoch > applied`) skip a
-      // compacted file on its footer max
-      units += MaintUnit("tombstones", tomb,
-        Maintenance.Store(tomb, Seq("" -> TombstonesTable)))
-    units.result()
   }
 
   /** Data-file (count, bytes) per leaf bucket directory of one table —
@@ -2527,7 +2609,7 @@ object Curation {
     * bucket-local pass may rewrite in place (flat layouts yield none
     * and fall back to the store-wide rewrite).
     */
-  private final case class UnitStats(unit: MaintUnit, files: Long,
+  private final case class UnitStats(unit: Entry, files: Long,
                                      buckets: Long, perBucket: Double,
                                      pending: Long,
                                      drifted: Seq[(String, Long)],
@@ -2554,13 +2636,13 @@ object Curation {
         excessGens.nonEmpty
   }
 
-  private def unitStatsOf(spark: SparkSession, stores: Stores,
+  private def unitStatsOf(spark: SparkSession, cat: Catalogue,
                           maxFilesPerBucket: Int,
                           maxSkew: Double,
                           keepRetiredGens: Int = 1): Seq[UnitStats] = {
     // epoch -> row count; group count is bounded by lifetime retract
     // calls, so the collect is counter-sized, never corpus-sized
-    val hist: Seq[(Long, Long)] = readTombstoneRows(spark, stores)
+    val hist: Seq[(Long, Long)] = readTombstoneRows(spark, cat.stores)
       .map(_.groupBy("epoch").count().collect()
         .map(r => (r.getLong(0), r.getLong(1))).toSeq)
       .getOrElse(Seq.empty)
@@ -2569,7 +2651,7 @@ object Curation {
     // concurrently (round-18, guide §2.6); wall pays the slowest unit,
     // which matters on every scheduled window and read-only report
     StoreSwap.concurrentlyAll(
-      maintenanceUnits(spark, stores).map { u => () =>
+      cat.units.map { u => () =>
       val per = u.tables.map(t => bucketFiles(spark, t))
       val files = per.map(_.values.map(_._1).sum).sum
       val bucketCounts = per.map(m =>
@@ -2595,13 +2677,10 @@ object Curation {
       // retired-artifact visibility (VERDICT r13 missing #2), all
       // metadata listings: serving generations older than live, plus
       // the `.old` rollback asides swapping passes leave (one per
-      // table; embedding's codebook tables swap too)
+      // table, and one per declared aside)
       val gens = u.retiredGens.fold(Seq.empty[String])(f => f())
-      val asideCands = ((u.root +: u.tables).distinct ++
-        (if (u.name == "embedding_ivf")
-          Seq(s"${u.root}/centroids", s"${u.root}/centroids_q")
-        else Seq.empty)).map(p => s"$p.old")
-      val asides = asideCands.count(exists(spark, _))
+      val asides = (u.root +: u.tables ++: u.asides.map(u.under)).distinct
+        .count(p => exists(spark, s"$p.old"))
       UnitStats(u, files, buckets, perBucket, pending, drifted, flatOver,
         skew, u.heal.nonEmpty && skew > maxSkew,
         gens.size.toLong + asides,
@@ -2664,11 +2743,12 @@ object Curation {
     // (minRecall > 0) — the default report stays metadata-priced
     // the probe and the unit censuses are independent reads — overlap
     // them (round-18, guide §2.6) instead of paying probe + stats
+    val cat = new Catalogue(spark, stores)
     val Seq(recallRes, statsRes) = StoreSwap.concurrentlyAll(
       Seq[() => AnyRef](
         () => if (minRecall <= 0.0) None
-        else pqSelfRecall(spark, stores, sample = 64, topK = 5),
-        () => unitStatsOf(spark, stores, maxFilesPerBucket, maxSkew,
+        else pqSelfRecall(spark, cat, sample = 64, topK = 5),
+        () => unitStatsOf(spark, cat, maxFilesPerBucket, maxSkew,
           keepRetiredGens)))
     val recall = recallRes.asInstanceOf[Option[Double]]
     statsRes.asInstanceOf[Seq[UnitStats]]
@@ -2746,7 +2826,8 @@ object Curation {
       require(minRecall <= 1.0, s"minRecall must be <= 1.0, got $minRecall")
       val rows = readTombstoneRows(spark, stores).map(_.localCheckpoint())
       val applied = maxEpochOf(rows)
-      val stats = unitStatsOf(spark, stores, maxFilesPerBucket, maxSkew,
+      val cat = new Catalogue(spark, stores)
+      val stats = unitStatsOf(spark, cat, maxFilesPerBucket, maxSkew,
         keepRetiredGens)
       val dueStats = stats.filter(_.due(maxFilesPerBucket))
       // the per-window bucket budget ([[sink]]'s online-maintenance
@@ -2777,17 +2858,17 @@ object Curation {
           case Some(sl) =>
             // surgical erasure + bucket-local file compaction: the
             // whole pass is bounded by affected + drifted partitions
-            Maintenance.erase(spark, u.store, sl)
-            Maintenance.collapse(spark, u.store, mine)
+            Maintenance.erase(spark, u.maint, sl)
+            Maintenance.collapse(spark, u.maint, mine)
             true
           case None if s.drifted.nonEmpty =>
-            Maintenance.collapse(spark, u.store, mine)
+            Maintenance.collapse(spark, u.maint, mine)
             // drift deferred past this window's budget stays due; the
             // next pass picks it up where the ranking left off
             mine.nonEmpty
           case None if s.flatOver.nonEmpty =>
             // flat-table pressure: only the store-wide rewrite applies
-            Maintenance.rewrite(spark, u.store); true
+            Maintenance.rewrite(spark, u.maint); true
           case None =>
             false // due on codebook skew alone: heal below, no rewrite
         }
@@ -2829,7 +2910,7 @@ object Curation {
         // minRecall = 0 (default) disables the probe entirely.
         val rereleased =
           if (minRecall <= 0.0) None
-          else pqSelfRecall(spark, stores, sample = 64, topK = 5)
+          else pqSelfRecall(spark, cat, sample = 64, topK = 5)
             .filter(_ < minRecall).map(_ => rereleaseOrSkip(spark, stores))
         // scheduled backup (VERDICT r15 #2): act on fsck's
         // snapshot_stale signal inside the same window — a snapshot is
@@ -2870,8 +2951,8 @@ object Curation {
     // not the sum. The tombstone frame every erasure anti-joins is
     // CHECKPOINTED above, so the tombstone unit's own swap cannot
     // race the readers.
-    StoreSwap.concurrently(maintenanceUnits(spark, stores).map { u => () =>
-      Maintenance.rewrite(spark, u.store, ts)
+    StoreSwap.concurrently(new Catalogue(spark, stores).units.map { u => () =>
+      Maintenance.rewrite(spark, u.maint, ts)
       if (u.erasable)
         // clamped monotone (ADVICE r11): after a min-epoch tombstone
         // compaction the table max can sit below a standing watermark;
@@ -2917,7 +2998,7 @@ object Curation {
   def gc(spark: SparkSession, stores: Stores, keepRetired: Int = 0): Unit =
     withWriterLock(spark, stores, "gc") {
       require(keepRetired >= 0, s"keepRetired must be >= 0, got $keepRetired")
-      rollbackAsides(spark, stores)
+      new Catalogue(spark, stores).rollbackAsides
         .foreach { d =>
           StoreSwap.fsOf(spark, d)
             .delete(new org.apache.hadoop.fs.Path(d), true)
@@ -2935,29 +3016,6 @@ object Curation {
               .delete(new org.apache.hadoop.fs.Path(d), true)
           }
     }
-
-  /** The STANDING `.old` rollback asides swapping passes leave behind —
-    * the non-generational half of what [[gc]] reclaims, listed (not
-    * deleted) so [[fsck]] can surface the reclaimable footprint.
-    * Includes the LIVE PQ generation's code-table aside (a store-wide
-    * code compaction swaps inside the live generation, so its aside
-    * lands there, not at the store root).
-    */
-  private def rollbackAsides(spark: SparkSession,
-                             stores: Stores): Seq[String] = {
-    val roots = Seq(stores.textIndex, stores.image, stores.audio,
-      stores.video, stores.embedding, stores.ledger,
-      s"${stores.ledger}.ids", tombstonesDir(stores)) ++
-      (if (stores.pqIndex.nonEmpty)
-        Seq(stores.pqIndex, s"${stores.pqIndex}/codes",
-          s"${PQ.liveDir(spark, stores.pqIndex)}/codes")
-      else Seq.empty)
-    (roots.map(d => s"$d.old") ++
-      Seq(s"${stores.embedding}/centroids.old",
-        s"${stores.embedding}/centroids_q.old",
-        s"${stores.embedding}/vectors.old")).distinct
-      .filter(exists(spark, _))
-  }
 
   /** Deployment-wide store census — the operator's single health view,
     * (store, metric, value) over every standing store that exists:
@@ -2977,77 +3035,23 @@ object Curation {
     import spark.implicits._
     // every metric is an independent count job — run them all
     // concurrently and pay the slowest store, not the sum (the
-    // append-phase discipline applied to the ops rollup)
-    var thunks = Seq.empty[() => (String, String, Long)]
-    def add(store: String, metric: String)(v: => Long): Unit =
-      thunks :+= (() => (store, metric, v))
-    if (exists(spark, s"${stores.textIndex}/members")) {
-      def mem = spark.read.parquet(s"${stores.textIndex}/members")
-      add("text_index", "member_rows")(mem.count())
-      add("text_index", "contents")(mem.select("ch").distinct().count())
-      add("text_index", "band_rows")(
-        spark.read.parquet(s"${stores.textIndex}/bands").count())
-      add("text_index", "set_rows")(
-        spark.read.parquet(s"${stores.textIndex}/sets").count())
-    }
-    Seq("image" -> stores.image, "audio" -> stores.audio).foreach {
-      case (name, d) =>
-        if (exists(spark, s"$d/members")) {
-          def mem = spark.read.parquet(s"$d/members")
-          add(s"${name}_index", "member_rows")(mem.count())
-          add(s"${name}_index", "hashes")(
-            mem.select("hsh").distinct().count())
-          add(s"${name}_index", "band_rows")(
-            spark.read.parquet(s"$d/bands").count())
-        }
-    }
-    if (exists(spark, s"${stores.video}/shingles")) {
-      add("video_index", "shingle_rows")(
-        spark.read.parquet(s"${stores.video}/shingles").count())
-      add("video_index", "seq_rows")(
-        spark.read.parquet(s"${stores.video}/seqs").count())
-    }
-    val ivfCensus: Option[() => Seq[(String, String, Long)]] =
-      if (exists(spark, s"${stores.embedding}/centroids")) Some(() => {
-        val c = IvfIndex.cellCensus(spark, stores.embedding)
-          .agg(count(lit(1)), sum(col("n_vectors")),
-            max(col("skew"))).collect()(0)
-        Seq(("embedding_ivf", "cells", c.getLong(0)),
-          ("embedding_ivf", "vectors", c.getLong(1)),
-          ("embedding_ivf", "max_skew_pct",
-            math.round(c.getDouble(2) * 100)))
-      })
-      else if (exists(spark, stores.embedding)) Some(() =>
-        Seq(("embedding_flat", "vectors",
-          spark.read.parquet(stores.embedding).select("vec_id").count())))
-      else None
-    if (exists(spark, stores.ledger))
-      add("ledger", "rows")(Ledger.read(spark, stores.ledger).count())
-    if (exists(spark, s"${stores.ledger}.ids"))
-      add("id_registry", "ids")(
-        spark.read.parquet(s"${stores.ledger}.ids").count())
-    val pqCensusLive =
-      if (stores.pqIndex.isEmpty) ""
-      else PQ.liveDir(spark, stores.pqIndex)
-    if (stores.pqIndex.nonEmpty && exists(spark, s"$pqCensusLive/codes")) {
-      add("pq_index", "code_rows")(
-        spark.read.parquet(s"$pqCensusLive/codes").count())
-      add("pq_index", "vectors")(
-        spark.read.parquet(s"$pqCensusLive/codes")
-          .select("vec_id").distinct().count())
-      // retired generations awaiting gc: generations OLDER than live —
-      // a complete generation NEWER than the pointer is a crashed
-      // publish (fsck pq_publish pending, repair publishes it), not
-      // reclaimable backlog
-      add("pq_index", "retired_generations")(
-        PQ.retiredGens(spark, stores.pqIndex).size.toLong)
-    }
-    if (exists(spark, tombstonesDir(stores)))
-      add("tombstones", "ids")(
-        spark.read.parquet(tombstonesDir(stores)).count())
-    val all = thunks.map(t => () => Seq(t())) ++ ivfCensus
-    val rows = StoreSwap.concurrentlyAll(all).flatten
-    rows.toDF("store", "metric", "value").orderBy("store", "metric")
+    // append-phase discipline applied to the ops rollup). A store counts
+    // once its first metric's table exists; every read is planned on
+    // the driver through the declared table.
+    val thunks = new Catalogue(spark, stores).current
+      .filter(e => e.census.nonEmpty || e.more.nonEmpty)
+      .filter(e => e.census.headOption.forall(m =>
+        exists(spark, e.maint.path(m.rel))))
+      .flatMap { e =>
+        e.census.map { m => () =>
+          val t = StoreLayout.read(spark, e.maint.path(m.rel), e.table(m.rel))
+          Seq((e.name, m.name,
+            if (m.distinct.isEmpty) t.count()
+            else t.select(m.distinct).distinct().count()))
+        } ++ e.more.map(f => () => f().map { case (k, v) => (e.name, k, v) })
+      }
+    StoreSwap.concurrentlyAll(thunks).flatten
+      .toDF("store", "metric", "value").orderBy("store", "metric")
   }
 
   /** The optional modality fingerprint frames of one tranche, as
@@ -3199,7 +3203,8 @@ object Curation {
     var checks = Seq.empty[() => Option[(String, String, Long, String)]]
     def add(t: => Option[(String, String, Long, String)]): Unit =
       checks :+= (() => t)
-    val units = maintenanceUnits(spark, stores)
+    val cat = new Catalogue(spark, stores)
+    val units = cat.units
     if (exists(spark, stores.ledger))
       add(regIds.map { r =>
         val n = Ledger.read(spark, stores.ledger).select("doc_id")
@@ -3230,17 +3235,17 @@ object Curation {
     // store's applied watermark is the silent right-to-erasure failure
     // fsck exists to surface
     for (u <- units; (check, what) <- u.audit;
-         (rel, t, id) <- u.store.tables.collectFirst {
+         (rel, t, id) <- u.maint.tables.collectFirst {
            case (rel, t) if t.erase.isInstanceOf[StoreLayout.ById] =>
              (rel, t, t.erase.asInstanceOf[StoreLayout.ById].id) }
-         if exists(spark, u.store.path(rel)))
+         if exists(spark, u.maint.path(rel)))
       add(tomb.map { tt =>
-        val n = StoreLayout.read(spark, u.store.path(rel), t)
+        val n = StoreLayout.read(spark, u.maint.path(rel), t)
           .select(col(id).as("doc_id"))
           .join(tt, Seq("doc_id"), "left_semi").count()
         (check, tombStatus(n, u.root), n, s"$what carrying retracted ids")
       })
-    if (exists(spark, s"${stores.embedding}/centroids")) {
+    if (cat.ivf) {
       if (IvfIndex.splitInFlight(spark, stores.embedding))
         add(Some(("ivf_split_inflight", "pending", 1L,
           "splitCell mid-mutation; run IvfIndex.rewrite to recover")))
@@ -3355,7 +3360,7 @@ object Curation {
         if (stores.pqIndex.isEmpty) Seq.empty[String]
         else PQ.retiredGens(spark, stores.pqIndex)
           .map(g => s"${stores.pqIndex}/$g")
-      val paths = rollbackAsides(spark, stores) ++ gens
+      val paths = cat.rollbackAsides ++ gens
       val bytes = paths.map { p =>
         StoreSwap.fsOf(spark, p)
           .getContentSummary(new org.apache.hadoop.fs.Path(p)).getLength
@@ -3515,7 +3520,7 @@ object Curation {
     // catalogue — nothing above would ever mention it. Emitted only
     // when the state exists (a healthy deployment's report is stable);
     // the recovery is mechanical and [[repair]] applies it.
-    add(Some(crashedSwaps(spark, stores)).filter(_.nonEmpty).map { cs =>
+    add(Some(crashedSwaps(spark, cat)).filter(_.nonEmpty).map { cs =>
       ("crashed_store_swap", "violation", cs.size.toLong,
         "store dirs missing with complete hidden generations — run " +
           "Curation.repair, or rename: " +
@@ -3539,41 +3544,6 @@ object Curation {
   private[ext] final case class Orphan(hidden: String, target: String,
                                        isAside: Boolean)
 
-  /** Every directory a STORE-WIDE [[StoreSwap.swap]] may replace, by
-    * declared deployment paths — NOT existence-gated like
-    * [[maintenanceUnits]], because the crashed-swap state is exactly
-    * "the directory is gone": mid-swap the live dir does not exist
-    * (complete old generation under `<dir>.old`, complete new one
-    * under the pass's sibling tmp), so an existence-gated catalogue
-    * silently drops the store and no per-table check ever runs.
-    */
-  private def swapScopes(spark: SparkSession,
-                         stores: Stores): Seq[(String, String)] = {
-    // ledger-only Stores (SQL console audit forms): an unregistered
-    // (blank) store contributes no scope — "$p.old"-style suffix
-    // probes on a blank root would resolve RELATIVE paths
-    def opt(name: String, root: String,
-            scopes: (String, String)*): Seq[(String, String)] =
-      if (root.trim.isEmpty) Seq.empty
-      else (name -> root) +: scopes
-    opt("text_index", stores.textIndex) ++
-      opt("image", stores.image) ++
-      opt("audio", stores.audio) ++
-      opt("video", stores.video) ++
-      opt("embedding", stores.embedding,
-        "embedding_vectors" -> s"${stores.embedding}/vectors") ++
-      opt("ledger", stores.ledger,
-        "id_registry" -> s"${stores.ledger}.ids",
-        "tombstones" -> tombstonesDir(stores)) ++
-      (if (stores.pqIndex.nonEmpty)
-        // the PQ root is generational (re-release is a pointer flip,
-        // never a dir swap — pq_publish audits its crash states); the
-        // LIVE generation's code table swap-rewrites on store-wide
-        // compaction
-        Seq("pq_codes" -> s"${PQ.liveDir(spark, stores.pqIndex)}/codes")
-      else Seq.empty)
-  }
-
   // a swap tmp is fully written BEFORE the two renames begin, so when
   // the live dir is missing the tmp (preferred: the post-transform
   // generation) or the .old aside is a complete store. `.split` tmps
@@ -3587,8 +3557,8 @@ object Curation {
     * target) — promote-from prefers the sibling tmp over `.old`.
     */
   private def crashedSwaps(spark: SparkSession,
-                           stores: Stores): Seq[(String, String, String)] =
-    swapScopes(spark, stores).flatMap { case (what, p) =>
+                           cat: Catalogue): Seq[(String, String, String)] =
+    cat.swapScopes.flatMap { case (what, p) =>
       if (exists(spark, p)) None
       else (SwapTmpSuffixes.map(s => s"$p$s") :+ s"$p.old")
         .find(exists(spark, _)).map(src => (what, src, p))
@@ -3642,7 +3612,7 @@ object Curation {
     * partitions, rewritten buckets), not by deployment lifetime.
     */
   private def crashedRewriteOrphans(spark: SparkSession,
-                                    u: MaintUnit): Seq[Orphan] = {
+                                    u: Entry): Seq[Orphan] = {
     val since = readFsckMark(spark, u.root)
     val scanStart = System.currentTimeMillis()
     val orphans = u.tables.flatMap { t =>
@@ -3725,7 +3695,7 @@ object Curation {
       // crashed STORE-WIDE swaps first: promoting the hidden complete
       // generation puts the store back in the existence-gated unit
       // catalogue, so the bucket-level walk below audits it too
-      val swapActions = crashedSwaps(spark, stores).map {
+      val swapActions = crashedSwaps(spark, new Catalogue(spark, stores)).map {
         case (what, src, target) =>
           val fs = StoreSwap.fsOf(spark, target)
           if (!fs.rename(new org.apache.hadoop.fs.Path(src),
@@ -3816,7 +3786,8 @@ object Curation {
             }
         }
       swapActions ++ pqActions ++ releaseActions ++
-        maintenanceUnits(spark, stores).flatMap { u =>
+        // resolved after the promotions above: they change what exists
+        new Catalogue(spark, stores).units.flatMap { u =>
         u.tables.flatMap { t =>
           val fs = StoreSwap.fsOf(spark, t)
           def walk(p: org.apache.hadoop.fs.Path): Seq[String] =

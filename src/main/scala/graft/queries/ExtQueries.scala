@@ -8401,11 +8401,12 @@ object ExtQueries {
   // --- x141: hex-ref video payload of a published release ------------------------------
 
   /** [[graft.ext.Curation.exportReleasePayload]]'s video form under
-    * the hash gate — the hex-encoded-binary-ref discipline (x137's
-    * `content_ref` rule) on the payload read itself: release 1's
-    * pinned video manifest rows joined back to the sequence store,
-    * (doc_id, tranche, sq = hex of the sequence id), with the
-    * post-publish `%40 == 21` takedown holed out. The oracle replays
+    * the hash gate — x137's hex `content_ref` rule on the payload read
+    * itself: release 1's pinned video manifest rows joined back to the
+    * sequence store, (doc_id, tranche, sq = `hex(sq)`; the stored `sq`
+    * is already the md5 hex text, so this is the hex of its 32
+    * characters' bytes), with the post-publish `%40 == 21` takedown
+    * holed out. The oracle replays
     * the ENTIRE chain independently: 16-wide BMP dHash per 64-char
     * frame, md5-of-ordered-frame-hashes sequence ids, first-seen
     * kept-ness with cross-tranche precedence, hole exclusion — a

@@ -212,7 +212,7 @@ class PlanSpec extends SparkSpec {
   }
 
   test("partitioned layout prunes partitions at the scan") {
-    val dir = java.nio.file.Files.createTempDirectory("part").toString
+    val dir = tempDir("part")
     graft.model.Tables.events(spark, sf())
       .write.mode("overwrite").partitionBy("event_type").parquet(dir)
     val df = spark.read.parquet(dir).filter(col("event_type") === "click")

@@ -515,7 +515,7 @@ class SqlSurfaceSpec extends SparkSpec {
     import graft.ext.Curation
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 160)
-    val root = java.nio.file.Files.createTempDirectory("sqlcur").toString
+    val root = tempDir("sqlcur")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led")
     Curation.commitTranche(docs.filter(col("doc_id") % 2 === 0), 0L, stores)
@@ -561,7 +561,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 160)
     val emb = Tables.embeddings(spark, sf())
-    val root = java.nio.file.Files.createTempDirectory("sqlserve").toString
+    val root = tempDir("sqlserve")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led", pqIndex = s"$root/pq")
     def embOf(b: org.apache.spark.sql.DataFrame) = emb.join(
@@ -646,7 +646,7 @@ class SqlSurfaceSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 160)
     val emb = Tables.embeddings(spark, sf())
-    val root = java.nio.file.Files.createTempDirectory("sqlconsole").toString
+    val root = tempDir("sqlconsole")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led", pqIndex = s"$root/pq")
     def embOf(b: org.apache.spark.sql.DataFrame) = emb.join(
@@ -655,8 +655,7 @@ class SqlSurfaceSpec extends SparkSpec {
       stores, embeddings = Some(embOf(docs.filter(col("doc_id") % 2 === 0))))
     Curation.trainServing(spark, stores)
     Curation.publishRelease(spark, stores, 0L)
-    val dest = java.nio.file.Files.createTempDirectory("sqlsnap")
-      .toString + "/s"
+    val dest = tempDir("sqlsnap") + "/s"
     Curation.snapshot(spark, stores, dest)
     import spark.implicits._
     // a takedown AFTER the snapshot and the publish: fsck reads

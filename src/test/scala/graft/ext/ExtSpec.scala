@@ -497,7 +497,7 @@ class ExtSpec extends SparkSpec {
     // grown without raw corpus vectors or retraining
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     val standing = base.filter(col("vec_id") % 4 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("pqidx").toString + "/pq"
+    val dir = tempDir("pqidx") + "/pq"
     PQ.writeIndex(standing, dir, m = 4, k = 4, iters = 2, subWidth = 16)
     val cent = PQ.readCentroids(spark, dir)
     assert(cent.count() > 0 && cent.count() <= 4 * 4 * 16,
@@ -551,8 +551,7 @@ class ExtSpec extends SparkSpec {
     // visible (codesCensus) and fixable (rewriteIndex's atomic swap)
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     val standing = base.filter(col("vec_id") % 4 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("pqcen")
-      .toString + "/pq"
+    val dir = tempDir("pqcen") + "/pq"
     PQ.writeIndex(standing, dir, m = 4, k = 4, iters = 2, subWidth = 16)
     def top(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
@@ -609,8 +608,7 @@ class ExtSpec extends SparkSpec {
     // before/during/after the flips, returns the identical top-k
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     val standing = base.filter(col("vec_id") % 4 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("pqgen")
-      .toString + "/pq"
+    val dir = tempDir("pqgen") + "/pq"
     PQ.writeIndex(standing, dir, m = 4, k = 4, iters = 2, subWidth = 16)
     def top(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
@@ -647,8 +645,7 @@ class ExtSpec extends SparkSpec {
   test("filtered disk ADC is top-k AMONG the allowed, not allowed among top-k") {
     val base = spark.read.parquet(sf() + "/embeddings.parquet")
     val standing = base.filter(col("vec_id") % 4 =!= 0)
-    val dir = java.nio.file.Files.createTempDirectory("pqflt")
-      .toString + "/pq"
+    val dir = tempDir("pqflt") + "/pq"
     PQ.writeIndex(standing, dir, m = 4, k = 4, iters = 2, subWidth = 16)
     def top(df: org.apache.spark.sql.DataFrame) =
       df.collect().map(r =>
@@ -1338,7 +1335,7 @@ class ExtSpec extends SparkSpec {
     val docs = graft.model.Tables.documents(spark, sf())
     val standing = docs.filter(col("doc_id") % 4 =!= 0)
     val incoming = docs.filter(col("doc_id") % 4 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ndidx").toString
+    val dir = tempDir("ndidx")
     Dedup.writeNearDupIndex(standing, "doc_id", "text", dir)
     val idx = Dedup.readNearDupIndex(spark, dir)
     def rows(df: org.apache.spark.sql.DataFrame) =
@@ -1380,7 +1377,7 @@ class ExtSpec extends SparkSpec {
     val docs = graft.model.Tables.documents(spark, sf())
     val standing = docs.filter(col("doc_id") % 4 =!= 0)
     val incoming = docs.filter(col("doc_id") % 4 === 0)
-    val dir = java.nio.file.Files.createTempDirectory("ndcomp").toString + "/idx"
+    val dir = tempDir("ndcomp") + "/idx"
     Dedup.writeNearDupIndex(standing, "doc_id", "text", dir)
     // a re-run double-appends the same tranche; a re-crawl tranche
     // carries byte-identical texts under new ids
@@ -1770,7 +1767,7 @@ class ExtSpec extends SparkSpec {
   test("x112 composes with the persisted ledger: the multimodal frame lands on disk", graft.Slow) {
     import java.nio.file.Files
     val out = graft.queries.ExtQueries.queries("x112_multimodal_ledger")(spark, sf())
-    val dir = Files.createTempDirectory("x112led").toString
+    val dir = tempDir("x112led")
     graft.ext.Ledger.appendMultimodal(out, tranche = 7L, dir)
     val back = graft.ext.Ledger.read(spark, dir).collect()
     assert(back.forall(_.getLong(2) == 7L))
@@ -2315,7 +2312,7 @@ class ExtSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 160)
     val emb = Tables.embeddings(spark, sf())
-    val base0 = java.nio.file.Files.createTempDirectory("gcrace").toString
+    val base0 = tempDir("gcrace")
     val stores = Curation.Stores(s"$base0/text", s"$base0/img",
       s"$base0/aud", s"$base0/vid", s"$base0/emb", s"$base0/led",
       pqIndex = s"$base0/pq")

@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -28,7 +26,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("write -> probe: disk top-k equals brute force on planted clusters; scan prunes cells") {
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfidx").toString
+    val dir = tempDir("ivfidx")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     // centroids + integer codebook + cell-partitioned vectors all exist
     assert(spark.read.parquet(s"$dir/centroids").count() == 4)
@@ -56,7 +54,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("append routes through the persisted integer codebook and is immediately searchable") {
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfidx2").toString
+    val dir = tempDir("ivfidx2")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     // the appended batch replays the same clusters under fresh ids
     val batch = planted(40, 1000L)
@@ -91,7 +89,7 @@ class IvfIndexSpec extends SparkSpec {
   test("semantic ledgerProbe from disk: identity exact, cell-pruned near, first-seen") {
     import spark.implicits._
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfled").toString
+    val dir = tempDir("ivfled")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     def custom(g: Int, j60: Float) = {
       val e = Array.fill(64)(0.001f); e(g) = 1.0f; e(60) = j60; e.toSeq
@@ -116,7 +114,7 @@ class IvfIndexSpec extends SparkSpec {
   test("splitCell: a hot cell splits in place — probe parity, identity exact, cold cells untouched", graft.Slow) {
     import spark.implicits._
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfsplit").toString
+    val dir = tempDir("ivfsplit")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     // hot append: a second, well-separated direction (argmax dim 7 vs
     // the cell's native dim) routed into one cell by a slight lean —
@@ -205,7 +203,7 @@ class IvfIndexSpec extends SparkSpec {
   test("heal: census-driven splits remediate every hot cell, nothing else", graft.Slow) {
     import spark.implicits._
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfheal").toString
+    val dir = tempDir("ivfheal")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     // the census-test hot append: 200 vectors the frozen codebook
     // routes into one cell (~7.7x mean occupancy after)
@@ -256,7 +254,7 @@ class IvfIndexSpec extends SparkSpec {
       (1000L + j, e.toSeq)
     }
     val emb = (base ++ degen).toDF("vec_id", "embedding")
-    val dir = Files.createTempDirectory("ivfdegen").toString
+    val dir = tempDir("ivfdegen")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     val skewBefore = IvfIndex.cellCensus(spark, dir).collect()
       .map(_.getAs[Double]("skew")).max
@@ -278,7 +276,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("compactCells collapses per-append files without changing serving") {
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfcompact").toString
+    val dir = tempDir("ivfcompact")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     IvfIndex.append(planted(40, 2000L), dir)
     IvfIndex.append(planted(40, 3000L), dir)
@@ -308,7 +306,7 @@ class IvfIndexSpec extends SparkSpec {
 
   test("removeIds: surgical erasure rewrites only the affected cells") {
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfrm").toString
+    val dir = tempDir("ivfrm")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     // victims: three vectors that all live in ONE cell
     val victims = spark.read.parquet(s"$dir/vectors")
@@ -345,7 +343,7 @@ class IvfIndexSpec extends SparkSpec {
   test("cell census: a skewed append is visible as occupancy skew") {
     import spark.implicits._
     val emb = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfcensus").toString
+    val dir = tempDir("ivfcensus")
     IvfIndex.write(emb, dir, k = 4, iters = 2)
     // balanced plant: every cell within rounding of mean occupancy
     val before = IvfIndex.cellCensus(spark, dir).collect()

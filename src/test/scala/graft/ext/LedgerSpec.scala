@@ -20,7 +20,7 @@ class LedgerSpec extends SparkSpec {
   }
 
   test("tranche appends accumulate; re-running one tranche is idempotent") {
-    val dir = Files.createTempDirectory("ledidem").toString
+    val dir = tempDir("ledidem")
     Ledger.append(verdicts(Seq(1L -> "kept", 2L -> "exact_dup")),
       0L, "text", dir)
     Ledger.append(verdicts(Seq(3L -> "near_dup")), 1L, "text", dir)
@@ -44,7 +44,7 @@ class LedgerSpec extends SparkSpec {
   }
 
   test("compact: one file per partition, rows exact, old store retained") {
-    val dir = Files.createTempDirectory("ledcomp").toString + "/ledger"
+    val dir = tempDir("ledcomp") + "/ledger"
     // several appends per (tranche, modality) partition — the
     // accumulation shape that makes the table file-count-bound
     Ledger.append(verdicts((1L to 40L).map(_ -> "kept")), 0L, "text", dir)
@@ -91,7 +91,7 @@ class LedgerSpec extends SparkSpec {
   }
 
   test("readRange reads only its tranche partitions (structural pruning)") {
-    val dir = Files.createTempDirectory("ledrange").toString + "/ledger"
+    val dir = tempDir("ledrange") + "/ledger"
     (0L to 4L).foreach { t =>
       Ledger.append(verdicts(Seq(t * 10 -> "kept", t * 10 + 1 -> "near_dup")),
         t, "text", dir)
@@ -120,7 +120,7 @@ class LedgerSpec extends SparkSpec {
   }
 
   test("auditSummary counts per (tranche, modality, decision)") {
-    val dir = Files.createTempDirectory("ledaudit").toString
+    val dir = tempDir("ledaudit")
     Ledger.append(verdicts(Seq(1L -> "kept", 2L -> "kept", 3L -> "exact_dup")),
       0L, "text", dir)
     Ledger.append(verdicts(Seq(4L -> "near_dup", 5L -> "kept")), 1L, "text", dir)

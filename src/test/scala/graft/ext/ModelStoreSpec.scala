@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -19,7 +17,7 @@ class ModelStoreSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf())
     val wf = TextAnalytics.wordFreq(docs, "text")
     val (merges, vocab) = TextAnalytics.bpeTrain(wf, rounds = 6)
-    val dir = Files.createTempDirectory("bpestore").toString
+    val dir = tempDir("bpestore")
     ModelStore.writeBpe(merges, dir)
     ModelStore.writeBpeVocab(vocab, dir)
     val fresh = spark.newSession()
@@ -54,7 +52,7 @@ class ModelStoreSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf())
     val wf = TextAnalytics.wordFreq(docs, "text")
     val model = UnigramLm.trainModel(wf)
-    val dir = Files.createTempDirectory("unistore").toString
+    val dir = tempDir("unistore")
     ModelStore.writeUnigram(model, spark, dir)
     val fresh = spark.newSession()
     val back = ModelStore.readUnigram(fresh, dir)
@@ -77,7 +75,7 @@ class ModelStoreSpec extends SparkSpec {
     // emits the DECLARED x119 rows exactly
     val declared = graft.queries.ExtQueries.queries("x119_unigram_tokens")(
         spark, sf()).collect().map(_.toSeq).toSeq
-    val dir = Files.createTempDirectory("x119store").toString
+    val dir = tempDir("x119store")
     ModelStore.writeUnigram(
       graft.queries.ExtQueries.unigramLmModel(spark, sf()), spark, dir)
     val fresh = spark.newSession()
@@ -99,7 +97,7 @@ class ModelStoreSpec extends SparkSpec {
     // the exact artifact the declared x93/x102/x114 rows score with —
     // persisting and re-reading it changes nothing
     val w = graft.queries.ExtQueries.qualityWeights(spark, sf())
-    val dir = Files.createTempDirectory("x114store").toString
+    val dir = tempDir("x114store")
     ModelStore.writeQualityWeights(w, dir)
     val back = ModelStore.readQualityWeights(spark.newSession(), dir)
       .collect().map(r => (r.getLong(0), r.getLong(1))).sorted.toSeq
@@ -117,7 +115,7 @@ class ModelStoreSpec extends SparkSpec {
     val w = QualityModel.trainPerceptron(
       docs.filter(col("doc_id") % 2 === 0), "doc_id", "text", labels,
       buckets = 512, rounds = 8)
-    val dir = Files.createTempDirectory("qwstore").toString
+    val dir = tempDir("qwstore")
     ModelStore.writeQualityWeights(w, dir)
     val fresh = spark.newSession()
     val back = ModelStore.readQualityWeights(fresh, dir)
@@ -139,7 +137,7 @@ class ModelStoreSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf())
     val clean = col("doc_id") % 3 === 0
     val counts = NgramLm.trainCounts(docs.filter(clean), "text")
-    val dir = Files.createTempDirectory("lmstore").toString
+    val dir = tempDir("lmstore")
     ModelStore.writeNgramLm(counts, dir)
     val fresh = spark.newSession()
     val back = ModelStore.readNgramLm(fresh, dir)

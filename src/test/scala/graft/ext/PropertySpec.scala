@@ -399,7 +399,7 @@ class PropertySpec extends SparkSpec {
     // a standing doc) are planted on top of the organic duplicates.
     import spark.implicits._
     import java.nio.file.Files
-    val root = Files.createTempDirectory("fsidx").toString
+    val root = tempDir("fsidx")
     val seed = org.scalacheck.rng.Seed(77L)
     val wordGen = Gen.oneOf("aa", "bb", "cc", "dd", "ee", "ff")
     val docGen = for {
@@ -477,7 +477,7 @@ class PropertySpec extends SparkSpec {
     // of a tranche vector are planted.
     import spark.implicits._
     import java.nio.file.Files
-    val dir = Files.createTempDirectory("fsivf").toString
+    val dir = tempDir("fsivf")
     val seed = org.scalacheck.rng.Seed(55L)
     val dim = 6
     val bases = Seq(Seq(1f, 0f, 0f, 0f, 0f, 0f), Seq(0f, 1f, 0f, 0f, 0f, 0f),
@@ -537,7 +537,7 @@ class PropertySpec extends SparkSpec {
       .pureApply(Gen.Parameters.default, seed)
     val assign = Gen.listOfN(150, Gen.choose(0, 2))
       .pureApply(Gen.Parameters.default, seed.next)
-    val root = Files.createTempDirectory("curprop").toString
+    val root = tempDir("curprop")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led")
     (0 to 2).foreach { tr =>

@@ -1,7 +1,5 @@
 package graft.ext
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -30,7 +28,7 @@ class StoreIndexSpec extends SparkSpec {
     val tranche = docs.filter(col("doc_id") % 4 === 0)
       .unionAll(standing.orderBy("doc_id").limit(1)
         .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    val dir = Files.createTempDirectory("ndidx").toString + "/text"
+    val dir = tempDir("ndidx") + "/text"
     Dedup.writeNearDupIndex(standing, "doc_id", "text", dir)
     val trIdx = Dedup.nearDupIndex(tranche, "doc_id", "text")
     val disk = Dedup.ledgerProbeFrom(
@@ -79,7 +77,7 @@ class StoreIndexSpec extends SparkSpec {
       // all standing multipliers and their 1-bit flips
       (0 until 5).map(g => (1300L + g, base(40 + g))))
       .toDF("doc_id", "hash")
-    val dir = Files.createTempDirectory("hashidx").toString + "/img"
+    val dir = tempDir("hashidx") + "/img"
     ImageHash.appendHashIndex(standing, "doc_id", "hash", dir)
     val disk = ImageHash.ledgerProbeIndexed(spark, dir, tranche,
       "doc_id", "hash")
@@ -115,7 +113,7 @@ class StoreIndexSpec extends SparkSpec {
     val tranche = docs.filter(col("doc_id") % 4 === 0)
     val sFrames = VideoHash.frameHashes(standing, "doc_id", "text")
     val tFrames = VideoHash.frameHashes(tranche, "doc_id", "text")
-    val dir = Files.createTempDirectory("seqidx").toString + "/vid"
+    val dir = tempDir("seqidx") + "/vid"
     VideoHash.appendSeqIndex(sFrames, dir)
     val disk = VideoHash.ledgerProbeIndexed(spark, dir, tFrames, tranche,
       "doc_id")

@@ -1,7 +1,5 @@
 package graft.sources
 
-import java.nio.file.Files
-
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpec
@@ -18,7 +16,7 @@ class ShardsSpec extends SparkSpec {
   test("writeTrainingShards: deterministic assignment, sorted shards, stable re-runs") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
     val total = docs.count()
-    val out1 = Files.createTempDirectory("shards1").toString
+    val out1 = tempDir("shards1")
     val written = Shards.writeTrainingShards(docs, "doc_id", out1, nShards)
     assert(written == total)
 
@@ -42,7 +40,7 @@ class ShardsSpec extends SparkSpec {
     }
 
     // re-run (different input partitioning) → identical shard contents
-    val out2 = Files.createTempDirectory("shards2").toString
+    val out2 = tempDir("shards2")
     Shards.writeTrainingShards(docs.repartition(13), "doc_id", out2, nShards)
     (0 until nShards).foreach { s =>
       val a = spark.read.parquet(s"$out1/shard=$s")

@@ -16,9 +16,9 @@ import graft.resolve.MockResolver
 class StreamingSpec extends SparkSpec {
 
   test("station stream drains a link directory into one JSON array (AvailableNow)") {
-    val dir = Files.createTempDirectory("links").toString
-    val out = Files.createTempDirectory("out").resolve("output.json").toString
-    val ckpt = Files.createTempDirectory("ckpt").toString
+    val dir = tempDir("links")
+    val out = tempDir("out") + "/output.json"
+    val ckpt = tempDir("ckpt")
     Files.write(Paths.get(dir, "links.txt"),
       ("# comment\n\nhttps://www.youtube.com/watch?v=AAAAAAAAAAA\n" +
         "https://www.youtube.com/watch?v=BBBBBBBBBBB\n" +
@@ -35,9 +35,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("sink merges incremental batches: second drain keeps first drain's stations") {
-    val dir = Files.createTempDirectory("links3").toString
-    val out = Files.createTempDirectory("out3").resolve("output.json").toString
-    val ckpt = Files.createTempDirectory("ckpt3").toString
+    val dir = tempDir("links3")
+    val out = tempDir("out3") + "/output.json"
+    val ckpt = tempDir("ckpt3")
     Files.write(Paths.get(dir, "a.txt"), "https://www.youtube.com/watch?v=FIRST0000001\n".getBytes)
     StationStream.run(spark, dir, out, ckpt, new MockResolver().stage(spark))
       .awaitTermination(60000)
@@ -51,7 +51,7 @@ class StreamingSpec extends SparkSpec {
 
   test("sink merge survives a reformatted file and recovers from a corrupt one") {
     import spark.implicits._
-    val out = Files.createTempDirectory("sinkrec").resolve("output.json")
+    val out = Paths.get(tempDir("sinkrec"), "output.json")
     def batch(url: String) = Seq((url, s"name-$url")).toDF("url", "name")
     StationStream.writeJsonArray(batch("u1"), out.toString)
     // another writer pretty-prints the array: the Jackson parser (not the
@@ -74,7 +74,7 @@ class StreamingSpec extends SparkSpec {
 
   test("pretty sink is byte-identical to json.dump(indent=2, ensure_ascii=False)") {
     import spark.implicits._
-    val out = Files.createTempDirectory("pretty").resolve("output.json")
+    val out = Paths.get(tempDir("pretty"), "output.json")
     val df = Seq(("u1", "café \"quoted\"\nline\ttab", 1L), ("u2", "plain", 3L))
       .toDF("url", "name", "n")
     StationStream.writeJsonArray(df, out.toString, pretty = true)
@@ -95,7 +95,7 @@ class StreamingSpec extends SparkSpec {
   test("streaming tumbling counts equal the batch groupBy (complete mode)") {
     val events = Tables.events(spark, sf())
     // stream the same rows through a file source
-    val dir = Files.createTempDirectory("ev").toString
+    val dir = tempDir("ev")
     events.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(events.schema).parquet(dir)
 
@@ -112,7 +112,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming session windows equal the batch session_window (complete mode)") {
     val events = Tables.events(spark, sf())
-    val dir = Files.createTempDirectory("ev3").toString
+    val dir = tempDir("ev3")
     events.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(events.schema).parquet(dir)
 
@@ -129,9 +129,9 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("processing-time trigger (daemon mode, C5) drains and keeps running") {
-    val dir = Files.createTempDirectory("links2").toString
-    val out = Files.createTempDirectory("out2").resolve("output.json").toString
-    val ckpt = Files.createTempDirectory("ckpt2").toString
+    val dir = tempDir("links2")
+    val out = tempDir("out2") + "/output.json"
+    val ckpt = tempDir("ckpt2")
     Files.write(Paths.get(dir, "links.txt"),
       "https://www.youtube.com/watch?v=PT0000000001\n".getBytes)
     val q = StationStream.run(spark, dir, out, ckpt,
@@ -146,7 +146,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-static join: streaming events enrich against a static dimension") {
     val events = Tables.events(spark, sf())
-    val dir = Files.createTempDirectory("ev4").toString
+    val dir = tempDir("ev4")
     events.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(events.schema).parquet(dir)
     val dim = Tables.customer(spark, sf())
@@ -163,7 +163,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stream-stream interval join matches the batch equivalent") {
     val events = Tables.events(spark, sf())
-    val dir = Files.createTempDirectory("ev5").toString
+    val dir = tempDir("ev5")
     events.write.mode("overwrite").parquet(dir)
     def stream() = spark.readStream.schema(events.schema).parquet(dir)
 
@@ -199,7 +199,7 @@ class StreamingSpec extends SparkSpec {
 
   test("stateless curation operators run unchanged over a stream (sample + tokenize)") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("docs").toString
+    val dir = tempDir("docs")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
 
@@ -224,7 +224,7 @@ class StreamingSpec extends SparkSpec {
 
   test("watermark drops late events in append mode; on-time windows finalize once") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("late").toString
+    val dir = tempDir("late")
     def write(name: String, rows: Seq[String]): Unit =
       rows.toDF("s").select(col("s").cast("timestamp").as("ts"))
         .write.parquet(s"$dir/$name")
@@ -261,7 +261,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val df = Seq(("u1", Option("s1")), ("u2", None: Option[String]), ("u3", Option("s3")))
       .toDF("url", "stream_url")
-    val dir = Files.createTempDirectory("s6").toString
+    val dir = tempDir("s6")
     df.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(df.schema).parquet(dir)
     val listener = new graft.sources.Sources.SinkMetricsListener("sm_test")
@@ -288,7 +288,7 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming count-min sketch equals the batch sketch (complete mode)") {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("cms").toString
+    val dir = tempDir("cms")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     def terms(df: org.apache.spark.sql.DataFrame) =
@@ -304,7 +304,7 @@ class StreamingSpec extends SparkSpec {
     import spark.implicits._
     val docs = Seq((0L, "same text"), (1L, "same text"), (2L, "other text"))
       .toDF("doc_id", "text")
-    val dir = Files.createTempDirectory("dd").toString
+    val dir = tempDir("dd")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     val deduped = stream
@@ -323,7 +323,7 @@ class StreamingSpec extends SparkSpec {
     // deployment is foreachBatch recompute over the accumulated corpus.
     import graft.ext.{Dedup, TextAnalytics}
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("curdocs").toString
+    val dir = tempDir("curdocs")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
@@ -350,7 +350,7 @@ class StreamingSpec extends SparkSpec {
       (2L, "HTTPS://CDN.EXAMPLE.ORG/a.mp3?utm_source=x"), // same canonical as 1
       (3L, "https://cdn.example.org/a.mp3?quality=hi"))   // real param -> distinct
       .toDF("id", "u")
-    val dir = Files.createTempDirectory("canon").toString
+    val dir = tempDir("canon")
     urls.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(urls.schema).parquet(dir)
     val deduped = stream
@@ -367,7 +367,7 @@ class StreamingSpec extends SparkSpec {
   test("MinHashAggregator maintains signatures incrementally over a stream") {
     import graft.ext.{Dedup, Hashing, MinHashAggregator}
     val docs = Tables.documents(spark, sf())
-    val dir = Files.createTempDirectory("docs").toString
+    val dir = tempDir("docs")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
 
@@ -388,7 +388,7 @@ class StreamingSpec extends SparkSpec {
     // batch registers (and hence the identical estimate)
     import graft.ext.Dedup
     val docs = Tables.documents(spark, sf())
-    val dir = Files.createTempDirectory("hll_docs").toString
+    val dir = tempDir("hll_docs")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     def regs(df: org.apache.spark.sql.DataFrame) = df
@@ -404,7 +404,7 @@ class StreamingSpec extends SparkSpec {
     // on EXACTLY the batch bit file — the incremental-standing-corpus
     // story of x75 (yesterday's filter OR today's arrivals)
     val docs = Tables.documents(spark, sf())
-    val dir = Files.createTempDirectory("bloom_docs").toString
+    val dir = tempDir("bloom_docs")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     def words(df: org.apache.spark.sql.DataFrame) = df
@@ -427,8 +427,8 @@ class StreamingSpec extends SparkSpec {
       .select(col("leftId"), col("key"), col("matched"))
 
     // rights land in batch 1, lefts in batch 2 — cross-batch state
-    val rDir = Files.createTempDirectory("asof_r").toString
-    val lDir = Files.createTempDirectory("asof_l").toString
+    val rDir = tempDir("asof_r")
+    val lDir = tempDir("asof_l")
     rb.withColumnRenamed("rts", "ts").write.mode("overwrite").parquet(rDir)
     val lSchema = lb.schema
     val rStream = spark.readStream.schema(rb.withColumnRenamed("rts", "ts").schema).parquet(rDir)
@@ -454,7 +454,7 @@ class StreamingSpec extends SparkSpec {
     // deployment is foreachBatch (recompute per microbatch), which is
     // what this exercises.
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("repdocs").toString
+    val dir = tempDir("repdocs")
     docs.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(docs.schema).parquet(dir)
     val got = scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.Row]()
@@ -472,8 +472,8 @@ class StreamingSpec extends SparkSpec {
 
   test("streaming as-of drops null-keyed rows on BOTH sides instead of NPEing") {
     import spark.implicits._
-    val lDir = Files.createTempDirectory("asofn_l").toString
-    val rDir = Files.createTempDirectory("asofn_r").toString
+    val lDir = tempDir("asofn_l")
+    val rDir = tempDir("asofn_r")
     // one good left row, one null-key, one null-ts; right: one good + one null-key
     Seq((Some(1L), Some(100L), Some(10L)), (None, Some(101L), Some(11L)),
       (Some(1L), None, Some(12L)))
@@ -496,7 +496,7 @@ class StreamingSpec extends SparkSpec {
 
   test("mapGroupsWithState tracks per-user counts") {
     val events = Tables.events(spark, sf())
-    val dir = Files.createTempDirectory("ev2").toString
+    val dir = tempDir("ev2")
     events.write.mode("overwrite").parquet(dir)
     val stream = spark.readStream.schema(events.schema).parquet(dir)
 
@@ -530,7 +530,7 @@ class StreamingSpec extends SparkSpec {
       .unionAll(docs.filter(col("doc_id") % 5 === 0 && col("doc_id") % 3 === 0)
         .select(col("doc_id"), lit(2).as("tranche"),
           (col("doc_id") + 3000000L).as("arrival_id"), col("text")))
-    val dir = Files.createTempDirectory("focdocs").toString
+    val dir = tempDir("focdocs")
     t1.coalesce(1).write.mode("overwrite").parquet(dir)
     t2.coalesce(1).write.mode("append").parquet(dir)
     val stream = spark.readStream.schema(t1.schema)
@@ -562,8 +562,8 @@ class StreamingSpec extends SparkSpec {
     // growing the corpus incrementally loses/invents no candidates.
     import graft.ext.Dedup
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("mhdocs").toString
-    val accDir = Files.createTempDirectory("mhacc").toString
+    val dir = tempDir("mhdocs")
+    val accDir = tempDir("mhacc")
     docs.filter(col("doc_id") % 2 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)
@@ -605,8 +605,8 @@ class StreamingSpec extends SparkSpec {
     // STILL equal the one-shot monolithic run exactly.
     import graft.ext.Dedup
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("ilshdocs").toString
-    val accDir = Files.createTempDirectory("ilshacc").toString
+    val dir = tempDir("ilshdocs")
+    val accDir = tempDir("ilshacc")
     docs.filter(col("doc_id") % 3 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
     docs.filter(col("doc_id") % 3 === 1).coalesce(1)
@@ -647,8 +647,8 @@ class StreamingSpec extends SparkSpec {
     // one-shot monolithic run exactly.
     import graft.ext.Dedup
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("ndixdocs").toString
-    val idxDir = Files.createTempDirectory("ndix").toString
+    val dir = tempDir("ndixdocs")
+    val idxDir = tempDir("ndix")
     docs.filter(col("doc_id") % 3 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
     docs.filter(col("doc_id") % 3 === 1).coalesce(1)
@@ -696,9 +696,9 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
     val corpus = docs.unionAll(docs.filter(col("doc_id") % 97 === 13)
       .select((col("doc_id") + 1000000L).as("doc_id"), col("text")))
-    val dir = Files.createTempDirectory("ledgdocs").toString
-    val idxDir = Files.createTempDirectory("ledgidx").toString
-    val ledDir = Files.createTempDirectory("ledgout").toString
+    val dir = tempDir("ledgdocs")
+    val idxDir = tempDir("ledgidx")
+    val ledDir = tempDir("ledgout")
     (0 to 2).foreach { t =>
       corpus.filter(col("doc_id") % 3 === t).coalesce(1)
         .write.mode("append").parquet(dir)
@@ -803,10 +803,10 @@ class StreamingSpec extends SparkSpec {
         .map { case (id, t) => (id, AudioHash.eHash(
           Wav.parse(Wav.write(t.getBytes("US-ASCII"))))) }
         .toDF("doc_id", "hash")
-    val srcDir = Files.createTempDirectory("mmdocs").toString
+    val srcDir = tempDir("mmdocs")
     // one deployment root; store paths must not pre-exist (Curation
     // bootstraps each standing side as empty on first touch)
-    val root = Files.createTempDirectory("mmstores").toString
+    val root = tempDir("mmstores")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led")
     val ledDir = stores.ledger
@@ -911,8 +911,8 @@ class StreamingSpec extends SparkSpec {
     import graft.ext.{Curation, Ledger}
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 90)
-    val srcDir = Files.createTempDirectory("sinkdocs").toString
-    val root = Files.createTempDirectory("sinkstores").toString
+    val srcDir = tempDir("sinkdocs")
+    val root = tempDir("sinkstores")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led")
     // file 1: the even docs; file 2: the odd docs plus a byte-identical
@@ -931,7 +931,7 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("sinkckpt").toString)
+        tempDir("sinkckpt"))
       .foreachBatch(Curation.sink(stores))
       .start()
     q.processAllAvailable()
@@ -953,20 +953,20 @@ class StreamingSpec extends SparkSpec {
     import graft.ext.{Curation, Ledger}
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 120)
-    val srcDir = Files.createTempDirectory("msinkdocs").toString
+    val srcDir = tempDir("msinkdocs")
     (0 until 4).foreach { i =>
       docs.filter(col("doc_id") % 4 === i)
         .coalesce(1).write.mode("append").parquet(srcDir)
     }
     def run(maintainEvery: Int): Curation.Stores = {
-      val root = Files.createTempDirectory("msinkstores").toString
+      val root = tempDir("msinkstores")
       val stores = Curation.Stores(s"$root/text", s"$root/img",
         s"$root/aud", s"$root/vid", s"$root/emb", s"$root/led")
       val q = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
         .writeStream
         .option("checkpointLocation",
-          Files.createTempDirectory("msinkckpt").toString)
+          tempDir("msinkckpt"))
         .foreachBatch(Curation.sink(stores, maintainEvery = maintainEvery,
           maxFilesPerBucket = 1))
         .start()
@@ -1010,8 +1010,8 @@ class StreamingSpec extends SparkSpec {
     def embOf(p: org.apache.spark.sql.Column) = emb.join(
       docs.filter(p).select(col("doc_id").as("vec_id")),
       Seq("vec_id"), "left_semi")
-    val srcDir = Files.createTempDirectory("pqsinkdocs").toString
-    val root = Files.createTempDirectory("pqsinkstores").toString
+    val srcDir = tempDir("pqsinkdocs")
+    val root = tempDir("pqsinkstores")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led", pqIndex = s"$root/pq")
     val modalities = (b: org.apache.spark.sql.DataFrame) =>
@@ -1021,7 +1021,7 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("pqsinkckpt").toString)
+        tempDir("pqsinkckpt"))
       .foreachBatch(Curation.sink(stores, modalities,
         maintainEvery = 1, maxFilesPerBucket = 8, maintainBudget = 4))
       .start()
@@ -1109,8 +1109,8 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 120)
     val emb = Tables.embeddings(spark, sf())
-    val srcDir = Files.createTempDirectory("pqretdocs").toString
-    val root = Files.createTempDirectory("pqretstores").toString
+    val srcDir = tempDir("pqretdocs")
+    val root = tempDir("pqretstores")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led", pqIndex = s"$root/pq")
     val modalities = (b: org.apache.spark.sql.DataFrame) =>
@@ -1120,7 +1120,7 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("pqretckpt").toString)
+        tempDir("pqretckpt"))
       .foreachBatch(Curation.sink(stores, modalities, maintainEvery = 1))
       .start()
     docs.filter(col("doc_id") % 4 === 0)
@@ -1152,20 +1152,20 @@ class StreamingSpec extends SparkSpec {
     import graft.ext.{Curation, Ledger}
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 120)
-    val srcDir = Files.createTempDirectory("bsinkdocs").toString
+    val srcDir = tempDir("bsinkdocs")
     (0 until 4).foreach { i =>
       docs.filter(col("doc_id") % 4 === i)
         .coalesce(1).write.mode("append").parquet(srcDir)
     }
     def run(maintainEvery: Int, budget: Int): Curation.Stores = {
-      val root = Files.createTempDirectory("bsinkstores").toString
+      val root = tempDir("bsinkstores")
       val stores = Curation.Stores(s"$root/text", s"$root/img",
         s"$root/aud", s"$root/vid", s"$root/emb", s"$root/led")
       val q = spark.readStream.schema(docs.schema)
         .option("maxFilesPerTrigger", "1").parquet(srcDir)
         .writeStream
         .option("checkpointLocation",
-          Files.createTempDirectory("bsinkckpt").toString)
+          tempDir("bsinkckpt"))
         .foreachBatch(Curation.sink(stores, maintainEvery = maintainEvery,
           maxFilesPerBucket = 1, maintainBudget = budget))
         .start()
@@ -1203,9 +1203,9 @@ class StreamingSpec extends SparkSpec {
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
       .filter(col("doc_id") < 120)
     val emb = Tables.embeddings(spark, sf())
-    val srcDir = Files.createTempDirectory("snapsinkdocs").toString
-    val root = Files.createTempDirectory("snapsinkstores").toString
-    val snapRoot = Files.createTempDirectory("snapsinkdest").toString
+    val srcDir = tempDir("snapsinkdocs")
+    val root = tempDir("snapsinkstores")
+    val snapRoot = tempDir("snapsinkdest")
     val stores = Curation.Stores(s"$root/text", s"$root/img", s"$root/aud",
       s"$root/vid", s"$root/emb", s"$root/led", pqIndex = s"$root/pq")
     val modalities = (b: org.apache.spark.sql.DataFrame) =>
@@ -1219,7 +1219,7 @@ class StreamingSpec extends SparkSpec {
       .option("maxFilesPerTrigger", "1").parquet(srcDir)
       .writeStream
       .option("checkpointLocation",
-        Files.createTempDirectory("snapsinkckpt").toString)
+        tempDir("snapsinkckpt"))
       .foreachBatch(Curation.sink(stores, modalities,
         snapshotEvery = 1, snapshotDest = snapRoot, keepSnapshots = 2))
       .start()
@@ -1282,8 +1282,8 @@ class StreamingSpec extends SparkSpec {
         (id, graft.ext.ImageHash.dHash(
           graft.ext.Bmp.parse(graft.ext.Bmp.write(16, t.getBytes("US-ASCII")))))
       }.toDF("doc_id", "hash")
-    val dir = Files.createTempDirectory("phdocs").toString
-    val idxDir = Files.createTempDirectory("phidx").toString
+    val dir = tempDir("phdocs")
+    val idxDir = tempDir("phidx")
     (0 to 2).foreach { t =>
       hashes.filter(col("doc_id") % 3 === t).coalesce(1)
         .write.mode("append").parquet(dir)
@@ -1332,8 +1332,8 @@ class StreamingSpec extends SparkSpec {
         (idBase + j, e.toSeq)
       }.toDF("vec_id", "embedding")
     val standing = planted(120, 0L)
-    val dir = Files.createTempDirectory("ivfstream").toString
-    val srcDir = Files.createTempDirectory("ivfsrc").toString
+    val dir = tempDir("ivfstream")
+    val srcDir = tempDir("ivfsrc")
     graft.ext.IvfIndex.write(standing, dir, k = 4, iters = 2)
     val arriving = planted(60, 1000L)
     (0 to 2).foreach { t =>
@@ -1391,9 +1391,9 @@ class StreamingSpec extends SparkSpec {
     val standing = (0 until 120).map { j =>
       (j.toLong, base(j % 4, 0.001f * (j % 7 + 1)))
     }.toDF("vec_id", "embedding")
-    val idxDir = Files.createTempDirectory("ivfsemidx").toString
-    val srcDir = Files.createTempDirectory("ivfsemsrc").toString
-    val ledDir = Files.createTempDirectory("ivfsemled").toString
+    val idxDir = tempDir("ivfsemidx")
+    val srcDir = tempDir("ivfsemsrc")
+    val ledDir = tempDir("ivfsemled")
     IvfIndex.write(standing, idxDir, k = 4, iters = 2)
     def trancheDf(t: Int) = {
       val idBase = 10000L + t * 1000L
@@ -1457,11 +1457,11 @@ class StreamingSpec extends SparkSpec {
     val labels = docs.select(col("doc_id"),
       when(size(filter(tk, x => x === "the" || x === "a")) * 16 > size(tk),
         lit(1L)).otherwise(lit(-1L)).as("y"))
-    val wDir = Files.createTempDirectory("qwmodel").toString
+    val wDir = tempDir("qwmodel")
     ModelStore.writeQualityWeights(
       QualityModel.trainPerceptron(docs.filter(col("doc_id") % 10 === 0),
         "doc_id", "text", labels, 4096, rounds = 8), wDir)
-    val dir = Files.createTempDirectory("qgdocs").toString
+    val dir = tempDir("qgdocs")
     docs.filter(col("doc_id") % 3 === 0).coalesce(1)
       .write.mode("overwrite").parquet(dir)
     docs.filter(col("doc_id") % 3 === 1).coalesce(1)
@@ -1510,7 +1510,7 @@ class StreamingSpec extends SparkSpec {
     def tranche(ids: Range, base: Long => Double) =
       ids.map(i => (i.toLong, vec(base(i.toLong), (i % 5) / 100.0)))
         .toDF("vec_id", "embedding")
-    val dir = Files.createTempDirectory("drift").toString
+    val dir = tempDir("drift")
     tranche(100 until 120, i => if (i % 2 == 0) 1.0 else -1.0)
       .coalesce(1).write.mode("overwrite").parquet(dir)
     tranche(200 until 220, i => if (i % 2 == 0) 1.0 else -1.0)
@@ -1548,8 +1548,8 @@ class StreamingSpec extends SparkSpec {
     // state must reflect that, not the arrival order.
     import graft.ext.Dedup
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("cddocs").toString
-    val accDir = Files.createTempDirectory("cdacc").toString
+    val dir = tempDir("cddocs")
+    val accDir = tempDir("cdacc")
     // odd ids land FIRST so the second file's even ids out-rank them
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(dir)
@@ -1585,8 +1585,8 @@ class StreamingSpec extends SparkSpec {
     // per-doc (n_removed, text_clean) state must equal a one-shot run.
     import graft.ext.Dedup
     val docs = Tables.documents(spark, sf()).select("doc_id", "text")
-    val dir = Files.createTempDirectory("sddocs").toString
-    val accDir = Files.createTempDirectory("sdacc").toString
+    val dir = tempDir("sddocs")
+    val accDir = tempDir("sdacc")
     docs.filter(col("doc_id") % 2 === 1).coalesce(1)
       .write.mode("overwrite").parquet(dir)
     docs.filter(col("doc_id") % 2 === 0).coalesce(1)
